@@ -59,7 +59,7 @@ def _timed_ocr(batches):
             pages += int((pdf["page_hi"] - pdf["page_lo"]).sum())
             yield pdf
 
-    for _blocks in extract_real._ocr_real_batches_fn()(counting()):
+    for _blocks in extract_real._ocr_real_batches(counting()):
         pass
     yield pd.DataFrame(
         {"pid": [pid], "pages": [pages], "sec": [time.perf_counter() - t0]}

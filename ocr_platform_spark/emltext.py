@@ -90,6 +90,8 @@ same 100 TB corpus reason the WARC source and Markdown tier do.
 
 from __future__ import annotations
 
+import email.errors
+import email.header
 import re
 from email import policy
 from email.message import EmailMessage
@@ -324,18 +326,36 @@ def _strip_mail_boilerplate(text: str) -> str:
     return "\n".join(out)
 
 
+def _check_encoded_words(raw: str) -> None:
+    """Every RFC 2047 encoded-word in a raw header value must decode
+    strictly under its declared charset. The stdlib header path decodes
+    with ``errors="replace"``, so a malformed word would otherwise
+    render as U+FFFD mojibake — the corruption signal the body-charset
+    rule quarantines on (module docstring). A U+FFFD the sender really
+    wrote passes. An unknown charset passes too: the stdlib renders its
+    raw bytes."""
+    try:
+        words = email.header.decode_header(raw)
+    except email.errors.HeaderParseError as e:
+        raise ValueError(f"undecodable encoded-word: {e}") from e
+    for chunk, charset in words:
+        if charset is None:
+            continue  # text outside any encoded-word
+        try:
+            chunk.decode(charset)
+        except LookupError:
+            continue
+        except UnicodeError as e:
+            raise ValueError(
+                f"encoded-word does not decode as {charset}: {e}") from e
+
+
 def _message_walk(msg: EmailMessage, depth: int, base: int, out: list,
                   keep_attachments: bool = False) -> int:
+    raw = next((v for k, v in msg.raw_items() if k.lower() == "subject"),
+               "")
+    _check_encoded_words(raw)
     subject = str(msg.get("Subject", "")).strip()
-    if "�" in subject:
-        # a malformed RFC 2047 encoded-word decodes to U+FFFD
-        # replacement garbage via the stdlib's errors="replace" header
-        # path — the same corruption signal the body-charset rule
-        # quarantines on (module docstring); emitting it would plant
-        # mojibake at the top of every rendered message
-        raise ValueError(
-            "Subject contains undecodable encoded-word (U+FFFD)"
-        )
     if subject:
         out.append(("text", base, subject))
         base += len(subject) + 1

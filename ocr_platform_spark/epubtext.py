@@ -28,6 +28,7 @@ from __future__ import annotations
 
 import io
 import posixpath
+import re
 import zipfile
 from xml.etree import ElementTree
 
@@ -149,17 +150,23 @@ def chapter_blocks(
         ]
 
 
+#: RFC 3986 scheme prefix: such a source is not a package member
+_SCHEME_RE = re.compile(r"[a-zA-Z][a-zA-Z0-9+.-]*:")
+
+
 def _chapter_images(zf: zipfile.ZipFile, member: str,
                     html: str) -> list[tuple[int, str]]:
     """Resolved ``(position, zip member)`` for a chapter's ``<img>``
     references: hrefs resolve relative to the chapter's own directory;
-    external (``://``) sources are skipped (linked, not embedded); a
-    package-relative source whose member is absent quarantines."""
+    sources with a scheme (``https:``, ``data:``, ...) or a
+    protocol-relative ``//host`` prefix are skipped (not package
+    members); a package-relative source whose member is absent
+    quarantines."""
     members = set(zf.namelist())
     base = posixpath.dirname(member)
     out: list[tuple[int, str]] = []
     for pos, src in htmltext.image_refs(html):
-        if "://" in src:
+        if src.startswith("//") or _SCHEME_RE.match(src):
             continue
         target = posixpath.normpath(posixpath.join(base, src))
         if target not in members:

@@ -156,9 +156,9 @@ class ContentBlock:
     text: str
     link_density: float
 
-    # detection-shaped box for emit_text_blocks: document character
-    # offsets stand in for pixel geometry — y1 = pos keeps the global
-    # (page, y1, x1) span sort in document order
+    # detection-shaped box for the extraction emitter: document
+    # character offsets stand in for pixel geometry — y1 = pos keeps
+    # the global (page, y1, x1) span sort in document order
     @property
     def x1(self) -> int:
         return 0
@@ -215,8 +215,6 @@ def main_blocks(html: str) -> list[ContentBlock]:
 _IMG_TAG_RE = re.compile(r"<img(?=[\s/>])[^>]*>", re.I)
 _SRC_RE = re.compile(
     r"""src\s*=\s*("[^"]*"|'[^']*'|[^\s"'>]+)""", re.I)
-_DATA_URI_RE = re.compile(
-    r"data:(image/[-+.\w]+);base64,([A-Za-z0-9+/=\s]+)\Z")
 
 
 def image_refs(html: str) -> list[tuple[int, str]]:
@@ -249,9 +247,12 @@ def html_parts(html: str) -> list[tuple]:
     external and relative ``src`` values are skipped), interleaved by
     document position. Part shape matches the office walks:
     ``("text", pos, text)`` / ``("media", pos, ctype, name, payload)``.
-    A malformed base64 data URI quarantines (``ValueError``) — the
-    image was explicitly embedded, so dropping it silently would be a
-    content loss, unlike a merely-linked source."""
+    Only ``image/*`` URIs whose parameters end in ``;base64`` are
+    pictures (RFC 2397: ``;charset=`` and other parameters may come
+    first); percent-encoded payloads (``;utf8`` SVG) are skipped like
+    linked sources. A ``;base64`` payload that does not decode
+    quarantines (``ValueError``) — the image was explicitly embedded,
+    so dropping it silently would be a content loss."""
     import base64
     import binascii
 
@@ -260,22 +261,17 @@ def html_parts(html: str) -> list[tuple]:
     ]
     n_img = 0
     for pos, src in image_refs(html):
-        if not src.startswith("data:"):
-            continue  # linked, not embedded
-        m = _DATA_URI_RE.match(src)
-        if m is None:
-            if src.startswith("data:image/"):
-                raise ValueError(
-                    "malformed image data URI (not base64 image/*)"
-                )
-            continue  # non-image data URI: not a picture slot
+        header, _, data = src.partition(",")
+        params = header.lower().split(";")
+        if not params[0].startswith("data:image/") or params[-1] != "base64":
+            continue  # linked, non-image or not base64: no picture slot
         try:
-            payload = base64.b64decode(
-                re.sub(r"\s+", "", m.group(2)), validate=True)
+            payload = base64.b64decode(re.sub(r"\s+", "", data),
+                                       validate=True)
         except (binascii.Error, ValueError) as e:
             raise ValueError(f"undecodable data-URI base64: {e}") from e
         n_img += 1
-        parts.append(("media", pos, m.group(1), f"data{n_img}", payload))
+        parts.append(("media", pos, params[0][5:], f"data{n_img}", payload))
     parts.sort(key=lambda p: p[1])
     return parts
 

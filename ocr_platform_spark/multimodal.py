@@ -287,7 +287,7 @@ def probe_real_media(
     stage wants, so vector/unsupported documents quarantine before any
     payload duplication. The metadata pass uses ``deep=False`` (xref +
     page tree only). Single source of truth for both consumers
-    (:func:`real_media_metadata` here, ``_probe`` in
+    (:func:`real_media_metadata` here, the bucket probe in
     ``operators/extract_real.py``) so their quarantine semantics cannot
     drift.
 

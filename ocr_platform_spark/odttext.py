@@ -27,6 +27,7 @@ missing ``content.xml``, malformed XML.
 
 from __future__ import annotations
 
+import posixpath
 import zipfile
 from xml.etree import ElementTree
 
@@ -208,7 +209,9 @@ def document_parts(raw: bytes) -> list[tuple]:
             nonlocal pos
             if "://" in href:
                 return  # linked image, no package payload
-            member = href.lstrip("./")
+            # package-root relative, resolved like the DOCX/PPTX rels
+            member = (href[1:] if href.startswith("/")
+                      else posixpath.normpath(href))
             if member not in members:
                 raise ValueError(
                     f"embedded media member missing: {member!r}"

@@ -11,65 +11,76 @@ Real media has no descriptor — the OCR task needs the payload bytes —
 so this pipeline uses a different, explicitly skew-bounded shape:
 
 1. **probe** (``mapInPandas`` over spans⋈payloads): header-only page
-   count (:func:`pdfcodec.validate_scanned` — xref walk + content-stream
-   interpretation, image samples never inflated; images are 1 page) and
-   explode into page *buckets* of ``bucket_pages`` pages. Each bucket
-   row carries the payload once. Unsupported/corrupt payloads (vector
-   PDFs, truncated files, synthetic containers) quarantine HERE as
-   ``media_kind=error`` rows — before any payload is duplicated.
+   count (:func:`..multimodal.probe_real_media` with ``deep=True`` —
+   xref walk + content-stream interpretation, image samples never
+   inflated; images are 1 page) and explode into page *buckets* of
+   ``bucket_pages`` pages. Each bucket row carries the payload once.
+   Unsupported/corrupt payloads (vector PDFs, truncated files,
+   synthetic containers) quarantine HERE as ``media_kind=error`` rows —
+   before any payload is duplicated.
 2. **repartition** on ``(doc_id, offset, bucket_index)`` — the skew fix:
    a 2,000-page scanned PDF becomes ⌈2000/K⌉ independent tasks instead
-   of one straggler. Multi-bucket PDFs are *sliced* at probe time
+   of one straggler. Multi-bucket containers are *sliced* at probe time
    (``slice_payloads=True`` default): each bucket row carries a minimal
-   sub-PDF holding only its own pages' content/image streams
-   (:class:`..pdfcodec._Slicer`), so the whole document's bytes cross
-   the bucket shuffle ~once in total — the in-DataFrame analog of the
-   byte-range reads a cloud-storage pipeline would issue. With
-   ``slice_payloads=False`` the full payload rides on every bucket row
-   (amplification ⌈pages/K⌉). ``bucket_pages=None`` disables bucketing
-   (one task per media, zero duplication) for corpora known to have
-   bounded page counts.
-3. **OCR** (``mapInPandas``): decode ONLY the bucket's pages
-   (``pdfcodec.decode_pdf(page_indices=...)`` inflates just those
-   pages' streams), grayscale with PIL's exact ``convert("L")`` integer
-   luma, then the *shared* OCR core
-   (:func:`..operators.extract.ocr_rendered_page`) — detect, PrepView
-   crops, strip recognition, unicode strip — so the real and synthetic
+   sub-document holding only its own pages (for PDFs
+   :class:`..pdfcodec._Slicer` keeps only the bucket's content/image
+   streams), so the whole document's bytes cross the bucket shuffle
+   ~once in total — the in-DataFrame analog of the byte-range reads a
+   cloud-storage pipeline would issue. With ``slice_payloads=False``
+   the full payload rides on every bucket row (amplification
+   ⌈pages/K⌉). ``bucket_pages=None`` disables bucketing (one task per
+   media, zero duplication) for corpora known to have bounded page
+   counts.
+3. **OCR** (``mapInPandas``): each bucket decodes ONLY its own pages
+   through the tier table below, and one emitter turns the pages into
+   ``BLOCK`` rows. Rasters go through the *shared* OCR core
+   (:func:`..operators.extract.ocr_rendered_page` — detect, PrepView
+   crops, strip recognition, unicode strip), so the real and synthetic
    paths cannot drift.
 4. **assemble**: the same sentinel-based
    :func:`..operators.extract.assemble_spans` re-emits each document's
    interleaved span array.
 
-**The OCR-bypass tier** (``text_layer=True``, the default): born-digital
-PDF pages that carry their text in content-stream show operators are
-parsed directly (:mod:`..pdftext`) instead of rasterized and OCR'd —
-dispatch is PER PAGE inside stage 3, so a mixed document (a text cover
-page stapled to scanned pages, or an upstream-OCR'd file with its
-invisible text layer) extracts each page the cheap way and still
-assembles into one reading-ordered span array. At 100 TB this is the
-dominant efficiency lever of the whole pipeline: a text-layer page
-costs microseconds of string parsing instead of ~10 ms of raster +
-detect + recognize, and the page-bucket shuffle shape above is
-unchanged (text pages make buckets *cheaper*, never bigger). The strict
-scanned-only contract of rounds 1-3 remains available as
-``text_layer=False``.
+**The tier table** (:data:`TIERS`) has one entry per probe
+``media_kind``: ``kind -> (slicer | None, pages(raw, page_indices))``.
+``pages`` returns the decoded pages, and a page is an ordered list of
+parts. A part is either a text block (duck-typed on
+``x1/y1/x2/y2/text``) or a grayscale raster (a 2-D ``uint8`` array).
+``slicer(raw)`` parses a multi-page container once and returns the
+``page_indices -> sub-document`` cut used at probe time; single-page
+tiers have none. ``page_indices`` is ``None`` for a sliced payload
+(it holds exactly the bucket's pages) and the bucket's global page
+range otherwise. The entries fall into four groups:
 
-**The HTML DOM tier**: payloads sniffing as HTML (the dominant document
-kind of a real web-scale corpus; no analog in the reference, which only
-OCRs uploads) are one reflowable "page" extracted by DOM heuristics —
-innermost block elements, link-density boilerplate drop
-(:mod:`..htmltext`) — through the same probe/quarantine, bucket and
-span-assembly stages. Like the text layer, an HTML page costs string
-parsing only; unlike PDFs it is independent of the ``text_layer`` flag
-(there is no raster alternative to fall back to).
+- **PDF**: always the per-page hybrid
+  :func:`..pdftext.extract_hybrid_pages`. A born-digital page parses
+  its text layer (microseconds of string parsing instead of ~10 ms of
+  raster + detect + recognize — the dominant efficiency lever at
+  corpus scale); a scanned page rasterizes through the exact
+  ``decode_pdf`` path. Whether text layers are admitted at all is
+  decided once, at the probe (``text_layer``): the scanned-only probe
+  quarantines any page with show operators, so everything it admits
+  rasterizes.
+- **Rasters**: PNG/JPEG/BMP images, TIFF and GIF frames — one raster
+  per page.
+- **Reflowable text** (plain text, Markdown, LaTeX, subtitles, DSV,
+  XML, JSON): one page of text blocks positioned at character offsets.
+- **Containers with embedded pictures** (DOCX, ODT, RTF, HTML
+  ``data:`` images and e-mail attachments as one page; PPTX slides,
+  EPUB chapters, mbox messages and XLSX sheets as pages): the tier's
+  part walk goes through :func:`_flow`, which keeps text parts and
+  decodes each supported picture. Unsupported formats (EMF/WMF
+  vectors, nested containers) contribute nothing — the subset
+  :func:`..docxtext.validate_embedded_media` validates at probe.
 
-**The office and plain-text tiers**: ``PK``-magic payloads refine at
-probe time into DOCX (``word/document.xml`` paragraphs,
-:mod:`..docxtext`; other archives quarantine) and payloads matching NO
-magic take the strict plain-text contract (:mod:`..plaintext` — UTF-8,
-no binary controls, no leading markup; anything else quarantines as
-before). Both are reflowable single "pages" through the same
-probe/bucket/assembly stages, like HTML.
+**One emitter** (:func:`_emit_page`), one coordinate rule: a page that
+is a lone raster OCRs in its own pixel space. Anywhere else, the part
+at ordinal ``i`` emits at ``y1 = i`` — a text part as
+``(x1=0, y1=i)``, a picture as its OCR blocks at
+``(x1=reading rank, y1=i)``. The assembler's per-page sort key
+``(y1, x1, block_index)`` then lands a picture's text exactly between
+its neighbours while keeping the picture's own reading order and
+confidences; page ``page_lo + i`` numbering survives bucket slicing.
 
 Equality contract (pinned in tests/test_extract_real.py): a corpus whose
 synthetic media are re-encoded as real PNG files / scanned PDFs at
@@ -80,15 +91,17 @@ the synthetic corpus does through ``extract_documents``.
 from __future__ import annotations
 
 from collections.abc import Iterator
+from functools import partial
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .. import (csvtext, docxtext, emltext, epubtext, formats, gifcodec,
-                htmltext, jpegcodec, jsontext, mdtext, multimodal,
-                odttext, pdfcodec, pdftext, plaintext, pngcodec,
-                pptxtext, rtftext, tiffcodec, transport, xlsxtext,
+from .. import (bmpcodec, csvtext, docxtext, emltext, epubtext, formats,
+                gifcodec, htmltext, jpegcodec, jsontext, latextext, mdtext,
+                multimodal, odttext, pdfcodec, pdftext, plaintext, pngcodec,
+                pptxtext, rtftext, subtext, tiffcodec, transport, xlsxtext,
                 xmltext)
 from ..schemas import BLOCK
 from .extract import (
@@ -105,32 +118,6 @@ from .extract import (
 #: K pages of raster work bound each task's CPU time.
 DEFAULT_BUCKET_PAGES = 8
 
-#: multi-page container codecs sharing the (slice_pages, decode) shape —
-#: a new paged format registers here once and both the bucket slicer and
-#: the OCR-stage decoder pick it up (PDF stays special: its slicer is a
-#: parse-once object and its decode is the text-layer/raster hybrid)
-_PAGED_CODECS = {
-    "tiff": (tiffcodec.slice_pages, tiffcodec.decode_tiff),
-    "gif": (gifcodec.slice_pages, gifcodec.decode_gif),
-}
-
-#: multi-page TEXT containers (pages extract as blocks, never rasters)
-#: sharing the same (slice_pages, page_blocks) bucket shape — sheets /
-#: chapters / messages are pages, so the skew bucketing and probe-time
-#: slicing apply
-_PAGED_TEXT_CODECS: dict = {}
-
-#: multi-page MIXED containers: pages carry text blocks AND embedded
-#: pictures that OCR in place (round 5 — PPTX ``p:pic``, EPUB
-#: ``<img>``); same bucket / slice shape, but the page renderer
-#: returns ordered part lists
-_PAGED_MIXED_CODECS = {
-    "pptx": (pptxtext.slice_slides, pptxtext.slide_parts),
-    "epub": (epubtext.slice_chapters, epubtext.chapter_parts),
-    "mbox": (emltext.slice_messages, emltext.mbox_page_parts),
-    "xlsx": (xlsxtext.slice_sheets, xlsxtext.sheet_parts),
-}
-
 REAL_BUCKET = (
     "doc_id string, offset int, media_ref string, media_kind string, "
     "bucket_index int, page_lo int, page_hi int, error string, "
@@ -138,29 +125,128 @@ REAL_BUCKET = (
 )
 
 
-def _probe(raw: bytes, text_layer: bool = False) -> tuple[str, int]:
-    """Structural pre-flight + ``(kind, n_pages)`` without inflating
-    samples — :func:`..multimodal.probe_real_media` with ``deep=True``
-    (full scanned-subset walk for PDFs; chunk-CRC / marker-bounds checks
-    for PNG/JPEG), so truncated/corrupt payloads quarantine HERE, with a
-    triage row, instead of silently dropping at the OCR stage. Residual
-    (undetectable-at-probe) corruption is entropy-level only: JPEG
-    entropy bits carry no checksum, and a PDF image stream can hold a
-    structurally-valid but broken body; those degrade to zero blocks at
-    decode (see ``_ocr_real_batches``).
+def _rasters(raw: bytes, page_indices=None) -> list[np.ndarray]:
+    """Raster payload -> grayscale pages via the magic dispatch: one
+    per PNG/BMP/JPEG image, one per selected TIFF/GIF frame. ``mode="L"``
+    keeps native-gray pages 2-D end-to-end; color content converts with
+    PIL's exact ``convert("L")`` luma (:func:`..pdfcodec.rgb_to_gray`)."""
+    kind = formats.sniff_kind(raw)
+    if kind == "tiff":
+        return tiffcodec.decode_tiff(raw, mode="L", page_indices=page_indices)
+    if kind == "gif":
+        return gifcodec.decode_gif(raw, mode="L", page_indices=page_indices)
+    decode = {"png": pngcodec.decode_png,
+              "bmp": bmpcodec.decode_bmp}.get(kind, jpegcodec.decode_jpeg)
+    return [pdfcodec.rgb_to_gray(decode(raw))]
 
-    ``text_layer=True`` validates PDFs under the HYBRID per-page
-    contract (:func:`..pdftext.validate_hybrid`): born-digital pages are
-    text-layer-validated instead of quarantined as vector content."""
-    kind, n_pages, _w, _h = multimodal.probe_real_media(
-        raw, deep=True, text_layer=text_layer
-    )
-    return kind, n_pages
+
+def _flow(parts: list[tuple]) -> list:
+    """A part walk (``("text", pos, text)`` / ``("media", ..., payload)``
+    — the text or payload is the LAST slot in every walk) -> one page:
+    each text part becomes a block at ``y1`` = its ordinal in the page,
+    each embedded picture whose bytes sniff as a supported raster codec
+    decodes to its rasters (a multi-frame TIFF/GIF one per frame, in
+    frame order), and unsupported formats drop. Decoding here keeps
+    picture failures inside the OCR stage's atomic decode."""
+    page: list = []
+    for part in parts:
+        if part[0] == "text":
+            page.append(plaintext.TextParagraph(len(page), part[-1]))
+        elif formats.sniff_kind(part[-1]) in docxtext.EMBED_RASTER_KINDS:
+            page.extend(_rasters(part[-1]))
+    return page
+
+
+class _TextLayerPage(list):
+    """A born-digital PDF page's text blocks plus its displayed size —
+    the pixel space the blocks' coordinates live in."""
+
+    def __init__(self, blocks: list, width: int, height: int) -> None:
+        super().__init__(blocks)
+        self.size = (width, height)
+
+
+def _pdf_pages(raw: bytes, page_indices) -> list:
+    return [
+        _TextLayerPage(body, w, h) if kind == "text" else [body]
+        for kind, body, w, h in pdftext.extract_hybrid_pages(
+            raw, page_indices=page_indices, mode="L")
+    ]
+
+
+def _raster_pages(raw: bytes, page_indices) -> list:
+    return [[page] for page in _rasters(raw, page_indices)]
+
+
+def _one_page(decode):
+    """Single-page tier: ``decode(raw)`` -> that page's parts."""
+    return lambda raw, _page_indices: [decode(raw)]
+
+
+def _text(blocks):
+    """Single-page tier over strict UTF-8 text (the probe's refinements
+    of the plain-text tier)."""
+    return _one_page(lambda raw: blocks(plaintext.decode_text(raw)))
+
+
+def _flow_pages(page_parts):
+    """Paged container whose pages are part walks."""
+    return lambda raw, page_indices: [
+        _flow(parts) for parts in page_parts(raw, page_indices=page_indices)
+    ]
+
+
+def _sliced_by(slice_pages):
+    """A stateless ``slice_pages(raw, page_indices)`` as a slicer."""
+    return lambda raw: partial(slice_pages, raw)
+
+
+#: probe ``media_kind`` -> ``(slicer | None, pages)``; see the module
+#: docstring. A kind the probe can return but this table lacks raises
+#: at the OCR stage instead of silently extracting nothing.
+TIERS = {
+    "pdf": (lambda raw: pdfcodec._Slicer(raw).slice, _pdf_pages),
+    "image": (None, _raster_pages),
+    "tiff": (_sliced_by(tiffcodec.slice_pages), _raster_pages),
+    "gif": (_sliced_by(gifcodec.slice_pages), _raster_pages),
+    "html": (None, _one_page(lambda raw: _flow(
+        htmltext.html_parts(htmltext.decode_html(raw))))),
+    "docx": (None, _one_page(lambda raw: _flow(docxtext.document_parts(raw)))),
+    "odt": (None, _one_page(lambda raw: _flow(odttext.document_parts(raw)))),
+    "rtf": (None, _one_page(lambda raw: _flow(rtftext.document_parts(raw)))),
+    "eml": (None, _text(lambda text: _flow(emltext.eml_parts(text)))),
+    "txt": (None, _text(plaintext.paragraph_blocks)),
+    "md": (None, _text(mdtext.markdown_blocks)),
+    "tex": (None, _text(latextext.latex_blocks)),
+    "sub": (None, _text(subtext.subtitle_blocks)),
+    "csv": (None, _text(csvtext.tabular_blocks)),
+    "json": (None, _text(jsontext.json_blocks)),
+    "xml": (None, _one_page(xmltext.xml_blocks)),
+    "pptx": (_sliced_by(pptxtext.slice_slides),
+             _flow_pages(pptxtext.slide_parts)),
+    "epub": (_sliced_by(epubtext.slice_chapters),
+             _flow_pages(epubtext.chapter_parts)),
+    "mbox": (_sliced_by(emltext.slice_messages),
+             _flow_pages(emltext.mbox_page_parts)),
+    "xlsx": (_sliced_by(xlsxtext.slice_sheets),
+             _flow_pages(xlsxtext.sheet_parts)),
+}
 
 
 def _bucket_batches_fn(bucket_pages: int | None,
                        slice_payloads: bool = True,
                        text_layer: bool = False):
+    """Stage-1 kernel. The probe is :func:`..multimodal.probe_real_media`
+    with ``deep=True`` (full scanned-subset walk for PDFs; chunk-CRC /
+    marker-bounds checks for PNG/JPEG), so truncated/corrupt payloads
+    quarantine HERE, with a triage row, instead of silently dropping at
+    the OCR stage. Residual (undetectable-at-probe) corruption is
+    entropy-level only: JPEG entropy bits carry no checksum, and a PDF
+    image stream can hold a structurally-valid but broken body; those
+    degrade to zero blocks at decode (see :func:`_ocr_real_frame`).
+    ``text_layer=True`` validates PDFs under the HYBRID per-page
+    contract (:func:`..pdftext.validate_hybrid`): born-digital pages are
+    text-layer-validated instead of quarantined as vector content."""
     def _bucket_batches(
         batches: Iterator[pd.DataFrame],
     ) -> Iterator[pd.DataFrame]:
@@ -182,72 +268,43 @@ def _bucket_batches_fn(bucket_pages: int | None,
                     # bombs / over-nesting quarantine like any other
                     # probe failure (..transport module docstring)
                     raw = transport.maybe_unwrap(raw)
-                    kind, n_pages = _probe(raw, text_layer)
+                    kind, n_pages, _w, _h = multimodal.probe_real_media(
+                        raw, deep=True, text_layer=text_layer)
                 except Exception as exc:
                     # quarantine BEFORE the payload is duplicated: one
                     # narrow error row, no data rides along
-                    out["doc_id"].append(doc_id)
-                    out["offset"].append(offset)
-                    out["media_ref"].append(ref)
-                    out["media_kind"].append(MEDIA_KIND_ERROR)
-                    out["bucket_index"].append(-1)
-                    out["page_lo"].append(-1)
-                    out["page_hi"].append(-1)
-                    out["error"].append(str(exc)[:200])
-                    out["sliced"].append(False)
-                    out["data"].append(None)
+                    for c, v in zip(cols, (doc_id, offset, ref,
+                                           MEDIA_KIND_ERROR, -1, -1, -1,
+                                           str(exc)[:200], False, None)):
+                        out[c].append(v)
                     continue
                 k = bucket_pages or max(1, n_pages)
-                n_buckets = max(1, (n_pages + k - 1) // k)
-                slice_fn = None
-                if slice_payloads and n_buckets > 1:
+                lows = range(0, max(1, n_pages), k)
+                slicer, cut = TIERS[kind][0], None
+                if slicer is not None and slice_payloads and len(lows) > 1:
                     # parse once per document; each bucket row then
                     # carries a minimal sub-document (only its own
-                    # pages' streams) instead of a full-payload copy —
-                    # the whole document crosses the bucket shuffle
-                    # ~once in total instead of ⌈pages/K⌉ times
+                    # pages) instead of a full-payload copy — the whole
+                    # document crosses the bucket shuffle ~once in
+                    # total instead of ⌈pages/K⌉ times
                     try:
-                        if kind == "pdf":
-                            slice_fn = pdfcodec._Slicer(raw).slice
-                        elif kind in _PAGED_CODECS:
-                            slice_fn = (
-                                lambda idx, _r=raw, _k=kind:
-                                _PAGED_CODECS[_k][0](_r, idx)
-                            )
-                        elif kind in _PAGED_TEXT_CODECS:
-                            slice_fn = (
-                                lambda idx, _r=raw, _k=kind:
-                                _PAGED_TEXT_CODECS[_k][0](_r, idx)
-                            )
-                        elif kind in _PAGED_MIXED_CODECS:
-                            slice_fn = (
-                                lambda idx, _r=raw, _k=kind:
-                                _PAGED_MIXED_CODECS[_k][0](_r, idx)
-                            )
+                        cut = slicer(raw)
                     except ValueError:
-                        slice_fn = None
-                for b in range(n_buckets):
-                    lo, hi = b * k, min(n_pages, (b + 1) * k)
+                        pass
+                for b, lo in enumerate(lows):
+                    hi = min(n_pages, lo + k)
                     payload, sliced = raw, False
-                    if slice_fn is not None:
+                    if cut is not None:
                         try:
-                            payload = slice_fn(range(lo, hi))
-                            sliced = True
+                            payload, sliced = cut(range(lo, hi)), True
                         except ValueError:
                             # probe already validated the doc, so this
                             # is near-dead defensive code: fall back to
                             # the full payload rather than quarantine
                             pass
-                    out["doc_id"].append(doc_id)
-                    out["offset"].append(offset)
-                    out["media_ref"].append(ref)
-                    out["media_kind"].append(kind)
-                    out["bucket_index"].append(b)
-                    out["page_lo"].append(lo)
-                    out["page_hi"].append(hi)
-                    out["error"].append(None)
-                    out["sliced"].append(sliced)
-                    out["data"].append(payload)
+                    for c, v in zip(cols, (doc_id, offset, ref, kind, b, lo,
+                                           hi, None, sliced, payload)):
+                        out[c].append(v)
             res = pd.DataFrame(out)
             for c in ("offset", "bucket_index", "page_lo", "page_hi"):
                 res[c] = res[c].astype("int32")
@@ -256,162 +313,49 @@ def _bucket_batches_fn(bucket_pages: int | None,
     return _bucket_batches
 
 
-def emit_text_blocks(doc_id: str, offset: int, ref: str, page_index: int,
-                     blocks: list, page_w: int, page_h: int,
-                     out: dict[str, list]) -> None:
-    """Text-layer / DOM-tier blocks -> the same ``BLOCK`` rows the OCR
-    core emits (:func:`..operators.extract.ocr_rendered_page`): one row
-    per block, ``conf=1.0`` (the source text is authoritative — there is
-    no recognition uncertainty to score), text under the M11
-    unicode-strip contract. ``blocks`` duck-types on
-    ``x1/y1/x2/y2/text`` (:class:`..pdftext.TextBlock` or
-    :class:`..htmltext.ContentBlock`)."""
-    for i, b in enumerate(blocks):
-        text = b.text.strip()
-        if not text:
-            continue
-        out["doc_id"].append(doc_id)
-        out["offset"].append(offset)
-        out["media_ref"].append(ref)
-        out["page_index"].append(page_index)
-        out["block_index"].append(i)
-        out["x1"].append(b.x1)
-        out["y1"].append(b.y1)
-        out["x2"].append(b.x2)
-        out["y2"].append(b.y2)
-        out["text"].append(text)
-        out["conf"].append(1.0)
-        out["page_width"].append(page_w)
-        out["page_height"].append(page_h)
+def _emit_page(doc_id: str, offset: int, ref: str, page_index: int,
+               page: list, out: dict[str, list]) -> None:
+    """One decoded page -> ``BLOCK`` rows under the module docstring's
+    coordinate rule. Text blocks emit at ``conf=1.0`` (the source text
+    is authoritative — there is no recognition uncertainty to score)
+    under the M11 unicode-strip contract; empty ones drop. Page size is
+    the raster's for OCR'd pictures in their own pixel space, the text
+    layer's for born-digital PDF pages, and ``0 x 0`` for synthetic
+    ordinal coordinates."""
+    if len(page) == 1 and isinstance(page[0], np.ndarray):
+        ocr_rendered_page(doc_id, offset, ref, page_index, page[0], out)
+        return
+    page_w, page_h = getattr(page, "size", (0, 0))
+    rows: list[tuple] = []
+    for i, part in enumerate(page):
+        if isinstance(part, np.ndarray):
+            ocr: dict[str, list] = {f.name: [] for f in BLOCK.fields}
+            ocr_rendered_page(doc_id, offset, ref, page_index, part, ocr)
+            order = sorted(range(len(ocr["text"])), key=lambda k: (
+                ocr["y1"][k], ocr["x1"][k], ocr["block_index"][k]))
+            rows.extend((rank, i, rank + 1, i + 1, ocr["text"][k],
+                         ocr["conf"][k], 0, 0)
+                        for rank, k in enumerate(order))
+        elif part.text.strip():
+            rows.append((part.x1, part.y1, part.x2, part.y2,
+                         part.text.strip(), 1.0, page_w, page_h))
+    for bi, row in enumerate(rows):
+        # ``out`` is keyed in BLOCK field order
+        for col, v in zip(out.values(),
+                          (doc_id, offset, ref, page_index, bi, *row)):
+            col.append(v)
 
 
-def _decode_raster_pages(payload: bytes) -> list:
-    """Standalone raster payload -> grayscale page list via the magic
-    dispatch (PNG/BMP/TIFF/GIF/JPEG), shared by the top-level image
-    branch and the office embedded-media interleave."""
-    kind = formats.sniff_kind(payload)
-    if kind == "png":
-        return [pdfcodec.rgb_to_gray(pngcodec.decode_png(payload))]
-    if kind == "bmp":
-        from .. import bmpcodec
-
-        return [pdfcodec.rgb_to_gray(bmpcodec.decode_bmp(payload))]
-    if kind in _PAGED_CODECS:
-        return _PAGED_CODECS[kind][1](payload, mode="L", page_indices=None)
-    return [pdfcodec.rgb_to_gray(jpegcodec.decode_jpeg(payload))]
+def _ocr_real_batches(
+    batches: Iterator[pd.DataFrame],
+) -> Iterator[pd.DataFrame]:
+    # a named module function: its __name__ is what .explain("formatted")
+    # prints on the MapInPandas node
+    for pdf in batches:
+        yield _ocr_real_frame(pdf)
 
 
-def _decode_mixed_parts(parts: list[tuple]) -> list[tuple]:
-    """One MIXED page's part walk -> emission-ready parts: text parts
-    pass through, each supported embedded picture decodes to
-    ``("rasters", ordinal, gray_pages)`` (so decode failures surface
-    inside the caller's atomic try), unsupported formats drop."""
-    out: list[tuple] = []
-    for part in parts:
-        if part[0] == "text":
-            out.append(part)
-        elif formats.sniff_kind(part[-1]) in docxtext.EMBED_RASTER_KINDS:
-            out.append(
-                ("rasters", part[1], _decode_raster_pages(part[-1]))
-            )
-    return out
-
-
-def _office_content(parts: list[tuple]) -> list[tuple]:
-    """Part walk output (:func:`..docxtext.document_parts` /
-    :func:`..odttext.document_parts` / :func:`..rtftext.document_parts`
-    / :func:`..htmltext.html_parts`) -> ordered ``("text", text)`` /
-    ``("raster", gray_page)`` content items; the text/payload slot is
-    uniformly the LAST tuple element across the walks. Embedded
-    pictures whose bytes sniff as a supported raster codec decode here
-    (a multi-frame TIFF/GIF contributes one item per frame, in frame
-    order); unsupported formats (EMF/WMF vectors, nested containers)
-    contribute nothing — the deep probe validates exactly this subset
-    (:func:`..docxtext.validate_embedded_media`)."""
-    content: list[tuple] = []
-    for part in parts:
-        if part[0] == "text":
-            content.append(("text", part[-1]))
-        elif formats.sniff_kind(part[-1]) in docxtext.EMBED_RASTER_KINDS:
-            for page in _decode_raster_pages(part[-1]):
-                content.append(("raster", page))
-    return content
-
-
-def _emit_mixed_page_parts(doc_id: str, offset: int, ref: str,
-                           page_index: int, parts: list[tuple],
-                           out: dict[str, list]) -> None:
-    """One MIXED page (PPTX slide) -> BLOCK rows preserving shape-tree
-    order: text parts emit at ``(y1=ordinal, x1=0)``; each embedded
-    picture OCRs through the shared core and its blocks re-emit at
-    ``(y1=picture ordinal, x1=reading rank)`` — synthetic coordinates
-    (the slide has no shared pixel space with its pictures), so the
-    per-page sort key ``(y1, x1, block_index)`` interleaves the OCR'd
-    text exactly at the picture's slot while keeping the picture's own
-    reading order and per-block confidences."""
-    bi = 0
-    for part in parts:
-        if part[0] == "text":
-            _k, ordinal, text = part
-            text = text.strip()
-            if not text:
-                continue
-            out["doc_id"].append(doc_id)
-            out["offset"].append(offset)
-            out["media_ref"].append(ref)
-            out["page_index"].append(page_index)
-            out["block_index"].append(bi)
-            out["x1"].append(0)
-            out["y1"].append(ordinal)
-            out["x2"].append(max(1, len(text)))
-            out["y2"].append(ordinal + 1)
-            out["text"].append(text)
-            out["conf"].append(1.0)
-            out["page_width"].append(0)
-            out["page_height"].append(0)
-            bi += 1
-            continue
-        _k, ordinal, pages = part  # ("rasters", ordinal, gray pages)
-        rank = 0
-        for page in pages:
-            tmp: dict[str, list] = {f.name: [] for f in BLOCK.fields}
-            ocr_rendered_page(doc_id, offset, ref, 0, page, tmp)
-            order = sorted(
-                range(len(tmp["text"])),
-                key=lambda k: (tmp["y1"][k], tmp["x1"][k],
-                               tmp["block_index"][k]),
-            )
-            for k in order:
-                out["doc_id"].append(doc_id)
-                out["offset"].append(offset)
-                out["media_ref"].append(ref)
-                out["page_index"].append(page_index)
-                out["block_index"].append(bi)
-                out["x1"].append(rank)
-                out["y1"].append(ordinal)
-                out["x2"].append(rank + 1)
-                out["y2"].append(ordinal + 1)
-                out["text"].append(tmp["text"][k])
-                out["conf"].append(tmp["conf"][k])
-                out["page_width"].append(0)
-                out["page_height"].append(0)
-                bi += 1
-                rank += 1
-
-
-def _ocr_real_batches_fn(text_layer: bool = False):
-    # keep the closure's __name__ descriptive: it is what
-    # .explain("formatted") prints on the MapInPandas node
-    def _ocr_real_batches(
-        batches: Iterator[pd.DataFrame],
-    ) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield _ocr_real_frame(pdf, text_layer)
-
-    return _ocr_real_batches
-
-
-def _ocr_real_frame(pdf: pd.DataFrame, text_layer: bool) -> pd.DataFrame:
+def _ocr_real_frame(pdf: pd.DataFrame) -> pd.DataFrame:
     out: dict[str, list] = {f.name: [] for f in BLOCK.fields}
     for doc_id, offset, ref, kind, lo, hi, sliced, data in zip(
         pdf["doc_id"], pdf["offset"], pdf["media_ref"],
@@ -420,163 +364,19 @@ def _ocr_real_frame(pdf: pd.DataFrame, text_layer: bool) -> pd.DataFrame:
     ):
         if kind == MEDIA_KIND_ERROR:
             continue
-        raw = bytes(data)
+        # looked up OUTSIDE the try: a probe kind with no tier is a
+        # programming error and must fail loudly, not extract nothing
+        pages = TIERS[kind][1]
         # Decode inside the try (a decode failure drops the bucket
         # ATOMICALLY — no partial emission), emission outside it (an
         # OCR/kernel failure propagates LOUDLY; swallowing it after
         # some pages' rows were appended would leave a silently
-        # part-extracted document).
-        blocks = hybrid = pages = paged_text = paged_mixed = office = None
+        # part-extracted document). A sliced payload holds ONLY this
+        # bucket's pages (local indices 0..hi-lo); global numbering
+        # still comes from page_lo below.
         try:
-            # mode="L": the OCR kernels are grayscale — native-gray
-            # PDF pages stay 2-D end-to-end (no RGB round trip),
-            # color content converts with PIL's exact convert("L")
-            # luma AFTER resampling (pdfcodec.rgb_to_gray)
-            if kind == "html":
-                # DOM tier: innermost blocks, link-density boilerplate
-                # drop — plus embedded data-URI images (the saved-page
-                # shape) OCR'd in place between their surrounding
-                # blocks (round 5). Text-only documents keep the flat
-                # block emission (byte-identical to the pre-r5 path).
-                hp = htmltext.html_parts(htmltext.decode_html(raw))
-                if all(p[0] == "text" for p in hp):
-                    blocks = [
-                        htmltext.ContentBlock(p[1], p[2], 0.0) for p in hp
-                    ]
-                else:
-                    office = _office_content(hp)
-            elif kind == "docx":
-                # office tier: the INTERLEAVED part walk — paragraphs
-                # in document order PLUS embedded pictures
-                # (w:drawing/a:blip, VML imagedata) decoded through the
-                # real raster codecs and OCR'd IN PLACE, so a scanned
-                # page pasted into a DOCX extracts between its
-                # surrounding paragraphs (headers/footers live in other
-                # zip members and never emit — the office boilerplate
-                # drop)
-                office = _office_content(docxtext.document_parts(raw))
-            elif kind == "odt":
-                # OpenDocument sibling: content.xml text:p/text:h walk
-                # + draw:image pictures, same interleave contract
-                office = _office_content(odttext.document_parts(raw))
-            elif kind == "rtf":
-                # legacy desktop/email: strict RTF token stream, with
-                # embedded \pict PNG/JPEG pictures interleaving like
-                # the DOCX walk (round 5)
-                office = _office_content(rtftext.document_parts(raw))
-            elif kind == "txt":
-                # plain-text tier: blank-line paragraph split, the
-                # probe's final no-magic fallback
-                blocks = plaintext.paragraph_blocks(
-                    plaintext.decode_text(raw)
-                )
-            elif kind == "md":
-                # markdown tier (probe-refined from txt): rendered-text
-                # blocks — markup stripped, soft wraps join, code
-                # fences verbatim (..mdtext module docstring)
-                blocks = mdtext.markdown_blocks(
-                    plaintext.decode_text(raw)
-                )
-            elif kind == "tex":
-                # LaTeX tier (probe-refined from txt): the arXiv
-                # shape — rendered text, math/cites dropped, captions
-                # kept (..latextext module docstring)
-                from .. import latextext
-
-                blocks = latextext.latex_blocks(
-                    plaintext.decode_text(raw)
-                )
-            elif kind == "eml":
-                # e-mail tier (probe-refined from txt): decoded
-                # Subject + supported body parts in part order, html
-                # parts through the DOM walk, and raster ATTACHMENTS
-                # OCR'd in place between the parts around them
-                # (round 5 — the office interleave rule applied to
-                # mail); mbox archives take the paged route below
-                office = _office_content(
-                    emltext.eml_parts(plaintext.decode_text(raw))
-                )
-            elif kind == "sub":
-                # subtitle tier (probe-refined from txt): SRT/WebVTT
-                # cue text — ids/timestamps/markup drop, rolling
-                # duplicates collapse (..subtext module docstring)
-                from .. import subtext
-
-                blocks = subtext.subtitle_blocks(
-                    plaintext.decode_text(raw)
-                )
-            elif kind == "csv":
-                # tabular tier (probe-refined from txt): one block per
-                # row, cells joined with a single space — the XLSX
-                # sheet rule over bare DSV (..csvtext module docstring)
-                blocks = csvtext.tabular_blocks(
-                    plaintext.decode_text(raw)
-                )
-            elif kind == "xml":
-                # XML tier: feeds/sitemaps/data exports — leaf text
-                # under strip-lines-join; feed rich-content elements
-                # through the DOM walk (..xmltext module docstring)
-                blocks = xmltext.xml_blocks(raw)
-            elif kind == "json":
-                # JSON/JSONL tier (probe-refined from txt): string
-                # VALUES only, document order (..jsontext docstring)
-                blocks = jsontext.json_blocks(
-                    plaintext.decode_text(raw)
-                )
-            elif kind in _PAGED_TEXT_CODECS:
-                # paged office containers: sheets/chapters/messages are
-                # pages, so buckets and slicing apply exactly like
-                # raster PDFs — but pages extract as text blocks,
-                # never rasters
-                idx = (None if sliced
-                       else list(range(int(lo), int(hi))))
-                paged_text = _PAGED_TEXT_CODECS[kind][1](
-                    raw, page_indices=idx,
-                )
-            elif kind in _PAGED_MIXED_CODECS:
-                # paged MIXED containers (PPTX): slides are pages whose
-                # parts interleave text paragraphs with embedded
-                # pictures; pictures decode through the raster codecs
-                # HERE (atomically with the part walk) and OCR below
-                idx = (None if sliced
-                       else list(range(int(lo), int(hi))))
-                paged_mixed = [
-                    _decode_mixed_parts(p)
-                    for p in _PAGED_MIXED_CODECS[kind][1](
-                        raw, page_indices=idx,
-                    )
-                ]
-            elif kind == "pdf" and text_layer:
-                # HYBRID dispatch: text-layer pages parse (no pixels
-                # ever produced), scanned pages raster here + OCR below
-                idx = (None if sliced
-                       else list(range(int(lo), int(hi))))
-                hybrid = pdftext.extract_hybrid_pages(
-                    raw, page_indices=idx, mode="L",
-                )
-            elif kind == "pdf":
-                # a sliced payload holds ONLY this bucket's pages
-                # (local indices 0..hi-lo); global numbering still
-                # comes from page_lo below
-                idx = (None if sliced
-                       else list(range(int(lo), int(hi))))
-                pages = pdfcodec.decode_pdf(
-                    raw, page_indices=idx, mode="L",
-                )
-            elif kind in _PAGED_CODECS:
-                idx = (None if sliced
-                       else list(range(int(lo), int(hi))))
-                pages = _PAGED_CODECS[kind][1](
-                    raw, mode="L", page_indices=idx,
-                )
-            elif formats.sniff_kind(raw) == "png":
-                pages = [pdfcodec.rgb_to_gray(pngcodec.decode_png(raw))]
-            elif formats.sniff_kind(raw) == "bmp":
-                from .. import bmpcodec
-
-                pages = [pdfcodec.rgb_to_gray(bmpcodec.decode_bmp(raw))]
-            else:
-                pages = [pdfcodec.rgb_to_gray(jpegcodec.decode_jpeg(raw))]
+            decoded = pages(bytes(data), None if sliced
+                            else list(range(int(lo), int(hi))))
         except Exception:
             # residual corruption past the probe: entropy-level only
             # (JPEG entropy bits carry no checksum; a PDF image
@@ -586,52 +386,8 @@ def _ocr_real_frame(pdf: pd.DataFrame, text_layer: bool) -> pd.DataFrame:
             # the job; everything structurally detectable already
             # quarantined with a triage row at probe time.
             continue
-        if blocks is not None:
-            emit_text_blocks(doc_id, int(offset), ref, int(lo),
-                             blocks, 0, 0, out)
-        elif office is not None:
-            # content ordinal AS page_index: the assembler's global
-            # sort key (offset, page_index, y1, x1, block_index) then
-            # interleaves each picture's OCR blocks (real in-page
-            # geometry, internal reading order intact) exactly between
-            # the paragraphs around it. For text-only documents this
-            # is sort-equivalent to the old single-page ordinal-y1
-            # emission — identical span output.
-            for i, (okind, item) in enumerate(office):
-                if okind == "text":
-                    emit_text_blocks(
-                        doc_id, int(offset), ref, i,
-                        [plaintext.TextParagraph(0, item)], 0, 0, out,
-                    )
-                else:
-                    ocr_rendered_page(
-                        doc_id, int(offset), ref, i, item, out,
-                    )
-        elif paged_text is not None:
-            for i, page_blocks in enumerate(paged_text):
-                emit_text_blocks(doc_id, int(offset), ref, int(lo) + i,
-                                 page_blocks, 0, 0, out)
-        elif paged_mixed is not None:
-            for i, page_parts in enumerate(paged_mixed):
-                _emit_mixed_page_parts(doc_id, int(offset), ref,
-                                       int(lo) + i, page_parts, out)
-        elif hybrid is not None:
-            for i, (pkind, payload, pw, ph) in enumerate(hybrid):
-                if pkind == "text":
-                    emit_text_blocks(
-                        doc_id, int(offset), ref, int(lo) + i,
-                        payload, pw, ph, out,
-                    )
-                else:
-                    ocr_rendered_page(
-                        doc_id, int(offset), ref, int(lo) + i,
-                        payload, out,
-                    )
-        else:
-            for i, page in enumerate(pages):
-                ocr_rendered_page(
-                    doc_id, int(offset), ref, int(lo) + i, page, out
-                )
+        for i, page in enumerate(decoded):
+            _emit_page(doc_id, int(offset), ref, int(lo) + i, page, out)
     res = pd.DataFrame(out)
     for c in _INT_BLOCK_COLS:
         res[c] = res[c].astype("int32")
@@ -666,6 +422,11 @@ def real_page_buckets(
     verbatim), so the bucket shuffle moves ~size·K/pages bytes per row
     instead of ⌈pages/K⌉ full-payload copies. Decode equality with the
     unsliced path is test-pinned; False restores full-payload rows.
+
+    ``text_layer`` (default on) probes PDFs under the HYBRID per-page
+    contract, so born-digital pages extract from their text layer;
+    ``False`` keeps the strict scanned-only contract and quarantines
+    them here.
     """
     if spans is None:
         spans = exploded_spans(documents)
@@ -706,25 +467,19 @@ def real_media_errors(buckets: DataFrame) -> DataFrame:
 
 def ocr_real_blocks(
     buckets: DataFrame, num_partitions: int | None = None,
-    text_layer: bool = True,
 ) -> DataFrame:
     """Stage 2: bucket rows -> OCR block rows, behind the explicit
-    bucket-key repartition (see module docstring item 2).
-
-    ``text_layer`` (default on) enables the per-page HYBRID dispatch for
-    PDFs: pages with a text layer are parsed directly
-    (:func:`..pdftext.extract_hybrid_pages` — no rasterization, no
-    detect/recognize), scanned pages take the raster+OCR path. Must match
-    the flag the bucket stage was probed with — a text PDF probed with
-    ``text_layer=False`` quarantines there and never reaches this stage.
-    """
+    bucket-key repartition (see module docstring item 2). Each bucket
+    decodes through its kind's :data:`TIERS` entry; PDFs always take the
+    per-page hybrid dispatch, so whether text layers are admitted is
+    decided by the probe alone (``real_page_buckets(text_layer=)``)."""
     if num_partitions is None:
         num_partitions = 3 * buckets.sparkSession.sparkContext.defaultParallelism
     buckets = buckets.filter(F.col("media_kind") != MEDIA_KIND_ERROR)
     buckets = buckets.repartition(
         num_partitions, "doc_id", "offset", "bucket_index"
     )
-    return buckets.mapInPandas(_ocr_real_batches_fn(text_layer), schema=BLOCK)
+    return buckets.mapInPandas(_ocr_real_batches, schema=BLOCK)
 
 
 def extract_real_documents(
@@ -764,5 +519,5 @@ def extract_real_documents(
         documents, media, bucket_pages, broadcast_spans, spans=spans,
         slice_payloads=slice_payloads, text_layer=text_layer,
     )
-    blocks = ocr_real_blocks(buckets, num_partitions, text_layer=text_layer)
+    blocks = ocr_real_blocks(buckets, num_partitions)
     return assemble_spans(documents, blocks, spans=spans)

@@ -17,15 +17,21 @@ shared with test_extract_text_layer).
 
 from __future__ import annotations
 
-from ocr_platform_spark import corpus, schemas
+import numpy as np
+import pandas as pd
+import pytest
+
+from ocr_platform_spark import (corpus, gifcodec, multimodal, pngcodec,
+                                schemas, subtext)
 from ocr_platform_spark.operators import extract, extract_real
 from tests.test_extract_docx import content_docx
 from tests.test_extract_epub import content_epub
 from tests.test_extract_html import content_html
 from tests.test_extract_odt_rtf import content_odt, content_rtf
 from tests.test_extract_office_paged import content_pptx, content_xlsx
-from tests.test_extract_real import (_spans_by_doc, reencode_real,
-                                     reencode_tiff, reencode_wild)
+from tests.test_extract_real import (_render_pages, _spans_by_doc,
+                                     reencode_real, reencode_tiff,
+                                     reencode_wild)
 from tests.test_extract_text_layer import reencode_text_layer, split_pdf_spans
 from tests.test_extract_csv import content_dsv
 from tests.test_extract_json import content_jsonl
@@ -34,6 +40,28 @@ from tests.test_extract_latex import content_tex
 from tests.test_extract_md import content_md
 from tests.test_extract_text_plain import content_txt
 from tests.test_extract_eml import content_eml, content_mbox
+
+
+#: re-encoders by tier (2: wild compression and 3: text-layer PDF
+#: take the media index / report a flag, see :func:`tier_payload`)
+_CONTENT = {
+    0: reencode_real, 1: reencode_tiff, 4: content_html, 5: content_docx,
+    6: content_txt, 7: content_pptx, 8: content_xlsx, 9: content_epub,
+    10: content_odt, 11: content_rtf, 12: content_md, 13: content_dsv,
+    14: content_xml, 15: content_jsonl, 16: content_tex, 17: content_eml,
+    18: content_mbox,
+}
+
+
+def tier_payload(i: int, payload: bytes) -> tuple[bytes, bool]:
+    """Media ``i`` re-encoded through tier ``i % 19``, and whether it
+    became a text-layer PDF."""
+    tier = i % 19
+    if tier == 2:
+        return reencode_wild(payload, i), False
+    if tier == 3:
+        return reencode_text_layer(payload)
+    return _CONTENT[tier](payload), False
 
 
 def test_all_tiers_in_one_job(spark):
@@ -45,47 +73,9 @@ def test_all_tiers_in_one_job(spark):
     )
     rows, text_pdf_refs = [], set()
     for i, (ref, m) in enumerate(sorted(media.items())):
-        tier = i % 19
-        if tier == 0:
-            data = reencode_real(m["data"])
-        elif tier == 1:
-            data = reencode_tiff(m["data"])
-        elif tier == 2:
-            data = reencode_wild(m["data"], i)
-        elif tier == 3:
-            data, is_pdf = reencode_text_layer(m["data"])
-            if is_pdf:
-                text_pdf_refs.add(ref)
-        elif tier == 4:
-            data = content_html(m["data"])
-        elif tier == 5:
-            data = content_docx(m["data"])
-        elif tier == 6:
-            data = content_txt(m["data"])
-        elif tier == 7:
-            data = content_pptx(m["data"])
-        elif tier == 8:
-            data = content_xlsx(m["data"])
-        elif tier == 9:
-            data = content_epub(m["data"])
-        elif tier == 10:
-            data = content_odt(m["data"])
-        elif tier == 11:
-            data = content_rtf(m["data"])
-        elif tier == 12:
-            data = content_md(m["data"])
-        elif tier == 13:
-            data = content_dsv(m["data"])
-        elif tier == 14:
-            data = content_xml(m["data"])
-        elif tier == 15:
-            data = content_jsonl(m["data"])
-        elif tier == 16:
-            data = content_tex(m["data"])
-        elif tier == 17:
-            data = content_eml(m["data"])
-        else:
-            data = content_mbox(m["data"])
+        data, is_pdf = tier_payload(i, m["data"])
+        if is_pdf:
+            text_pdf_refs.add(ref)
         rows.append((ref, bytearray(data)))
     assert text_pdf_refs, "rotation must hit at least one text-layer PDF"
     mixed = spark.createDataFrame(rows, "media_ref string, data binary")
@@ -99,3 +89,29 @@ def test_all_tiers_in_one_job(spark):
         assert got[doc_id] == split_pdf_spans(
             flagship[doc_id], text_pdf_refs
         ), doc_id
+
+
+def test_tier_table_keys_are_the_probe_kinds():
+    """Every kind the deep probe returns has exactly one tier-table
+    entry and vice versa: the rotation above plus the codecs it does not
+    reach (a GIF, a PNG image, a subtitle track)."""
+    docs, media = corpus.generate(30, seed=4242, max_pages=6)
+    payloads = [tier_payload(i, m["data"])[0]
+                for i, (_ref, m) in enumerate(sorted(media.items()))]
+    _kind, pages = _render_pages(next(iter(media.values()))["data"])
+    payloads += [gifcodec.encode_gif([pages[0]]),
+                 pngcodec.encode_png(np.stack([pages[0]] * 3, axis=-1)),
+                 subtext.encode_vtt(["one cue"])]
+    kinds = {multimodal.probe_real_media(p, deep=True, text_layer=True)[0]
+             for p in payloads}
+    assert kinds == set(extract_real.TIERS)
+
+
+def test_unregistered_kind_raises_instead_of_extracting_nothing():
+    frame = pd.DataFrame({
+        "doc_id": ["d1"], "offset": [0], "media_ref": ["m1"],
+        "media_kind": ["no-such-tier"], "page_lo": [0], "page_hi": [1],
+        "sliced": [False], "data": [b"payload"],
+    })
+    with pytest.raises(KeyError, match="no-such-tier"):
+        extract_real._ocr_real_frame(frame)

@@ -283,35 +283,39 @@ def test_synthetic_payloads_quarantine_not_crash(real_corpus):
 
 
 def test_probe_quarantines_structurally_corrupt_images():
-    """Truncated/corrupt PNG and JPEG payloads must fail _probe (and so
-    produce a quarantine row with a triage message) rather than passing
-    on magic bytes alone and silently dropping at the OCR stage."""
-    from ocr_platform_spark.operators.extract_real import _probe
+    """Truncated/corrupt PNG and JPEG payloads must fail the deep probe
+    (and so produce a quarantine row with a triage message) rather than
+    passing on magic bytes alone and silently dropping at the OCR
+    stage."""
+    from ocr_platform_spark import multimodal
+
+    def probe(raw):
+        return multimodal.probe_real_media(raw, deep=True)[:2]
 
     png = pngcodec.encode_png(np.zeros((8, 8, 3), np.uint8))
     jpg = jpegcodec.encode_jpeg(np.zeros((8, 8, 3), np.uint8))
-    assert _probe(png) == ("image", 1)
-    assert _probe(jpg) == ("image", 1)
+    assert probe(png) == ("image", 1)
+    assert probe(jpg) == ("image", 1)
     with pytest.raises(ValueError):
-        _probe(png[: len(png) // 2])          # truncated PNG
+        probe(png[: len(png) // 2])           # truncated PNG
     mutated = bytearray(png)
     mutated[40] ^= 0xFF                       # IDAT corruption -> CRC
     with pytest.raises(ValueError):
-        _probe(bytes(mutated))
+        probe(bytes(mutated))
     with pytest.raises(ValueError):
-        _probe(jpg[:-2])                      # missing EOI
+        probe(jpg[:-2])                       # missing EOI
     relabeled = bytearray(jpg)
     i = relabeled.find(b"\xff\xc0")
     relabeled[i + 1] = 0xC2  # SOF2 is now a supported frame type, so the
     # structural probe accepts the relabeled stream; the illegal scan
     # header (full-band progressive DC scan) quarantines at decode
-    assert _probe(bytes(relabeled)) == ("image", 1)
+    assert probe(bytes(relabeled)) == ("image", 1)
     with pytest.raises(ValueError, match="Se=0"):
         jpegcodec.decode_jpeg(bytes(relabeled))
     arith = bytearray(jpg)
     arith[i + 1] = 0xC9  # arithmetic coding: still unsupported up front
     with pytest.raises(ValueError):
-        _probe(bytes(arith))
+        probe(bytes(arith))
 
 
 def test_real_media_metadata_header_only_matches_decode(real_corpus, spark):
@@ -551,7 +555,7 @@ def test_hybrid_bucket_drops_atomically_on_mid_doc_decode_failure():
         "media_kind": ["pdf"], "page_lo": [0], "page_hi": [2],
         "sliced": [False], "data": [raw],
     })
-    res = extract_real._ocr_real_frame(frame, text_layer=True)
+    res = extract_real._ocr_real_frame(frame)
     assert len(res) == 0
 
 

@@ -57,6 +57,17 @@ ADVERSARIAL = [
      emltext.encode_eml(H + [("Subject", "=?x-fantasy?B?Zm9v?=")],
                         body="body"),
      "ok"),  # stdlib falls back to the raw bytes; 'foo' is clean ASCII
+    ("subject-writes-replacement-char",
+     emltext.encode_eml(H + [("Subject", "a \ufffd b")], body="body"),
+     "ok"),  # a U+FFFD the sender wrote is content, not corruption
+    ("ew-encodes-replacement-char",
+     emltext.encode_eml(H + [("Subject", "=?utf-8?B?YSDvv70gYg==?=")],
+                        body="body"),
+     "ok"),
+    ("ew-bytes-not-in-charset",
+     emltext.encode_eml(H + [("Subject", "=?utf-8?B?/w==?=")],
+                        body="body"),
+     "quarantine"),
     ("nested-rfc822-at-cap", _nested(emltext._MAX_DEPTH - 1), "ok"),
     ("nested-rfc822-past-cap", _nested(emltext._MAX_DEPTH + 2),
      "quarantine"),
@@ -102,8 +113,8 @@ def test_adversarial_mail_quarantines_or_renders(name, raw, want):
 def test_subject_mojibake_quarantines_not_renders():
     """The malformed-encoded-word rule is a VALUE pin: stdlib decodes
     the broken word to U+FFFD garbage, and emitting that as the first
-    span of every message is corpus poison — the tier quarantines on
-    the same replacement-character signal as the body charset rule."""
+    span of every message is corpus poison — the tier quarantines at
+    the encoded-word decode, the strict-charset rule of the body."""
     raw = emltext.encode_eml(
         H + [("Subject", "=?utf-8?B?%%%notb64%%%?=")], body="body")
     with pytest.raises(ValueError, match="undecodable encoded-word"):

@@ -126,9 +126,10 @@ def test_docx_unsupported_embedded_format_is_skipped():
     assert [p[0] for p in parts] == ["text", "media", "text"]
     assert parts[1][1] == "application/octet-stream"
     assert docxtext.probe_docx(docx, deep=True) == (1, 0, 0)  # not validated
-    from ocr_platform_spark.operators.extract_real import _office_content
+    from ocr_platform_spark.operators.extract_real import _flow
 
-    content = _office_content(parts)
+    content = [("text",) if hasattr(p, "text") else ("raster",)
+               for p in _flow(parts)]
     assert [c[0] for c in content] == ["text", "text"]
 
 
@@ -162,6 +163,37 @@ def test_odt_missing_media_member_quarantines():
                 dst.writestr(info, src.read(info.filename))
     with pytest.raises(ValueError, match="embedded media member missing"):
         odttext.document_parts(buf.getvalue())
+
+
+def test_odt_href_resolves_by_path_not_character_strip():
+    """Picture hrefs resolve like the DOCX/PPTX rels: a normalized path
+    from the package root, never a character-class strip of leading
+    dots and slashes."""
+    import io
+    import zipfile
+
+    png = _word_png("scan")
+
+    def with_href(href: str) -> bytes:
+        src = zipfile.ZipFile(io.BytesIO(
+            odttext.encode_odt_with_media(["para", png])))
+        buf = io.BytesIO()
+        with zipfile.ZipFile(buf, "w") as dst:
+            for info in src.infolist():
+                data = src.read(info.filename)
+                if info.filename == "content.xml":
+                    data = data.replace(b"Pictures/image1.png",
+                                        href.encode())
+                dst.writestr(info, data)
+        return buf.getvalue()
+
+    for href in ("./Pictures/sub/../image1.png", "/Pictures/image1.png"):
+        parts = odttext.document_parts(with_href(href))
+        assert [(p[0], p[2]) for p in parts] == [
+            ("text", "para"), ("media", "Pictures/image1.png")], href
+    # an href that leaves the package is not a package member
+    with pytest.raises(ValueError, match="embedded media member missing"):
+        odttext.document_parts(with_href("../Pictures/image1.png"))
 
 
 # --- pipeline leg ------------------------------------------------------------
@@ -440,6 +472,27 @@ def test_epub_missing_image_member_quarantines():
         epubtext.probe_epub(buf.getvalue(), deep=True)
 
 
+def test_epub_skips_scheme_and_protocol_relative_sources():
+    """``data:``, protocol-relative ``//host`` and any scheme-prefixed
+    source are not package members: they skip like ``https:`` links
+    instead of quarantining the whole book."""
+    from ocr_platform_spark import epubtext
+
+    ch = ("<html><head><title>t</title></head><body>"
+          "<p>before</p>"
+          "<img src=\"data:image/gif;base64,R0lGODlhAQABAAAAACw=\"/>"
+          "<img src=\"//cdn.invalid/x.png\"/>"
+          "<img src=\"ftp://host.invalid/y.png\"/>"
+          "<img src=\"img/plate.png\"/>"
+          "<p>after</p></body></html>")
+    epub = epubtext.encode_epub(
+        [ch], media=[("img/plate.png", _word_png("word"))])
+    parts = epubtext.chapter_parts(epub)
+    assert [(p[0], p[2]) for p in parts[0]] == [
+        ("text", "before"), ("media", "image/png"), ("text", "after")]
+    assert epubtext.probe_epub(epub, deep=True) == (1, 0, 0)
+
+
 def test_epub_slice_keeps_chapter_images():
     from ocr_platform_spark import epubtext
 
@@ -526,6 +579,28 @@ def test_html_malformed_data_uri_quarantines():
            '</body></html>').encode()
     with _pytest.raises(ValueError, match="corrupt embedded media"):
         multimodal.probe_real_media(doc, deep=True)
+
+
+def test_html_non_base64_and_parameterized_data_uris():
+    """RFC 2397 URIs that are not plain ``;base64`` — percent-encoded
+    ``;utf8`` SVG, ``;charset=`` parameters — skip like linked images
+    instead of quarantining the page; a parameterized ``;base64``
+    picture still decodes."""
+    import base64
+
+    from ocr_platform_spark import htmltext, multimodal
+
+    b64 = base64.b64encode(_word_png("line")).decode()
+    html = ("<!doctype html><html><body><p>keep before</p>"
+            '<img src="data:image/svg+xml;utf8,%3Csvg%3E%3C/svg%3E"/>'
+            '<img src="data:image/svg+xml;charset=utf-8,%3Csvg/%3E"/>'
+            f'<img src="data:image/png;name=a.png;base64,{b64}"/>'
+            "<p>keep after</p></body></html>").encode()
+    parts = htmltext.html_parts(htmltext.decode_html(html))
+    assert [(p[0], p[2]) for p in parts] == [
+        ("text", "keep before"), ("media", "image/png"),
+        ("text", "keep after")]
+    assert multimodal.probe_real_media(html, deep=True)[0] == "html"
 
 
 # --- e-mail: raster attachments OCR in place ---------------------------------
