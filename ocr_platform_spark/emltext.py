@@ -90,10 +90,8 @@ same 100 TB corpus reason the WARC source and Markdown tier do.
 
 from __future__ import annotations
 
-import email.errors
-import email.header
 import re
-from email import policy
+from email import headerregistry, policy
 from email.message import EmailMessage
 from email.parser import BytesParser
 
@@ -326,35 +324,32 @@ def _strip_mail_boilerplate(text: str) -> str:
     return "\n".join(out)
 
 
-def _check_encoded_words(raw: str) -> None:
-    """Every RFC 2047 encoded-word in a raw header value must decode
-    strictly under its declared charset. The stdlib header path decodes
-    with ``errors="replace"``, so a malformed word would otherwise
-    render as U+FFFD mojibake — the corruption signal the body-charset
-    rule quarantines on (module docstring). A U+FFFD the sender really
-    wrote passes. An unknown charset passes too: the stdlib renders its
-    raw bytes."""
+def _check_subject(raw: str) -> None:
+    """The rendered Subject must carry no U+FFFD the stdlib inserted.
+    The header path decodes each RFC 2047 encoded-word under its
+    charset (an unknown charset as ASCII), keeps every byte it cannot
+    decode — and every raw 8-bit header byte — surrogate-escaped, then
+    renders those runs as UTF-8 with ``errors="replace"``. A run that is
+    not valid UTF-8 therefore renders as U+FFFD mojibake, the corruption
+    signal the body-charset rule quarantines on (module docstring). This
+    re-runs the same parse and decodes those runs strictly: a U+FFFD
+    the sender really wrote passes, and so does a run that renders
+    clean (UTF-8 bytes inside a word labelled ``us-ascii``)."""
+    unfolded = raw.replace("\r", "").replace("\n", "")
+    decoded = str(headerregistry.UnstructuredHeader.value_parser(unfolded))
     try:
-        words = email.header.decode_header(raw)
-    except email.errors.HeaderParseError as e:
-        raise ValueError(f"undecodable encoded-word: {e}") from e
-    for chunk, charset in words:
-        if charset is None:
-            continue  # text outside any encoded-word
-        try:
-            chunk.decode(charset)
-        except LookupError:
-            continue
-        except UnicodeError as e:
-            raise ValueError(
-                f"encoded-word does not decode as {charset}: {e}") from e
+        decoded.encode("utf-8", "surrogateescape").decode("utf-8")
+    except UnicodeError as e:
+        raise ValueError(
+            f"Subject has an undecodable encoded-word or raw byte: {e}"
+        ) from e
 
 
 def _message_walk(msg: EmailMessage, depth: int, base: int, out: list,
                   keep_attachments: bool = False) -> int:
     raw = next((v for k, v in msg.raw_items() if k.lower() == "subject"),
                "")
-    _check_encoded_words(raw)
+    _check_subject(raw)
     subject = str(msg.get("Subject", "")).strip()
     if subject:
         out.append(("text", base, subject))

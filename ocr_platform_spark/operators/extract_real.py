@@ -43,8 +43,10 @@ so this pipeline uses a different, explicitly skew-bounded shape:
 
 **The tier table** (:data:`TIERS`) has one entry per probe
 ``media_kind``: ``kind -> (slicer | None, pages(raw, page_indices))``.
-``pages`` returns the decoded pages, and a page is an ordered list of
-parts. A part is either a text block (duck-typed on
+``pages`` returns the decoded pages, each a ``(parts, width, height)``
+triple: ``parts`` is an ordered list, and ``width x height`` is the
+pixel space of the text parts' coordinates (``0 x 0`` where they are
+synthetic ordinals). A part is either a text block (duck-typed on
 ``x1/y1/x2/y2/text``) or a grayscale raster (a 2-D ``uint8`` array).
 ``slicer(raw)`` parses a multi-page container once and returns the
 ``page_indices -> sub-document`` cut used at probe time; single-page
@@ -157,30 +159,23 @@ def _flow(parts: list[tuple]) -> list:
     return page
 
 
-class _TextLayerPage(list):
-    """A born-digital PDF page's text blocks plus its displayed size —
-    the pixel space the blocks' coordinates live in."""
-
-    def __init__(self, blocks: list, width: int, height: int) -> None:
-        super().__init__(blocks)
-        self.size = (width, height)
-
-
 def _pdf_pages(raw: bytes, page_indices) -> list:
     return [
-        _TextLayerPage(body, w, h) if kind == "text" else [body]
+        (body if kind == "text" else [body], w, h)
         for kind, body, w, h in pdftext.extract_hybrid_pages(
             raw, page_indices=page_indices, mode="L")
     ]
 
 
 def _raster_pages(raw: bytes, page_indices) -> list:
-    return [[page] for page in _rasters(raw, page_indices)]
+    return [([r], r.shape[1], r.shape[0])
+            for r in _rasters(raw, page_indices)]
 
 
 def _one_page(decode):
-    """Single-page tier: ``decode(raw)`` -> that page's parts."""
-    return lambda raw, _page_indices: [decode(raw)]
+    """Single-page tier: ``decode(raw)`` -> that page's parts, at
+    synthetic ordinal coordinates."""
+    return lambda raw, _page_indices: [(decode(raw), 0, 0)]
 
 
 def _text(blocks):
@@ -192,7 +187,8 @@ def _text(blocks):
 def _flow_pages(page_parts):
     """Paged container whose pages are part walks."""
     return lambda raw, page_indices: [
-        _flow(parts) for parts in page_parts(raw, page_indices=page_indices)
+        (_flow(parts), 0, 0)
+        for parts in page_parts(raw, page_indices=page_indices)
     ]
 
 
@@ -273,10 +269,16 @@ def _bucket_batches_fn(bucket_pages: int | None,
                 except Exception as exc:
                     # quarantine BEFORE the payload is duplicated: one
                     # narrow error row, no data rides along
-                    for c, v in zip(cols, (doc_id, offset, ref,
-                                           MEDIA_KIND_ERROR, -1, -1, -1,
-                                           str(exc)[:200], False, None)):
-                        out[c].append(v)
+                    out["doc_id"].append(doc_id)
+                    out["offset"].append(offset)
+                    out["media_ref"].append(ref)
+                    out["media_kind"].append(MEDIA_KIND_ERROR)
+                    out["bucket_index"].append(-1)
+                    out["page_lo"].append(-1)
+                    out["page_hi"].append(-1)
+                    out["error"].append(str(exc)[:200])
+                    out["sliced"].append(False)
+                    out["data"].append(None)
                     continue
                 k = bucket_pages or max(1, n_pages)
                 lows = range(0, max(1, n_pages), k)
@@ -302,9 +304,16 @@ def _bucket_batches_fn(bucket_pages: int | None,
                             # is near-dead defensive code: fall back to
                             # the full payload rather than quarantine
                             pass
-                    for c, v in zip(cols, (doc_id, offset, ref, kind, b, lo,
-                                           hi, None, sliced, payload)):
-                        out[c].append(v)
+                    out["doc_id"].append(doc_id)
+                    out["offset"].append(offset)
+                    out["media_ref"].append(ref)
+                    out["media_kind"].append(kind)
+                    out["bucket_index"].append(b)
+                    out["page_lo"].append(lo)
+                    out["page_hi"].append(hi)
+                    out["error"].append(None)
+                    out["sliced"].append(sliced)
+                    out["data"].append(payload)
             res = pd.DataFrame(out)
             for c in ("offset", "bucket_index", "page_lo", "page_hi"):
                 res[c] = res[c].astype("int32")
@@ -313,37 +322,41 @@ def _bucket_batches_fn(bucket_pages: int | None,
     return _bucket_batches
 
 
+#: the ``BLOCK`` columns :func:`_emit_page` fills, in its row order
+_EMIT_COLS = ("doc_id", "offset", "media_ref", "page_index", "block_index",
+              "x1", "y1", "x2", "y2", "text", "conf", "page_width",
+              "page_height")
+
+
 def _emit_page(doc_id: str, offset: int, ref: str, page_index: int,
-               page: list, out: dict[str, list]) -> None:
+               parts: list, page_w: int, page_h: int,
+               out: dict[str, list]) -> None:
     """One decoded page -> ``BLOCK`` rows under the module docstring's
     coordinate rule. Text blocks emit at ``conf=1.0`` (the source text
     is authoritative — there is no recognition uncertainty to score)
-    under the M11 unicode-strip contract; empty ones drop. Page size is
-    the raster's for OCR'd pictures in their own pixel space, the text
-    layer's for born-digital PDF pages, and ``0 x 0`` for synthetic
-    ordinal coordinates."""
-    if len(page) == 1 and isinstance(page[0], np.ndarray):
-        ocr_rendered_page(doc_id, offset, ref, page_index, page[0], out)
+    under the M11 unicode-strip contract; empty ones drop. A lone raster
+    OCRs in its own pixel space; every other row carries the page's
+    ``page_w x page_h``."""
+    if len(parts) == 1 and isinstance(parts[0], np.ndarray):
+        ocr_rendered_page(doc_id, offset, ref, page_index, parts[0], out)
         return
-    page_w, page_h = getattr(page, "size", (0, 0))
     rows: list[tuple] = []
-    for i, part in enumerate(page):
+    for i, part in enumerate(parts):
         if isinstance(part, np.ndarray):
             ocr: dict[str, list] = {f.name: [] for f in BLOCK.fields}
             ocr_rendered_page(doc_id, offset, ref, page_index, part, ocr)
             order = sorted(range(len(ocr["text"])), key=lambda k: (
                 ocr["y1"][k], ocr["x1"][k], ocr["block_index"][k]))
             rows.extend((rank, i, rank + 1, i + 1, ocr["text"][k],
-                         ocr["conf"][k], 0, 0)
+                         ocr["conf"][k], page_w, page_h)
                         for rank, k in enumerate(order))
         elif part.text.strip():
             rows.append((part.x1, part.y1, part.x2, part.y2,
                          part.text.strip(), 1.0, page_w, page_h))
     for bi, row in enumerate(rows):
-        # ``out`` is keyed in BLOCK field order
-        for col, v in zip(out.values(),
-                          (doc_id, offset, ref, page_index, bi, *row)):
-            col.append(v)
+        for name, v in zip(_EMIT_COLS,
+                           (doc_id, offset, ref, page_index, bi, *row)):
+            out[name].append(v)
 
 
 def _ocr_real_batches(
@@ -386,8 +399,9 @@ def _ocr_real_frame(pdf: pd.DataFrame) -> pd.DataFrame:
             # the job; everything structurally detectable already
             # quarantined with a triage row at probe time.
             continue
-        for i, page in enumerate(decoded):
-            _emit_page(doc_id, int(offset), ref, int(lo) + i, page, out)
+        for i, (parts, page_w, page_h) in enumerate(decoded):
+            _emit_page(doc_id, int(offset), ref, int(lo) + i, parts,
+                       page_w, page_h, out)
     res = pd.DataFrame(out)
     for c in _INT_BLOCK_COLS:
         res[c] = res[c].astype("int32")

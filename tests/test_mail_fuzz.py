@@ -68,6 +68,17 @@ ADVERSARIAL = [
      emltext.encode_eml(H + [("Subject", "=?utf-8?B?/w==?=")],
                         body="body"),
      "quarantine"),
+    ("raw-8bit-subject-not-utf8",
+     _hdr(H) + b"\r\nSubject: caf\xe9\r\n\r\nbody",
+     "quarantine"),  # the stdlib renders the Latin-1 byte as U+FFFD
+    ("unknown-ew-charset-8bit",
+     emltext.encode_eml(H + [("Subject", "=?x-fantasy?B?/w==?=")],
+                        body="body"),
+     "quarantine"),  # decoded as ASCII; the 0xFF byte renders U+FFFD
+    ("us-ascii-ew-carries-utf8",
+     emltext.encode_eml(H + [("Subject", "=?us-ascii?B?w6k=?=")],
+                        body="body"),
+     "ok"),  # the stdlib renders the escaped UTF-8 bytes as a clean é
     ("nested-rfc822-at-cap", _nested(emltext._MAX_DEPTH - 1), "ok"),
     ("nested-rfc822-past-cap", _nested(emltext._MAX_DEPTH + 2),
      "quarantine"),
