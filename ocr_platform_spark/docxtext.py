@@ -9,10 +9,10 @@ is a flat run of ``<w:p>`` paragraphs (table cells nest their own
 uploaded PDFs/images only, ``apps/worker/app/tasks/ocr_tasks.py:36-39``).
 
 Dispatch: :func:`..formats.sniff_kind` names any ``PK\\x03\\x04``
-payload ``"zip"``; :func:`probe_docx` then refines it — a zip whose
-namelist carries ``word/document.xml`` is a DOCX, every other zip
-quarantines (extracting an arbitrary archive's members as document text
-would be silent garbage; XLSX/PPTX/EPUB each need their own tier).
+payload ``"zip"``; :func:`..multimodal.probe_real_media` then refines
+it — a zip whose namelist carries ``word/document.xml`` is a DOCX, and
+a zip no office tier claims quarantines (extracting an arbitrary
+archive's members as document text would be silent garbage).
 
 Block model: one ``TextParagraph`` per non-empty ``<w:p>``, in document
 order (``iter()`` is document-order for nested table paragraphs too;
@@ -100,59 +100,20 @@ def _open_docx(raw: bytes) -> zipfile.ZipFile:
     return zf
 
 
-def probe_docx(raw: bytes, deep: bool = False) -> tuple[int, int, int]:
-    """Pre-flight: ``(n_pages=1, width=0, height=0)`` — DOCX is
-    reflowable (page breaks are a render-time artifact of fonts/margins;
-    there is no raster geometry to report).
-
-    Shallow (the header-walk metadata probe): central-directory read +
+def probe_docx(raw: bytes) -> tuple[int, int, int]:
+    """Shallow pre-flight (the header-walk metadata probe):
+    ``(n_pages=1, width=0, height=0)`` — DOCX is reflowable (page
+    breaks are a render-time artifact of fonts/margins; there is no
+    raster geometry to report). Central-directory read +
     ``word/document.xml`` presence — O(directory), no member inflated.
-    Deep (the extraction probe): additionally runs the full part walk
-    (:func:`document_parts`) — CRC mismatches, encrypted members,
-    zlib-level corruption, malformed XML, dangling picture
-    relationships and unreadable embedded media all quarantine HERE,
-    before the payload is duplicated into page buckets — and
-    structurally validates every embedded picture the OCR stage will
-    decode (:func:`validate_embedded_media`), so a corrupt embedded
-    PNG quarantines at probe time instead of failing mid-OCR."""
+    The deep probe runs :func:`document_parts`, the walk extraction
+    decodes (:mod:`.tiers`)."""
     with _open_docx(raw) as zf:
         if _DOC_PART not in zf.namelist():
             raise ValueError(
                 "zip container is not a DOCX (no word/document.xml)"
             )
-    if deep:
-        validate_embedded_media(document_parts(raw))
     return 1, 0, 0
-
-
-def validate_embedded_media(parts: list[tuple]) -> None:
-    """Deep structural validation of a part walk's embedded pictures:
-    every media part whose bytes sniff as a supported raster codec
-    (PNG/JPEG/GIF/BMP/TIFF) runs the full real-media pre-flight
-    (chunk CRCs, marker bounds, directory walks). Unsupported formats
-    (EMF/WMF vectors, nested archives, ...) are NOT validated — the
-    extraction stage skips them (the documented subset), so there is
-    no extraction-time failure to front-run. Shared by the DOCX and
-    ODT deep probes."""
-    from . import formats, multimodal
-
-    for part in parts:
-        if part[0] != "media":
-            continue
-        payload = part[-1]  # last slot in every walk's media tuple
-        if formats.sniff_kind(payload) in EMBED_RASTER_KINDS:
-            try:
-                multimodal.probe_real_media(payload, deep=True)
-            except Exception as e:
-                raise ValueError(
-                    f"corrupt embedded media {part[-2]!r}: {e}"
-                ) from e
-
-
-#: raster codecs an embedded office picture decodes through (the OCR
-#: interleave subset; anything else — EMF/WMF vectors, nested
-#: containers — contributes no blocks and is skipped)
-EMBED_RASTER_KINDS = frozenset(("png", "jpeg", "gif", "bmp", "tiff"))
 
 
 def _parse_document(zf: zipfile.ZipFile) -> ElementTree.Element:

@@ -98,8 +98,8 @@ from email.parser import BytesParser
 from .plaintext import TextParagraph, decode_text, paragraph_blocks
 
 __all__ = [
-    "sniff_eml", "sniff_mbox", "eml_blocks", "validate_eml",
-    "probe_mbox", "mbox_page_blocks", "slice_messages",
+    "sniff_eml", "sniff_mbox", "eml_blocks", "eml_parts",
+    "count_messages", "mbox_page_parts", "slice_messages",
     "encode_eml", "encode_mbox",
 ]
 
@@ -416,24 +416,6 @@ def eml_parts(text: str) -> list[tuple]:
     return out
 
 
-def validate_eml(raw: bytes, text: "str | None" = None
-                 ) -> tuple[int, int, int]:
-    """Probe-time pre-flight for a bare EML payload: full strict parse
-    AND a full block render (charset checks live in the render path),
-    plus structural validation of raster attachments (the shared
-    office rule — a corrupt attached PNG quarantines HERE, before the
-    payload duplicates). ``(1, 0, 0)`` — one reflowable page, no
-    raster geometry. ``text`` lets a caller that already ran the
-    plain-text decode (the probe ladder) skip a second O(n) pass over
-    the payload."""
-    from .docxtext import validate_embedded_media
-
-    validate_embedded_media(
-        eml_parts(decode_text(raw) if text is None else text)
-    )
-    return 1, 0, 0
-
-
 # ---------------------------------------------------------------------------
 # mbox: messages are pages
 # ---------------------------------------------------------------------------
@@ -473,38 +455,6 @@ def count_messages(raw: bytes) -> int:
     return len(_ENVELOPE_BYTES_RE.findall(normalized))
 
 
-def probe_mbox(raw: bytes, deep: bool = False,
-               text: "str | None" = None) -> tuple[int, int, int]:
-    """``(n_messages, 0, 0)`` — messages are pages, text has no raster
-    geometry. ``deep=True`` strictly parses AND renders every message
-    (defects, charsets, nesting) so extraction-time failures quarantine
-    at probe time, mirroring the office tiers' deep/shallow split; the
-    shallow pass only splits on envelope lines (one regex scan, no
-    MIME parse). ``text`` skips the redundant decode when the caller
-    (the probe ladder) already holds the decoded payload."""
-    msgs = _split_mbox(decode_text(raw) if text is None else text)
-    if deep:
-        from .docxtext import validate_embedded_media
-
-        for m in msgs:
-            if not sniff_eml(m):
-                raise ValueError("mbox member without an e-mail header block")
-            validate_embedded_media(eml_parts(m))
-    return len(msgs), 0, 0
-
-
-def mbox_page_blocks(
-    raw: bytes, page_indices: "list[int] | range | None" = None
-) -> list[list[TextParagraph]]:
-    """Per-message block lists. ``page_indices`` selects messages by
-    GLOBAL archive position (the bucket contract, cf.
-    ``pptxtext.slide_blocks``)."""
-    msgs = _split_mbox(decode_text(raw))
-    if page_indices is not None:
-        msgs = [msgs[i] for i in page_indices]
-    return [eml_blocks(m) for m in msgs]
-
-
 def mbox_page_parts(
     raw: bytes, page_indices: "list[int] | range | None" = None
 ) -> list[list[tuple]]:
@@ -512,12 +462,16 @@ def mbox_page_parts(
     walks with attachments kept and parts re-keyed to running ordinals
     — the ``pptxtext.slide_parts`` shape, so raster attachments OCR in
     place between their message's body parts through the paged bucket
-    path. Same ``page_indices`` contract as :func:`mbox_page_blocks`."""
+    path. ``page_indices`` selects messages by GLOBAL archive position
+    (the bucket contract, cf. ``pptxtext.slide_parts``). A member
+    without an e-mail header block quarantines."""
     msgs = _split_mbox(decode_text(raw))
     if page_indices is not None:
         msgs = [msgs[i] for i in page_indices]
     pages: list[list[tuple]] = []
     for m in msgs:
+        if not sniff_eml(m):
+            raise ValueError("mbox member without an e-mail header block")
         items: list[tuple] = []
         for i, p in enumerate(eml_parts(m)):
             if p[0] == "text":

@@ -46,10 +46,6 @@ _MANIFEST_ITEM = f"{{{_OPF_NS}}}manifest/{{{_OPF_NS}}}item"
 _SPINE_ITEMREF = f"{{{_OPF_NS}}}spine/{{{_OPF_NS}}}itemref"
 
 
-def is_epub(zf: zipfile.ZipFile) -> bool:
-    return _MARKER in zf.namelist()
-
-
 def _opf_path(zf: zipfile.ZipFile) -> str:
     root = _parse_member(zf, _MARKER)
     for rf in root.iter(_ROOTFILE):
@@ -88,34 +84,13 @@ def _spine_members(zf: zipfile.ZipFile) -> list[str]:
     return members
 
 
-def _validate_embedded_images(zf: zipfile.ZipFile, name: str) -> None:
-    """Deep-probe leg: resolve the chapter's images (missing members
-    quarantine) and structurally validate the supported rasters via
-    the shared office rule."""
-    from .docxtext import media_content_type, validate_embedded_media
-
-    html = htmltext.decode_html(_read_member(zf, name))
-    parts = [
-        ("media", media_content_type(t), t, _read_member(zf, t))
-        for _pos, t in _chapter_images(zf, name, html)
-    ]
-    validate_embedded_media(parts)
-
-
-def probe_epub(raw: bytes, deep: bool = False) -> tuple[int, int, int]:
-    """Pre-flight: ``(n_chapters, width=0, height=0)``. Shallow resolves
+def probe_epub(raw: bytes) -> tuple[int, int, int]:
+    """Shallow pre-flight: ``(n_chapters, width=0, height=0)``, resolving
     the container → OPF → spine chain (three small XML parses, no
-    chapter inflated); deep additionally runs the DOM tier's structural
-    pre-flight over every chapter (CRC-verified read + truncation /
-    charset / unclosed-subtree checks), so content corruption
-    quarantines before the payload is duplicated."""
+    chapter inflated). The deep probe runs :func:`chapter_parts`, the
+    walk extraction decodes."""
     with _open_zip(raw) as zf:
-        members = _spine_members(zf)
-        if deep:
-            for name in members:
-                _validate_chapter(zf, name)
-                _validate_embedded_images(zf, name)
-    return len(members), 0, 0
+        return len(_spine_members(zf)), 0, 0
 
 
 def _read_member(zf: zipfile.ZipFile, name: str) -> bytes:
@@ -125,29 +100,14 @@ def _read_member(zf: zipfile.ZipFile, name: str) -> bytes:
         raise ValueError(f"unreadable {name}: {e}") from e
 
 
-def _validate_chapter(zf: zipfile.ZipFile, name: str) -> None:
+def _chapter_html(zf: zipfile.ZipFile, name: str) -> str:
+    """A chapter's decoded XHTML behind the DOM tier's structural
+    pre-flight (CRC-verified read + truncation / charset /
+    unclosed-subtree checks, :func:`..htmltext.validate_html`)."""
     try:
-        htmltext.validate_html(_read_member(zf, name))
+        return htmltext.validate_html(_read_member(zf, name))
     except ValueError as e:
         raise ValueError(f"chapter {name}: {e}") from e
-
-
-def chapter_blocks(
-    raw: bytes, page_indices: "list[int] | range | None" = None
-) -> list[list[htmltext.ContentBlock]]:
-    """EPUB bytes -> per-chapter DOM block lists in spine order.
-    ``page_indices`` selects chapters by GLOBAL spine position (the
-    bucket contract — a sliced payload passes ``None`` and gets its own
-    chapters back in order)."""
-    with _open_zip(raw) as zf:
-        members = _spine_members(zf)
-        if page_indices is not None:
-            members = [members[i] for i in page_indices]
-        return [
-            htmltext.main_blocks(
-                htmltext.decode_html(_read_member(zf, name)))
-            for name in members
-        ]
 
 
 #: RFC 3986 scheme prefix: such a source is not a package member
@@ -184,7 +144,10 @@ def chapter_parts(
     embedded images interleaved by document position (the
     :func:`..pptxtext.slide_parts` shape — ``("text", pos, text)`` /
     ``("media", pos, ctype, member, payload)``), so a scanned plate
-    between two paragraphs OCRs between their spans."""
+    between two paragraphs OCRs between their spans. Text parts are the
+    DOM tier's :func:`..htmltext.main_blocks`. ``page_indices`` selects
+    chapters by GLOBAL spine position (the bucket contract — a sliced
+    payload passes ``None`` and gets its own chapters back in order)."""
     from .docxtext import media_content_type
 
     with _open_zip(raw) as zf:
@@ -193,7 +156,7 @@ def chapter_parts(
             members = [members[i] for i in page_indices]
         chapters: list[list[tuple]] = []
         for name in members:
-            html = htmltext.decode_html(_read_member(zf, name))
+            html = _chapter_html(zf, name)
             items: list[tuple] = [
                 ("text", b.pos, b.text)
                 for b in htmltext.main_blocks(html)
@@ -224,7 +187,7 @@ def slice_chapters(raw: bytes, page_indices) -> bytes:
         # each kept chapter's embedded images ride with their slice so
         # the bucket's picture interleave still decodes (round 5)
         for name in selected:
-            html = htmltext.decode_html(_read_member(zf, name))
+            html = _chapter_html(zf, name)
             keep.update(t for _pos, t in _chapter_images(zf, name, html))
         # rewrite the OPF to the selected subset: drop spine itemrefs
         # AND manifest items whose href is not kept (measured: with the

@@ -336,17 +336,17 @@ def decode_html(raw: bytes) -> str:
         ) from e
 
 
-def validate_html(raw: bytes) -> tuple[int, int, int]:
-    """Probe-time pre-flight: ``(n_pages=1, width=0, height=0)``.
+def validate_html(raw: bytes) -> str:
+    """Strict decode: :func:`decode_html` plus the structural checks,
+    returning the decoded document (the HTML and EPUB part walks parse
+    exactly what was checked).
 
     Quarantine conditions (each is a real silent-corruption risk, not
     pedantry): bytes invalid under the (declared or default) charset
     (mojibake would flow into span text), a missing ``</html>``
     (truncated payload — the tail of the content is gone), and an
     unclosed ``<script>``/``<style>``/comment (subtree-drop semantics
-    would swallow the rest of the document as code). Width and height
-    are 0: HTML is reflowable — there is no raster geometry to report,
-    and the extraction tier never produces pixels."""
+    would swallow the rest of the document as code)."""
     html = decode_html(raw)
     low = html.lower()
     if "</html>" not in low:
@@ -366,4 +366,4 @@ def validate_html(raw: bytes) -> tuple[int, int, int]:
             "unterminated HTML comment: subtree drop would swallow "
             "the rest of the document"
         )
-    return 1, 0, 0
+    return html

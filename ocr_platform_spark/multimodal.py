@@ -272,7 +272,7 @@ REAL_MEDIA_META_SCHEMA = (
 
 
 def probe_real_media(
-    raw: bytes, deep: bool = False, text_layer: bool = False
+    raw: bytes, deep: bool = False
 ) -> tuple[str, int, int, int]:
     """THE real-codec dispatch ladder: ``(kind, n_pages, width, height)``
     from container structure only — PNG IHDR behind per-chunk CRC, JPEG
@@ -281,22 +281,20 @@ def probe_real_media(
     anything the real OCR path could not decode (synthetic containers
     included: they belong to the descriptor path).
 
-    ``deep=True`` additionally interprets every PDF content stream and
-    validates every image XObject dictionary
-    (:func:`pdfcodec.validate_scanned`) — what the distributed-OCR probe
-    stage wants, so vector/unsupported documents quarantine before any
-    payload duplication. The metadata pass uses ``deep=False`` (xref +
-    page tree only). Single source of truth for both consumers
+    ``deep=True`` is the extraction pre-flight, so unsupported/corrupt
+    documents quarantine before any payload duplication. PDFs validate
+    every page under the HYBRID contract the OCR stage decodes
+    (:func:`pdftext.validate_hybrid`: pages with show operators as
+    text-layer pages, fonts loaded and every string decoded; pages
+    without under the scanned subset). The container kinds (DOCX, ODT,
+    PPTX, XLSX, EPUB, RTF, HTML, e-mail, mbox) run the SAME part walk
+    the OCR stage decodes (:data:`.tiers.TIERS`) and deep-probe every
+    picture it would OCR (:func:`_probe_walk`), so probe/extract
+    symmetry is structural. The metadata pass uses ``deep=False``
+    (header walks only). Single source of truth for both consumers
     (:func:`real_media_metadata` here, the bucket probe in
     ``operators/extract_real.py``) so their quarantine semantics cannot
-    drift.
-
-    ``text_layer=True`` (deep PDF probes only) switches the per-page
-    contract to the HYBRID one (:func:`pdftext.validate_hybrid`): pages
-    with show operators validate as text-layer pages (fonts loaded,
-    every string decoded), pages without keep the scanned-subset
-    validation — the pre-flight for the OCR-bypass dispatch in
-    ``operators/extract_real.py``."""
+    drift."""
     from . import jpegcodec, pdfcodec, pngcodec, transport
 
     twrap = transport.sniff_transport(raw)
@@ -310,8 +308,7 @@ def probe_real_media(
         # split exists to avoid (..transport module docstring).
         if not deep:
             return twrap, 1, 0, 0
-        return probe_real_media(transport.maybe_unwrap(raw), deep=deep,
-                                text_layer=text_layer)
+        return probe_real_media(transport.maybe_unwrap(raw), deep=True)
 
     kind = formats.sniff_kind(raw)
     if kind in ("spdf", "simg"):
@@ -320,13 +317,12 @@ def probe_real_media(
             "(formats.decode_media / extract_documents)"
         )
     if kind == "pdf":
-        if deep and text_layer:
+        if deep:
             from . import pdftext
 
-            fn = pdftext.validate_hybrid
+            n, w, h = pdftext.validate_hybrid(raw)
         else:
-            fn = pdfcodec.validate_scanned if deep else pdfcodec.probe_dims
-        n, w, h = fn(raw)
+            n, w, h = pdfcodec.probe_dims(raw)
         return "pdf", n, w, h
     if kind == "png":
         w, h = pngcodec.validate_png(raw)
@@ -361,74 +357,50 @@ def probe_real_media(
         from . import htmltext
 
         # Width/height are 0: reflowable text carries no raster
-        # geometry. deep=True runs the full structural pre-flight
-        # (whole-payload decode + truncation/unclosed-subtree checks) —
-        # what the extraction probe wants. The shallow/metadata probe
-        # stays O(pre-scan window) like every other kind's header walk:
-        # it only refuses an unsupported DECLARED charset (2048-byte
-        # scan), mirroring the PDF probe_dims-vs-validate_scanned split.
+        # geometry. The shallow/metadata probe stays O(pre-scan window)
+        # like every other kind's header walk: it only refuses an
+        # unsupported DECLARED charset (2048-byte scan).
         if deep:
-            n, w, h = htmltext.validate_html(raw)
-            # embedded data-URI images (round 5): malformed URIs and
-            # corrupt embedded rasters quarantine at probe time, the
-            # shared office rule
-            from . import docxtext
-
-            docxtext.validate_embedded_media(
-                htmltext.html_parts(htmltext.decode_html(raw))
-            )
-            return "html", n, w, h
+            return _probe_walk("html", raw)
         name = htmltext._declared_charset(raw)
         if name is not None and name not in htmltext._CHARSET_CODECS:
             raise ValueError(f"unsupported declared charset {name!r}")
         return "html", 1, 0, 0
     if kind == "zip":
-        from . import docxtext, epubtext, pptxtext, xlsxtext
+        from . import docxtext, epubtext, odttext, pptxtext, xlsxtext
 
         # refine by marker part: word/document.xml -> DOCX (one
         # reflowable page), ppt/presentation.xml -> PPTX (slides are
         # pages), xl/workbook.xml -> XLSX (sheets are pages),
-        # META-INF/container.xml -> EPUB (spine chapters are pages);
-        # any other archive quarantines rather than dumping member
-        # text. deep=True inflates + XML-parses the text-bearing parts
-        # (CRC verified), the shallow probe walks the central directory
-        # and the container/OPF chain only.
+        # META-INF/container.xml -> EPUB (spine chapters are pages), the
+        # ODF mimetype -> ODT; any other archive quarantines rather than
+        # dumping member text. The shallow probe walks the central
+        # directory and the container/OPF chain only.
         with docxtext._open_docx(raw) as zf:
             names = set(zf.namelist())
-        if "word/document.xml" in names:
-            n, w, h = docxtext.probe_docx(raw, deep=deep)
-            return "docx", n, w, h
-        if pptxtext._MARKER in names:
-            n, w, h = pptxtext.probe_pptx(raw, deep=deep)
-            return "pptx", n, w, h
-        if xlsxtext._MARKER in names:
-            n, w, h = xlsxtext.probe_xlsx(raw, deep=deep)
-            return "xlsx", n, w, h
-        if epubtext._MARKER in names:
-            n, w, h = epubtext.probe_epub(raw, deep=deep)
-            return "epub", n, w, h
-        from . import odttext
-
-        with docxtext._open_docx(raw) as zf:
-            odt = odttext.is_odt(zf)
-        if odt:
-            n, w, h = odttext.probe_odt(raw, deep=deep)
-            return "odt", n, w, h
-        raise ValueError(
-            "zip container is not a DOCX/PPTX/XLSX/EPUB/ODT (no "
-            "word/document.xml, ppt/presentation.xml, xl/workbook.xml, "
-            "META-INF/container.xml or ODF mimetype/content.xml)"
-        )
+            kind = ("docx" if "word/document.xml" in names
+                    else "pptx" if pptxtext._MARKER in names
+                    else "xlsx" if xlsxtext._MARKER in names
+                    else "epub" if epubtext._MARKER in names
+                    else "odt" if odttext.is_odt(zf) else None)
+        if kind is None:
+            raise ValueError(
+                "zip container is not a DOCX/PPTX/XLSX/EPUB/ODT (no "
+                "word/document.xml, ppt/presentation.xml, xl/workbook.xml, "
+                "META-INF/container.xml or ODF mimetype/content.xml)"
+            )
+        if deep:
+            return _probe_walk(kind, raw)
+        probe = {"docx": docxtext.probe_docx, "pptx": pptxtext.probe_pptx,
+                 "xlsx": xlsxtext.probe_xlsx, "epub": epubtext.probe_epub,
+                 "odt": odttext.probe_odt}[kind]
+        return (kind, *probe(raw))
     if kind == "rtf":
-        from . import rtftext
-
         # RTF has no checksums/length fields, so structural validation
         # IS the strict parse; the shallow/metadata probe stays
-        # O(magic) like every other header walk. deep additionally
-        # validates embedded \pict rasters (shared office rule)
+        # O(magic) like every other header walk
         if deep:
-            n, w, h = rtftext.validate_rtf(raw, deep_media=True)
-            return "rtf", n, w, h
+            return _probe_walk("rtf", raw)
         return "rtf", 1, 0, 0
     if kind == "wav":
         from . import audiocodec
@@ -470,7 +442,7 @@ def probe_real_media(
     # FINAL tier — no magic matched: strict plain-text contract
     # (UTF-8, no binary controls, no leading markup). deep validates
     # the whole payload; shallow is the O(window) sniff, mirroring the
-    # probe_dims-vs-validate_scanned split.
+    # probe_dims-vs-validate_hybrid split.
     from . import plaintext
 
     if deep:
@@ -499,16 +471,14 @@ def probe_real_media(
         # literal
         if jsontext.sniff_json(text) is not None:
             return "json", 1, 0, 0
+        # the mail walks decode their own copy: drop this one first so
+        # a multi-GB archive holds one decoded copy at a time
         if emltext.sniff_mbox(text):
-            # deep probe = strict parse+render of every message, so
-            # extraction-time failures quarantine here (office split);
-            # the already-decoded text is passed through (no second
-            # O(n) decode of a multi-GB archive)
-            n, w, h = emltext.probe_mbox(raw, deep=True, text=text)
-            return "mbox", n, w, h
+            text = None
+            return _probe_walk("mbox", raw)
         if emltext.sniff_eml(text):
-            n, w, h = emltext.validate_eml(raw, text=text)
-            return "eml", n, w, h
+            text = None
+            return _probe_walk("eml", raw)
         if latextext.sniff_latex(text):
             return "tex", 1, 0, 0
         if subtext.sniff_subtitles(text):
@@ -550,6 +520,25 @@ def probe_real_media(
             return "md", 1, 0, 0
         return "txt", 1, 0, 0
     raise ValueError(f"unknown media magic {raw[:5]!r}")
+
+
+def _probe_walk(kind: str, raw: bytes) -> tuple[str, int, int, int]:
+    """Deep probe of a container kind: run its tier's part walk over
+    every page (the walk the OCR stage decodes, so whatever it would
+    fail on quarantines here) and deep-probe each part the shared
+    picture rule (:func:`.tiers.is_picture`) sends to OCR."""
+    from . import tiers
+
+    pages = tiers.TIERS[kind].walk(raw, None)
+    for parts in pages:
+        for part in filter(tiers.is_picture, parts):
+            try:
+                probe_real_media(part[-1], deep=True)
+            except Exception as e:
+                raise ValueError(
+                    f"corrupt embedded media {part[-2]!r}: {e}"
+                ) from e
+    return kind, len(pages), 0, 0
 
 
 def real_media_metadata(media: DataFrame) -> DataFrame:

@@ -73,20 +73,13 @@ def is_odt(zf: zipfile.ZipFile) -> bool:
         return False
 
 
-def probe_odt(raw: bytes, deep: bool = False) -> tuple[int, int, int]:
-    """Pre-flight: ``(n_pages=1, width=0, height=0)`` — ODT is
-    reflowable like DOCX. Shallow checks ``content.xml`` presence; deep
-    runs the full part walk (CRC-verified inflate + XML parse + embedded
-    media resolution) and structurally validates every embedded raster
-    the OCR stage will decode (:func:`..docxtext.validate_embedded_media`
-    — the shared office rule)."""
+def probe_odt(raw: bytes) -> tuple[int, int, int]:
+    """Shallow pre-flight: ``(n_pages=1, width=0, height=0)`` — ODT is
+    reflowable like DOCX; checks ``content.xml`` presence. The deep
+    probe runs :func:`document_parts`, the walk extraction decodes."""
     with _open_zip(raw) as zf:
         if _CONTENT not in zf.namelist():
             raise ValueError("ODT container has no content.xml")
-    if deep:
-        from .docxtext import validate_embedded_media
-
-        validate_embedded_media(document_parts(raw))
     return 1, 0, 0
 
 

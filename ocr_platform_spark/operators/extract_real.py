@@ -10,10 +10,12 @@ explode ships ~200-byte JSON rows, so pixels never cross a shuffle.
 Real media has no descriptor — the OCR task needs the payload bytes —
 so this pipeline uses a different, explicitly skew-bounded shape:
 
-1. **probe** (``mapInPandas`` over spans⋈payloads): header-only page
-   count (:func:`..multimodal.probe_real_media` with ``deep=True`` —
-   xref walk + content-stream interpretation, image samples never
-   inflated; images are 1 page) and explode into page *buckets* of
+1. **probe** (``mapInPandas`` over spans⋈payloads): the deep
+   :func:`..multimodal.probe_real_media` — header and structure walks
+   for PDFs and rasters (xref walk + content-stream interpretation,
+   image samples never inflated; images are 1 page), and for the
+   container kinds the same part walk the OCR stage decodes
+   (:mod:`..tiers`) — then explode into page *buckets* of
    ``bucket_pages`` pages. Each bucket row carries the payload once.
    Unsupported/corrupt payloads (vector PDFs, truncated files,
    synthetic containers) quarantine HERE as ``media_kind=error`` rows —
@@ -32,7 +34,7 @@ so this pipeline uses a different, explicitly skew-bounded shape:
    media, zero duplication) for corpora known to have bounded page
    counts.
 3. **OCR** (``mapInPandas``): each bucket decodes ONLY its own pages
-   through the tier table below, and one emitter turns the pages into
+   through its kind's tier-table entry, and one emitter turns the pages into
    ``BLOCK`` rows. Rasters go through the *shared* OCR core
    (:func:`..operators.extract.ocr_rendered_page` — detect, PrepView
    crops, strip recognition, unicode strip), so the real and synthetic
@@ -41,39 +43,11 @@ so this pipeline uses a different, explicitly skew-bounded shape:
    :func:`..operators.extract.assemble_spans` re-emits each document's
    interleaved span array.
 
-**The tier table** (:data:`TIERS`) has one entry per probe
-``media_kind``: ``kind -> (slicer | None, pages(raw, page_indices))``.
-``pages`` returns the decoded pages, each a ``(parts, width, height)``
-triple: ``parts`` is an ordered list, and ``width x height`` is the
-pixel space of the text parts' coordinates (``0 x 0`` where they are
-synthetic ordinals). A part is either a text block (duck-typed on
-``x1/y1/x2/y2/text``) or a grayscale raster (a 2-D ``uint8`` array).
-``slicer(raw)`` parses a multi-page container once and returns the
-``page_indices -> sub-document`` cut used at probe time; single-page
-tiers have none. ``page_indices`` is ``None`` for a sliced payload
-(it holds exactly the bucket's pages) and the bucket's global page
-range otherwise. The entries fall into four groups:
-
-- **PDF**: always the per-page hybrid
-  :func:`..pdftext.extract_hybrid_pages`. A born-digital page parses
-  its text layer (microseconds of string parsing instead of ~10 ms of
-  raster + detect + recognize — the dominant efficiency lever at
-  corpus scale); a scanned page rasterizes through the exact
-  ``decode_pdf`` path. Whether text layers are admitted at all is
-  decided once, at the probe (``text_layer``): the scanned-only probe
-  quarantines any page with show operators, so everything it admits
-  rasterizes.
-- **Rasters**: PNG/JPEG/BMP images, TIFF and GIF frames — one raster
-  per page.
-- **Reflowable text** (plain text, Markdown, LaTeX, subtitles, DSV,
-  XML, JSON): one page of text blocks positioned at character offsets.
-- **Containers with embedded pictures** (DOCX, ODT, RTF, HTML
-  ``data:`` images and e-mail attachments as one page; PPTX slides,
-  EPUB chapters, mbox messages and XLSX sheets as pages): the tier's
-  part walk goes through :func:`_flow`, which keeps text parts and
-  decodes each supported picture. Unsupported formats (EMF/WMF
-  vectors, nested containers) contribute nothing — the subset
-  :func:`..docxtext.validate_embedded_media` validates at probe.
+**The tier table** (:data:`..tiers.TIERS`) maps each probe
+``media_kind`` to ``(slicer | None, pages)``: the slicer cuts
+multi-bucket payloads at probe time, ``pages`` decodes a bucket's
+pages, each a ``(parts, width, height)`` triple of text blocks and
+grayscale rasters (see :mod:`..tiers`).
 
 **One emitter** (:func:`_emit_page`), one coordinate rule: a page that
 is a lone raster OCRs in its own pixel space. Anywhere else, the part
@@ -93,19 +67,15 @@ the synthetic corpus does through ``extract_documents``.
 from __future__ import annotations
 
 from collections.abc import Iterator
-from functools import partial
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .. import (bmpcodec, csvtext, docxtext, emltext, epubtext, formats,
-                gifcodec, htmltext, jpegcodec, jsontext, latextext, mdtext,
-                multimodal, odttext, pdfcodec, pdftext, plaintext, pngcodec,
-                pptxtext, rtftext, subtext, tiffcodec, transport, xlsxtext,
-                xmltext)
+from .. import multimodal, transport
 from ..schemas import BLOCK
+from ..tiers import TIERS
 from .extract import (
     _INT_BLOCK_COLS,
     MEDIA_KIND_ERROR,
@@ -127,122 +97,17 @@ REAL_BUCKET = (
 )
 
 
-def _rasters(raw: bytes, page_indices=None) -> list[np.ndarray]:
-    """Raster payload -> grayscale pages via the magic dispatch: one
-    per PNG/BMP/JPEG image, one per selected TIFF/GIF frame. ``mode="L"``
-    keeps native-gray pages 2-D end-to-end; color content converts with
-    PIL's exact ``convert("L")`` luma (:func:`..pdfcodec.rgb_to_gray`)."""
-    kind = formats.sniff_kind(raw)
-    if kind == "tiff":
-        return tiffcodec.decode_tiff(raw, mode="L", page_indices=page_indices)
-    if kind == "gif":
-        return gifcodec.decode_gif(raw, mode="L", page_indices=page_indices)
-    decode = {"png": pngcodec.decode_png,
-              "bmp": bmpcodec.decode_bmp}.get(kind, jpegcodec.decode_jpeg)
-    return [pdfcodec.rgb_to_gray(decode(raw))]
-
-
-def _flow(parts: list[tuple]) -> list:
-    """A part walk (``("text", pos, text)`` / ``("media", ..., payload)``
-    — the text or payload is the LAST slot in every walk) -> one page:
-    each text part becomes a block at ``y1`` = its ordinal in the page,
-    each embedded picture whose bytes sniff as a supported raster codec
-    decodes to its rasters (a multi-frame TIFF/GIF one per frame, in
-    frame order), and unsupported formats drop. Decoding here keeps
-    picture failures inside the OCR stage's atomic decode."""
-    page: list = []
-    for part in parts:
-        if part[0] == "text":
-            page.append(plaintext.TextParagraph(len(page), part[-1]))
-        elif formats.sniff_kind(part[-1]) in docxtext.EMBED_RASTER_KINDS:
-            page.extend(_rasters(part[-1]))
-    return page
-
-
-def _pdf_pages(raw: bytes, page_indices) -> list:
-    return [
-        (body if kind == "text" else [body], w, h)
-        for kind, body, w, h in pdftext.extract_hybrid_pages(
-            raw, page_indices=page_indices, mode="L")
-    ]
-
-
-def _raster_pages(raw: bytes, page_indices) -> list:
-    return [([r], r.shape[1], r.shape[0])
-            for r in _rasters(raw, page_indices)]
-
-
-def _one_page(decode):
-    """Single-page tier: ``decode(raw)`` -> that page's parts, at
-    synthetic ordinal coordinates."""
-    return lambda raw, _page_indices: [(decode(raw), 0, 0)]
-
-
-def _text(blocks):
-    """Single-page tier over strict UTF-8 text (the probe's refinements
-    of the plain-text tier)."""
-    return _one_page(lambda raw: blocks(plaintext.decode_text(raw)))
-
-
-def _flow_pages(page_parts):
-    """Paged container whose pages are part walks."""
-    return lambda raw, page_indices: [
-        (_flow(parts), 0, 0)
-        for parts in page_parts(raw, page_indices=page_indices)
-    ]
-
-
-def _sliced_by(slice_pages):
-    """A stateless ``slice_pages(raw, page_indices)`` as a slicer."""
-    return lambda raw: partial(slice_pages, raw)
-
-
-#: probe ``media_kind`` -> ``(slicer | None, pages)``; see the module
-#: docstring. A kind the probe can return but this table lacks raises
-#: at the OCR stage instead of silently extracting nothing.
-TIERS = {
-    "pdf": (lambda raw: pdfcodec._Slicer(raw).slice, _pdf_pages),
-    "image": (None, _raster_pages),
-    "tiff": (_sliced_by(tiffcodec.slice_pages), _raster_pages),
-    "gif": (_sliced_by(gifcodec.slice_pages), _raster_pages),
-    "html": (None, _one_page(lambda raw: _flow(
-        htmltext.html_parts(htmltext.decode_html(raw))))),
-    "docx": (None, _one_page(lambda raw: _flow(docxtext.document_parts(raw)))),
-    "odt": (None, _one_page(lambda raw: _flow(odttext.document_parts(raw)))),
-    "rtf": (None, _one_page(lambda raw: _flow(rtftext.document_parts(raw)))),
-    "eml": (None, _text(lambda text: _flow(emltext.eml_parts(text)))),
-    "txt": (None, _text(plaintext.paragraph_blocks)),
-    "md": (None, _text(mdtext.markdown_blocks)),
-    "tex": (None, _text(latextext.latex_blocks)),
-    "sub": (None, _text(subtext.subtitle_blocks)),
-    "csv": (None, _text(csvtext.tabular_blocks)),
-    "json": (None, _text(jsontext.json_blocks)),
-    "xml": (None, _one_page(xmltext.xml_blocks)),
-    "pptx": (_sliced_by(pptxtext.slice_slides),
-             _flow_pages(pptxtext.slide_parts)),
-    "epub": (_sliced_by(epubtext.slice_chapters),
-             _flow_pages(epubtext.chapter_parts)),
-    "mbox": (_sliced_by(emltext.slice_messages),
-             _flow_pages(emltext.mbox_page_parts)),
-    "xlsx": (_sliced_by(xlsxtext.slice_sheets),
-             _flow_pages(xlsxtext.sheet_parts)),
-}
-
-
 def _bucket_batches_fn(bucket_pages: int | None,
-                       slice_payloads: bool = True,
-                       text_layer: bool = False):
+                       slice_payloads: bool = True):
     """Stage-1 kernel. The probe is :func:`..multimodal.probe_real_media`
-    with ``deep=True`` (full scanned-subset walk for PDFs; chunk-CRC /
-    marker-bounds checks for PNG/JPEG), so truncated/corrupt payloads
+    with ``deep=True`` (hybrid per-page walk for PDFs; chunk-CRC /
+    marker-bounds checks for PNG/JPEG; the tier's own part walk for the
+    container kinds), so truncated/corrupt payloads
     quarantine HERE, with a triage row, instead of silently dropping at
     the OCR stage. Residual (undetectable-at-probe) corruption is
     entropy-level only: JPEG entropy bits carry no checksum, and a PDF
     image stream can hold a structurally-valid but broken body; those
-    degrade to zero blocks at decode (see :func:`_ocr_real_frame`).
-    ``text_layer=True`` validates PDFs under the HYBRID per-page
-    contract (:func:`..pdftext.validate_hybrid`): born-digital pages are
-    text-layer-validated instead of quarantined as vector content."""
+    degrade to zero blocks at decode (see :func:`_ocr_real_frame`)."""
     def _bucket_batches(
         batches: Iterator[pd.DataFrame],
     ) -> Iterator[pd.DataFrame]:
@@ -265,7 +130,7 @@ def _bucket_batches_fn(bucket_pages: int | None,
                     # probe failure (..transport module docstring)
                     raw = transport.maybe_unwrap(raw)
                     kind, n_pages, _w, _h = multimodal.probe_real_media(
-                        raw, deep=True, text_layer=text_layer)
+                        raw, deep=True)
                 except Exception as exc:
                     # quarantine BEFORE the payload is duplicated: one
                     # narrow error row, no data rides along
@@ -282,7 +147,7 @@ def _bucket_batches_fn(bucket_pages: int | None,
                     continue
                 k = bucket_pages or max(1, n_pages)
                 lows = range(0, max(1, n_pages), k)
-                slicer, cut = TIERS[kind][0], None
+                slicer, cut = TIERS[kind].slicer, None
                 if slicer is not None and slice_payloads and len(lows) > 1:
                     # parse once per document; each bucket row then
                     # carries a minimal sub-document (only its own
@@ -379,7 +244,7 @@ def _ocr_real_frame(pdf: pd.DataFrame) -> pd.DataFrame:
             continue
         # looked up OUTSIDE the try: a probe kind with no tier is a
         # programming error and must fail loudly, not extract nothing
-        pages = TIERS[kind][1]
+        pages = TIERS[kind].pages
         # Decode inside the try (a decode failure drops the bucket
         # ATOMICALLY — no partial emission), emission outside it (an
         # OCR/kernel failure propagates LOUDLY; swallowing it after
@@ -416,7 +281,6 @@ def real_page_buckets(
     broadcast_spans: bool | None = None,
     spans: DataFrame | None = None,
     slice_payloads: bool = True,
-    text_layer: bool = True,
 ) -> DataFrame:
     """Stage 1: spans ⋈ payloads -> validated page-bucket rows.
 
@@ -436,11 +300,6 @@ def real_page_buckets(
     verbatim), so the bucket shuffle moves ~size·K/pages bytes per row
     instead of ⌈pages/K⌉ full-payload copies. Decode equality with the
     unsliced path is test-pinned; False restores full-payload rows.
-
-    ``text_layer`` (default on) probes PDFs under the HYBRID per-page
-    contract, so born-digital pages extract from their text layer;
-    ``False`` keeps the strict scanned-only contract and quarantines
-    them here.
     """
     if spans is None:
         spans = exploded_spans(documents)
@@ -453,7 +312,7 @@ def real_page_buckets(
     build = F.broadcast(span_refs) if broadcast_spans else span_refs
     media_spans = build.join(media.select("media_ref", "data"), "media_ref")
     buckets = media_spans.mapInPandas(
-        _bucket_batches_fn(bucket_pages, slice_payloads, text_layer),
+        _bucket_batches_fn(bucket_pages, slice_payloads),
         schema=REAL_BUCKET,
     )
     missing = span_refs.join(
@@ -484,9 +343,7 @@ def ocr_real_blocks(
 ) -> DataFrame:
     """Stage 2: bucket rows -> OCR block rows, behind the explicit
     bucket-key repartition (see module docstring item 2). Each bucket
-    decodes through its kind's :data:`TIERS` entry; PDFs always take the
-    per-page hybrid dispatch, so whether text layers are admitted is
-    decided by the probe alone (``real_page_buckets(text_layer=)``)."""
+    decodes through its kind's :data:`..tiers.TIERS` entry."""
     if num_partitions is None:
         num_partitions = 3 * buckets.sparkSession.sparkContext.defaultParallelism
     buckets = buckets.filter(F.col("media_kind") != MEDIA_KIND_ERROR)
@@ -504,7 +361,6 @@ def extract_real_documents(
     broadcast_spans: bool | None = None,
     share_spans: "bool | str" = True,
     slice_payloads: bool = True,
-    text_layer: bool = True,
 ) -> DataFrame:
     """End-to-end OCR extraction over REAL-codec media payloads.
 
@@ -531,7 +387,7 @@ def extract_real_documents(
     )
     buckets = real_page_buckets(
         documents, media, bucket_pages, broadcast_spans, spans=spans,
-        slice_payloads=slice_payloads, text_layer=text_layer,
+        slice_payloads=slice_payloads,
     )
     blocks = ocr_real_blocks(buckets, num_partitions)
     return assemble_spans(documents, blocks, spans=spans)

@@ -865,8 +865,8 @@ def _image_plan(doc: _Document, d: dict) -> tuple[list, str, int, object]:
     Returns ``(filters, colorspace, bits, decode)`` — colorspace is the
     RESOLVED family name (``_decode_image`` re-resolves the palette);
     raises ``ValueError`` for anything outside the scanned subset —
-    shared by the renderer and :func:`validate_scanned` (the cheap
-    pre-flight the distributed-OCR probe stage runs, so
+    shared by the renderer and :func:`.pdftext.validate_hybrid` (the
+    cheap pre-flight the distributed-OCR probe stage runs, so
     vector/unsupported documents quarantine *before* any payload
     crosses the page-bucket shuffle)."""
     w = int(doc.get(d.get("Width", 0)))
@@ -1197,7 +1197,7 @@ def probe_dims(raw: bytes) -> tuple[int, int, int]:
 def _canvas_dims(doc: _Document, node: dict, attrs: dict,
                  scale: float) -> tuple[float, float, int, int, int]:
     """Validated ``(x0, y0, W, H, rotate)`` for a page at ``scale`` —
-    shared by the renderer and :func:`validate_scanned` so the probe
+    shared by the renderer and :func:`.pdftext.validate_hybrid` so the probe
     enforces EXACTLY what rendering enforces (numeric 4-entry MediaBox,
     right-angle /Rotate only, canvas under :data:`MAX_PIXELS`); a probe
     that passes what the renderer refuses would turn a quarantine into a
@@ -1229,46 +1229,6 @@ def _page_content(doc: _Document, node: dict) -> bytes:
         # /Contents may be an array (or a ref to one) of stream refs
         return b"\n".join(doc.get_stream(r)[1] for r in resolved)
     return doc.get_stream(contents)[1]
-
-
-@_strict_valueerror
-def validate_scanned(raw: bytes) -> tuple[int, int, int]:
-    """Full scanned-subset pre-flight WITHOUT inflating image samples.
-
-    Walks the page tree, interprets every content stream (tiny for
-    scanned pages) and validates every referenced image XObject's
-    dictionary — raising the same ``ValueError``s rendering would — but
-    never decompresses/decodes the sample bytes themselves. Returns
-    ``(page count, first-page canvas W, H)`` at ``RENDER_DPI`` (the dims
-    fall out of the per-page geometry validation for free). This is what
-    the distributed-OCR probe stage calls: a vector or unsupported
-    document quarantines at probe time, before its payload is duplicated
-    across page buckets and shuffled.
-    """
-    if not raw.startswith(b"%PDF-"):
-        raise ValueError("not a PDF: bad header")
-    doc = _Document(raw)
-    pages = _pages(doc)
-    w0 = h0 = 0
-    for i, (node, attrs) in enumerate(pages):
-        _x, _y, W, H, rot = _canvas_dims(doc, node, attrs,
-                                         RENDER_DPI / _POINT_DPI)
-        if rot in (90, 270):
-            W, H = H, W
-        if i == 0:
-            w0, h0 = W, H
-        resources = doc.get(attrs.get("Resources") or node.get("Resources")
-                            or {})
-        for ctm, xd, _xbytes in _content_images(
-            doc, _page_content(doc, node), resources
-        ):
-            if abs(ctm[1]) > 1e-9 or abs(ctm[2]) > 1e-9:
-                raise ValueError(
-                    "rotated/sheared image placement unsupported "
-                    "(axis-aligned scanned pages only)"
-                )
-            _image_plan(doc, xd)
-    return len(pages), w0, h0
 
 
 # --------------------------------------------------------------------------
@@ -1329,7 +1289,8 @@ def _xobject_names(content: bytes) -> set[str]:
     the slicer keeps from the page's (possibly shared) /XObject resource
     dict, so a Pages-level resource dict listing every page's image does
     not defeat the per-bucket size win. Lenient on operators (the
-    pipeline validates content separately via :func:`validate_scanned`);
+    pipeline validates content separately via
+    :func:`.pdftext.validate_hybrid`);
     strict on tokenization."""
     names: set[str] = set()
     operands: list = []

@@ -942,8 +942,8 @@ def validate_hybrid(raw: bytes) -> tuple[int, int, int]:
     microseconds, not the image-decode CPU the scanned probe avoids) —
     so an unmapped glyph or composite font quarantines at probe time.
     Pages WITHOUT a text layer get the scanned-subset validation
-    (:func:`..pdfcodec.validate_scanned` semantics: every image plan
-    checked, vector paint refused) unchanged. Image samples are never
+    (what the scanned renderer enforces: every image plan checked,
+    vector paint refused). Image samples are never
     inflated on either kind of page.
     """
     if not raw.startswith(b"%PDF-"):

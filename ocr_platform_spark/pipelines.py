@@ -164,7 +164,7 @@ def crawl_to_training_corpus(spark: SparkSession, paths: str,
     (``min_quality_fxp4`` / ``langs`` /
     ``min_tokens`` / ``max_tokens``) pass through
     :func:`curate_documents`; every other kwarg passes through to the
-    extraction pipeline (``bucket_pages``, ``text_layer``, ...).
+    extraction pipeline (``bucket_pages``, ``slice_payloads``, ...).
     ``curate=False`` stops after :func:`spans_to_documents` — the raw
     extracted-text frame for callers running their own filters.
     """

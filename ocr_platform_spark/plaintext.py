@@ -137,7 +137,7 @@ def paragraph_blocks(text: str) -> list[TextParagraph]:
 def validate_text(raw: bytes) -> tuple[int, int, int]:
     """Probe-time pre-flight: ``(n_pages=1, width=0, height=0)`` —
     plain text is one reflowable page with no raster geometry, like the
-    DOM tier (:func:`..htmltext.validate_html`). Raises ``ValueError``
+    DOM tier. Raises ``ValueError``
     on every non-text payload (the quarantine contract)."""
     decode_text(raw)
     return 1, 0, 0
@@ -145,7 +145,7 @@ def validate_text(raw: bytes) -> tuple[int, int, int]:
 
 def sniff_text(raw: bytes, window: int = 4096) -> bool:
     """O(window) text sniff for the header-walk metadata probe (the
-    ``probe_dims``-vs-``validate_scanned`` split, plain-text edition):
+    ``probe_dims``-vs-``validate_hybrid`` split, plain-text edition):
     run the full contract on the first ``window`` bytes only, trimming
     a multi-byte UTF-8 sequence the window may have cut."""
     head = raw[:window]

@@ -40,7 +40,6 @@ from xml.etree import ElementTree
 import posixpath
 
 from .docxtext import _open_docx as _open_zip
-from .plaintext import TextParagraph
 
 #: DrawingML main namespace (text runs live here, not in the
 #: PresentationML ``p:`` namespace)
@@ -58,43 +57,26 @@ _A_BLIP = f"{{{A_NS}}}blip"
 
 
 def _slide_members(zf: zipfile.ZipFile) -> list[str]:
-    """Slide member names in presentation (numeric) order."""
+    """Slide member names in presentation (numeric) order; a deck with
+    no slides quarantines."""
     slides: list[tuple[int, str]] = []
     for name in zf.namelist():
         m = _SLIDE_RE.match(name)
         if m:
             slides.append((int(m.group(1)), name))
+    if not slides:
+        raise ValueError("PPTX with no ppt/slides/slideN.xml members")
     slides.sort()
     return [name for _n, name in slides]
 
 
-def is_pptx(zf: zipfile.ZipFile) -> bool:
-    return _MARKER in zf.namelist()
-
-
-def probe_pptx(raw: bytes, deep: bool = False) -> tuple[int, int, int]:
-    """Pre-flight: ``(n_slides, width=0, height=0)`` — slides are
-    reflowable pages with no raster geometry. Shallow is a
-    central-directory walk (slide count only, no member inflated); deep
-    additionally inflates + XML-parses every slide (CRC verified), so
-    member corruption quarantines before the payload is duplicated."""
+def probe_pptx(raw: bytes) -> tuple[int, int, int]:
+    """Shallow pre-flight: ``(n_slides, width=0, height=0)`` — slides
+    are reflowable pages with no raster geometry; a central-directory
+    walk, no member inflated. The deep probe runs :func:`slide_parts`,
+    the walk extraction decodes."""
     with _open_zip(raw) as zf:
-        slides = _slide_members(zf)
-        if not slides:
-            raise ValueError("PPTX with no ppt/slides/slideN.xml members")
-        if deep:
-            from .docxtext import validate_embedded_media
-
-            for name in slides:
-                # full part walk: XML parse + picture-rel resolution +
-                # embedded-raster structural validation (shared office
-                # rule), so extraction-time failures quarantine here
-                flat = [
-                    (p[0], p[2], p[3], p[4]) if p[0] == "media" else p
-                    for p in _slide_parts(zf, name)
-                ]
-                validate_embedded_media(flat)
-    return len(slides), 0, 0
+        return len(_slide_members(zf)), 0, 0
 
 
 def _parse_member(zf: zipfile.ZipFile, name: str) -> ElementTree.Element:
@@ -106,40 +88,6 @@ def _parse_member(zf: zipfile.ZipFile, name: str) -> ElementTree.Element:
         return ElementTree.fromstring(data)
     except ElementTree.ParseError as e:
         raise ValueError(f"malformed XML in {name}: {e}") from e
-
-
-def _slide_blocks(root: ElementTree.Element) -> list[TextParagraph]:
-    out: list[TextParagraph] = []
-    i = 0
-    for p in root.iter(_A_P):
-        parts: list[str] = []
-        for el in p.iter():
-            if el.tag == _A_T:
-                parts.append(el.text or "")
-            elif el.tag == _A_BR:
-                parts.append("\n")
-        text = "\n".join(
-            line.strip() for line in "".join(parts).split("\n")
-            if line.strip()
-        )
-        if text:
-            out.append(TextParagraph(i, text))
-        i += 1
-    return out
-
-
-def slide_blocks(
-    raw: bytes, page_indices: "list[int] | range | None" = None
-) -> list[list[TextParagraph]]:
-    """PPTX bytes -> per-slide block lists, in presentation order.
-    ``page_indices`` selects slides by GLOBAL position (the bucket
-    contract — a sliced payload passes ``None`` and gets its own slides
-    back in order)."""
-    with _open_zip(raw) as zf:
-        names = _slide_members(zf)
-        if page_indices is not None:
-            names = [names[i] for i in page_indices]
-        return [_slide_blocks(_parse_member(zf, n)) for n in names]
 
 
 def _slide_rels(zf: zipfile.ZipFile, slide: str) -> "tuple[dict, set]":
@@ -183,9 +131,8 @@ def _slide_parts(zf: zipfile.ZipFile, slide: str) -> list[tuple]:
     DrawingML paragraph and ``("media", ordinal, content_type, member,
     payload)`` per ``p:pic`` picture, in shape-tree document order —
     the slide-level analog of :func:`..docxtext.document_parts`. The
-    ordinal advances for every ``a:p`` (empty ones included, matching
-    :func:`_slide_blocks`) and every picture, so the two walks agree
-    on paragraph ordinals."""
+    ordinal advances for every ``a:p`` (empty ones included) and every
+    picture."""
     from .docxtext import _R_EMBED, media_content_type
 
     root = _parse_member(zf, slide)
@@ -240,8 +187,10 @@ def slide_parts(
     raw: bytes, page_indices: "list[int] | range | None" = None
 ) -> list[list[tuple]]:
     """PPTX bytes -> per-slide MIXED part lists (text paragraphs +
-    embedded pictures, shape-tree order). Same ``page_indices``
-    contract as :func:`slide_blocks`."""
+    embedded pictures, shape-tree order), in presentation order.
+    ``page_indices`` selects slides by GLOBAL position (the bucket
+    contract — a sliced payload passes ``None`` and gets its own slides
+    back in order)."""
     with _open_zip(raw) as zf:
         names = _slide_members(zf)
         if page_indices is not None:
@@ -256,7 +205,7 @@ def slice_slides(raw: bytes, page_indices) -> bytes:
     ``pdfcodec._Slicer``: the deck's bytes cross the bucket shuffle
     ~once in total instead of ⌈slides/K⌉ full copies. Selected slides
     keep their ORIGINAL member numbering, so slide order (numeric sort)
-    is preserved and ``slide_blocks(sliced)`` yields exactly the
+    is preserved and ``slide_parts(sliced)`` yields exactly the
     bucket's pages, locally indexed."""
     with _open_zip(raw) as zf:
         names = _slide_members(zf)

@@ -348,22 +348,6 @@ def document_parts(raw: bytes) -> list[tuple]:
     return parts
 
 
-def validate_rtf(raw: bytes, deep_media: bool = False) -> tuple[int, int, int]:
-    """Probe-time pre-flight: full strict parse (RTF has no checksums
-    or length fields, so structural validation IS the parse), one
-    reflowable page, no raster geometry. ``deep_media=True``
-    additionally runs the part walk + embedded-raster validation
-    (shared office rule) so corrupt embedded pictures quarantine at
-    probe time."""
-    if deep_media:
-        from .docxtext import validate_embedded_media
-
-        validate_embedded_media(document_parts(raw))
-    else:
-        extract_paragraphs(raw)
-    return 1, 0, 0
-
-
 # --- minimal writer (tests / fixtures) ---------------------------------------
 
 

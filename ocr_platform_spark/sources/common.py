@@ -1,5 +1,6 @@
-"""Shared source-composition shape: parallel per-document span arrays
--> the engine's interleaved ``(documents, media)`` input tables.
+"""Shared source plumbing: the file listing every file-based source
+starts from, and the composition of parallel per-document span arrays
+into the engine's interleaved ``(documents, media)`` input tables.
 
 Every part-walk ingestion source (mbox messages, office containers)
 parses its documents into the same PARALLEL-ARRAY row shape — ``kinds``
@@ -13,10 +14,30 @@ shuffle-FREE: a document's spans never leave their task.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-__all__ = ["parts_frame_to_corpus"]
+__all__ = ["list_files", "parts_frame_to_corpus"]
+
+
+def list_files(spark: SparkSession, paths: str, glob: str,
+               path_regex: "str | None" = None) -> DataFrame:
+    """Files under ``paths`` (glob / dir / file) matching ``glob`` (and
+    ``path_regex`` on the full path, when given) -> one ``path`` row
+    each, repartitioned to one file per task (a file is the parallel
+    unit; a lost task recomputes one file). The ``binaryFile`` listing
+    is pruned to ``path`` only — Spark's binary-file source builds
+    per-column readers, so file bytes never enter the scan; only path
+    strings move."""
+    listing = (
+        spark.read.format("binaryFile")
+        .option("pathGlobFilter", glob)
+        .load(paths)
+        .select("path")
+    )
+    if path_regex is not None:
+        listing = listing.filter(F.col("path").rlike(path_regex))
+    return listing.repartition(max(listing.count(), 1))
 
 
 def parts_frame_to_corpus(

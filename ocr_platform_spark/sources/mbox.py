@@ -15,9 +15,10 @@ failures quarantine as error rows, never job failures).
 
 Scale shape (mirrors ``sources/warc.py``):
 
-- one archive per task; the reader streams LINE-BY-LINE (peak memory:
-  one message + one Arrow batch, not the file), splitting on the
-  envelope regex with mboxrd ``>From`` unquoting;
+- one archive per task (:func:`.common.list_files`); the reader
+  streams LINE-BY-LINE (peak memory: one message + one Arrow batch,
+  not the file), splitting on the envelope regex with mboxrd ``>From``
+  unquoting;
 - a preamble before the first envelope line yields one error row and
   parsing RESYNCS at the next envelope (warc's member-recovery
   semantics);
@@ -57,6 +58,7 @@ from pyspark.sql.types import (BinaryType, IntegerType, StringType,
                                StructField, StructType)
 
 from .. import emltext
+from .common import list_files, parts_frame_to_corpus
 from .warc import _open_path
 
 __all__ = [
@@ -211,16 +213,9 @@ def _mbox_batches(batch_rows: int):
 def read_mbox(spark: SparkSession, paths: str,
               batch_rows: int = 256) -> DataFrame:
     """mbox archives (glob / dir / file) -> one row per message
-    (:data:`RECORD_SCHEMA`). Listing pruned to ``path`` only, one file
-    per task (cf. ``read_warc``)."""
-    listing = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.mbox*")
-        .load(paths)
-        .select("path")
-    )
-    n_files = listing.count()
-    listing = listing.repartition(max(n_files, 1))
+    (:data:`RECORD_SCHEMA`), over the :func:`.common.list_files`
+    listing (cf. ``read_warc``)."""
+    listing = list_files(spark, paths, "*.mbox*")
     return listing.mapInPandas(_mbox_batches(batch_rows),
                                schema=RECORD_SCHEMA)
 
@@ -295,8 +290,6 @@ def mbox_to_corpus(records: DataFrame,
     r4 #9). The cache is plan-keyed in Spark's CacheManager and is NOT
     GC-cleaned; drivers looping many corpora should
     ``spark.catalog.clearCache()`` between runs or keep the default."""
-    from .common import parts_frame_to_corpus
-
     parts = parse_mbox_records(records).filter(
         F.col("error").isNull() & F.col("doc_id").isNotNull())
     return parts_frame_to_corpus(parts, single_parse=single_parse)

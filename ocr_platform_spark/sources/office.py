@@ -17,8 +17,9 @@ real-codec pipeline, exactly like an mbox attachment
 reuses via :func:`.common.parts_frame_to_corpus`).
 
 Note the relationship to the EXTRACTION path: a docx that is itself a
-media span of some document extracts in place
-(``operators/extract_real.py``'s office branch). This SOURCE is for
+media span of some document extracts in place through its entry in the
+real-codec tier table (:data:`ocr_platform_spark.tiers.TIERS`). This
+SOURCE is for
 corpora where the office files ARE the documents — it hoists the part
 walk to ingestion so the embedded pictures become first-class media
 spans (probe-able, quarantine-able, resumable per span) instead of
@@ -27,10 +28,10 @@ media spans that quarantine with triage rows downstream instead of
 dropping silently.
 
 Scale shape (mirrors the mbox/WARC sources): one file per task, the
-listing moves only path strings (payload bytes never shuffle during
-ingestion); parse defects yield error rows, never job failures;
-``doc_id`` is deterministic (basename + sha of the full path) so
-re-ingesting a dump is idempotent for lineage/resume.
+shared listing (:func:`.common.list_files`) moves only path strings
+(payload bytes never shuffle during ingestion); parse defects yield
+error rows, never job failures; ``doc_id`` is deterministic (basename
++ sha of the full path) so re-ingesting a dump is idempotent for lineage/resume.
 """
 
 from __future__ import annotations
@@ -43,6 +44,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .common import list_files, parts_frame_to_corpus
 from .warc import _open_path
 
 __all__ = [
@@ -156,16 +158,9 @@ def _office_batches(frames: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
 
 def read_office(spark: SparkSession, paths: str) -> DataFrame:
     """Office files (glob / dir / file) -> one parts row per document
-    (:data:`PARTS_SCHEMA`). Listing pruned to ``path`` only, one file
-    per task (cf. ``read_mbox``)."""
-    listing = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.{docx,odt,pptx,xlsx,rtf,eml}")
-        .load(paths)
-        .select("path")
-    )
-    n_files = listing.count()
-    listing = listing.repartition(max(n_files, 1))
+    (:data:`PARTS_SCHEMA`), over the :func:`.common.list_files`
+    listing (cf. ``read_mbox``)."""
+    listing = list_files(spark, paths, "*.{docx,odt,pptx,xlsx,rtf,eml}")
     return listing.mapInPandas(_office_batches, schema=PARTS_SCHEMA)
 
 
@@ -176,8 +171,6 @@ def office_to_corpus(parts: DataFrame,
     shape — the shared shuffle-free composition
     (:func:`.common.parts_frame_to_corpus`; ``single_parse`` caveat
     there)."""
-    from .common import parts_frame_to_corpus
-
     kept = parts.filter(
         F.col("error").isNull() & F.col("doc_id").isNotNull())
     return parts_frame_to_corpus(kept, single_parse=single_parse)

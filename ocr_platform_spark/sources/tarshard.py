@@ -21,10 +21,11 @@ convention they carry labels/metadata, not content, so
 (``include_json=True`` restores them — a JSONL corpus shipped as
 ``.json`` members extracts through the JSON tier then).
 
-Scale posture (the same shape as :mod:`.warc`): the ``binaryFile``
-listing is pruned to ``path`` only and repartitioned one shard per
-task — shards are the natural parallel unit (10^5 x ~1 GiB across the
-cluster). Each task STREAMS its shard with ``tarfile``'s pipe mode
+Scale posture (the same shape as :mod:`.warc`): the shared
+``binaryFile`` listing (:func:`.common.list_files`) moves only path
+strings and runs one shard per task — shards are the natural parallel
+unit (10^5 x ~1 GiB across the cluster). Each task STREAMS its shard
+with ``tarfile``'s pipe mode
 (``r|*`` — sequential reads, gzip/bzip2/xz transparently), so peak
 memory is one member plus one Arrow batch, never the archive. Sample
 assembly is a ``(shard, key)`` groupBy — the one shuffle, carrying
@@ -54,6 +55,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import (BinaryType, IntegerType, LongType,
                                StringType, StructField, StructType)
 
+from .common import list_files
 # the ONE storage seam, shared with the WARC source: an object-store
 # deployment swaps warc._open_path and both ingestion paths follow
 from .warc import _open_path
@@ -173,18 +175,10 @@ _member_batches = member_batches  # internal alias (existing callers)
 def read_tar_shards(spark: SparkSession, paths: str,
                     batch_rows: int = 256) -> DataFrame:
     """Shard files (glob / dir / file) -> one row per member
-    (:data:`MEMBER_SCHEMA`). Listing pruned to ``path``, one shard per
-    task, members streamed (see module docstring)."""
-    listing = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.t*")
-        .load(paths)
-        .select("path")
-        .filter(F.col("path").rlike(r"\.(tar|tar\.gz|tgz|tar\.bz2|"
-                                    r"tar\.xz)$"))
-    )
-    n_files = listing.count()
-    listing = listing.repartition(max(n_files, 1))
+    (:data:`MEMBER_SCHEMA`), over the :func:`.common.list_files`
+    listing, members streamed (see module docstring)."""
+    listing = list_files(spark, paths, "*.t*",
+                         r"\.(tar|tar\.gz|tgz|tar\.bz2|tar\.xz)$")
     return listing.mapInPandas(_member_batches(batch_rows),
                                schema=MEMBER_SCHEMA)
 

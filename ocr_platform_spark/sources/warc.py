@@ -14,13 +14,13 @@ plan shape the rest of the repo uses:
 
 * :func:`read_warc` — ``binaryFile``-listed paths (content column is
   PRUNED: only ``path`` is selected, so Spark never materializes whole
-  archives into rows) fanned out one-file-per-task through an iterator
-  ``mapInPandas`` UDF that STREAMS records off disk with bounded memory
-  (one decompressed record + one Arrow batch, not the file). At crawl
-  scale a WARC file is ~1 GiB and one file per task is the standard
-  parallel unit; the reader repartitions the path list so 10^5 archives
-  spread over every executor instead of riding the listing's few input
-  splits.
+  archives into rows) fanned out through an iterator ``mapInPandas``
+  UDF that STREAMS records off disk with bounded memory (one
+  decompressed record + one Arrow batch, not the file). At crawl scale
+  a WARC file is ~1 GiB and the natural parallel unit; the shared
+  listing (:func:`.common.list_files`) repartitions the path list to
+  one file per task, so 10^5 archives spread over every executor
+  instead of riding the listing's few input splits.
 * :func:`warc_to_corpus` — pure column expressions (no UDF) mapping kept
   records to ``documents(doc_id, spans)`` + ``media(media_ref, ...)``:
   each HTTP 2xx ``response`` (and each ``resource``/``conversion``)
@@ -67,6 +67,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import (
     BinaryType, IntegerType, LongType, StringType, StructField, StructType,
 )
+
+from .common import list_files
 
 __all__ = [
     "RECORD_SCHEMA", "read_warc", "warc_to_corpus", "extract_warc",
@@ -419,22 +421,13 @@ def read_warc(spark: SparkSession, paths: str,
     """WARC archives (glob / dir / file, ``.warc`` or ``.warc.gz``) ->
     one row per record (:data:`RECORD_SCHEMA`).
 
-    The ``binaryFile`` listing is pruned to ``path`` only — Spark's
-    binary-file source builds per-column readers, so archive bytes never
-    enter the scan — and the path list is repartitioned to one file per
-    task (a crawl's ~1 GiB archives are the natural parallel unit;
-    10^5 of them spread across the cluster). The UDF streams each
-    archive record-by-record: peak memory is one decompressed record
-    plus one Arrow batch, not the file.
+    The path list comes from :func:`.common.list_files` (archive bytes
+    never enter the scan; a crawl's ~1 GiB archives are the natural
+    parallel unit, one file per task). The UDF streams each archive
+    record-by-record: peak memory is one decompressed record plus one
+    Arrow batch, not the file.
     """
-    listing = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.warc*")
-        .load(paths)
-        .select("path")
-    )
-    n_files = listing.count()
-    listing = listing.repartition(max(n_files, 1))
+    listing = list_files(spark, paths, "*.warc*")
     return listing.mapInPandas(_warc_batches(batch_rows),
                                schema=RECORD_SCHEMA)
 

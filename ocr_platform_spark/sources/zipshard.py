@@ -38,6 +38,7 @@ import zipfile
 from pyspark.sql import DataFrame, SparkSession
 
 from . import tarshard
+from .common import list_files
 from .tarshard import MEMBER_SCHEMA, _split_key, member_batches, \
     members_to_corpus
 
@@ -95,16 +96,9 @@ def iter_zip_members(fobj):
 def read_zip_shards(spark: SparkSession, paths: str,
                     batch_rows: int = 256) -> DataFrame:
     """Shard files (glob / dir / file) -> one row per member
-    (:data:`tarshard.MEMBER_SCHEMA`). Listing pruned to ``path``, one
-    shard per task."""
-    listing = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.zip")
-        .load(paths)
-        .select("path")
-    )
-    n_files = listing.count()
-    listing = listing.repartition(max(n_files, 1))
+    (:data:`tarshard.MEMBER_SCHEMA`), over the
+    :func:`.common.list_files` listing."""
+    listing = list_files(spark, paths, "*.zip")
     return listing.mapInPandas(
         member_batches(batch_rows, iter_zip_members),
         schema=MEMBER_SCHEMA)

@@ -1,0 +1,170 @@
+"""The real-codec tier table: which media kinds exist and how each one
+is decoded. Spark-free; both the deep probe
+(:func:`.multimodal.probe_real_media`) and the OCR stage
+(:mod:`.operators.extract_real`) read it.
+
+:data:`TIERS` has one :class:`Tier` per probe ``media_kind``:
+``(slicer | None, pages, walk | None)``. ``pages(raw, page_indices)``
+returns the decoded pages, each a ``(parts, width, height)`` triple:
+``parts`` is an ordered list, and ``width x height`` is the pixel space
+of the text parts' coordinates (``0 x 0`` where they are synthetic
+ordinals). A part is either a text block (duck-typed on
+``x1/y1/x2/y2/text``) or a grayscale raster (a 2-D ``uint8`` array).
+``slicer(raw)`` parses a multi-page container once and returns the
+``page_indices -> sub-document`` cut used at probe time; single-page
+tiers have none. ``page_indices`` is ``None`` for a sliced payload
+(it holds exactly the bucket's pages) and the bucket's global page
+range otherwise. The entries fall into four groups:
+
+- **PDF**: always the per-page hybrid
+  :func:`.pdftext.extract_hybrid_pages`. A born-digital page parses its
+  text layer; a scanned page rasterizes through the exact
+  ``decode_pdf`` path. The deep probe validates every page under the
+  same hybrid contract (:func:`.pdftext.validate_hybrid`).
+- **Rasters**: PNG/JPEG/BMP images, TIFF and GIF frames — one raster
+  per page.
+- **Reflowable text** (plain text, Markdown, LaTeX, subtitles, DSV,
+  XML, JSON): one page of text blocks positioned at character offsets.
+- **Containers with embedded pictures** (DOCX, ODT, RTF, HTML
+  ``data:`` images and e-mail attachments as one page; PPTX slides,
+  EPUB chapters, mbox messages and XLSX sheets as pages): the entry is
+  defined by ONE part walk, ``walk(raw, page_indices) -> [[part]]``
+  (``("text", ..., text)`` / ``("media", ..., name, payload)``; a
+  one-page kind returns one page). ``pages`` runs each walked page
+  through :func:`_flow`; the deep probe runs the same ``walk(raw,
+  None)`` and deep-probes every part :func:`is_picture` admits — the
+  one picture rule both sides share, so the probe accepts exactly what
+  extraction decodes. Unsupported formats (EMF/WMF vectors, nested
+  containers) contribute nothing.
+"""
+
+from __future__ import annotations
+
+from functools import partial
+from typing import Callable, NamedTuple
+
+import numpy as np
+
+from . import (bmpcodec, csvtext, docxtext, emltext, epubtext, formats,
+               gifcodec, htmltext, jpegcodec, jsontext, latextext, mdtext,
+               odttext, pdfcodec, pdftext, plaintext, pngcodec, pptxtext,
+               rtftext, subtext, tiffcodec, xlsxtext, xmltext)
+
+#: raster codecs an embedded picture decodes through (the OCR
+#: interleave subset; anything else — EMF/WMF vectors, nested
+#: containers — contributes no blocks and is skipped)
+EMBED_RASTER_KINDS = frozenset(("png", "jpeg", "gif", "bmp", "tiff"))
+
+
+def is_picture(part: tuple) -> bool:
+    """The picture rule: a media part (payload in the LAST slot of
+    every walk's tuple) whose bytes sniff as a supported raster
+    codec."""
+    return (part[0] == "media"
+            and formats.sniff_kind(part[-1]) in EMBED_RASTER_KINDS)
+
+
+def _rasters(raw: bytes, page_indices=None) -> list[np.ndarray]:
+    """Raster payload -> grayscale pages via the magic dispatch: one
+    per PNG/BMP/JPEG image, one per selected TIFF/GIF frame. ``mode="L"``
+    keeps native-gray pages 2-D end-to-end; color content converts with
+    PIL's exact ``convert("L")`` luma (:func:`.pdfcodec.rgb_to_gray`)."""
+    kind = formats.sniff_kind(raw)
+    if kind == "tiff":
+        return tiffcodec.decode_tiff(raw, mode="L", page_indices=page_indices)
+    if kind == "gif":
+        return gifcodec.decode_gif(raw, mode="L", page_indices=page_indices)
+    decode = {"png": pngcodec.decode_png,
+              "bmp": bmpcodec.decode_bmp}.get(kind, jpegcodec.decode_jpeg)
+    return [pdfcodec.rgb_to_gray(decode(raw))]
+
+
+def _flow(parts: list[tuple]) -> list:
+    """One walked page -> its parts: each text part becomes a block at
+    ``y1`` = its ordinal in the page, each picture (:func:`is_picture`)
+    decodes to its rasters (a multi-frame TIFF/GIF one per frame, in
+    frame order), and other media drop. Decoding here keeps picture
+    failures inside the OCR stage's atomic decode."""
+    page: list = []
+    for part in parts:
+        if part[0] == "text":
+            page.append(plaintext.TextParagraph(len(page), part[-1]))
+        elif is_picture(part):
+            page.extend(_rasters(part[-1]))
+    return page
+
+
+class Tier(NamedTuple):
+    slicer: Callable | None
+    pages: Callable
+    #: the container kinds' part walk (``pages`` flows it)
+    walk: Callable | None = None
+
+
+def _pdf_pages(raw: bytes, page_indices) -> list:
+    return [
+        (body if kind == "text" else [body], w, h)
+        for kind, body, w, h in pdftext.extract_hybrid_pages(
+            raw, page_indices=page_indices, mode="L")
+    ]
+
+
+def _raster_pages(raw: bytes, page_indices) -> list:
+    return [([r], r.shape[1], r.shape[0])
+            for r in _rasters(raw, page_indices)]
+
+
+def _text(blocks) -> Tier:
+    """Single-page tier over strict UTF-8 text (the probe's refinements
+    of the plain-text tier), at synthetic ordinal coordinates."""
+    return Tier(None, lambda raw, _page_indices: [
+        (blocks(plaintext.decode_text(raw)), 0, 0)])
+
+
+def _walked(walk, slicer=None) -> Tier:
+    """Container tier defined by its part walk."""
+    return Tier(slicer, lambda raw, page_indices: [
+        (_flow(parts), 0, 0) for parts in walk(raw, page_indices)
+    ], walk)
+
+
+def _one_page(parts):
+    """``parts(raw)`` as a one-page walk."""
+    return lambda raw, _page_indices: [parts(raw)]
+
+
+def _sliced_by(slice_pages):
+    """A stateless ``slice_pages(raw, page_indices)`` as a slicer."""
+    return lambda raw: partial(slice_pages, raw)
+
+
+#: probe ``media_kind`` -> :class:`Tier`; see the module docstring. A
+#: kind the probe can return but this table lacks raises at the OCR
+#: stage instead of silently extracting nothing.
+TIERS = {
+    "pdf": Tier(lambda raw: pdfcodec._Slicer(raw).slice, _pdf_pages),
+    "image": Tier(None, _raster_pages),
+    "tiff": Tier(_sliced_by(tiffcodec.slice_pages), _raster_pages),
+    "gif": Tier(_sliced_by(gifcodec.slice_pages), _raster_pages),
+    "html": _walked(_one_page(
+        lambda raw: htmltext.html_parts(htmltext.validate_html(raw)))),
+    "docx": _walked(_one_page(docxtext.document_parts)),
+    "odt": _walked(_one_page(odttext.document_parts)),
+    "rtf": _walked(_one_page(rtftext.document_parts)),
+    "eml": _walked(_one_page(
+        lambda raw: emltext.eml_parts(plaintext.decode_text(raw)))),
+    "txt": _text(plaintext.paragraph_blocks),
+    "md": _text(mdtext.markdown_blocks),
+    "tex": _text(latextext.latex_blocks),
+    "sub": _text(subtext.subtitle_blocks),
+    "csv": _text(csvtext.tabular_blocks),
+    "json": _text(jsontext.json_blocks),
+    "xml": Tier(None, lambda raw, _page_indices: [
+        (xmltext.xml_blocks(raw), 0, 0)]),
+    "pptx": _walked(pptxtext.slide_parts, _sliced_by(pptxtext.slice_slides)),
+    "epub": _walked(epubtext.chapter_parts,
+                    _sliced_by(epubtext.slice_chapters)),
+    "mbox": _walked(emltext.mbox_page_parts,
+                    _sliced_by(emltext.slice_messages)),
+    "xlsx": _walked(xlsxtext.sheet_parts, _sliced_by(xlsxtext.slice_sheets)),
+}

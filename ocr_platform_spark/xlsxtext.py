@@ -37,7 +37,6 @@ from xml.etree import ElementTree
 
 from .docxtext import _open_docx as _open_zip
 from .docxtext import _xml_escape
-from .plaintext import TextParagraph
 from .pptxtext import _parse_member
 
 #: SpreadsheetML main namespace
@@ -64,43 +63,26 @@ _X_ROW = f"{{{XDR_NS}}}row"
 
 
 def _sheet_members(zf: zipfile.ZipFile) -> list[str]:
+    """Sheet member names in workbook (numeric) order; a workbook with
+    no sheets quarantines."""
     sheets: list[tuple[int, str]] = []
     for name in zf.namelist():
         m = _SHEET_RE.match(name)
         if m:
             sheets.append((int(m.group(1)), name))
+    if not sheets:
+        raise ValueError("XLSX with no xl/worksheets/sheetN.xml members")
     sheets.sort()
     return [name for _n, name in sheets]
 
 
-def is_xlsx(zf: zipfile.ZipFile) -> bool:
-    return _MARKER in zf.namelist()
-
-
-def probe_xlsx(raw: bytes, deep: bool = False) -> tuple[int, int, int]:
-    """Pre-flight: ``(n_sheets, width=0, height=0)``. Shallow is a
-    central-directory walk; deep inflates + XML-parses every sheet and
-    the shared-strings table (CRC verified) and bounds-checks every
-    shared-string reference, so corruption quarantines before the
-    payload is duplicated."""
+def probe_xlsx(raw: bytes) -> tuple[int, int, int]:
+    """Shallow pre-flight: ``(n_sheets, width=0, height=0)``, a
+    central-directory walk. The deep probe runs :func:`sheet_parts`,
+    the walk extraction decodes (shared-string bounds, drawing chains,
+    CRC-verified inflates)."""
     with _open_zip(raw) as zf:
-        sheets = _sheet_members(zf)
-        if not sheets:
-            raise ValueError("XLSX with no xl/worksheets/sheetN.xml members")
-        if deep:
-            from .docxtext import media_content_type, \
-                validate_embedded_media
-
-            shared = _shared_strings(zf)
-            for name in sheets:
-                _rows(_parse_member(zf, name), shared, name)
-                # anchored-drawing chain: resolution defects quarantine
-                # here; supported rasters validate structurally
-                validate_embedded_media([
-                    ("media", media_content_type(m), m, payload)
-                    for _row, m, payload in _sheet_drawings(zf, name)
-                ])
-    return len(sheets), 0, 0
+        return len(_sheet_members(zf)), 0, 0
 
 
 def _shared_strings(zf: zipfile.ZipFile) -> list[str]:
@@ -138,36 +120,6 @@ def _cell_text(c: ElementTree.Element, shared: list[str],
     # "str" (cached formula string), "e" (error literal), "n"/default
     # (raw numeric text, verbatim — number formats are presentation)
     return v.text
-
-
-def _rows(root: ElementTree.Element, shared: list[str],
-          member: str) -> list[TextParagraph]:
-    out: list[TextParagraph] = []
-    for i, row in enumerate(root.iter(_S_ROW)):
-        cells = [
-            _cell_text(c, shared, member) for c in row.iter(_S_C)
-        ]
-        body = " ".join(c for c in cells if c.strip())
-        text = "\n".join(
-            line.strip() for line in body.split("\n") if line.strip()
-        )
-        if text:
-            out.append(TextParagraph(i, text))
-    return out
-
-
-def sheet_blocks(
-    raw: bytes, page_indices: "list[int] | range | None" = None
-) -> list[list[TextParagraph]]:
-    """XLSX bytes -> per-sheet row-block lists, in workbook order.
-    ``page_indices`` selects sheets by GLOBAL position (the bucket
-    contract — a sliced payload passes ``None``)."""
-    with _open_zip(raw) as zf:
-        names = _sheet_members(zf)
-        if page_indices is not None:
-            names = [names[i] for i in page_indices]
-        shared = _shared_strings(zf)
-        return [_rows(_parse_member(zf, n), shared, n) for n in names]
 
 
 def _sheet_drawings(zf: zipfile.ZipFile,
@@ -234,8 +186,10 @@ def sheet_parts(
     """XLSX bytes -> per-sheet MIXED part lists: row blocks and
     anchored pictures interleaved by sheet row (a picture anchored at
     row R slots after row R's text — it renders over that row), the
-    ``pptxtext.slide_parts`` shape. Same ``page_indices`` contract as
-    :func:`sheet_blocks`."""
+    ``pptxtext.slide_parts`` shape, in workbook order. ``page_indices``
+    selects sheets by GLOBAL position (the bucket contract — a sliced
+    payload passes ``None``). Each non-empty row is one text part, its
+    cells in document order joined with a single space."""
     from .docxtext import media_content_type
 
     with _open_zip(raw) as zf:

@@ -14,8 +14,12 @@ zero-fill spans and garbage extension, asserting the contract at the
 exact call sites the pipeline uses:
 
 * ``sniff_kind`` never raises (it returns ``"unknown"`` at worst);
-* ``probe_real_media(deep=True)`` and ``decode_real_media`` either
-  succeed or raise ``ValueError`` — never any other exception type.
+* ``probe_real_media(deep=True)``, ``decode_real_media`` and the tier
+  table's slicer either succeed or raise ``ValueError`` — never any
+  other exception type;
+* probe/extract symmetry: a mutant the deep probe admits decodes
+  through its tier's ``pages`` (full payload and sliced bucket)
+  without raising, for every non-raster kind.
 
 Mutants are deterministic (seeded rng), so a contract break replays.
 """
@@ -32,8 +36,8 @@ import pytest
 
 from ocr_platform_spark import audiocodec, avicodec, bmpcodec, \
     docxtext, emltext, epubtext, formats, gifcodec, jpegcodec, \
-    multimodal, odttext, pdfcodec, pngcodec, pptxtext, rtftext, \
-    tiffcodec, xlsxtext
+    multimodal, odttext, pngcodec, pptxtext, rtftext, tiers, tiffcodec, \
+    transport, xlsxtext
 from tests.test_pdfcodec import build_pdf, scanned_objs
 from tests.test_pdfcrypt import encrypt_pdf
 
@@ -240,27 +244,32 @@ def test_dispatch_seam_mutation_fuzz(kind):
         except Exception as e:  # noqa: BLE001 - the contract under test
             pytest.fail(f"{kind} {label}: decode raised {type(e).__name__}: "
                         f"{e}")
-        if probe_ok and probed_kind in ("pdf", "tiff", "gif",
-                                        "pptx", "xlsx", "epub", "mbox"):
-            # the bucket-explode slicer is the third distributed call
-            # site; a mutant that survives the deep probe reaches it
+        if not probe_ok:
+            continue
+        # past the probe, the distributed call sites go through the
+        # tier table on the unwrapped payload: the bucket-explode slicer
+        # (when the kind has one) cuts a bucket, and the OCR stage
+        # decodes the full payload or the cut
+        tier = tiers.TIERS[probed_kind]
+        mut = transport.maybe_unwrap(mut)
+        decodes = [(mut, list(range(pr[1])))]
+        if tier.slicer is not None:
             try:
-                if probed_kind == "pdf":
-                    pdfcodec._Slicer(mut).slice([0])
-                elif probed_kind == "tiff":
-                    tiffcodec.slice_pages(mut, [0])
-                elif probed_kind == "gif":
-                    gifcodec.slice_pages(mut, [0])
-                elif probed_kind == "pptx":
-                    pptxtext.slice_slides(mut, [0])
-                elif probed_kind == "xlsx":
-                    xlsxtext.slice_sheets(mut, [0])
-                elif probed_kind == "mbox":
-                    emltext.slice_messages(mut, [0])
-                else:
-                    epubtext.slice_chapters(mut, [0])
+                decodes.append((tier.slicer(mut)([0]), None))
             except ValueError:
                 pass
             except Exception as e:  # noqa: BLE001 - contract under test
                 pytest.fail(f"{kind} {label}: slice raised "
                             f"{type(e).__name__}: {e}")
+        for payload, page_indices in decodes:
+            try:
+                tier.pages(payload, page_indices)
+            except Exception as e:  # noqa: BLE001 - contract under test
+                # probe/extract symmetry: what the deep probe admits
+                # decodes. Raster kinds are exempt: entropy-level
+                # corruption (JPEG/LZW/Flate sample bits) carries no
+                # checksum a structural probe could verify
+                if probed_kind not in ("pdf", "image", "tiff", "gif"):
+                    pytest.fail(f"{kind} {label}: admitted by the deep "
+                                f"probe, decode raised "
+                                f"{type(e).__name__}: {e}")

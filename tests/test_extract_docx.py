@@ -142,7 +142,7 @@ def test_encrypted_member_quarantines():
         cd = enc.find(b"PK\x01\x02", cd + 4)
     assert cd != -1
     with pytest.raises(ValueError, match="unreadable word/document.xml"):
-        docxtext.probe_docx(bytes(enc), deep=True)
+        multimodal.probe_real_media(bytes(enc), deep=True)
 
 
 def test_wordprocessingml_walk_semantics():
@@ -189,7 +189,7 @@ def test_real_media_metadata_docx(spark):
     """Header-only metadata pass reports DOCX as 1 reflowable page (a
     central-directory walk, no member inflated) — and a deep-only
     defect (CRC corruption) passes here but quarantines in the deep
-    extraction probe (the probe_dims-vs-validate_scanned split)."""
+    extraction probe (the probe_dims-vs-validate_hybrid split)."""
     fixtures = _corrupt_docx_fixtures()
     media = spark.createDataFrame(
         [("m-good", bytearray(docxtext.encode_docx(["hi"]))),

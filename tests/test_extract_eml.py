@@ -10,6 +10,7 @@ import pytest
 from ocr_platform_spark import corpus, emltext, multimodal, schemas
 from ocr_platform_spark.operators import extract, extract_real
 from tests.test_extract_html import content_html
+from tests.test_extract_office_paged import text_pages
 from tests.test_extract_real import _render_pages, _spans_by_doc
 from tests.test_extract_text_layer import page_ocr_blocks
 
@@ -295,7 +296,7 @@ def test_declared_charset_is_strict():
     with pytest.raises(ValueError, match="charset"):
         emltext.eml_blocks(raw.decode("utf-8"))
     with pytest.raises(ValueError):
-        emltext.validate_eml(raw)
+        multimodal.probe_real_media(raw, deep=True)
 
 
 def test_quoted_printable_decodes():
@@ -316,11 +317,11 @@ def test_mbox_round_trip_and_mboxrd_quoting():
     mb = emltext.encode_mbox(msgs)
     assert b"\n>From the start\n" in mb      # quoted on write
     assert b"\n>>From quoted\n" in mb        # double-quoted on write
-    pages = emltext.mbox_page_blocks(mb)
+    pages = text_pages(emltext.mbox_page_parts(mb))
     assert [[b.text for b in p] for p in pages] == [
         [f"m{i}", "From the start"] for i in range(3)]
     assert emltext.count_messages(mb) == 3
-    assert emltext.probe_mbox(mb, deep=True) == (3, 0, 0)
+    assert multimodal.probe_real_media(mb, deep=True)[1:] == (3, 0, 0)
 
 
 def test_mail_boilerplate_drop_rules():
@@ -338,8 +339,9 @@ def test_mbox_slice_preserves_messages():
     msgs = [_simple(f"body {i}", subject=f"s{i}") for i in range(5)]
     mb = emltext.encode_mbox(msgs)
     sl = emltext.slice_messages(mb, [1, 3])
-    assert emltext.probe_mbox(sl, deep=True) == (2, 0, 0)
-    assert [[b.text for b in p] for p in emltext.mbox_page_blocks(sl)] == \
+    assert multimodal.probe_real_media(sl, deep=True)[1:] == (2, 0, 0)
+    assert [[b.text for b in p]
+            for p in text_pages(emltext.mbox_page_parts(sl))] == \
         [["s1", "body 1"], ["s3", "body 3"]]
 
 
@@ -362,4 +364,4 @@ def test_mbox_member_corruption():
 def test_empty_body_message_extracts_zero_blocks():
     raw = emltext.encode_eml(HDRS, body="")
     assert emltext.eml_blocks(raw.decode()) == []
-    assert emltext.validate_eml(raw) == (1, 0, 0)
+    assert multimodal.probe_real_media(raw, deep=True)[1:] == (1, 0, 0)

@@ -20,6 +20,7 @@ import pytest
 from ocr_platform_spark import corpus, epubtext, htmltext, multimodal, schemas
 from ocr_platform_spark.operators import extract, extract_real
 from tests.test_extract_html import FOOTER, HEAD, NAV, SIDEBAR
+from tests.test_extract_office_paged import text_pages
 from tests.test_extract_real import _render_pages, _spans_by_doc
 from tests.test_extract_text_layer import page_ocr_blocks
 
@@ -82,14 +83,15 @@ def test_slice_decode_parity_and_spine_rewrite():
         epubtext.chapter_xhtml([f"chapter {i} text", f"more {i}"])
         for i in range(5)
     ])
-    full = [[b.text for b in p] for p in epubtext.chapter_blocks(book)]
+    full = [[b.text for b in p]
+            for p in text_pages(epubtext.chapter_parts(book))]
     for lo in range(0, 5, 2):
         hi = min(5, lo + 2)
         sl = epubtext.slice_chapters(book, range(lo, hi))
         assert multimodal.probe_real_media(sl, deep=True) == (
             "epub", hi - lo, 0, 0)
         assert [[b.text for b in p]
-                for p in epubtext.chapter_blocks(sl)] == full[lo:hi]
+                for p in text_pages(epubtext.chapter_parts(sl))] == full[lo:hi]
 
 
 def _tamper(build) -> bytes:
@@ -175,7 +177,8 @@ def test_opf_relative_hrefs_resolve():
     book = epubtext.encode_epub(
         [epubtext.chapter_xhtml(["nested layout"])], subdir="OEBPS/book")
     assert multimodal.probe_real_media(book, deep=True) == ("epub", 1, 0, 0)
-    assert [[b.text for b in p] for p in epubtext.chapter_blocks(book)] \
+    assert [[b.text for b in p]
+            for p in text_pages(epubtext.chapter_parts(book))] \
         == [["nested layout"]]
 
 

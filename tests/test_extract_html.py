@@ -19,7 +19,7 @@ from __future__ import annotations
 
 import pytest
 
-from ocr_platform_spark import corpus, htmltext, schemas
+from ocr_platform_spark import corpus, htmltext, multimodal, schemas
 from ocr_platform_spark.operators import extract, extract_real
 from tests.test_extract_real import _render_pages, _spans_by_doc
 from tests.test_extract_text_layer import page_ocr_blocks
@@ -76,18 +76,6 @@ def test_html_pipeline_equals_flagship(html_corpus):
     docs_df, synth, html = html_corpus
     flagship = _spans_by_doc(extract.extract_documents(docs_df, synth))
     got = _spans_by_doc(extract_real.extract_real_documents(docs_df, html))
-    assert got == flagship
-
-
-def test_html_extracts_under_strict_scanned_contract(html_corpus):
-    """text_layer=False gates the PDF per-page dispatch only: HTML has
-    no raster alternative, so the DOM tier is flag-independent."""
-    docs_df, synth, html = html_corpus
-    flagship = _spans_by_doc(extract.extract_documents(docs_df, synth))
-    got = _spans_by_doc(
-        extract_real.extract_real_documents(docs_df, html,
-                                            text_layer=False)
-    )
     assert got == flagship
 
 
@@ -170,7 +158,7 @@ def test_meta_charset_declarations():
               ).encode("cp1252")
     assert [b.text for b in htmltext.main_blocks(
         htmltext.decode_html(cp1252))] == ["café “quoted”"]
-    assert htmltext.validate_html(cp1252) == (1, 0, 0)
+    assert multimodal.probe_real_media(cp1252, deep=True)[1:] == (1, 0, 0)
     with _pytest.raises(ValueError, match="unsupported declared charset"):
         htmltext.decode_html(
             b'<html><meta charset="shift_jis"><p>x</p></html>')
@@ -267,7 +255,7 @@ def test_custom_elements_do_not_false_quarantine():
     script/style, and none of them drops as a code subtree."""
     doc = (b"<html><body><div><style-guide>styling advice</style-guide>"
            b"</div><p>if(a&lt;script_count) holds</p></body></html>")
-    assert htmltext.validate_html(doc) == (1, 0, 0)
+    assert multimodal.probe_real_media(doc, deep=True)[1:] == (1, 0, 0)
     blocks = htmltext.main_blocks(htmltext.decode_html(doc))
     assert [b.text for b in blocks] == [
         "styling advice", "if(a<script_count) holds"]
@@ -293,7 +281,7 @@ def test_real_media_metadata_html_is_prescan_window_only(spark):
     means the 2048-byte pre-scan window ONLY — an unsupported DECLARED
     charset quarantines there, but whole-payload structural checks
     (truncation, unclosed subtrees) belong to the deep extraction probe
-    (the probe_dims-vs-validate_scanned split, HTML edition)."""
+    (the probe_dims-vs-validate_hybrid split, HTML edition)."""
     from ocr_platform_spark import multimodal
 
     media = spark.createDataFrame(

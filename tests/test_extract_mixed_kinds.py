@@ -102,8 +102,7 @@ def test_tier_table_keys_are_the_probe_kinds():
     payloads += [gifcodec.encode_gif([pages[0]]),
                  pngcodec.encode_png(np.stack([pages[0]] * 3, axis=-1)),
                  subtext.encode_vtt(["one cue"])]
-    kinds = {multimodal.probe_real_media(p, deep=True, text_layer=True)[0]
-             for p in payloads}
+    kinds = {multimodal.probe_real_media(p, deep=True)[0] for p in payloads}
     assert kinds == set(extract_real.TIERS)
 
 

@@ -15,11 +15,17 @@ import zipfile
 
 import pytest
 
-from ocr_platform_spark import (corpus, multimodal, pptxtext, schemas,
-                                xlsxtext)
+from ocr_platform_spark import (corpus, multimodal, plaintext, pptxtext,
+                                schemas, xlsxtext)
 from ocr_platform_spark.operators import extract, extract_real
 from tests.test_extract_real import _render_pages, _spans_by_doc
 from tests.test_extract_text_layer import page_ocr_blocks
+
+
+def text_pages(pages: list[list[tuple]]) -> list[list]:
+    """A paged part walk's text parts as blocks (``.text``), per page."""
+    return [[plaintext.TextParagraph(p[1], p[-1])
+             for p in parts if p[0] == "text"] for parts in pages]
 
 
 def content_pptx(payload: bytes) -> bytes:
@@ -101,25 +107,27 @@ def test_slice_decode_parity():
     range of the full decode, for every contiguous bucket."""
     deck = pptxtext.encode_pptx(
         [[f"slide {i} block a", f"slide {i}\nblock b"] for i in range(5)])
-    full = [[b.text for b in p] for p in pptxtext.slide_blocks(deck)]
+    full = [[b.text for b in p]
+            for p in text_pages(pptxtext.slide_parts(deck))]
     wb = xlsxtext.encode_xlsx(
         [[[f"sheet {i} r1"], [f"sheet {i} r2"]] for i in range(5)])
-    full_x = [[b.text for b in p] for p in xlsxtext.sheet_blocks(wb)]
+    full_x = [[b.text for b in p]
+              for p in text_pages(xlsxtext.sheet_parts(wb))]
     for lo in range(0, 5, 2):
         hi = min(5, lo + 2)
         sl = pptxtext.slice_slides(deck, range(lo, hi))
         assert [[b.text for b in p]
-                for p in pptxtext.slide_blocks(sl)] == full[lo:hi]
+                for p in text_pages(pptxtext.slide_parts(sl))] == full[lo:hi]
         sx = xlsxtext.slice_sheets(wb, range(lo, hi))
         assert [[b.text for b in p]
-                for p in xlsxtext.sheet_blocks(sx)] == full_x[lo:hi]
+                for p in text_pages(xlsxtext.sheet_parts(sx))] == full_x[lo:hi]
 
 
 def test_slide_numbering_is_numeric_not_lexicographic():
     """slide10.xml sorts after slide9.xml (numeric member order) — the
     lexicographic trap for decks past 9 slides."""
     deck = pptxtext.encode_pptx([[f"s{i}"] for i in range(1, 12)])
-    texts = [p[0].text for p in pptxtext.slide_blocks(deck)]
+    texts = [p[0].text for p in text_pages(pptxtext.slide_parts(deck))]
     assert texts == [f"s{i}" for i in range(1, 12)]
     assert multimodal.probe_real_media(deck, deep=True) == ("pptx", 11, 0, 0)
 
@@ -151,7 +159,7 @@ def test_cell_type_semantics():
         zf.writestr("xl/workbook.xml", f'<workbook xmlns="{s}"/>')
         zf.writestr("xl/worksheets/sheet1.xml", sheet)
         zf.writestr("xl/sharedStrings.xml", sst)
-    pages = xlsxtext.sheet_blocks(buf.getvalue())
+    pages = text_pages(xlsxtext.sheet_parts(buf.getvalue()))
     assert [[b.text for b in p] for p in pages] == [
         ["42 TRUE FALSE =SUM cached #DIV/0!", "rich runs"]]
 

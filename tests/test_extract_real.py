@@ -547,8 +547,7 @@ def test_hybrid_bucket_drops_atomically_on_mid_doc_decode_failure():
     # the structural probe accepts it (dict-level checks only) ...
     from ocr_platform_spark import multimodal
 
-    assert multimodal.probe_real_media(raw, deep=True, text_layer=True)[0] \
-        == "pdf"
+    assert multimodal.probe_real_media(raw, deep=True)[0] == "pdf"
     # ... and the OCR stage drops the whole bucket, atomically
     frame = pd.DataFrame({
         "doc_id": ["d1"], "offset": [0], "media_ref": ["m1"],

@@ -208,19 +208,6 @@ def test_identity_h_text_layer_pipeline_equals_flagship(text_corpus):
         )
 
 
-def test_text_pdfs_quarantine_without_text_layer_flag(text_corpus):
-    """The strict scanned-only contract survives: the same corpus probed
-    with text_layer=False quarantines every born-digital PDF (text
-    operators are vector content there) and extracts none of them."""
-    docs_df, _synth, real, pdf_refs, _cid = text_corpus
-    buckets = extract_real.real_page_buckets(
-        docs_df, real, bucket_pages=2, text_layer=False
-    )
-    errs = extract_real.real_media_errors(buckets).collect()
-    assert {r["media_ref"] for r in errs} == pdf_refs
-    assert all("unsupported" in r["error"] for r in errs)
-
-
 def test_mixed_scanned_and_text_pages_one_document(spark):
     """One PDF, page 0 scanned (image XObject -> raster+OCR), page 1
     born-digital (text layer): per-page dispatch assembles both into a

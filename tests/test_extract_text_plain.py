@@ -68,18 +68,6 @@ def test_txt_pipeline_equals_flagship(txt_corpus):
     assert got == flagship
 
 
-def test_txt_extracts_under_strict_scanned_contract(txt_corpus):
-    """text_layer=False gates the PDF per-page dispatch only — plain
-    text has no raster alternative, so the tier is flag-independent."""
-    docs_df, synth, txt = txt_corpus
-    flagship = _spans_by_doc(extract.extract_documents(docs_df, synth))
-    got = _spans_by_doc(
-        extract_real.extract_real_documents(docs_df, txt,
-                                            text_layer=False)
-    )
-    assert got == flagship
-
-
 def test_non_text_payloads_quarantine_at_probe(spark):
     """Invalid UTF-8, binary control bytes, TRUNCATED leading markup
     (well-formed XML now extracts via the xmltext tier instead) and
@@ -174,7 +162,7 @@ def test_real_media_metadata_txt(spark):
     """Header-only metadata pass reports plain text as 1 reflowable page
     with no raster geometry — and stays O(window), so a deep-only defect
     (binary byte past the window) is 'txt' here but quarantines in the
-    deep extraction probe (the probe_dims-vs-validate_scanned split)."""
+    deep extraction probe (the probe_dims-vs-validate_hybrid split)."""
     media = spark.createDataFrame(
         [("m-t", bytearray(b"just some words")),
          ("m-deep", bytearray(b"a" * 5000 + b"\x00"))],

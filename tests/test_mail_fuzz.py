@@ -181,7 +181,7 @@ def test_mail_mutation_fuzz_contract(tag):
         assert kinds.count("media") == 2  # png + octet-stream leaves
         assert parts[0][2] == "Tést"      # decoded encoded-word subject
     else:
-        assert emltext.probe_mbox(fixture, deep=True)[0] == 2
+        assert multimodal.probe_real_media(fixture, deep=True)[1] == 2
     for label, mut in _mutants(fixture, zlib.crc32(tag.encode())):
         try:
             emltext.message_spans(mut)

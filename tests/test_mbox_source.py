@@ -10,7 +10,7 @@ import io
 import numpy as np
 import pytest
 
-from ocr_platform_spark import corpus, emltext, pngcodec, schemas
+from ocr_platform_spark import corpus, emltext, multimodal, pngcodec, schemas
 from ocr_platform_spark.operators import extract_real
 from ocr_platform_spark.sources import mbox as mboxsrc
 from tests.test_extract_eml import HDRS, _body_from_blocks
@@ -142,7 +142,7 @@ def test_count_messages_bare_cr_endings():
     mb = emltext.encode_mbox([_eml(0, "cr one"), _eml(1, "cr two")])
     bare_cr = mb.replace(b"\r\n", b"\n").replace(b"\n", b"\r")
     assert emltext.count_messages(bare_cr) == 2
-    n, _, _ = emltext.probe_mbox(bare_cr)
+    _, n, _, _ = multimodal.probe_real_media(bare_cr, deep=True)
     assert n == 2
 
 

@@ -14,8 +14,8 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
-from ocr_platform_spark import (docxtext, gifcodec, odttext, pngcodec,
-                                raster, schemas)
+from ocr_platform_spark import (docxtext, gifcodec, multimodal, odttext,
+                                pngcodec, raster, schemas)
 from ocr_platform_spark.formats import Band, PageDesc
 from ocr_platform_spark.operators.extract_real import extract_real_documents
 
@@ -57,7 +57,7 @@ def test_docx_document_parts_order_and_inline_split():
     ]
     assert all(bytes(p[3]) == png for p in parts if p[0] == "media")
     # the deep probe validates the embedded rasters and stays green
-    assert docxtext.probe_docx(docx, deep=True) == (1, 0, 0)
+    assert multimodal.probe_real_media(docx, deep=True)[1:] == (1, 0, 0)
 
 
 def test_docx_text_only_parts_match_paragraph_blocks():
@@ -113,7 +113,7 @@ def test_docx_corrupt_embedded_png_quarantines_at_deep_probe():
     assert [p[0] for p in parts] == ["text", "media", "text"]
     # ... but the deep probe front-runs the decode failure
     with pytest.raises(ValueError, match="corrupt embedded media"):
-        docxtext.probe_docx(docx, deep=True)
+        multimodal.probe_real_media(docx, deep=True)
 
 
 def test_docx_unsupported_embedded_format_is_skipped():
@@ -125,8 +125,9 @@ def test_docx_unsupported_embedded_format_is_skipped():
     parts = docxtext.document_parts(docx)
     assert [p[0] for p in parts] == ["text", "media", "text"]
     assert parts[1][1] == "application/octet-stream"
-    assert docxtext.probe_docx(docx, deep=True) == (1, 0, 0)  # not validated
-    from ocr_platform_spark.operators.extract_real import _flow
+    # not validated
+    assert multimodal.probe_real_media(docx, deep=True)[1:] == (1, 0, 0)
+    from ocr_platform_spark.tiers import _flow
 
     content = [("text",) if hasattr(p, "text") else ("raster",)
                for p in _flow(parts)]
@@ -146,7 +147,7 @@ def test_odt_document_parts_order_and_inline_split():
         ("text", "before inline"), ("media", "image/png"),
         ("text", "after inline"), ("text", "last para"),
     ]
-    assert odttext.probe_odt(odt, deep=True) == (1, 0, 0)
+    assert multimodal.probe_real_media(odt, deep=True)[1:] == (1, 0, 0)
 
 
 def test_odt_missing_media_member_quarantines():
@@ -288,7 +289,7 @@ def test_pptx_slide_parts_order():
         ("text", "slide two only text")
     ]
     # deep probe validates embedded rasters
-    assert pptxtext.probe_pptx(pptx, deep=True) == (2, 0, 0)
+    assert multimodal.probe_real_media(pptx, deep=True)[1:] == (2, 0, 0)
 
 
 def test_pptx_slice_keeps_slide_media():
@@ -374,7 +375,7 @@ def test_rtf_document_parts_order_and_inline_split():
         ("text", "after inline"), ("text", "last para"),
     ]
     assert all(bytes(p[3]) == png for p in parts if p[0] == "media")
-    assert rtftext.validate_rtf(rtf, deep_media=True) == (1, 0, 0)
+    assert multimodal.probe_real_media(rtf, deep=True)[1:] == (1, 0, 0)
     # text-only docs: parts walk and paragraph walk agree
     plain = rtftext.encode_rtf(["alpha", "b\nc"])
     assert [p[2] for p in rtftext.document_parts(plain)] == \
@@ -395,7 +396,7 @@ def test_rtf_wmf_fallback_skipped_and_corrupt_pict_quarantines():
     png[60] ^= 0xFF
     rtf = rtftext.encode_rtf_with_media(["a", bytes(png), "b"])
     with _pytest.raises(ValueError, match="corrupt embedded media"):
-        rtftext.validate_rtf(rtf, deep_media=True)
+        multimodal.probe_real_media(rtf, deep=True)
     # odd-length / non-hex pict data quarantines at parse
     with _pytest.raises(ValueError, match="odd-length"):
         rtftext.document_parts(b"{\\rtf1{\\pict\\pngblip 0ab}\\par}")
@@ -450,7 +451,7 @@ def test_epub_chapter_parts_interleave_by_position():
         ("text", "c1 after")]
     assert bytes(parts[1][1][4]).startswith(b"\x89PNG")
     # deep probe validates the embedded raster and stays green
-    assert epubtext.probe_epub(epub, deep=True) == (2, 0, 0)
+    assert multimodal.probe_real_media(epub, deep=True)[1:] == (2, 0, 0)
 
 
 def test_epub_missing_image_member_quarantines():
@@ -469,7 +470,7 @@ def test_epub_missing_image_member_quarantines():
     with pytest.raises(ValueError, match="image member missing"):
         epubtext.chapter_parts(buf.getvalue())
     with pytest.raises(ValueError, match="image member missing"):
-        epubtext.probe_epub(buf.getvalue(), deep=True)
+        multimodal.probe_real_media(buf.getvalue(), deep=True)
 
 
 def test_epub_skips_scheme_and_protocol_relative_sources():
@@ -490,7 +491,7 @@ def test_epub_skips_scheme_and_protocol_relative_sources():
     parts = epubtext.chapter_parts(epub)
     assert [(p[0], p[2]) for p in parts[0]] == [
         ("text", "before"), ("media", "image/png"), ("text", "after")]
-    assert epubtext.probe_epub(epub, deep=True) == (1, 0, 0)
+    assert multimodal.probe_real_media(epub, deep=True)[1:] == (1, 0, 0)
 
 
 def test_epub_slice_keeps_chapter_images():
@@ -626,7 +627,7 @@ def test_eml_parts_and_probe_validation():
     parts = emltext.eml_parts(raw.decode())
     assert [(p[0],) for p in parts] == [
         ("text",), ("text",), ("media",), ("text",), ("media",)]
-    assert emltext.validate_eml(raw) == (1, 0, 0)
+    assert multimodal.probe_real_media(raw, deep=True)[1:] == (1, 0, 0)
     # corrupt raster attachment quarantines at the deep probe
     png = bytearray(_word_png("page"))
     png[60] ^= 0xFF
@@ -635,7 +636,7 @@ def test_eml_parts_and_probe_validation():
          ("Date", "d"), ("MIME-Version", "1.0")],
         parts=[("text/plain", "x"), ("image/png", bytes(png))])
     with pytest.raises(ValueError, match="corrupt embedded media"):
-        emltext.validate_eml(bad)
+        multimodal.probe_real_media(bad, deep=True)
 
 
 def test_eml_attachment_ocrs_between_body_parts(spark):
@@ -705,7 +706,7 @@ def test_xlsx_sheet_parts_anchor_order_and_slice():
         == [("text", "alpha 1"), ("media", "image/png"),
             ("text", "beta")]
     assert [(p[0], p[2]) for p in parts[1]] == [("text", "sheet two")]
-    assert xlsxtext.probe_xlsx(x, deep=True) == (2, 0, 0)
+    assert multimodal.probe_real_media(x, deep=True)[1:] == (2, 0, 0)
     # the drawing chain survives per-sheet slicing
     sliced = xlsxtext.slice_sheets(x, [0])
     assert [(p[0],) for p in xlsxtext.sheet_parts(sliced)[0]] == \
@@ -729,7 +730,7 @@ def test_xlsx_dangling_drawing_rel_quarantines():
     with pytest.raises(ValueError, match="dangling picture relationship"):
         xlsxtext.sheet_parts(buf.getvalue())
     with pytest.raises(ValueError, match="dangling picture relationship"):
-        xlsxtext.probe_xlsx(buf.getvalue(), deep=True)
+        multimodal.probe_real_media(buf.getvalue(), deep=True)
 
 
 def test_xlsx_anchored_picture_ocrs_between_rows(spark):

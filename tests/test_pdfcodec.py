@@ -25,7 +25,7 @@ import zlib
 import numpy as np
 import pytest
 
-from ocr_platform_spark import jpegcodec, pdfcodec
+from ocr_platform_spark import jpegcodec, pdfcodec, pdftext
 from ocr_platform_spark.raster import area_resize
 
 
@@ -455,7 +455,7 @@ def test_ccitt_g4_page_decodes_bit_exact():
     255 (default BlackIs1=false, default Decode)."""
     bm = (_rng(31).random((24, 40)) < 0.2).astype(np.uint8)
     raw = _ccitt_page(bm)
-    assert pdfcodec.validate_scanned(raw) == (1, 40, 24)  # no inflation
+    assert pdftext.validate_hybrid(raw) == (1, 40, 24)  # no inflation
     pages = pdfcodec.decode_pdf(raw)
     want = np.stack([(1 - bm) * 255] * 3, axis=-1).astype(np.uint8)
     np.testing.assert_array_equal(pages[0], want)
@@ -492,7 +492,7 @@ def test_ccitt_g3_pages_decode_bit_exact():
     for kwargs in ({"k": 0}, {"k": 0, "parms": "/EncodedByteAlign true"},
                    {"k": 4}):
         raw = _ccitt_page(bm, **kwargs)
-        assert pdfcodec.validate_scanned(raw) == (1, 40, 24), kwargs
+        assert pdftext.validate_hybrid(raw) == (1, 40, 24), kwargs
         np.testing.assert_array_equal(
             pdfcodec.decode_pdf(raw)[0], want, err_msg=str(kwargs))
 
@@ -582,7 +582,7 @@ def test_xref_stream_objstm_decode_equality():
     classic_pages = pdfcodec.decode_pdf(build_pdf(objs))
     for raw in _xrefstream_variants(objs):
         assert pdfcodec.page_count(raw) == 2
-        assert pdfcodec.validate_scanned(raw) == (2, 208, 417)
+        assert pdftext.validate_hybrid(raw) == (2, 208, 417)
         pages = pdfcodec.decode_pdf(raw)
         for got, want in zip(pages, classic_pages):
             np.testing.assert_array_equal(got, want)
@@ -817,7 +817,7 @@ def test_slice_pages_decode_equality_all_image_classes():
                 np.testing.assert_array_equal(x, y)
     # a slice is itself a valid scanned PDF: probe + re-slice both work
     sl = pdfcodec.slice_pages(raw, [1, 4])
-    assert pdfcodec.validate_scanned(sl)[0] == 2
+    assert pdftext.validate_hybrid(sl)[0] == 2
     np.testing.assert_array_equal(
         pdfcodec.decode_pdf(pdfcodec.slice_pages(sl, [1]))[0],
         pdfcodec.decode_pdf(raw, page_indices=[4])[0])
@@ -869,7 +869,7 @@ def test_slice_prunes_pages_level_shared_resources():
     assert payloads[1] in sl
     assert payloads[0] not in sl and payloads[2] not in sl
     # inherited MediaBox materialized into the sliced page
-    assert pdfcodec.validate_scanned(sl) == (1, 40, 50)
+    assert pdftext.validate_hybrid(sl) == (1, 40, 50)
 
 
 def test_slice_of_incremental_update_takes_newest_object():
@@ -1111,7 +1111,7 @@ def test_inline_images_match_xobject_equivalents():
         got = pdfcodec.decode_pdf(raw_pdf)[0]
         np.testing.assert_array_equal(got, want)
         # the distributed probe accepts inline pages without inflation
-        assert pdfcodec.validate_scanned(raw_pdf) == (1, 100, 50)
+        assert pdftext.validate_hybrid(raw_pdf) == (1, 100, 50)
 
 
 def test_inline_image_malformed_quarantines():
@@ -1160,7 +1160,7 @@ def test_page_rotate_clockwise_display():
         want = np.ascontiguousarray(np.rot90(base, k=-eff // 90)) \
             if eff else base
         np.testing.assert_array_equal(got, want, err_msg=str(rot))
-        n, w, h = pdfcodec.validate_scanned(raw)
+        n, w, h = pdftext.validate_hybrid(raw)
         assert (n, w, h) == (1, got.shape[1], got.shape[0]), rot
         assert pdfcodec.probe_dims(raw) == (1, got.shape[1], got.shape[0])
         gl = pdfcodec.decode_pdf(raw, mode="L")[0]
@@ -1177,7 +1177,7 @@ def test_page_rotate_non_right_angle_quarantines():
         with pytest.raises(ValueError, match="right angle"):
             pdfcodec.decode_pdf(_rotated_pdf(img, bad))
         with pytest.raises(ValueError, match="right angle"):
-            pdfcodec.validate_scanned(_rotated_pdf(img, bad))
+            pdftext.validate_hybrid(_rotated_pdf(img, bad))
 
 
 def test_pdf_sub_byte_gray_images():
@@ -1254,7 +1254,7 @@ def test_imagemask_stencils_paint_black_ink():
         raw = build_pdf(_mask_objs(obj))
         np.testing.assert_array_equal(pdfcodec.decode_pdf(raw)[0], want,
                                       err_msg=name)
-        assert pdfcodec.validate_scanned(raw) == (1, 100, 50), name
+        assert pdftext.validate_hybrid(raw) == (1, 100, 50), name
 
 
 def test_imagemask_transparent_over_underlying_image():

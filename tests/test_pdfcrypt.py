@@ -14,7 +14,7 @@ Pins:
 
 * every supported variant (RC4-40 R2, RC4-128 R3, V4 RC4 + AESV2 R4,
   Identity StmF, AES-256 R6) decodes pixel-identical to its plaintext
-  twin, and probe/page_count/validate_scanned agree;
+  twin, and probe/page_count/validate_hybrid agree;
 * ``slice_pages`` of an encrypted document is BYTE-identical to the
   slice of the plaintext twin (the slicer emits decrypted bytes and no
   ``/Encrypt``);
@@ -36,7 +36,7 @@ import zlib
 import numpy as np
 import pytest
 
-from ocr_platform_spark import corpus, pdfcodec, pdfcrypt, schemas
+from ocr_platform_spark import corpus, pdfcodec, pdfcrypt, pdftext, schemas
 from ocr_platform_spark.crypto import aes_cbc_encrypt, pkcs7_pad, rc4
 from ocr_platform_spark.operators import extract, extract_real
 from tests.test_extract_real import (_render_pages, _spans_by_doc,
@@ -292,7 +292,7 @@ def test_encrypted_decodes_identical_to_plaintext_twin(variant):
         np.testing.assert_array_equal(g, w)
     assert pdfcodec.page_count(enc) == 2
     assert pdfcodec.probe_dims(enc) == pdfcodec.probe_dims(plain)
-    assert pdfcodec.validate_scanned(enc) == pdfcodec.validate_scanned(plain)
+    assert pdftext.validate_hybrid(enc) == pdftext.validate_hybrid(plain)
 
 
 def test_encrypt_metadata_false_changes_the_key_and_still_decodes():

@@ -18,6 +18,7 @@ from hypothesis import strategies as st
 
 from ocr_platform_spark import (docxtext, epubtext, htmltext, odttext,
                                 plaintext, pptxtext, rtftext, xlsxtext)
+from tests.test_extract_office_paged import text_pages
 
 # characters the tiers must carry verbatim: printable, no C0/C1 (the
 # plain-text contract refuses binary controls; XML cannot carry most
@@ -59,7 +60,7 @@ def test_rtf_round_trip(paras):
 @given(st.lists(_blocks, min_size=1, max_size=3))
 @settings(max_examples=100, deadline=None)
 def test_pptx_round_trip(slides):
-    got = pptxtext.slide_blocks(pptxtext.encode_pptx(slides))
+    got = text_pages(pptxtext.slide_parts(pptxtext.encode_pptx(slides)))
     assert [[b.text for b in p] for p in got] == slides
 
 
@@ -67,8 +68,8 @@ def test_pptx_round_trip(slides):
 @settings(max_examples=100, deadline=None)
 def test_xlsx_round_trip(sheets, use_shared):
     rows = [[[cell] for cell in sheet] for sheet in sheets]
-    got = xlsxtext.sheet_blocks(
-        xlsxtext.encode_xlsx(rows, use_shared=use_shared))
+    got = text_pages(xlsxtext.sheet_parts(
+        xlsxtext.encode_xlsx(rows, use_shared=use_shared)))
     assert [[b.text for b in p] for p in got] == sheets
 
 
@@ -91,7 +92,7 @@ _html_block = st.lists(_html_line, min_size=1, max_size=4).map("\n".join)
 def test_epub_round_trip(chapters):
     book = epubtext.encode_epub(
         [epubtext.chapter_xhtml(ch) for ch in chapters])
-    got = epubtext.chapter_blocks(book)
+    got = text_pages(epubtext.chapter_parts(book))
     assert [[b.text for b in p] for p in got] == chapters
 
 
@@ -223,5 +224,5 @@ def test_mbox_round_trip(pages):
     mb = emltext.encode_mbox(msgs)
     assert emltext.sniff_mbox(mb.decode("utf-8"))  # guaranteed sniff
     assert emltext.count_messages(mb) == len(pages)
-    got = emltext.mbox_page_blocks(mb)
+    got = text_pages(emltext.mbox_page_parts(mb))
     assert [[b.text for b in p] for p in got] == pages
