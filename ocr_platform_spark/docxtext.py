@@ -14,7 +14,7 @@ it — a zip whose namelist carries ``word/document.xml`` is a DOCX, and
 a zip no office tier claims quarantines (extracting an arbitrary
 archive's members as document text would be silent garbage).
 
-Block model: one ``TextParagraph`` per non-empty ``<w:p>``, in document
+Block model: one text part per non-empty ``<w:p>``, in document
 order (``iter()`` is document-order for nested table paragraphs too;
 ``w:p`` never nests inside ``w:p``). Within a paragraph, ``<w:t>`` run
 text concatenates, ``<w:br/>`` and ``<w:cr/>`` become line breaks and
@@ -43,8 +43,6 @@ import io
 import posixpath
 import zipfile
 from xml.etree import ElementTree
-
-from .plaintext import TextParagraph
 
 #: WordprocessingML main namespace (ECMA-376 / ISO 29500 transitional —
 #: what Word itself writes)
@@ -129,36 +127,6 @@ def _parse_document(zf: zipfile.ZipFile) -> ElementTree.Element:
         raise ValueError(f"malformed WordprocessingML: {e}") from e
 
 
-def _paragraph_text(p: ElementTree.Element) -> str:
-    """Visible text of one ``<w:p>``: w:t runs + explicit breaks, then
-    the shared strip-lines-join-\\n normalization."""
-    parts: list[str] = []
-    for el in p.iter():
-        if el.tag == _W_T:
-            parts.append(el.text or "")
-        elif el.tag in (_W_BR, _W_CR):
-            parts.append("\n")
-        elif el.tag == _W_TAB:
-            parts.append(" ")
-    body = "".join(parts)
-    return "\n".join(
-        line.strip() for line in body.split("\n") if line.strip()
-    )
-
-
-def paragraph_blocks(raw: bytes) -> list[TextParagraph]:
-    """DOCX bytes -> non-empty paragraphs in document order (the same
-    detection-shaped duck type the DOM/plain-text tiers emit)."""
-    with _open_docx(raw) as zf:
-        root = _parse_document(zf)
-    out: list[TextParagraph] = []
-    for i, p in enumerate(root.iter(_W_P)):
-        text = _paragraph_text(p)
-        if text:
-            out.append(TextParagraph(i, text))
-    return out
-
-
 # --- embedded media (the interleaved-span part walk) -------------------------
 
 def _load_rels(zf: zipfile.ZipFile) -> tuple[dict[str, str], set[str]]:
@@ -196,7 +164,8 @@ def _load_rels(zf: zipfile.ZipFile) -> tuple[dict[str, str], set[str]]:
 
 def _paragraph_segments(p: ElementTree.Element) -> list[tuple[str, str]]:
     """Run-ordered events of one ``<w:p>``: ``("t", fragment)`` for
-    visible text (same fragment rules as :func:`_paragraph_text`) and
+    visible text (``w:t`` runs; ``w:br``/``w:cr`` as line breaks,
+    ``w:tab`` as a space) and
     ``("m", rId)`` for each embedded picture reference —
     DrawingML ``a:blip r:embed`` and VML ``v:imagedata r:id``, with
     ``mc:Fallback`` subtrees skipped so AlternateContent shapes count
@@ -421,7 +390,7 @@ def encode_docx_with_media(items: list) -> bytes:
 def encode_docx(paragraphs: list[str]) -> bytes:
     """Minimal structurally-valid DOCX: one ``<w:p>`` per entry, a
     paragraph's internal ``\\n``s as explicit ``<w:br/>``s (the inverse
-    of :func:`_paragraph_text`'s line rule). ``xml:space="preserve"``
+    of :func:`_normalize_lines`'s line rule). ``xml:space="preserve"``
     keeps run text verbatim through conforming XML parsers."""
     body: list[str] = []
     for text in paragraphs:

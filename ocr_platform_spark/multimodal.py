@@ -456,41 +456,14 @@ def probe_real_media(
                 f"unknown media magic {raw[:5]!r} and not plain text "
                 f"({e})"
             ) from e
-        from . import csvtext, emltext, jsontext, latextext, mdtext, subtext
-
-        # structural refinements of the text tier, strictest first:
-        # a whole-payload strict JSON/JSONL parse (jsontext) beats the
-        # mbox envelope + RFC-5322 header block (emltext.sniff_mbox,
-        # messages are pages) beats a bare e-mail header block
-        # (emltext.sniff_eml) beats the unambiguous LaTeX document
-        # signal (latextext.sniff_latex) beats the subtitle cue shape
-        # (subtext.sniff_subtitles, WEBVTT header or a structural
-        # timestamp line) beats a confident DSV rectangle
-        # (csvtext.sniff_tabular, row-wise like an XLSX sheet) beats a
-        # markdown signal (mdtext.sniff_markdown, rendered text); else
-        # literal
-        if jsontext.sniff_json(text) is not None:
-            return "json", 1, 0, 0
-        # the mail walks decode their own copy: drop this one first so
-        # a multi-GB archive holds one decoded copy at a time
-        if emltext.sniff_mbox(text):
+        kind = _text_kind(text)
+        if kind in ("mbox", "eml"):
+            # the mail walks decode their own copy: drop this one first
+            # so a multi-GB archive holds one decoded copy at a time
             text = None
-            return _probe_walk("mbox", raw)
-        if emltext.sniff_eml(text):
-            text = None
-            return _probe_walk("eml", raw)
-        if latextext.sniff_latex(text):
-            return "tex", 1, 0, 0
-        if subtext.sniff_subtitles(text):
-            return "sub", 1, 0, 0
-        if csvtext.sniff_tabular(text) is not None:
-            return "csv", 1, 0, 0
-        if mdtext.sniff_markdown(text):
-            return "md", 1, 0, 0
-        return "txt", 1, 0, 0
+            return _probe_walk(kind, raw)
+        return kind, 1, 0, 0
     if plaintext.sniff_text(raw):
-        from . import csvtext, emltext, jsontext, latextext, mdtext, subtext
-
         # shallow refinement over the sniff window only (a structural
         # signal past the window keeps the metadata kind "txt"; the
         # deep probe that drives extraction sees the whole payload).
@@ -501,25 +474,44 @@ def probe_real_media(
         head = raw[:4096].decode("utf-8-sig", errors="ignore")
         if len(raw) > 4096:
             head = head[:head.rfind("\n") + 1] or head
-        if jsontext.sniff_json(head) is not None:
-            return "json", 1, 0, 0
-        if emltext.sniff_mbox(head):
+        kind = _text_kind(head)
+        if kind == "mbox":
+            from . import emltext
+
             # page count from the envelope-line scan only (bytes-level
             # regex, no decode/parse) — the O(n)-but-cheap economy the
             # office tiers' central-directory walk also pays
             return "mbox", emltext.count_messages(raw), 0, 0
-        if emltext.sniff_eml(head):
-            return "eml", 1, 0, 0
-        if latextext.sniff_latex(head):
-            return "tex", 1, 0, 0
-        if subtext.sniff_subtitles(head):
-            return "sub", 1, 0, 0
-        if csvtext.sniff_tabular(head) is not None:
-            return "csv", 1, 0, 0
-        if mdtext.sniff_markdown(head):
-            return "md", 1, 0, 0
-        return "txt", 1, 0, 0
+        return kind, 1, 0, 0
     raise ValueError(f"unknown media magic {raw[:5]!r}")
+
+
+def _text_kind(text: str) -> str:
+    """The text tier's structural refinement, one ordered ladder for the
+    deep probe (whole decoded payload) and the shallow one (sniff
+    window), strictest first: a whole-payload strict JSON/JSONL parse
+    (jsontext) beats the mbox envelope + RFC-5322 header block
+    (emltext.sniff_mbox, messages are pages) beats a bare e-mail header
+    block (emltext.sniff_eml) beats the unambiguous LaTeX document
+    signal (latextext.sniff_latex) beats the subtitle cue shape
+    (subtext.sniff_subtitles, WEBVTT header or a structural timestamp
+    line) beats a confident DSV rectangle (csvtext.sniff_tabular,
+    row-wise like an XLSX sheet) beats a markdown signal
+    (mdtext.sniff_markdown, rendered text); else literal ``txt``."""
+    from . import csvtext, emltext, jsontext, latextext, mdtext, subtext
+
+    for kind, sniff in (
+        ("json", lambda t: jsontext.sniff_json(t) is not None),
+        ("mbox", emltext.sniff_mbox),
+        ("eml", emltext.sniff_eml),
+        ("tex", latextext.sniff_latex),
+        ("sub", subtext.sniff_subtitles),
+        ("csv", lambda t: csvtext.sniff_tabular(t) is not None),
+        ("md", mdtext.sniff_markdown),
+    ):
+        if sniff(text):
+            return kind
+    return "txt"
 
 
 def _probe_walk(kind: str, raw: bytes) -> tuple[str, int, int, int]:

@@ -32,7 +32,6 @@ import zipfile
 from xml.etree import ElementTree
 
 from .docxtext import _open_docx as _open_zip
-from .plaintext import TextParagraph
 from .pptxtext import _parse_member
 
 TEXT_NS = "urn:oasis:names:tc:opendocument:xmlns:text:1.0"
@@ -83,69 +82,14 @@ def probe_odt(raw: bytes) -> tuple[int, int, int]:
     return 1, 0, 0
 
 
-def _paragraph_text(p: ElementTree.Element) -> str:
-    """Visible text of one text:p / text:h, via a manual child walk
-    (``itertext()`` cannot express tab/space/line-break elements or the
-    note drop)."""
-    parts: list[str] = []
-
-    def _walk(el: ElementTree.Element) -> None:
-        if el.text:
-            parts.append(el.text)
-        for child in el:
-            if child.tag == _T_NOTE:
-                pass  # footnote/endnote bodies are not flow text
-            elif child.tag == _T_BREAK:
-                parts.append("\n")
-            elif child.tag == _T_TAB:
-                parts.append(" ")
-            elif child.tag == _T_S:
-                parts.append(" " * int(child.get(f"{{{TEXT_NS}}}c", "1")))
-            else:
-                _walk(child)
-            if child.tail:
-                parts.append(child.tail)
-
-    _walk(p)
-    return "\n".join(
-        line.strip() for line in "".join(parts).split("\n")
-        if line.strip()
-    )
-
-
-def paragraph_blocks(raw: bytes) -> list[TextParagraph]:
-    """ODT bytes -> non-empty paragraph/heading blocks in document
-    order. The walk SKIPS ``text:note`` subtrees entirely — a
-    paragraph inside a footnote body must not surface as a flow block
-    (``root.iter()`` would leak it)."""
-    with _open_zip(raw) as zf:
-        root = _parse_member(zf, _CONTENT)
-    out: list[TextParagraph] = []
-    counter = [0]
-
-    def _walk(el: ElementTree.Element) -> None:
-        for child in el:
-            if child.tag == _T_NOTE:
-                continue
-            if child.tag in (_T_P, _T_H):
-                text = _paragraph_text(child)
-                if text:
-                    out.append(TextParagraph(counter[0], text))
-                counter[0] += 1
-            else:
-                _walk(child)
-
-    _walk(root)
-    return out
-
-
 # --- embedded media (the interleaved-span part walk) -------------------------
 
 def _paragraph_segments(p: ElementTree.Element) -> list:
     """Run-ordered events of one ``text:p``/``text:h``: ``("t",
-    fragment)`` for visible text (the :func:`_paragraph_text` fragment
-    rules) and ``("m", href)`` for each embedded ``draw:image`` — note
-    subtrees dropped, like the text walk."""
+    fragment)`` for visible text (``text:line-break`` as a line
+    break, ``text:tab`` and ``text:s`` as spaces) and ``("m", href)``
+    for each embedded ``draw:image`` — note subtrees dropped (footnote
+    and endnote bodies are not flow text)."""
     segs: list = []
 
     def _walk(el: ElementTree.Element) -> None:

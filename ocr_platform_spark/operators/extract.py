@@ -30,11 +30,19 @@ Scale rationale (100 TB / 10^12 docs):
 * **The decode stage is cheap and narrow** (container header parse); the
   expensive raster exists only *inside* the heavy UDF — the shuffle between
   the stages carries ~200-byte descriptors, never pixels.
-* **Joins**: spans⋈media is a key-to-key shuffle hash join (AQE handles
-  residual skew); the final doc_id re-join is an equi-join on the already
-  grouped side.
+* **Joins**: spans⋈media broadcasts the narrow span-ref side (see
+  :func:`decode_pages`); assembly needs no doc_id re-join (sentinel rows).
 * **All relational glue is stock Catalyst** (window, collect_list, union,
   joins) — predicate pushdown and column pruning reach the parquet scans.
+
+Each decision has one home, shared by every stage here and by the
+real-codec path (:mod:`.extract_real`): :func:`_join_payloads` (the
+span-ref ⋈ payload join and its missing-payload anti-join),
+:func:`_spread` (error-row filter + the page/bucket-key skew
+repartition in front of every heavy stage), :func:`_ocr_rows` (the
+detect + recognize kernel, also run from given boxes),
+:func:`_emit_blocks` (the one ``BLOCK`` emitter) and
+:func:`_block_frame` (the one ``BLOCK`` frame builder).
 
 Per-row reference semantics are inherited from :mod:`ocr_platform_spark.oracle`
 kernels — the heavy UDF is the fused detect+recognize of
@@ -108,67 +116,104 @@ def _decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
 # --- stage 2: heavy OCR (render -> detect -> recognize) ----------------------
 
 
-def _ocr_page(doc_id: str, offset: int, ref: str, kind: str,
-              page_index: int, desc: str, out: dict[str, list]) -> None:
-    page = formats.loads_page(desc)
-    unit_scale = raster.PDF_UNIT_SCALE if kind == "pdf" else 1.0
-    img = raster.render_page(page, unit_scale)
-    ocr_rendered_page(doc_id, offset, ref, page_index, img, out)
-
-
-def ocr_rendered_page(doc_id: str, offset: int, ref: str,
-                      page_index: int, img: np.ndarray,
-                      out: dict[str, list]) -> None:
-    """Detect + recognize one already-rendered grayscale page raster.
-
-    The OCR core shared by the synthetic descriptor path above and the
-    real-codec bucket path (:mod:`..operators.extract_real`), so the two
-    pipelines cannot drift: identical detect-on-raw-page, PrepView crop
-    scaling, strip recognition, unicode strip, length-align truncation.
-    """
-    h_orig, w_orig = img.shape[:2]
-    # detect phase: on the raw rendered page (run_job does NOT preprocess
-    # before detect — ocr_tasks.py:110-111)
-    boxes = kernels.detect_text_boxes(img)
-    if not boxes:
-        return  # empty-page passthrough: zero block rows (orchestrator.py:133-137)
-    # recognize phase: run_ocr_with_boxes (orchestrator.py:139-172)
-    prep = raster.PrepView(img)
-    w_prep, h_prep = prep.size
-    scale_x = w_prep / w_orig if w_orig else 1.0
-    scale_y = h_prep / h_orig if h_orig else 1.0
-    boxes_for_crop = []
-    original_heights = []
-    for (x1, y1, x2, y2) in boxes:
-        boxes_for_crop.append(
-            (int(x1 * scale_x), int(y1 * scale_y), int(x2 * scale_x), int(y2 * scale_y))
-        )
-        original_heights.append(y2 - y1)
-    crops = [prep.crop(b) for b in boxes_for_crop]
-    rec = kernels.predict_batch(crops, original_heights=original_heights)
-    texts = [t.strip() for t, _ in rec]  # postprocess.py:4-6 (unicode strip)
-    n = min(len(boxes), len(rec), len(texts))  # orchestrator.py:158
-    for i in range(n):
-        x1, y1, x2, y2 = boxes[i]  # ORIGINAL coords kept (orchestrator.py:163)
-        out["doc_id"].append(doc_id)
-        out["offset"].append(offset)
-        out["media_ref"].append(ref)
-        out["page_index"].append(page_index)
-        out["block_index"].append(i)
-        out["x1"].append(x1)
-        out["y1"].append(y1)
-        out["x2"].append(x2)
-        out["y2"].append(y2)
-        out["text"].append(texts[i])
-        out["conf"].append(rec[i][1])
-        out["page_width"].append(w_orig)
-        out["page_height"].append(h_orig)
-
+#: the ``BLOCK`` columns, in the row order :func:`_emit_blocks` appends
+_BLOCK_COLS = tuple(f.name for f in BLOCK.fields)
 
 _INT_BLOCK_COLS = [
     "offset", "page_index", "block_index",
     "x1", "y1", "x2", "y2", "page_width", "page_height",
 ]
+
+#: the page-descriptor columns the per-page OCR kernels take, in order
+_PAGE_COLS = ("doc_id", "offset", "media_ref", "media_kind", "page_index",
+              "page_desc")
+
+#: the columns of :func:`detect_boxes_table`, in order
+_BOX_COLS = ("doc_id", "offset", "media_ref", "page_index", "width", "height",
+             "block_index", "x1", "y1", "x2", "y2")
+
+
+def _render(kind: str, desc: str) -> np.ndarray:
+    """Render one page descriptor to its grayscale raster (PDF descriptors
+    are in PDF units, image descriptors in pixels)."""
+    unit_scale = raster.PDF_UNIT_SCALE if kind == "pdf" else 1.0
+    return raster.render_page(formats.loads_page(desc), unit_scale)
+
+
+def _ocr_page(doc_id: str, offset: int, ref: str, kind: str,
+              page_index: int, desc: str, out: dict[str, list]) -> None:
+    ocr_rendered_page(doc_id, offset, ref, page_index, _render(kind, desc), out)
+
+
+def _ocr_rows(img: np.ndarray, boxes: list | None = None,
+             size: tuple[int, int] = (0, 0)) -> list[tuple]:
+    """Detect + recognize one already-rendered grayscale page raster ->
+    ``(x1, y1, x2, y2, text, conf, page_width, page_height)`` rows in
+    detector order, the input of :func:`_emit_blocks`.
+
+    The OCR core shared by every stage that recognizes a raster: the
+    synthetic descriptor path, the two-phase recognize from (possibly
+    edited) ``boxes``, and the real-codec bucket path
+    (:mod:`..operators.extract_real`), so they cannot drift: identical
+    detect-on-raw-page, PrepView crop scaling, strip recognition,
+    length-align truncation. ``boxes`` skips detection; ``size`` is the
+    detect-time ``(width, height)`` the boxes are in, where 0 falls back
+    to the raster's own dimension.
+    """
+    h_img, w_img = img.shape[:2]
+    w_orig = int(size[0]) or w_img
+    h_orig = int(size[1]) or h_img
+    if boxes is None:
+        # detect phase: on the raw rendered page (run_job does NOT
+        # preprocess before detect — ocr_tasks.py:110-111)
+        boxes = kernels.detect_text_boxes(img)
+    if not boxes:
+        return []  # empty-page passthrough: zero block rows (orchestrator.py:133-137)
+    # recognize phase: run_ocr_with_boxes (orchestrator.py:139-172)
+    prep = raster.PrepView(img)
+    w_prep, h_prep = prep.size
+    sx = w_prep / w_orig if w_orig else 1.0
+    sy = h_prep / h_orig if h_orig else 1.0
+    crops = [prep.crop((int(x1 * sx), int(y1 * sy), int(x2 * sx), int(y2 * sy)))
+             for (x1, y1, x2, y2) in boxes]
+    rec = kernels.predict_batch(
+        crops, original_heights=[y2 - y1 for (_x1, y1, _x2, y2) in boxes])
+    # ORIGINAL coords kept (orchestrator.py:163); zip length-aligns (:158)
+    return [(*b, text, conf, w_orig, h_orig)
+            for b, (text, conf) in zip(boxes, rec)]
+
+
+def ocr_rendered_page(doc_id: str, offset: int, ref: str,
+                      page_index: int, img: np.ndarray,
+                      out: dict[str, list]) -> None:
+    """Detect + recognize one already-rendered grayscale page raster
+    (:func:`_ocr_rows`) and emit its blocks into ``out``."""
+    _emit_blocks(out, doc_id, offset, ref, page_index, _ocr_rows(img))
+
+
+def _emit_blocks(out: dict[str, list], doc_id: str, offset: int, ref: str,
+                page_index: int, rows) -> None:
+    """The one ``BLOCK`` emitter: appends ``(x1, y1, x2, y2, text, conf,
+    page_width, page_height)`` rows to ``out`` with the row ordinal as
+    ``block_index`` and the text unicode-stripped (``postprocess.py:4-6``)."""
+    for bi, (x1, y1, x2, y2, text, conf, w, h) in enumerate(rows):
+        for name, v in zip(_BLOCK_COLS, (doc_id, offset, ref, page_index, bi,
+                                         x1, y1, x2, y2, text.strip(), conf,
+                                         w, h)):
+            out[name].append(v)
+
+
+def _block_frame(pdf: pd.DataFrame, cols, page_fn) -> pd.DataFrame:
+    """The one ``BLOCK`` frame builder: ``page_fn(*row, out)`` over the
+    ``cols`` of each input row, then the schema's int32/float64 dtypes."""
+    out: dict[str, list] = {name: [] for name in _BLOCK_COLS}
+    for row in zip(*(pdf[c] for c in cols)):
+        page_fn(*row, out)
+    res = pd.DataFrame(out)
+    for c in _INT_BLOCK_COLS:
+        res[c] = res[c].astype("int32")
+    res["conf"] = res["conf"].astype("float64")
+    return res
 
 
 def _ocr_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -177,17 +222,7 @@ def _ocr_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     vietocr_engine.py:47 — our kernels are stateless numpy, so nothing to
     load; the hook is kept so real weights drop in without a plan change)."""
     for pdf in batches:
-        out: dict[str, list] = {f.name: [] for f in BLOCK.fields}
-        for row in zip(
-            pdf["doc_id"], pdf["offset"], pdf["media_ref"],
-            pdf["media_kind"], pdf["page_index"], pdf["page_desc"],
-        ):
-            _ocr_page(*row, out)
-        res = pd.DataFrame(out)
-        for c in _INT_BLOCK_COLS:
-            res[c] = res[c].astype("int32")
-        res["conf"] = res["conf"].astype("float64")
-        yield res
+        yield _block_frame(pdf, _PAGE_COLS, _ocr_page)
 
 
 # --- relational glue ----------------------------------------------------------
@@ -332,7 +367,7 @@ def decode_pages(
     joined payload rows are only a few MB, so AQE's byte-based coalescing
     would squash them into ~1 partition and serialize the container
     parsing — like the OCR stage, decode cost is per-*row* CPU (zlib +
-    JSON), not bytes (see :func:`ocr_blocks`). An alternative
+    JSON), not bytes (see :func:`_spread`). An alternative
     "pre-partition both sides on media_ref + shuffle-hash join" shape was
     measured WORSE (median 9.5s vs 6.2s at the 8k-doc bench corpus, with
     2-4x straggler outliers): it trades the broadcast for a payload
@@ -345,6 +380,24 @@ def decode_pages(
     offset) frame — pass :func:`shared_exploded_spans` output to share
     one materialization across the pipeline's consumers.
     """
+    n = 2 * documents.sparkSession.sparkContext.defaultParallelism
+    return _join_payloads(
+        documents, media, spans, broadcast_spans,
+        lambda media_spans: media_spans.repartition(n, "doc_id", "offset")
+        .mapInPandas(_decode_batches, schema=PAGE_TASK),
+        page_index=F.lit(-1).cast("int"),
+        page_desc=F.lit("missing media payload"),
+    )
+
+
+def _join_payloads(documents: DataFrame, media: DataFrame,
+                   spans: DataFrame | None, broadcast_spans: bool | None,
+                   stage, **missing_cols) -> DataFrame:
+    """The one span-ref ⋈ payload join (see :func:`decode_pages` for the
+    broadcast policy): ``stage`` maps the joined ``(media_ref, doc_id,
+    offset, data)`` rows to its output rows, and every span whose
+    ``media_ref`` has no payload row becomes one ``media_kind=error`` row
+    with the given ``missing_cols`` literals, unioned by name."""
     if spans is None:
         spans = exploded_spans(documents)
     if broadcast_spans is None:
@@ -356,10 +409,6 @@ def decode_pages(
     )
     build = F.broadcast(span_refs) if broadcast_spans else span_refs
     media_spans = build.join(media.select("media_ref", "data"), "media_ref")
-    n = 2 * documents.sparkSession.sparkContext.defaultParallelism
-    decoded = media_spans.repartition(n, "doc_id", "offset").mapInPandas(
-        _decode_batches, schema=PAGE_TASK
-    )
     # A span whose media_ref has NO payload row must surface as a
     # quarantine row, not vanish: the inner join above would silently drop
     # it (and a left join would force the payload onto the build side,
@@ -373,27 +422,33 @@ def decode_pages(
         "offset",
         "media_ref",
         F.lit(MEDIA_KIND_ERROR).alias("media_kind"),
-        F.lit(-1).cast("int").alias("page_index"),
-        F.lit("missing media payload").alias("page_desc"),
+        *(col.alias(name) for name, col in missing_cols.items()),
     )
-    return decoded.unionByName(missing)
+    return stage(media_spans).unionByName(missing)
+
+
+def _spread(rows: DataFrame, index: str, num_partitions: int | None,
+            udf, schema) -> DataFrame:
+    """The one skew spread in front of a heavy stage: drop the quarantine
+    rows, hash-repartition on ``(doc_id, offset, index)`` into
+    ``num_partitions`` (default 3x cluster parallelism), then run ``udf``.
+
+    The count is explicit: partition cost here is per-*row* CPU, not
+    bytes, and AQE's byte-based coalescing would otherwise squash a
+    shuffle of small rows (~200-byte page descriptors) into one
+    partition and serialize the CPU-bound stage."""
+    if num_partitions is None:
+        num_partitions = 3 * rows.sparkSession.sparkContext.defaultParallelism
+    rows = rows.filter(F.col("media_kind") != MEDIA_KIND_ERROR)
+    rows = rows.repartition(num_partitions, "doc_id", "offset", index)
+    return rows.mapInPandas(udf, schema=schema)
 
 
 def ocr_blocks(pages: DataFrame, num_partitions: int | None = None) -> DataFrame:
-    """Stage 2 over page rows, preceded by the explicit skew-spreading
-    repartition on the page key (SURVEY.md §4: AQE can't split one huge doc;
-    hashing (doc_id, offset, page_index) can).
-
-    The partition count is explicit (defaults to 3x cluster parallelism): the
-    page descriptors are only ~200 bytes, so AQE's byte-based coalescing would
-    otherwise squash this shuffle into one partition and serialize the heavy
-    CPU-bound stage — partition cost here is per-*row* CPU, not bytes.
-    """
-    if num_partitions is None:
-        num_partitions = 3 * pages.sparkSession.sparkContext.defaultParallelism
-    pages = pages.filter(F.col("media_kind") != MEDIA_KIND_ERROR)
-    pages = pages.repartition(num_partitions, "doc_id", "offset", "page_index")
-    return pages.mapInPandas(_ocr_batches, schema=BLOCK)
+    """Stage 2 over page rows, behind the explicit skew-spreading
+    repartition on the page key (:func:`_spread`; SURVEY.md §4: AQE can't
+    split one huge doc, hashing (doc_id, offset, page_index) can)."""
+    return _spread(pages, "page_index", num_partitions, _ocr_batches, BLOCK)
 
 
 def media_errors(pages: DataFrame) -> DataFrame:
@@ -560,58 +615,27 @@ def _ocr_page_fused(doc_id: str, offset: int, ref: str, kind: str,
     crop height only). Detection scans the whole page, so the preprocessed
     raster is materialized eagerly — the lazy ``PrepView`` window trick only
     pays when downstream reads are sparse crops of an un-detected page."""
-    page = formats.loads_page(desc)
-    unit_scale = raster.PDF_UNIT_SCALE if kind == "pdf" else 1.0
-    img = raster.preprocess_image(raster.render_page(page, unit_scale))
+    img = raster.preprocess_image(_render(kind, desc))
     h_prep, w_prep = img.shape[:2]
     boxes = kernels.detect_text_boxes(img)
-    if not boxes:
-        return
-    crops = [raster.crop(img, b) for b in boxes]
-    rec = kernels.predict_batch(crops)  # original_heights=None
-    texts = [t.strip() for t, _ in rec]
-    n = min(len(boxes), len(rec), len(texts))  # orchestrator.py:75
-    for i in range(n):
-        x1, y1, x2, y2 = boxes[i]  # PREPROCESSED coords, verbatim
-        out["doc_id"].append(doc_id)
-        out["offset"].append(offset)
-        out["media_ref"].append(ref)
-        out["page_index"].append(page_index)
-        out["block_index"].append(i)
-        out["x1"].append(x1)
-        out["y1"].append(y1)
-        out["x2"].append(x2)
-        out["y2"].append(y2)
-        out["text"].append(texts[i])
-        out["conf"].append(rec[i][1])
-        out["page_width"].append(w_prep)
-        out["page_height"].append(h_prep)
+    rec = kernels.predict_batch([raster.crop(img, b) for b in boxes])
+    # PREPROCESSED coords, verbatim; zip length-aligns (orchestrator.py:75)
+    _emit_blocks(out, doc_id, offset, ref, page_index,
+                 [(*b, text, conf, w_prep, h_prep)
+                  for b, (text, conf) in zip(boxes, rec)])
 
 
 def _ocr_batches_fused(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     for pdf in batches:
-        out: dict[str, list] = {f.name: [] for f in BLOCK.fields}
-        for row in zip(
-            pdf["doc_id"], pdf["offset"], pdf["media_ref"],
-            pdf["media_kind"], pdf["page_index"], pdf["page_desc"],
-        ):
-            _ocr_page_fused(*row, out)
-        res = pd.DataFrame(out)
-        for c in _INT_BLOCK_COLS:
-            res[c] = res[c].astype("int32")
-        res["conf"] = res["conf"].astype("float64")
-        yield res
+        yield _block_frame(pdf, _PAGE_COLS, _ocr_page_fused)
 
 
 def ocr_blocks_fused(pages: DataFrame, num_partitions: int | None = None) -> DataFrame:
     """Fused-semantics twin of :func:`ocr_blocks`: same skew-spreading page
     repartition, different per-page kernel (one-shot ``run_ocr`` coordinate
     convention — VERDICT round 1 "What's missing" #4)."""
-    if num_partitions is None:
-        num_partitions = 3 * pages.sparkSession.sparkContext.defaultParallelism
-    pages = pages.filter(F.col("media_kind") != MEDIA_KIND_ERROR)
-    pages = pages.repartition(num_partitions, "doc_id", "offset", "page_index")
-    return pages.mapInPandas(_ocr_batches_fused, schema=BLOCK)
+    return _spread(pages, "page_index", num_partitions, _ocr_batches_fused,
+                   BLOCK)
 
 
 def extract_documents_fused(
@@ -636,117 +660,59 @@ def detect_boxes_table(pages: DataFrame, num_partitions: int | None = None) -> D
     """The persisted detect/recognize boundary (FIXTURES.md §3) — the
     ``detect_result`` column analog (``apps/worker/app/db/models.py:26``),
     for workflows that checkpoint detect output before recognition."""
-    pages = pages.filter(F.col("media_kind") != MEDIA_KIND_ERROR)
-    # same default page-key skew spread as ocr_blocks/recognize_with_boxes:
-    # without it the stage inherits decode's (doc_id, offset) partitioning
-    # and one heavy-tail PDF's render+detect serializes on a single task
-    if num_partitions is None:
-        num_partitions = 3 * pages.sparkSession.sparkContext.defaultParallelism
-    pages = pages.repartition(num_partitions, "doc_id", "offset", "page_index")
 
     def _detect(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            out: dict[str, list] = {
-                k: []
-                for k in [
-                    "doc_id", "offset", "media_ref", "page_index", "width",
-                    "height", "block_index", "x1", "y1", "x2", "y2",
-                ]
-            }
+            rows: list[tuple] = []
             for doc_id, offset, ref, kind, page_index, desc in zip(
-                pdf["doc_id"], pdf["offset"], pdf["media_ref"],
-                pdf["media_kind"], pdf["page_index"], pdf["page_desc"],
+                *(pdf[c] for c in _PAGE_COLS)
             ):
-                page = formats.loads_page(desc)
-                scale = raster.PDF_UNIT_SCALE if kind == "pdf" else 1.0
-                img = raster.render_page(page, scale)
-                for i, (x1, y1, x2, y2) in enumerate(kernels.detect_text_boxes(img)):
-                    out["doc_id"].append(doc_id)
-                    out["offset"].append(offset)
-                    out["media_ref"].append(ref)
-                    out["page_index"].append(page_index)
-                    out["width"].append(img.shape[1])
-                    out["height"].append(img.shape[0])
-                    out["block_index"].append(i)
-                    out["x1"].append(x1)
-                    out["y1"].append(y1)
-                    out["x2"].append(x2)
-                    out["y2"].append(y2)
-            res = pd.DataFrame(out)
-            for c in res.columns:
-                if c not in ("doc_id", "media_ref"):
-                    res[c] = res[c].astype("int32")
+                img = _render(kind, desc)
+                h, w = img.shape[:2]
+                rows.extend(
+                    (doc_id, offset, ref, page_index, w, h, i, *box)
+                    for i, box in enumerate(kernels.detect_text_boxes(img))
+                )
+            res = pd.DataFrame(rows, columns=_BOX_COLS)
+            for c in ("offset", *_BOX_COLS[3:]):
+                res[c] = res[c].astype("int32")
             yield res
 
-    # offset is part of the key: the same media_ref may be referenced by
-    # several spans of one document; detect/recognize state is per span
-    return pages.mapInPandas(
-        _detect,
-        schema=(
-            "doc_id string, offset int, media_ref string, page_index int, "
-            "width int, height int, block_index int, x1 int, y1 int, "
-            "x2 int, y2 int"
-        ),
-    )
+    # same page-key skew spread as ocr_blocks/recognize_with_boxes: without
+    # it the stage inherits decode's (doc_id, offset) partitioning and one
+    # heavy-tail PDF's render+detect serializes on a single task. offset is
+    # part of the key: the same media_ref may be referenced by several
+    # spans of one document; detect/recognize state is per span
+    return _spread(pages, "page_index", num_partitions, _detect, schema=(
+        "doc_id string, offset int, media_ref string, page_index int, "
+        "width int, height int, block_index int, x1 int, y1 int, "
+        "x2 int, y2 int"
+    ))
 
 
 # --- two-phase path: recognize from (possibly human-edited) boxes ------------
 
 
+def _recognize_page(doc_id: str, offset: int, ref: str, kind: str,
+                    page_index: int, desc: str, xs1, ys1, xs2, ys2,
+                    width: int, height: int, out: dict[str, list]) -> None:
+    boxes = list(zip(map(int, xs1), map(int, ys1),
+                     map(int, xs2), map(int, ys2)))
+    if not boxes:
+        return  # empty-page passthrough, no render (orchestrator.py:133-137)
+    rows = _ocr_rows(_render(kind, desc), boxes, (width, height))
+    _emit_blocks(out, doc_id, offset, ref, page_index, rows)
+
+
 def _recognize_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     """run_ocr_with_boxes semantics (``orchestrator.py:116-174``): boxes
     arrive in detect_result original-page coordinates; scale to the
-    preprocessed raster for cropping, keep original coords + heights."""
+    preprocessed raster for cropping, keep original coords + heights —
+    the shared kernel :func:`_ocr_rows` run from the given boxes."""
     for pdf in batches:
-        out: dict[str, list] = {f.name: [] for f in BLOCK.fields}
-        for (doc_id, offset, ref, kind, page_index, desc,
-             xs1, ys1, xs2, ys2, w_orig, h_orig) in zip(
-            pdf["doc_id"], pdf["offset"], pdf["media_ref"],
-            pdf["media_kind"], pdf["page_index"], pdf["page_desc"],
-            pdf["xs1"], pdf["ys1"], pdf["xs2"], pdf["ys2"],
-            pdf["width"], pdf["height"],
-        ):
-            boxes = list(zip(map(int, xs1), map(int, ys1),
-                             map(int, xs2), map(int, ys2)))
-            if not boxes:
-                continue  # empty-page passthrough (orchestrator.py:133-137)
-            page = formats.loads_page(desc)
-            unit_scale = raster.PDF_UNIT_SCALE if kind == "pdf" else 1.0
-            img = raster.render_page(page, unit_scale)
-            prep = raster.PrepView(img)
-            w_prep, h_prep = prep.size
-            w_orig = int(w_orig) or img.shape[1]
-            h_orig = int(h_orig) or img.shape[0]
-            sx = w_prep / w_orig if w_orig else 1.0
-            sy = h_prep / h_orig if h_orig else 1.0
-            crops = [
-                prep.crop((int(x1 * sx), int(y1 * sy), int(x2 * sx), int(y2 * sy)))
-                for (x1, y1, x2, y2) in boxes
-            ]
-            heights = [y2 - y1 for (_x1, y1, _x2, y2) in boxes]
-            rec = kernels.predict_batch(crops, original_heights=heights)
-            texts = [t.strip() for t, _ in rec]
-            n = min(len(boxes), len(rec), len(texts))  # orchestrator.py:158
-            for i in range(n):
-                x1, y1, x2, y2 = boxes[i]
-                out["doc_id"].append(doc_id)
-                out["offset"].append(offset)
-                out["media_ref"].append(ref)
-                out["page_index"].append(page_index)
-                out["block_index"].append(i)
-                out["x1"].append(x1)
-                out["y1"].append(y1)
-                out["x2"].append(x2)
-                out["y2"].append(y2)
-                out["text"].append(texts[i])
-                out["conf"].append(rec[i][1])
-                out["page_width"].append(w_orig)
-                out["page_height"].append(h_orig)
-        res = pd.DataFrame(out)
-        for c in _INT_BLOCK_COLS:
-            res[c] = res[c].astype("int32")
-        res["conf"] = res["conf"].astype("float64")
-        yield res
+        yield _block_frame(pdf, _PAGE_COLS + ("xs1", "ys1", "xs2", "ys2",
+                                              "width", "height"),
+                           _recognize_page)
 
 
 def recognize_with_boxes(
@@ -758,10 +724,9 @@ def recognize_with_boxes(
 
     ``boxes``: output shape of :func:`detect_boxes_table` (block_index
     gives the detector/editor emission order; ``width``/``height`` are the
-    detect-time original page dims that the crop scaling must use).
+    detect-time original page dims that the crop scaling must use; 0
+    falls back to the rendered page's own dimension).
     """
-    if num_partitions is None:
-        num_partitions = 3 * pages.sparkSession.sparkContext.defaultParallelism
     per_page = boxes.groupBy("doc_id", "offset", "media_ref", "page_index").agg(
         F.sort_array(
             F.collect_list(F.struct("block_index", "x1", "y1", "x2", "y2"))
@@ -775,12 +740,10 @@ def recognize_with_boxes(
         F.transform("bs", lambda b: b["x2"]).alias("xs2"),
         F.transform("bs", lambda b: b["y2"]).alias("ys2"),
     )
-    joined = (
-        pages.filter(F.col("media_kind") != MEDIA_KIND_ERROR)
-        .join(per_page, ["doc_id", "offset", "media_ref", "page_index"], "inner")
-        .repartition(num_partitions, "doc_id", "offset", "page_index")
-    )
-    return joined.mapInPandas(_recognize_batches, schema=BLOCK)
+    joined = pages.join(
+        per_page, ["doc_id", "offset", "media_ref", "page_index"], "inner")
+    return _spread(joined, "page_index", num_partitions, _recognize_batches,
+                   BLOCK)
 
 
 def extract_documents_two_phase(

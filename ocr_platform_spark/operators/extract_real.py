@@ -10,7 +10,10 @@ explode ships ~200-byte JSON rows, so pixels never cross a shuffle.
 Real media has no descriptor — the OCR task needs the payload bytes —
 so this pipeline uses a different, explicitly skew-bounded shape:
 
-1. **probe** (``mapInPandas`` over spans⋈payloads): the deep
+1. **probe** (``mapInPandas`` over spans⋈payloads, the flagship's one
+   join :func:`..operators.extract._join_payloads` with its
+   missing-payload anti-join; the probe runs in the join's
+   partitioning, no spread of its own): the deep
    :func:`..multimodal.probe_real_media` — header and structure walks
    for PDFs and rasters (xref walk + content-stream interpretation,
    image samples never inflated; images are 1 page), and for the
@@ -20,7 +23,8 @@ so this pipeline uses a different, explicitly skew-bounded shape:
    Unsupported/corrupt payloads (vector PDFs, truncated files,
    synthetic containers) quarantine HERE as ``media_kind=error`` rows —
    before any payload is duplicated.
-2. **repartition** on ``(doc_id, offset, bucket_index)`` — the skew fix:
+2. **repartition** on ``(doc_id, offset, bucket_index)`` — the flagship's
+   one skew spread (:func:`..operators.extract._spread`), the skew fix:
    a 2,000-page scanned PDF becomes ⌈2000/K⌉ independent tasks instead
    of one straggler. Multi-bucket containers are *sliced* at probe time
    (``slice_payloads=True`` default): each bucket row carries a minimal
@@ -36,9 +40,11 @@ so this pipeline uses a different, explicitly skew-bounded shape:
 3. **OCR** (``mapInPandas``): each bucket decodes ONLY its own pages
    through its kind's tier-table entry, and one emitter turns the pages into
    ``BLOCK`` rows. Rasters go through the *shared* OCR core
-   (:func:`..operators.extract.ocr_rendered_page` — detect, PrepView
-   crops, strip recognition, unicode strip), so the real and synthetic
-   paths cannot drift.
+   (:func:`..operators.extract._ocr_rows` — detect, PrepView crops,
+   strip recognition) and every row through the shared emitter and
+   frame builder (:func:`..operators.extract._emit_blocks`, unicode
+   strip; :func:`..operators.extract._block_frame`), so the real and
+   synthetic paths cannot drift.
 4. **assemble**: the same sentinel-based
    :func:`..operators.extract.assemble_spans` re-emits each document's
    interleaved span array.
@@ -49,7 +55,7 @@ multi-bucket payloads at probe time, ``pages`` decodes a bucket's
 pages, each a ``(parts, width, height)`` triple of text blocks and
 grayscale rasters (see :mod:`..tiers`).
 
-**One emitter** (:func:`_emit_page`), one coordinate rule: a page that
+**One page emitter** (:func:`_emit_page`), one coordinate rule: a page that
 is a lone raster OCRs in its own pixel space. Anywhere else, the part
 at ordinal ``i`` emits at ``y1 = i`` — a text part as
 ``(x1=0, y1=i)``, a picture as its OCR blocks at
@@ -77,12 +83,13 @@ from .. import multimodal, transport
 from ..schemas import BLOCK
 from ..tiers import TIERS
 from .extract import (
-    _INT_BLOCK_COLS,
     MEDIA_KIND_ERROR,
-    _span_refs_fit_broadcast,
+    _block_frame,
+    _emit_blocks,
+    _join_payloads,
+    _ocr_rows,
+    _spread,
     assemble_spans,
-    exploded_spans,
-    ocr_rendered_page,
     shared_exploded_spans,
 )
 
@@ -187,41 +194,36 @@ def _bucket_batches_fn(bucket_pages: int | None,
     return _bucket_batches
 
 
-#: the ``BLOCK`` columns :func:`_emit_page` fills, in its row order
-_EMIT_COLS = ("doc_id", "offset", "media_ref", "page_index", "block_index",
-              "x1", "y1", "x2", "y2", "text", "conf", "page_width",
-              "page_height")
-
-
 def _emit_page(doc_id: str, offset: int, ref: str, page_index: int,
                parts: list, page_w: int, page_h: int,
                out: dict[str, list]) -> None:
     """One decoded page -> ``BLOCK`` rows under the module docstring's
-    coordinate rule. Text blocks emit at ``conf=1.0`` (the source text
-    is authoritative — there is no recognition uncertainty to score)
-    under the M11 unicode-strip contract; empty ones drop. A lone raster
+    coordinate rule, through the shared emitter
+    (:func:`..operators.extract._emit_blocks`). Text blocks emit at
+    ``conf=1.0`` (the source text is authoritative — there is no
+    recognition uncertainty to score); empty ones drop. A lone raster
     OCRs in its own pixel space; every other row carries the page's
     ``page_w x page_h``."""
     if len(parts) == 1 and isinstance(parts[0], np.ndarray):
-        ocr_rendered_page(doc_id, offset, ref, page_index, parts[0], out)
+        _emit_blocks(out, doc_id, offset, ref, page_index, _ocr_rows(parts[0]))
         return
     rows: list[tuple] = []
     for i, part in enumerate(parts):
         if isinstance(part, np.ndarray):
-            ocr: dict[str, list] = {f.name: [] for f in BLOCK.fields}
-            ocr_rendered_page(doc_id, offset, ref, page_index, part, ocr)
-            order = sorted(range(len(ocr["text"])), key=lambda k: (
-                ocr["y1"][k], ocr["x1"][k], ocr["block_index"][k]))
-            rows.extend((rank, i, rank + 1, i + 1, ocr["text"][k],
-                         ocr["conf"][k], page_w, page_h)
-                        for rank, k in enumerate(order))
+            ocr = _ocr_rows(part)
+            order = sorted(range(len(ocr)),
+                           key=lambda k: (ocr[k][1], ocr[k][0], k))
+            rows.extend((rank, i, rank + 1, i + 1, ocr[k][4], ocr[k][5],
+                         page_w, page_h) for rank, k in enumerate(order))
         elif part.text.strip():
-            rows.append((part.x1, part.y1, part.x2, part.y2,
-                         part.text.strip(), 1.0, page_w, page_h))
-    for bi, row in enumerate(rows):
-        for name, v in zip(_EMIT_COLS,
-                           (doc_id, offset, ref, page_index, bi, *row)):
-            out[name].append(v)
+            rows.append((part.x1, part.y1, part.x2, part.y2, part.text, 1.0,
+                         page_w, page_h))
+    _emit_blocks(out, doc_id, offset, ref, page_index, rows)
+
+
+#: the bucket columns :func:`_ocr_bucket` takes, in order
+_BUCKET_COLS = ("doc_id", "offset", "media_ref", "media_kind", "page_lo",
+                "page_hi", "sliced", "data")
 
 
 def _ocr_real_batches(
@@ -234,44 +236,39 @@ def _ocr_real_batches(
 
 
 def _ocr_real_frame(pdf: pd.DataFrame) -> pd.DataFrame:
-    out: dict[str, list] = {f.name: [] for f in BLOCK.fields}
-    for doc_id, offset, ref, kind, lo, hi, sliced, data in zip(
-        pdf["doc_id"], pdf["offset"], pdf["media_ref"],
-        pdf["media_kind"], pdf["page_lo"], pdf["page_hi"],
-        pdf["sliced"], pdf["data"]
-    ):
-        if kind == MEDIA_KIND_ERROR:
-            continue
-        # looked up OUTSIDE the try: a probe kind with no tier is a
-        # programming error and must fail loudly, not extract nothing
-        pages = TIERS[kind].pages
-        # Decode inside the try (a decode failure drops the bucket
-        # ATOMICALLY — no partial emission), emission outside it (an
-        # OCR/kernel failure propagates LOUDLY; swallowing it after
-        # some pages' rows were appended would leave a silently
-        # part-extracted document). A sliced payload holds ONLY this
-        # bucket's pages (local indices 0..hi-lo); global numbering
-        # still comes from page_lo below.
-        try:
-            decoded = pages(bytes(data), None if sliced
-                            else list(range(int(lo), int(hi))))
-        except Exception:
-            # residual corruption past the probe: entropy-level only
-            # (JPEG entropy bits carry no checksum; a PDF image
-            # stream body can be broken behind a valid structure).
-            # Degrade to zero OCR blocks for this bucket — the
-            # empty-page-passthrough contract — rather than failing
-            # the job; everything structurally detectable already
-            # quarantined with a triage row at probe time.
-            continue
-        for i, (parts, page_w, page_h) in enumerate(decoded):
-            _emit_page(doc_id, int(offset), ref, int(lo) + i, parts,
-                       page_w, page_h, out)
-    res = pd.DataFrame(out)
-    for c in _INT_BLOCK_COLS:
-        res[c] = res[c].astype("int32")
-    res["conf"] = res["conf"].astype("float64")
-    return res
+    return _block_frame(pdf, _BUCKET_COLS, _ocr_bucket)
+
+
+def _ocr_bucket(doc_id: str, offset: int, ref: str, kind: str, lo: int,
+                hi: int, sliced: bool, data: bytes,
+                out: dict[str, list]) -> None:
+    if kind == MEDIA_KIND_ERROR:
+        return
+    # looked up OUTSIDE the try: a probe kind with no tier is a
+    # programming error and must fail loudly, not extract nothing
+    pages = TIERS[kind].pages
+    # Decode inside the try (a decode failure drops the bucket
+    # ATOMICALLY — no partial emission), emission outside it (an
+    # OCR/kernel failure propagates LOUDLY; swallowing it after
+    # some pages' rows were appended would leave a silently
+    # part-extracted document). A sliced payload holds ONLY this
+    # bucket's pages (local indices 0..hi-lo); global numbering
+    # still comes from page_lo below.
+    try:
+        decoded = pages(bytes(data), None if sliced
+                        else list(range(int(lo), int(hi))))
+    except Exception:
+        # residual corruption past the probe: entropy-level only
+        # (JPEG entropy bits carry no checksum; a PDF image
+        # stream body can be broken behind a valid structure).
+        # Degrade to zero OCR blocks for this bucket — the
+        # empty-page-passthrough contract — rather than failing
+        # the job; everything structurally detectable already
+        # quarantined with a triage row at probe time.
+        return
+    for i, (parts, page_w, page_h) in enumerate(decoded):
+        _emit_page(doc_id, int(offset), ref, int(lo) + i, parts,
+                   page_w, page_h, out)
 
 
 def real_page_buckets(
@@ -284,10 +281,11 @@ def real_page_buckets(
 ) -> DataFrame:
     """Stage 1: spans ⋈ payloads -> validated page-bucket rows.
 
-    The join shape mirrors :func:`..operators.extract.decode_pages` (the
-    narrow span-ref side broadcasts under the same leaf-stats auto mode;
-    payload bytes never move for the join), and a missing-payload
-    anti-join surfaces dangling ``media_ref``s as quarantine rows.
+    The join is :func:`..operators.extract.decode_pages`' own
+    (:func:`..operators.extract._join_payloads`: the narrow span-ref side
+    broadcasts under the same leaf-stats auto mode; payload bytes never
+    move for the join), and its missing-payload anti-join surfaces
+    dangling ``media_ref``s as quarantine rows.
 
     ``spans``: optional pre-exploded frame (pass
     :func:`..operators.extract.shared_exploded_spans` output so the
@@ -301,33 +299,19 @@ def real_page_buckets(
     instead of ⌈pages/K⌉ full-payload copies. Decode equality with the
     unsliced path is test-pinned; False restores full-payload rows.
     """
-    if spans is None:
-        spans = exploded_spans(documents)
-    if broadcast_spans is None:
-        broadcast_spans = _span_refs_fit_broadcast(documents)
-    span_refs = (
-        spans.filter(F.col("kind") != "text")
-        .select("doc_id", "offset", "media_ref")
+    return _join_payloads(
+        documents, media, spans, broadcast_spans,
+        lambda media_spans: media_spans.mapInPandas(
+            _bucket_batches_fn(bucket_pages, slice_payloads),
+            schema=REAL_BUCKET,
+        ),
+        bucket_index=F.lit(-1).cast("int"),
+        page_lo=F.lit(-1).cast("int"),
+        page_hi=F.lit(-1).cast("int"),
+        error=F.lit("missing media payload"),
+        sliced=F.lit(False),
+        data=F.lit(None).cast("binary"),
     )
-    build = F.broadcast(span_refs) if broadcast_spans else span_refs
-    media_spans = build.join(media.select("media_ref", "data"), "media_ref")
-    buckets = media_spans.mapInPandas(
-        _bucket_batches_fn(bucket_pages, slice_payloads),
-        schema=REAL_BUCKET,
-    )
-    missing = span_refs.join(
-        media.select("media_ref"), "media_ref", "left_anti"
-    ).select(
-        "doc_id", "offset", "media_ref",
-        F.lit(MEDIA_KIND_ERROR).alias("media_kind"),
-        F.lit(-1).cast("int").alias("bucket_index"),
-        F.lit(-1).cast("int").alias("page_lo"),
-        F.lit(-1).cast("int").alias("page_hi"),
-        F.lit("missing media payload").alias("error"),
-        F.lit(False).alias("sliced"),
-        F.lit(None).cast("binary").alias("data"),
-    )
-    return buckets.unionByName(missing)
 
 
 def real_media_errors(buckets: DataFrame) -> DataFrame:
@@ -344,13 +328,8 @@ def ocr_real_blocks(
     """Stage 2: bucket rows -> OCR block rows, behind the explicit
     bucket-key repartition (see module docstring item 2). Each bucket
     decodes through its kind's :data:`..tiers.TIERS` entry."""
-    if num_partitions is None:
-        num_partitions = 3 * buckets.sparkSession.sparkContext.defaultParallelism
-    buckets = buckets.filter(F.col("media_kind") != MEDIA_KIND_ERROR)
-    buckets = buckets.repartition(
-        num_partitions, "doc_id", "offset", "bucket_index"
-    )
-    return buckets.mapInPandas(_ocr_real_batches, schema=BLOCK)
+    return _spread(buckets, "bucket_index", num_partitions, _ocr_real_batches,
+                   BLOCK)
 
 
 def extract_real_documents(

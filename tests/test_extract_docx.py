@@ -19,6 +19,7 @@ import pytest
 
 from ocr_platform_spark import corpus, docxtext, multimodal, schemas
 from ocr_platform_spark.operators import extract, extract_real
+from tests.test_extract_office_paged import text_pages
 from tests.test_extract_real import _render_pages, _spans_by_doc
 from tests.test_extract_text_layer import page_ocr_blocks
 
@@ -169,7 +170,7 @@ def test_wordprocessingml_walk_semantics():
     buf = io.BytesIO()
     with zipfile.ZipFile(buf, "w") as zf:
         zf.writestr("word/document.xml", doc)
-    blocks = docxtext.paragraph_blocks(buf.getvalue())
+    blocks = text_pages([docxtext.document_parts(buf.getvalue())])[0]
     assert [b.text for b in blocks] == [
         "run a + run b", "line 1\nline 2\nline 3", "col a col b",
         "cell 1", "cell 2", "kept"]
@@ -181,7 +182,7 @@ def test_encode_decode_round_trip_with_xml_specials():
     span text round-trip exactly."""
     paras = ['a & b', 'if x < 3 > 1', '"quoted" \'tick\'',
              'multi\nline\npara', '&amp; double-escape']
-    got = docxtext.paragraph_blocks(docxtext.encode_docx(paras))
+    got = text_pages([docxtext.document_parts(docxtext.encode_docx(paras))])[0]
     assert [b.text for b in got] == paras
 
 

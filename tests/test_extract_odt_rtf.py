@@ -20,6 +20,7 @@ import pytest
 from ocr_platform_spark import (corpus, formats, multimodal, odttext,
                                 rtftext, schemas)
 from ocr_platform_spark.operators import extract, extract_real
+from tests.test_extract_office_paged import text_pages
 from tests.test_extract_real import _render_pages, _spans_by_doc
 from tests.test_extract_text_layer import page_ocr_blocks
 
@@ -162,7 +163,8 @@ def test_odt_semantics_and_note_drop():
         zf.writestr("mimetype",
                     "application/vnd.oasis.opendocument.text")
         zf.writestr("content.xml", content)
-    texts = [b.text for b in odttext.paragraph_blocks(buf.getvalue())]
+    texts = [b.text for b in
+             text_pages([odttext.document_parts(buf.getvalue())])[0]]
     assert texts == ["before after", "a b   c\nnext", "heading",
                      "item one"]
 

@@ -275,3 +275,52 @@ def test_share_spans_replicated_identical_and_plan(spark, corpus_dir, spark_resu
     ck.count()  # materialize the lazy checkpoint
     ck_plan = ck._jdf.queryExecution().optimizedPlan().toString()
     assert "LogicalRDD" in ck_plan
+
+
+def _node_below(plan: str, udf: str) -> str:
+    """Name and details of the plan node directly below the MapInPandas
+    that runs ``udf``."""
+    import re
+
+    tree = plan.split("\n\n")[0].splitlines()[1:]
+    ids = [re.search(r"\((\d+)\)\s*$", line).group(1) for line in tree]
+    nodes = dict(re.findall(r"^\((\d+)\) (.*?)(?=\n\n|\Z)", plan, re.M | re.S))
+    [mid] = [i for i, body in nodes.items()
+             if body.startswith("MapInPandas") and f"Arguments: {udf}(" in body]
+    return nodes[ids[ids.index(mid) + 1]]
+
+
+def test_heavy_stages_sit_on_the_skew_spread(spark, corpus_dir):
+    """Every heavy stage's MapInPandas runs directly on the explicit hash
+    repartition on (doc_id, offset, page or bucket index), 3x
+    defaultParallelism partitions by default, num_partitions when given."""
+    import re
+
+    from ocr_platform_spark.operators import extract, extract_real
+
+    docs = spark.read.parquet(f"{corpus_dir}/documents.parquet")
+    media = spark.read.parquet(f"{corpus_dir}/media.parquet")
+    pages = extract.decode_pages(docs, media)
+    boxes = extract.detect_boxes_table(pages)
+    buckets = extract_real.real_page_buckets(docs, media)
+    stages = [
+        (lambda n: extract.ocr_blocks(pages, n), "_ocr_batches", "page_index"),
+        (lambda n: extract.ocr_blocks_fused(pages, n), "_ocr_batches_fused",
+         "page_index"),
+        (lambda n: extract.detect_boxes_table(pages, n), "_detect",
+         "page_index"),
+        (lambda n: extract.recognize_with_boxes(pages, boxes, n),
+         "_recognize_batches", "page_index"),
+        (lambda n: extract_real.ocr_real_blocks(buckets, n),
+         "_ocr_real_batches", "bucket_index"),
+    ]
+    default = 3 * spark.sparkContext.defaultParallelism
+    for stage, udf, index in stages:
+        for n, want in ((None, default), (5, 5)):
+            below = _node_below(_plan_of(stage(n)), udf)
+            assert below.startswith("Exchange"), (udf, below)
+            assert re.search(
+                rf"Arguments: hashpartitioning\(doc_id#\d+, offset#\d+, "
+                rf"{index}#\d+, {want}\), REPARTITION_BY_NUM", below
+            ), (udf, n, below)
+    assert extract.ocr_blocks(pages, 5).rdd.getNumPartitions() == 5

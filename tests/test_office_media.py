@@ -19,6 +19,7 @@ from ocr_platform_spark import (docxtext, gifcodec, multimodal, odttext,
 from ocr_platform_spark.formats import Band, PageDesc
 from ocr_platform_spark.operators.extract_real import extract_real_documents
 
+from tests.test_extract_office_paged import text_pages
 from tests.test_extract_real import _spans_by_doc
 
 
@@ -66,7 +67,7 @@ def test_docx_text_only_parts_match_paragraph_blocks():
     assert [(p[0], p[2]) for p in parts] == [
         ("text", "alpha"), ("text", "multi\nline"), ("text", "omega")
     ]
-    assert [b.text for b in docxtext.paragraph_blocks(docx)] == \
+    assert [b.text for b in text_pages([docxtext.document_parts(docx)])[0]] == \
         [p[2] for p in parts]
 
 

@@ -39,14 +39,14 @@ _blocks = st.lists(_block, min_size=1, max_size=6)
 @given(_blocks)
 @settings(max_examples=150, deadline=None)
 def test_docx_round_trip(paras):
-    got = docxtext.paragraph_blocks(docxtext.encode_docx(paras))
+    got = text_pages([docxtext.document_parts(docxtext.encode_docx(paras))])[0]
     assert [b.text for b in got] == paras
 
 
 @given(_blocks)
 @settings(max_examples=150, deadline=None)
 def test_odt_round_trip(paras):
-    got = odttext.paragraph_blocks(odttext.encode_odt(paras))
+    got = text_pages([odttext.document_parts(odttext.encode_odt(paras))])[0]
     assert [b.text for b in got] == paras
 
 

@@ -126,3 +126,22 @@ def test_recognize_from_edited_boxes_matches_oracle(spark):
         boxes.filter(is_target).orderBy("block_index").collect()
     )
     assert got[0][2] == orig_page0[0]["x1"] + 4
+
+
+def test_zero_page_size_falls_back_to_the_rendered_raster(spark):
+    """A boxes table whose width/height are 0 (an editor that does not
+    record the detect-time page size) recognizes exactly like the
+    unedited table: the crop scaling falls back to the rendered page's
+    own dimensions, and the blocks report them as the page size."""
+    _docs, _media, docs_df, media_df = _dfs(spark, n=6, seed=41, max_pages=3)
+    pages = extract.decode_pages(docs_df, media_df).localCheckpoint()
+    boxes = extract.detect_boxes_table(pages).localCheckpoint()
+    zeroed = boxes.withColumn("width", F.lit(0)).withColumn("height", F.lit(0))
+    order = ["doc_id", "offset", "page_index", "block_index"]
+
+    def blocks(table):
+        return extract.recognize_with_boxes(pages, table).orderBy(order).collect()
+
+    want = blocks(boxes)
+    assert want, "fixture has no boxes; pick another seed"
+    assert blocks(zeroed) == want
