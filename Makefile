@@ -5,8 +5,9 @@ SF_DIR ?= /root/testdata/sf0.01
 
 .PHONY: test correctness-local bench
 
+# The tier-1 gate, verbatim from ROADMAP.md.
 test:
-	python -m pytest tests/ -x -q
+	export SPARK_GRAFT_CPUS="$$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-local; timeout -k 10 2670 python -m pytest tests/ -q --continue-on-collection-errors -p no:cacheprovider
 
 # The HEAD ritual (VERDICT r4 #4): regenerate the full-registry local
 # oracle artifact as the round's FINAL commit, so its green claim is

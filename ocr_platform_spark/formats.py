@@ -62,12 +62,12 @@ def sniff_kind(raw: bytes) -> str:
     gif | bmp | zip | rtf | html | wav | avi | unknown`` —
     ``pdf``/``png``/``jpeg``/``tiff``/``gif``/``bmp``
     are REAL codecs
-    handled by the optional
-    :func:`ocr_platform_spark.multimodal.decode_real_media` seam;
+    decoded through the real-codec tier table
+    (:data:`ocr_platform_spark.tiers.TIERS`);
     ``html`` extracts via the DOM tier
     (:mod:`ocr_platform_spark.htmltext`); ``zip`` is refined by
     :func:`ocr_platform_spark.multimodal.probe_real_media` into
-    ``docx`` (:mod:`ocr_platform_spark.docxtext`) or quarantined.
+    ``docx``, ``pptx``, ``xlsx``, ``epub`` or ``odt``, or quarantined.
     Plain text has no magic, so it is NOT named here — it is the
     probe's final fallback tier
     (:mod:`ocr_platform_spark.plaintext`)."""
@@ -165,24 +165,13 @@ def decode_media(raw: bytes) -> tuple[str, list[PageDesc]]:
         kind = "image"
     else:
         sniffed = sniff_kind(raw)
-        if sniffed in ("pdf", "png", "jpeg", "tiff", "gif", "bmp"):
-            raise ValueError(
-                f"real-codec payload ({sniffed}): decode with "
-                "ocr_platform_spark.multimodal.decode_real_media "
-                "(requires the optional PIL / pypdfium2 libraries)"
-            )
-        if sniffed == "html":
-            raise ValueError(
-                "HTML payload: reflowable text has no page rasters — "
-                "extract with ocr_platform_spark.htmltext"
-            )
-        if sniffed in ("wav", "avi"):
-            raise ValueError(
-                f"{sniffed} payload: audio/video has no page rasters — "
-                "use ocr_platform_spark.multimodal.audio_features / "
-                "video_frame_features"
-            )
-        raise ValueError(f"unknown media magic {magic!r}")
+        if sniffed == "unknown":
+            raise ValueError(f"unknown media magic {magic!r}")
+        raise ValueError(
+            f"real-codec payload ({sniffed}): extract with "
+            "ocr_platform_spark.operators.extract_real."
+            "extract_real_documents"
+        )
     doc = json.loads(zlib.decompress(body).decode("utf-8"))
     pages = [
         PageDesc(

@@ -5,7 +5,7 @@ web (after JPEG/PNG) — scanned forms, diagrams, and one-frame "images
 of text" all ship as palettized GIFs. The reference decodes them
 through PIL's ``Image.open`` like any other image
 (``apps/worker/app/tasks/ocr_tasks.py:54-55``); this module gives
-:func:`multimodal.decode_real_media` a dependency-free GIF branch with
+:data:`tiers.TIERS` a dependency-free GIF branch with
 the same ValueError quarantine contract as :mod:`pngcodec` /
 :mod:`jpegcodec` / :mod:`tiffcodec`.
 

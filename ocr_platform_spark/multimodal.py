@@ -9,13 +9,11 @@ and tested here, while the codec itself is swappable:
 
 * for the engine's own SPDF1/SIMG1 containers the decode is real
   (:mod:`ocr_platform_spark.formats`);
-* for real-world codecs the decode step sits behind
-  :func:`decode_real_media`: PIL/pypdfium2 when importable, pure-stdlib
-  fallbacks otherwise — PNG (:mod:`ocr_platform_spark.pngcodec`),
-  baseline JPEG (:mod:`ocr_platform_spark.jpegcodec`) and scanned
-  image-only PDF (:mod:`ocr_platform_spark.pdfcodec`, 150-DPI page
-  rasters); vector/1.5+ PDFs raise ``ValueError`` without pypdfium2 —
-  the Spark-side contract is unchanged either way.
+* for real-world codecs, :func:`probe_real_media` names the kind and
+  the pure-stdlib codecs behind the real-codec tier table
+  (:data:`ocr_platform_spark.tiers.TIERS`) are the only decoder; the
+  extraction pipeline is
+  :func:`ocr_platform_spark.operators.extract_real.extract_real_documents`.
 
 Scale notes: every operator is a narrow map over binary batches — no
 shuffle; Arrow transfers the bytes zero-copy into pandas. Batch size is
@@ -34,16 +32,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from . import formats
-
-# optional real-codec imports, gated (not available in this environment)
-try:  # pragma: no cover
-    from PIL import Image as _PILImage  # type: ignore
-except ImportError:  # pragma: no cover
-    _PILImage = None
-try:  # pragma: no cover
-    import pypdfium2 as _pdfium  # type: ignore
-except ImportError:  # pragma: no cover
-    _pdfium = None
 
 PAYLOAD_STATS_SCHEMA = "doc_id bigint, n_bytes bigint, digest string"
 MEDIA_META_SCHEMA = (
@@ -67,117 +55,6 @@ def _fxp6(v: float) -> int:
     import math
 
     return int(math.floor(v * 1_000_000 + 0.5))
-
-
-def decode_real_media(raw: bytes) -> tuple[str, list[np.ndarray]]:
-    """Decode a REAL-codec payload to rasters: ``(kind, [HxWx3 uint8])``.
-
-    The optional codec seam (import-gated; PNG, baseline JPEG and scanned
-    image-only PDF also decode WITHOUT PIL/pypdfium2 via the stdlib
-    codecs, so tests/test_real_codecs.py + test_pdfcodec.py run those
-    everywhere and only skip the PIL/pdfium-parity legs where the libs
-    are absent). Mirrors the reference's ``_raw_to_pages``
-    (``apps/worker/app/tasks/ocr_tasks.py:34-55``): PDF pages render at
-    ``RENDER_DPI`` (150), images decode at native size via
-    ``convert("RGB")``. Dispatch is on magic bytes
-    (:func:`ocr_platform_spark.formats.sniff_kind`); synthetic SPDF1/SIMG1
-    containers should go through :func:`formats.decode_media` instead.
-    """
-    import io
-
-    from . import transport
-
-    # compressed transport wrappers inflate transparently (bomb-capped,
-    # strict — corruption quarantines), then dispatch on the inner magic
-    raw = transport.maybe_unwrap(raw)
-    kind = formats.sniff_kind(raw)
-    if kind in ("spdf", "simg"):
-        raise ValueError(
-            "synthetic container: decode with formats.decode_media"
-        )
-    if kind == "pdf":
-        if _pdfium is None:
-            # pure-stdlib scanned-PDF fallback (classic + 1.5 xref
-            # streams, image-only pages; Flate/DCT/CCITT-G4 XObjects
-            # through the stdlib codecs). Vector PDFs raise ValueError
-            # -> quarantine.
-            from . import pdfcodec
-
-            return "pdf", pdfcodec.decode_pdf(raw)
-        doc = _pdfium.PdfDocument(io.BytesIO(raw))
-        scale = formats.RENDER_DPI / formats.PDF_POINT_DPI  # dpi=150
-        pages = []
-        for page in doc:
-            # rev_byteorder: pdfium's native pixel order is BGR(A); request
-            # the reversed byte order so the numpy view is true RGB like the
-            # PIL branch's convert("RGB") — without it a red region decodes
-            # as blue on the PDF path only.
-            bitmap = page.render(scale=scale, rev_byteorder=True)
-            arr = bitmap.to_numpy()
-            if arr.ndim == 2:  # grayscale -> RGB
-                arr = np.stack([arr] * 3, axis=-1)
-            pages.append(np.ascontiguousarray(arr[:, :, :3]))
-        return "pdf", pages
-    if kind in ("png", "jpeg", "bmp"):
-        if _PILImage is None:
-            # pure-stdlib fallbacks: GENUINE PNG (zlib + struct, VERDICT
-            # r2 #3), baseline+progressive JPEG (VERDICT r3 #2) and BMP
-            # decode everywhere, so the real-codec seam has live
-            # in-sandbox test coverage. Same convert("RGB") semantics
-            # (ocr_tasks.py:54-55).
-            if kind == "png":
-                from . import pngcodec
-
-                return "image", [pngcodec.decode_png(raw)]
-            if kind == "bmp":
-                from . import bmpcodec
-
-                return "image", [bmpcodec.decode_bmp(raw)]
-            from . import jpegcodec
-
-            return "image", [jpegcodec.decode_jpeg(raw)]
-        img = _PILImage.open(io.BytesIO(raw)).convert("RGB")
-        return "image", [np.asarray(img, dtype=np.uint8)]
-    if kind == "tiff":
-        if _PILImage is None:
-            # pure-stdlib fallback: multi-page bilevel/gray/RGB TIFF,
-            # CCITT G4 + uncompressed — the classic fax/book-scan input
-            from . import tiffcodec
-
-            return "tiff", tiffcodec.decode_tiff(raw)
-        img = _PILImage.open(io.BytesIO(raw))
-        pages = []
-        for i in range(getattr(img, "n_frames", 1)):
-            img.seek(i)
-            pages.append(np.asarray(img.convert("RGB"), dtype=np.uint8))
-        return "tiff", pages
-    if kind == "gif":
-        # pure-stdlib path first: gifcodec enforces the full-screen /
-        # no-transparency page contract that makes multi-frame GIFs
-        # decodable as independent pages; PIL would silently composite
-        from . import gifcodec
-
-        return "gif", gifcodec.decode_gif(raw)
-    if kind == "html":
-        raise ValueError(
-            "HTML payload: reflowable text has no raster form — the "
-            "pipeline extracts it via ocr_platform_spark.htmltext "
-            "(operators/extract_real dispatches on kind='html')"
-        )
-    if kind in ("zip", "rtf"):
-        raise ValueError(
-            "zip-office/RTF payload: reflowable text has no raster "
-            "form — the pipeline extracts it via ocr_platform_spark."
-            "docxtext/pptxtext/xlsxtext/epubtext/odttext/rtftext "
-            "(operators/extract_real dispatches on the probe-refined "
-            "kind)"
-        )
-    if kind in ("wav", "avi"):
-        raise ValueError(
-            f"{kind}: audio/video payloads have no OCR raster pages — "
-            "route to multimodal.audio_features / video_frame_features"
-        )
-    raise ValueError(f"unknown media magic {raw[:5]!r}")
 
 
 # --- payload stats (binary column round-trip, oracle-checkable) --------------

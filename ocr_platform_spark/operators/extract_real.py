@@ -126,7 +126,6 @@ def _bucket_batches_fn(bucket_pages: int | None,
             for doc_id, offset, ref, data in zip(
                 pdf["doc_id"], pdf["offset"], pdf["media_ref"], pdf["data"]
             ):
-                raw = bytes(data)
                 try:
                     # compressed transport wrappers (.html.gz /
                     # .txt.bz2 / .xml.xz) inflate ONCE here, before
@@ -134,8 +133,10 @@ def _bucket_batches_fn(bucket_pages: int | None,
                     # (per-page slices, hybrid dispatch, tier
                     # extraction) sees the inner document; corruption /
                     # bombs / over-nesting quarantine like any other
-                    # probe failure (..transport module docstring)
-                    raw = transport.maybe_unwrap(raw)
+                    # probe failure (..transport module docstring).
+                    # bytes() sits inside the try so a NULL payload
+                    # quarantines instead of failing the stage.
+                    raw = transport.maybe_unwrap(bytes(data))
                     kind, n_pages, _w, _h = multimodal.probe_real_media(
                         raw, deep=True)
                 except Exception as exc:

@@ -1,13 +1,12 @@
 """Pure-stdlib scanned-PDF rasterizer: PDF bytes -> 150-DPI RGB page rasters.
 
-Closes the last real-codec gap of :func:`ocr_platform_spark.multimodal.
-decode_real_media` for the reference's dominant input class — *scanned*
-documents, i.e. PDFs whose pages are full-page raster images (the
-reference renders every PDF page to a 150-DPI pixmap with PyMuPDF,
-``apps/worker/app/tasks/ocr_tasks.py:39-52``; our import-gated fast path
-uses pypdfium2). Like :mod:`pngcodec` / :mod:`jpegcodec`, this fallback
-is dependency-free (``zlib`` + ``struct`` + numpy) so the seam has live
-in-sandbox test coverage instead of an env-gated skip.
+Closes the last real-codec gap of the tier table
+(:data:`ocr_platform_spark.tiers.TIERS`) for the reference's dominant
+input class — *scanned* documents, i.e. PDFs whose pages are full-page
+raster images (the reference renders every PDF page to a 150-DPI pixmap
+with PyMuPDF, ``apps/worker/app/tasks/ocr_tasks.py:39-52``). Like
+:mod:`pngcodec` / :mod:`jpegcodec`, this decoder is dependency-free
+(``zlib`` + ``struct`` + numpy), so it runs and is tested everywhere.
 
 Supported subset — chosen to cover what scanners/printers actually emit,
 with a hard ``ValueError`` on everything else (never a silent blank or

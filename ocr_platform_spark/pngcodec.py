@@ -1,7 +1,7 @@
 """Minimal pure-stdlib PNG codec (zlib + struct, RFC 2083 subset).
 
-Exists so the real-codec seam (:func:`ocr_platform_spark.multimodal.
-decode_real_media`) can exercise a GENUINE non-synthetic payload in
+Exists so the real-codec tier table (:data:`ocr_platform_spark.tiers.
+TIERS`) can exercise a GENUINE non-synthetic payload in
 environments without PIL (VERDICT r2 next-round #3): the decoder covers
 1/2/4/8-bit depths of color types 0 (gray) and 3 (palette) plus 8-bit
 types 2 (RGB), 4 (gray+alpha) and 6 (RGBA), with all five scanline
@@ -14,9 +14,8 @@ semantics match the reference decode path
 channel without compositing), gray replicates across 3 bands, sub-byte
 gray scales by 255/(2^depth - 1) exactly as PIL expands it.
 
-This is a correctness seam, not a throughput path: unfiltering runs
-byte-at-a-time Python — real corpora should decode via PIL inside the
-Arrow-batched UDFs. The encoder (color type 2, filter 0) exists for
+This is a correctness codec, not a throughput path: unfiltering runs
+byte-at-a-time Python. The encoder (color type 2, filter 0) exists for
 round-trip tests and deterministic fixture payloads.
 """
 

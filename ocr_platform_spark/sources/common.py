@@ -17,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-__all__ = ["list_files", "parts_frame_to_corpus"]
+__all__ = ["list_files", "parts_columns", "parts_frame_to_corpus"]
 
 
 def list_files(spark: SparkSession, paths: str, glob: str,
@@ -38,6 +38,22 @@ def list_files(spark: SparkSession, paths: str, glob: str,
     if path_regex is not None:
         listing = listing.filter(F.col("path").rlike(path_regex))
     return listing.repartition(max(listing.count(), 1))
+
+
+def parts_columns(parts: list[tuple]) -> dict[str, list]:
+    """Walked parts -> the parallel span arrays, one slot per part.
+    Both walk tuple shapes carry the text LAST (``("text", pos, text)``)
+    and the media fields in the last three slots (``("media", [pos,]
+    ctype, name, payload)``); a text slot's media fields and a media
+    slot's text are ``None``."""
+    cols: dict[str, list] = {
+        c: [] for c in ("kinds", "texts", "ctypes", "fnames", "payloads")}
+    for part in parts:
+        slots = (("text", part[-1], None, None, None) if part[0] == "text"
+                 else ("media", None, *part[-3:]))
+        for col, value in zip(cols.values(), slots):
+            col.append(value)
+    return cols
 
 
 def parts_frame_to_corpus(

@@ -58,7 +58,7 @@ from pyspark.sql.types import (BinaryType, IntegerType, StringType,
                                StructField, StructType)
 
 from .. import emltext
-from .common import list_files, parts_frame_to_corpus
+from .common import list_files, parts_columns, parts_frame_to_corpus
 from .warc import _open_path
 
 __all__ = [
@@ -248,25 +248,8 @@ def _parts_batches(frames: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
                 except ValueError as exc:
                     row["error"] = f"message quarantined: {exc}"
                 else:
-                    row["doc_id"] = _doc_id(file_, int(idx), mid)
-                    kinds, texts, ctypes, fnames, payloads = \
-                        [], [], [], [], []
-                    for p in parts:
-                        if p[0] == "text":
-                            kinds.append("text")
-                            texts.append(p[2])
-                            ctypes.append(None)
-                            fnames.append(None)
-                            payloads.append(None)
-                        else:
-                            _k, ctype, fname, payload = p
-                            kinds.append("media")
-                            texts.append(None)
-                            ctypes.append(ctype)
-                            fnames.append(fname)
-                            payloads.append(payload)
-                    row.update(kinds=kinds, texts=texts, ctypes=ctypes,
-                               fnames=fnames, payloads=payloads)
+                    row.update(doc_id=_doc_id(file_, int(idx), mid),
+                               **parts_columns(parts))
             out.append(row)
         yield pd.DataFrame(out, columns=cols)
 

@@ -5,23 +5,22 @@ A SharePoint/file-share/e-discovery dump is a tree of ``.docx`` /
 ``.odt`` / ``.pptx`` / ``.xlsx`` / ``.rtf`` files, often alongside
 maildir-style ``.eml`` message files. This source turns it into the engine's
 interleaved ``documents`` + ``media`` input shape (BASELINE.json
-``input_hint``) with TRUE interleaving via the office part walks
-(:func:`ocr_platform_spark.docxtext.document_parts`,
-:func:`ocr_platform_spark.odttext.document_parts`,
-:func:`ocr_platform_spark.pptxtext.slide_parts`): each paragraph
+``input_hint``) with TRUE interleaving via the part walks of the
+real-codec tier table (:data:`ocr_platform_spark.tiers.TIERS`), picked
+by the same shallow probe the metadata pass runs: each paragraph
 becomes a ``kind="text"`` span and each embedded picture a
 ``kind="media"`` span IN DOCUMENT ORDER — a scanned page pasted between
 two paragraphs is OCR-extracted between those paragraphs' spans by the
 real-codec pipeline, exactly like an mbox attachment
 (:mod:`ocr_platform_spark.sources.mbox`, whose composition shape this
-reuses via :func:`.common.parts_frame_to_corpus`).
+reuses via :func:`.common.parts_columns` and
+:func:`.common.parts_frame_to_corpus`).
 
 Note the relationship to the EXTRACTION path: a docx that is itself a
-media span of some document extracts in place through its entry in the
-real-codec tier table (:data:`ocr_platform_spark.tiers.TIERS`). This
-SOURCE is for
-corpora where the office files ARE the documents — it hoists the part
-walk to ingestion so the embedded pictures become first-class media
+media span of some document extracts in place through the same
+tier-table entry. This SOURCE is for corpora where the office files
+ARE the documents — it hoists the part walk to ingestion so the
+embedded pictures become first-class media
 spans (probe-able, quarantine-able, resumable per span) instead of
 in-task decodes, and unsupported embedded formats (EMF/WMF) surface as
 media spans that quarantine with triage rows downstream instead of
@@ -44,7 +43,9 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .common import list_files, parts_frame_to_corpus
+from ..multimodal import probe_real_media
+from ..tiers import TIERS
+from .common import list_files, parts_columns, parts_frame_to_corpus
 from .warc import _open_path
 
 __all__ = [
@@ -71,47 +72,18 @@ def _doc_id(path: str) -> str:
 
 
 def _file_parts(raw: bytes) -> list[tuple]:
-    """Dispatch one document payload to its part walk -> the
-    e-mail-tier part shape (``("text", pos, text)`` / ``("media",
-    ctype, member, payload)``). PPTX slides and XLSX sheets flatten in
-    page order (pages matter only for the in-pipeline paged path; at
-    the source level the file is one document). ``.rtf`` files take
-    the strict RTF walk and ``.eml`` files (maildir-style one-message-
-    per-file dumps) the strict MIME walk."""
-    from .. import (docxtext, emltext, formats, multimodal, odttext,
-                    plaintext, pptxtext, rtftext, xlsxtext)
-
-    def _flatten(pages: "list[list[tuple]]") -> list[tuple]:
-        flat: list[tuple] = []
-        for page in pages:
-            for p in page:
-                if p[0] == "text":
-                    flat.append(("text", len(flat), p[2]))
-                else:  # ("media", ordinal, ctype, member, payload)
-                    flat.append(("media", p[2], p[3], p[4]))
-        return flat
-
-    sniffed = formats.sniff_kind(raw)
-    if sniffed == "rtf":
-        return rtftext.document_parts(raw)
-    if sniffed != "zip":
-        # maildir shape: a bare RFC-5322 message file
-        text = plaintext.decode_text(raw)
-        if emltext.sniff_eml(text):
-            return emltext.eml_parts(text)
-        raise ValueError(
-            "not an office container, RTF, or e-mail message"
-        )
-    kind, _n, _w, _h = multimodal.probe_real_media(raw, deep=False)
-    if kind == "docx":
-        return docxtext.document_parts(raw)
-    if kind == "odt":
-        return odttext.document_parts(raw)
-    if kind == "pptx":
-        return _flatten(pptxtext.slide_parts(raw))
-    if kind == "xlsx":
-        return _flatten(xlsxtext.sheet_parts(raw))
-    raise ValueError(f"unsupported office kind {kind!r}")
+    """One file payload -> its parts in document order, through the
+    same dispatch the extraction path uses: the shallow probe names the
+    kind and the kind's part walk in the real-codec tier table
+    (:data:`..tiers.TIERS`) parses it. Pages (PPTX slides, XLSX sheets,
+    EPUB chapters, mbox messages) flatten in page order: at the source
+    level the file is one document. A kind without a part walk raises
+    ``ValueError`` (a quarantine row)."""
+    kind = probe_real_media(raw, deep=False)[0]
+    tier = TIERS.get(kind)
+    if tier is None or tier.walk is None:
+        raise ValueError(f"{kind!r} payload has no part walk")
+    return [part for page in tier.walk(raw, None) for part in page]
 
 
 def _office_batches(frames: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -135,23 +107,7 @@ def _office_batches(frames: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
                 row["error"] = f"quarantined: {exc}"
                 out.append(row)
                 continue
-            kinds, texts, ctypes, fnames, payloads = [], [], [], [], []
-            for p in parts:
-                if p[0] == "text":
-                    kinds.append("text")
-                    texts.append(p[2])
-                    ctypes.append(None)
-                    fnames.append(None)
-                    payloads.append(None)
-                else:
-                    _k, ctype, fname, payload = p
-                    kinds.append("media")
-                    texts.append(None)
-                    ctypes.append(ctype)
-                    fnames.append(fname)
-                    payloads.append(payload)
-            row.update(doc_id=_doc_id(path), kinds=kinds, texts=texts,
-                       ctypes=ctypes, fnames=fnames, payloads=payloads)
+            row.update(doc_id=_doc_id(path), **parts_columns(parts))
             out.append(row)
         yield pd.DataFrame(out, columns=cols)
 

@@ -4,8 +4,8 @@ TIFF with CCITT Group 4 compression is the classic OCR input format —
 fax archives, book scans, records digitization all ship multi-page
 bitonal G4 TIFFs (the reference decodes them through PIL's ``Image.open``
 like any other image, ``apps/worker/app/tasks/ocr_tasks.py:54-55``).
-This module gives :func:`multimodal.decode_real_media` a dependency-free
-TIFF branch the way :mod:`pngcodec` / :mod:`jpegcodec` / :mod:`pdfcodec`
+This module gives the real-codec tier table (:data:`tiers.TIERS`) a
+dependency-free TIFF branch the way :mod:`pngcodec` / :mod:`jpegcodec` / :mod:`pdfcodec`
 cover their formats, with the same ValueError quarantine contract.
 
 Supported subset (scanner output; anything else raises — never a silent

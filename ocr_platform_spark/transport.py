@@ -12,10 +12,10 @@ as ``unknown media magic``.
 This module is the transparent unwrap seam: a payload whose magic
 names a stdlib-decodable compression format inflates (bomb-capped,
 strict) and the INNER bytes re-enter the probe ladder as if they had
-arrived bare. The unwrap happens once per payload at the three seam
-call sites (:func:`..multimodal.probe_real_media` with ``deep=True``,
-:func:`..multimodal.decode_real_media`, and the bucket-explode stage
-in :mod:`..operators.extract_real`), so every downstream feature —
+arrived bare. The unwrap happens once per payload at the two seam
+call sites (:func:`..multimodal.probe_real_media` with ``deep=True``
+and the bucket-explode stage in :mod:`..operators.extract_real`), so
+every downstream feature —
 per-page bucket slicing, text-layer hybrid dispatch, tier extraction,
 quarantine triage — works identically on wrapped and bare payloads.
 

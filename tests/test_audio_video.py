@@ -197,8 +197,6 @@ def test_probe_shallow_reports_deep_refuses():
         multimodal.probe_real_media(wav, deep=True)
     with pytest.raises(ValueError, match="no text tier"):
         multimodal.probe_real_media(avi, deep=True)
-    with pytest.raises(ValueError, match="audio/video"):
-        multimodal.decode_real_media(wav)
 
 
 def test_extraction_quarantines_audio_payload(spark):

@@ -1,8 +1,8 @@
 """Cross-format mutation fuzz at THE dispatch seam.
 
 Every wild payload enters the real-codec path through
-``formats.sniff_kind`` -> ``multimodal.probe_real_media`` ->
-``multimodal.decode_real_media``.  The distributed pipeline
+``formats.sniff_kind`` -> ``multimodal.probe_real_media`` -> its tier
+in ``tiers.TIERS``, the only real-codec decoder.  The distributed pipeline
 (``operators/extract_real.py``) quarantines on ``ValueError`` — any
 other exception escaping the seam fails executors instead of
 quarantining the document, and at corpus scale a single such payload
@@ -14,12 +14,14 @@ zero-fill spans and garbage extension, asserting the contract at the
 exact call sites the pipeline uses:
 
 * ``sniff_kind`` never raises (it returns ``"unknown"`` at worst);
-* ``probe_real_media(deep=True)``, ``decode_real_media`` and the tier
-  table's slicer either succeed or raise ``ValueError`` — never any
-  other exception type;
+* ``probe_real_media(deep=True)`` and the tier table's slicer either
+  succeed or raise ``ValueError`` — never any other exception type;
 * probe/extract symmetry: a mutant the deep probe admits decodes
   through its tier's ``pages`` (full payload and sliced bucket)
-  without raising, for every non-raster kind.
+  without raising. A raster kind (PDF, image, TIFF, GIF) may instead
+  raise ``ValueError``, never another type: entropy-level corruption
+  (JPEG/LZW/Flate sample bits) carries no checksum a structural probe
+  could verify.
 
 Mutants are deterministic (seeded rng), so a contract break replays.
 """
@@ -216,12 +218,9 @@ def test_dispatch_seam_mutation_fuzz(kind):
     else:
         probed = multimodal.probe_real_media(raw, deep=True)
         assert probed[0] == probe_kind and probed[1] >= 1
-    if base not in ("html", "docx", "pptx", "xlsx", "epub", "odt",
-                    "rtf", "txt", "md", "csv", "tex", "sub", "eml",
-                    "mbox", "xml", "json", "wav", "avi"):
-        # reflowable text has no raster decode by design
-        got_kind, pages = multimodal.decode_real_media(raw)
-        assert len(pages) >= 1, got_kind
+        pages = tiers.TIERS[probe_kind].pages(
+            transport.maybe_unwrap(raw), list(range(probed[1])))
+        assert len(pages) == probed[1], probe_kind
 
     # zlib.crc32 is a stable seed; hash() is salted per-process and
     # would make mutants unreproducible
@@ -236,13 +235,6 @@ def test_dispatch_seam_mutation_fuzz(kind):
             pass
         except Exception as e:  # noqa: BLE001 - the contract under test
             pytest.fail(f"{kind} {label}: probe raised {type(e).__name__}: "
-                        f"{e}")
-        try:
-            multimodal.decode_real_media(mut)
-        except ValueError:
-            pass
-        except Exception as e:  # noqa: BLE001 - the contract under test
-            pytest.fail(f"{kind} {label}: decode raised {type(e).__name__}: "
                         f"{e}")
         if not probe_ok:
             continue
@@ -265,11 +257,10 @@ def test_dispatch_seam_mutation_fuzz(kind):
             try:
                 tier.pages(payload, page_indices)
             except Exception as e:  # noqa: BLE001 - contract under test
-                # probe/extract symmetry: what the deep probe admits
-                # decodes. Raster kinds are exempt: entropy-level
-                # corruption (JPEG/LZW/Flate sample bits) carries no
-                # checksum a structural probe could verify
-                if probed_kind not in ("pdf", "image", "tiff", "gif"):
+                # raster kinds may refuse entropy-level corruption, but
+                # only as ValueError; every other kind must decode
+                if not (isinstance(e, ValueError) and probed_kind in
+                        ("pdf", "image", "tiff", "gif")):
                     pytest.fail(f"{kind} {label}: admitted by the deep "
                                 f"probe, decode raised "
                                 f"{type(e).__name__}: {e}")

@@ -373,6 +373,26 @@ def test_missing_payload_quarantines(real_corpus, spark):
     assert any(r["error"] == "missing media payload" for r in errs)
 
 
+def test_null_payload_quarantines_and_keeps_text(spark):
+    """A media row whose nullable ``data`` is NULL quarantines at the
+    probe like any other unreadable payload: one error row, and the
+    document still re-emits its text span."""
+    docs_df = spark.createDataFrame([{
+        "doc_id": "d-null",
+        "spans": [{"kind": "text", "text": " kept ", "media_ref": None,
+                   "offset": 0},
+                  {"kind": "image", "text": None, "media_ref": "m-null",
+                   "offset": 1}],
+    }], schema=schemas.DOCUMENTS)
+    media = spark.createDataFrame([("m-null", None)],
+                                  "media_ref string, data binary")
+    buckets = extract_real.real_page_buckets(docs_df, media)
+    errs = extract_real.real_media_errors(buckets).collect()
+    assert [r["media_ref"] for r in errs] == ["m-null"]
+    out = _spans_by_doc(extract_real.extract_real_documents(docs_df, media))
+    assert out == {"d-null": [("text", "kept", None, 0)]}
+
+
 def test_real_pipeline_resumable_through_lineage(real_corpus, spark,
                                                  tmp_path_factory):
     """run_extract_job(pipeline=extract_real_documents): kill after 1 of

@@ -110,3 +110,25 @@ def test_office_source_rtf_eml_xlsx(spark, tmp_path):
         ("text", "md subj"), ("text", "md body"), ("text", "scan")]
     assert spans["t.xlsx"] == [
         ("text", "cell a"), ("text", "word"), ("text", "cell b")]
+
+
+def test_mislabelled_files_ingest_through_the_tier_table(spark, tmp_path):
+    """The source dispatches on content, not the extension: EPUB bytes
+    saved as ``.docx`` and an mbox saved as ``.eml`` take their own
+    part walks and ingest with no error row."""
+    from ocr_platform_spark import emltext, epubtext
+
+    (tmp_path / "book.docx").write_bytes(epubtext.encode_epub(
+        [epubtext.chapter_xhtml(["ch one"]),
+         epubtext.chapter_xhtml(["ch two"])]))
+    (tmp_path / "list.eml").write_bytes(emltext.encode_mbox([
+        emltext.encode_eml(
+            [("From", "a@x"), ("Subject", f"msg {i}"), ("Date", "d")],
+            body=f"body {i}")
+        for i in range(2)]))
+    parts = officesrc.read_office(spark, str(tmp_path))
+    assert officesrc.office_errors(parts).collect() == []
+    by_name = {r["path"].rsplit("/", 1)[-1]: r for r in parts.collect()}
+    assert list(by_name["book.docx"]["texts"]) == ["ch one", "ch two"]
+    texts = list(by_name["list.eml"]["texts"])
+    assert "body 0" in texts and "body 1" in texts

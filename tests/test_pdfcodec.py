@@ -921,17 +921,16 @@ def test_slice_pages_error_contract():
     assert errored > 20
 
 
-# --- the seam ----------------------------------------------------------------
+# --- the dispatch ------------------------------------------------------------
 
 
-def test_decode_real_media_pdf_fallback_runs_in_sandbox():
+def test_scanned_pdf_probes_and_decodes_in_sandbox():
     from ocr_platform_spark import multimodal
 
-    if multimodal._pdfium is not None:
-        pytest.skip("pypdfium2 present: fast path covers this")
     src = _rng(9).integers(0, 256, (50, 100, 3), dtype=np.uint8)
-    kind, pages = multimodal.decode_real_media(
-        scanned_pdf([src], ["0 0 48 24"]))
+    raw = scanned_pdf([src], ["0 0 48 24"])
+    kind = multimodal.probe_real_media(raw)[0]
+    pages = pdfcodec.decode_pdf(raw)
     assert kind == "pdf"
     assert len(pages) == 1
     np.testing.assert_array_equal(pages[0], src)
