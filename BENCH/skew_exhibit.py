@@ -6,11 +6,11 @@ repartition (operators/extract.py ocr_blocks), on a corpus holding one
 Claim under test (README/SCALE.md): AQE cannot split one huge document —
 partitioning the heavy stage by (doc_id, offset) strands every page of
 the monster PDF in ONE task, making stage wall time the single-task
-decode time; hashing (doc_id, offset, page_index) spreads pages across
+decode time; hashing (doc_id, offset, bucket_index) spreads pages across
 all tasks, so wall time tracks total-work/parallelism instead of the
 largest document.
 
-Method: the page-descriptor frame is built once (decode_pages) and
+Method: the one-page bucket frame is built once (decode_pages) and
 lazily checkpointed so both arms consume identical input; each arm runs
 the REAL per-page OCR kernel inside a wrapper that emits one row per
 task — (partition_id, pages, seconds) — and the stage is consumed by a
@@ -60,7 +60,7 @@ def _timed_ocr(batches):
             pages += len(pdf)
             yield pdf
 
-    for _blocks in extract._ocr_batches(counting()):
+    for _blocks in extract._ocr_real_batches(counting()):
         pass  # consume: the kernel work is the payload being measured
     yield pd.DataFrame(
         {"pid": [pid], "pages": [pages], "sec": [time.perf_counter() - t0]}
@@ -132,10 +132,10 @@ def main() -> None:
 
     # warm both shapes once (codegen + worker spin-up), excluded
     run_arm(["doc_id", "offset"])
-    run_arm(["doc_id", "offset", "page_index"])
+    run_arm(["doc_id", "offset", "bucket_index"])
 
     doc_key = run_arm(["doc_id", "offset"])
-    page_key = run_arm(["doc_id", "offset", "page_index"])
+    page_key = run_arm(["doc_id", "offset", "bucket_index"])
 
     cpus = sc.defaultParallelism
     spark.stop()

@@ -40,7 +40,7 @@ import pandas as pd  # noqa: E402
 from ocr_platform_spark import corpus as corpus_mod  # noqa: E402
 from ocr_platform_spark import formats, raster, schemas  # noqa: E402
 from ocr_platform_spark.corpus import _make_page  # noqa: E402
-from ocr_platform_spark.operators import extract_real  # noqa: E402
+from ocr_platform_spark.operators import extract, extract_real  # noqa: E402
 from ocr_platform_spark.session import get_spark  # noqa: E402
 
 TIMING_SCHEMA = "pid int, pages long, sec double"
@@ -59,7 +59,7 @@ def _timed_ocr(batches):
             pages += int((pdf["page_hi"] - pdf["page_lo"]).sum())
             yield pdf
 
-    for _blocks in extract_real._ocr_real_batches(counting()):
+    for _blocks in extract._ocr_real_batches(counting()):
         pass
     yield pd.DataFrame(
         {"pid": [pid], "pages": [pages], "sec": [time.perf_counter() - t0]}

@@ -27,7 +27,7 @@ Two kinds, two shapes:
     Many messages, and messages are PAGES — the paged-tier shape
     (PPTX slides / XLSX sheets / EPUB chapters), so a multi-gigabyte
     archive buckets and payload-slices exactly like a long PDF
-    (``operators/extract_real.py`` page buckets). Sniffed on the
+    (``operators/extract.py`` page buckets). Sniffed on the
     leading ``From `` envelope line (the mbox magic) followed by an
     EML-shaped header block. ``>From`` body-line quoting is reversed
     per mboxrd (one leading ``>`` stripped from ``>+From `` lines).

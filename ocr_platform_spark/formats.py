@@ -60,9 +60,9 @@ def sniff_kind(raw: bytes) -> str:
     content-type/extension, ``ocr_tasks.py:36-39``; serving sniffs magic
     bytes). Returns one of ``spdf | simg | pdf | png | jpeg | tiff |
     gif | bmp | zip | rtf | html | wav | avi | unknown`` —
-    ``pdf``/``png``/``jpeg``/``tiff``/``gif``/``bmp``
-    are REAL codecs
-    decoded through the real-codec tier table
+    ``spdf``/``simg`` are this module's synthetic containers and
+    ``pdf``/``png``/``jpeg``/``tiff``/``gif``/``bmp`` REAL codecs, all
+    decoded through the tier table
     (:data:`ocr_platform_spark.tiers.TIERS`);
     ``html`` extracts via the DOM tier
     (:mod:`ocr_platform_spark.htmltext`); ``zip`` is refined by
@@ -155,8 +155,9 @@ def decode_media(raw: bytes) -> tuple[str, list[PageDesc]]:
     """Parse container bytes -> ("pdf"|"image", pages).
 
     Mirrors the media-kind dispatch of ``ocr_tasks.py:36-39`` at the byte level
-    (magic number instead of content-type/extension; the DataFrame-level
-    dispatch on content_type/filename lives in operators/extract.py).
+    (magic number instead of content-type/extension). Any other payload, or
+    a corrupt body, raises ``ValueError``: real codecs decode through their
+    own tiers in :data:`ocr_platform_spark.tiers.TIERS`.
     """
     magic, body = raw[:5], raw[5:]
     if magic == MAGIC_PDF:
@@ -168,11 +169,9 @@ def decode_media(raw: bytes) -> tuple[str, list[PageDesc]]:
         if sniffed == "unknown":
             raise ValueError(f"unknown media magic {magic!r}")
         raise ValueError(
-            f"real-codec payload ({sniffed}): extract with "
-            "ocr_platform_spark.operators.extract_real."
-            "extract_real_documents"
+            f"not a synthetic container ({sniffed}): its decoder is the "
+            "ocr_platform_spark.tiers.TIERS entry the probe names"
         )
-    doc = json.loads(zlib.decompress(body).decode("utf-8"))
     pages = [
         PageDesc(
             width=p["w"],
@@ -182,7 +181,7 @@ def decode_media(raw: bytes) -> tuple[str, list[PageDesc]]:
                 for b in p["bs"]
             ],
         )
-        for p in doc
+        for p in _loads(body)
     ]
     return kind, pages
 
@@ -190,7 +189,14 @@ def decode_media(raw: bytes) -> tuple[str, list[PageDesc]]:
 def page_count(raw: bytes) -> int:
     """Cheap page-count probe, analog of the pypdf probe at upload time
     (``apps/api/app/api/v1/routes_jobs.py:68-73``)."""
-    return len(json.loads(zlib.decompress(raw[5:]).decode("utf-8")))
+    return len(_loads(raw[5:]))
+
+
+def _loads(body: bytes) -> list:
+    try:
+        return json.loads(zlib.decompress(body).decode("utf-8"))
+    except zlib.error as e:  # the quarantine contract: ValueError only
+        raise ValueError(f"corrupt synthetic container: {e}") from e
 
 
 def _dumps(pages: list[PageDesc]) -> bytes:
@@ -206,32 +212,3 @@ def _dumps(pages: list[PageDesc]) -> bytes:
         for p in pages
     ]
     return json.dumps(doc, separators=(",", ":"), sort_keys=True).encode("utf-8")
-
-
-def dumps_page(page: PageDesc) -> str:
-    """Single-page descriptor JSON (the decode-stage shuffle payload — compact;
-    rasters never cross a shuffle, see operators/extract.py)."""
-    return json.dumps(
-        {
-            "w": page.width,
-            "h": page.height,
-            "bs": [
-                {"x": b.x, "y": b.y, "ls": b.lines, "lh": b.line_h, "g": b.gap}
-                for b in page.bands
-            ],
-        },
-        separators=(",", ":"),
-        sort_keys=True,
-    )
-
-
-def loads_page(s: str) -> PageDesc:
-    p = json.loads(s)
-    return PageDesc(
-        width=p["w"],
-        height=p["h"],
-        bands=[
-            Band(x=b["x"], y=b["y"], lines=b["ls"], line_h=b["lh"], gap=b["g"])
-            for b in p["bs"]
-        ],
-    )

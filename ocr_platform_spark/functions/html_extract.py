@@ -215,7 +215,7 @@ FROM documents
 
 def html_main_blocks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The extraction pipeline's DOM tier (:func:`..htmltext.main_blocks`
-    — the keep rule ``operators/extract_real`` dispatches HTML media
+    — the keep rule ``operators/extract`` dispatches HTML media
     through) over the same synthesized boilerplate pages: one row per
     KEPT block.
 

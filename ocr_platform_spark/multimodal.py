@@ -7,13 +7,13 @@ metadata; decode / feature-extract / resize / frame-sample are vectorized
 pandas UDFs whose *plumbing* (schema, batch shape, partitioning) is real
 and tested here, while the codec itself is swappable:
 
-* for the engine's own SPDF1/SIMG1 containers the decode is real
-  (:mod:`ocr_platform_spark.formats`);
-* for real-world codecs, :func:`probe_real_media` names the kind and
-  the pure-stdlib codecs behind the real-codec tier table
-  (:data:`ocr_platform_spark.tiers.TIERS`) are the only decoder; the
-  extraction pipeline is
-  :func:`ocr_platform_spark.operators.extract_real.extract_real_documents`.
+* the band-geometry operators here (:func:`media_metadata`,
+  :func:`page_features`, :func:`frame_sample`) parse the engine's own
+  SPDF1/SIMG1 containers (:mod:`ocr_platform_spark.formats`);
+* for every media kind, :func:`probe_real_media` names the kind and
+  the tier table (:data:`ocr_platform_spark.tiers.TIERS`) is the only
+  decoder; the one extraction pipeline is
+  :mod:`ocr_platform_spark.operators.extract`.
 
 Scale notes: every operator is a narrow map over binary batches — no
 shuffle; Arrow transfers the bytes zero-copy into pandas. Batch size is
@@ -118,8 +118,8 @@ def media_metadata(media: DataFrame) -> DataFrame:
                     kind, pages = formats.decode_media(bytes(raw))
                 except Exception:
                     # malformed blob must not fail the job — same quarantine
-                    # posture as operators/extract._decode_batches: one error
-                    # row, zeroed metadata
+                    # posture as the extraction probe: one error row,
+                    # zeroed metadata
                     out["media_ref"].append(ref)
                     out["kind"].append(MEDIA_KIND_ERROR)
                     out["n_pages"].append(0)
@@ -151,12 +151,12 @@ REAL_MEDIA_META_SCHEMA = (
 def probe_real_media(
     raw: bytes, deep: bool = False
 ) -> tuple[str, int, int, int]:
-    """THE real-codec dispatch ladder: ``(kind, n_pages, width, height)``
+    """THE media dispatch ladder: ``(kind, n_pages, width, height)``
     from container structure only — PNG IHDR behind per-chunk CRC, JPEG
     SOF markers, PDF xref/page-tree walk with the 150-DPI canvas
-    geometry — never inflating a sample byte. Raises ``ValueError`` for
-    anything the real OCR path could not decode (synthetic containers
-    included: they belong to the descriptor path).
+    geometry — never inflating a sample byte. The synthetic SPDF1/SIMG1
+    containers name ``spdf``/``simg`` with their page count. Raises
+    ``ValueError`` for anything the OCR stage could not decode.
 
     ``deep=True`` is the extraction pre-flight, so unsupported/corrupt
     documents quarantine before any payload duplication. PDFs validate
@@ -170,7 +170,7 @@ def probe_real_media(
     symmetry is structural. The metadata pass uses ``deep=False``
     (header walks only). Single source of truth for both consumers
     (:func:`real_media_metadata` here, the bucket probe in
-    ``operators/extract_real.py``) so their quarantine semantics cannot
+    ``operators/extract.py``) so their quarantine semantics cannot
     drift."""
     from . import jpegcodec, pdfcodec, pngcodec, transport
 
@@ -189,10 +189,12 @@ def probe_real_media(
 
     kind = formats.sniff_kind(raw)
     if kind in ("spdf", "simg"):
-        raise ValueError(
-            "synthetic container: use the descriptor path "
-            "(formats.decode_media / extract_documents)"
-        )
+        # the synthetic containers carry no raster geometry in a header:
+        # deep is the full parse the OCR stage decodes, shallow the
+        # page-count probe
+        n = (len(formats.decode_media(raw)[1]) if deep
+             else formats.page_count(raw))
+        return kind, n, 0, 0
     if kind == "pdf":
         if deep:
             from . import pdftext

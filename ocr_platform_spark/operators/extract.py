@@ -5,43 +5,71 @@ Replaces the reference's HTTP/Redis/Postgres/S3 process hops
 
     documents ─ explode(spans) ─┬─ text spans ── unicode-trim passthrough ──┐
                                 └─ media spans ⋈ media payloads             │
-                                    │ mapInPandas DECODE (cheap):           │
-                                    │   container parse → 1 row per page    │
-                                    │   (compact descriptor; no raster      │
-                                    │    crosses a shuffle)                 │
-                                    │ repartition(page key)  ← skew spread  │
+                                    │ mapInPandas PROBE (cheap):            │
+                                    │   media_kind → K-page buckets, each   │
+                                    │   sliced to a minimal sub-container   │
+                                    │ repartition(bucket key) ← skew spread │
                                     │ mapInPandas OCR (heavy):              │
-                                    │   render@150dpi → detect → lazy       │
-                                    │   preprocess crops → strips →         │
-                                    │   recognize → trim → blocks           │
-                                    │ window rank (y1, x1, emission)        │
+                                    │   TIERS[kind].pages → one emitter:    │
+                                    │   text parts as blocks; rasters →     │
+                                    │   detect → lazy preprocess crops →    │
+                                    │   strips → recognize → trim → blocks  │
                                     └──────────────┬─────────────────────────┘
                                                    union (+1 sentinel/doc)
-                                    window order (offset, page, rank)
                                     groupBy(doc_id) → sort_array(collect_list)
+                                    by (offset, page, y1, x1, block_index)
                                     drop sentinel tail (no re-join needed)
+
+ONE pipeline for every media kind: the deep probe
+(:func:`..multimodal.probe_real_media`) names each payload's
+``media_kind`` and its row in the tier table (:data:`..tiers.TIERS`)
+decides the rest — the synthetic SPDF1/SIMG1 containers included. The
+flagship names (:func:`decode_pages`, :func:`ocr_blocks`,
+:func:`media_errors`, :func:`extract_documents`) are the real-codec
+stages at one page per bucket.
+
+1. **probe** (``mapInPandas`` over spans⋈payloads, in the media
+   scan's partitioning — see :func:`real_page_buckets`): transport
+   wrappers inflate once, the deep probe validates the payload
+   (quarantining what the OCR stage could not decode as one
+   ``media_kind=error`` row, before any payload is duplicated), and
+   the media explodes into page *buckets* of ``bucket_pages`` pages.
+   A multi-bucket payload is cut by its tier's slicer, parsed once:
+   each bucket row carries a minimal sub-document holding only its own
+   pages, so the document crosses the bucket shuffle ~once in total
+   (a one-page SPDF1 slice is ~200 bytes).
+2. **repartition** on ``(doc_id, offset, bucket_index)``
+   (:func:`_spread`), the skew fix: a 2,000-page PDF becomes ⌈2000/K⌉
+   independent tasks instead of one straggler (SURVEY.md §4; AQE alone
+   cannot split one huge row).
+3. **OCR** (``mapInPandas``): each bucket decodes only its own pages
+   through ``TIERS[kind].pages`` — pixels exist only inside this UDF —
+   and one emitter (:func:`_emit_page`) turns each page into ``BLOCK``
+   rows: a lone raster (every synthetic and scanned page) OCRs in its
+   own pixel space through the one detect + recognize kernel
+   (:func:`_ocr_rows`). Anywhere else, the part at ordinal ``i`` emits
+   at ``y1 = i`` — a text part as ``(x1=0, y1=i)``, a picture as its
+   OCR blocks at ``(x1=reading rank, y1=i)`` — so the assembler's
+   per-page sort key lands a picture's text exactly between its
+   neighbours; page ``page_lo + i`` numbering survives slicing.
+4. **assemble** (:func:`assemble_spans`): the sentinel-based re-emit of
+   each document's interleaved span array.
 
 Scale rationale (100 TB / 10^12 docs):
 
-* **Page-level explode before the heavy stage** is the skew fix — one
-  200-page PDF becomes 200 independent rows spread by hash repartition, so a
-  single executor never owns a whole giant document (SURVEY.md §4; AQE alone
-  cannot split one huge row).
-* **The decode stage is cheap and narrow** (container header parse); the
-  expensive raster exists only *inside* the heavy UDF — the shuffle between
-  the stages carries ~200-byte descriptors, never pixels.
 * **Joins**: spans⋈media broadcasts the narrow span-ref side (see
-  :func:`decode_pages`); assembly needs no doc_id re-join (sentinel rows).
-* **All relational glue is stock Catalyst** (window, collect_list, union,
-  joins) — predicate pushdown and column pruning reach the parquet scans.
+  :func:`real_page_buckets`); assembly needs no doc_id re-join
+  (sentinel rows).
+* **All relational glue is stock Catalyst** (repartition, collect_list,
+  union, joins) — predicate pushdown and column pruning reach the
+  parquet scans.
 
-Each decision has one home, shared by every stage here and by the
-real-codec path (:mod:`.extract_real`): :func:`_join_payloads` (the
-span-ref ⋈ payload join and its missing-payload anti-join),
-:func:`_spread` (error-row filter + the page/bucket-key skew
-repartition in front of every heavy stage), :func:`_ocr_rows` (the
-detect + recognize kernel, also run from given boxes),
-:func:`_emit_blocks` (the one ``BLOCK`` emitter) and
+Each decision has one home: :func:`real_page_buckets` (the span-ref ⋈
+payload join and its missing-payload anti-join), :func:`_spread`
+(error-row filter + the skew repartition in front of every heavy
+stage), :func:`_bucket_pages` (a bucket row's decoded pages),
+:func:`_ocr_rows` (the detect + recognize kernel, also run from given
+boxes), :func:`_emit_blocks` (the one ``BLOCK`` emitter) and
 :func:`_block_frame` (the one ``BLOCK`` frame builder).
 
 Per-row reference semantics are inherited from :mod:`ocr_platform_spark.oracle`
@@ -51,6 +79,10 @@ kernels — the heavy UDF is the fused detect+recognize of
 no human box-editing step, so ``detect_result`` flows through unchanged and
 fusing the two phases is semantics-preserving (the optional persisted
 detect-boxes boundary is exposed separately via :func:`detect_boxes_table`).
+
+Equality contract (tests/test_extract_real.py): a corpus whose synthetic
+media are re-encoded as real PNG files / scanned PDFs at identity scale
+extracts exactly the same spans as the synthetic corpus.
 """
 
 from __future__ import annotations
@@ -64,56 +96,126 @@ from pyspark.sql import functions as F
 from pyspark.sql.pandas.functions import pandas_udf
 from pyspark.sql.types import StringType
 
-from .. import formats, kernels, raster
-from ..schemas import BLOCK, PAGE_TASK, SPAN
+from .. import formats, kernels, multimodal, raster, transport
+from ..schemas import BLOCK, SPAN
+from ..tiers import TIERS
 
 
-# --- stage 1: decode (cheap page explode) ------------------------------------
+# --- stage 1: probe (cheap page-bucket explode) ------------------------------
 
 MEDIA_KIND_ERROR = formats.MEDIA_KIND_ERROR  # quarantined payloads (shared sentinel)
 
+#: pages per OCR task of :func:`extract_real_documents`. ⌈pages/K⌉
+#: payload copies cross the bucket shuffle; K pages of raster work bound
+#: each task's CPU time.
+DEFAULT_BUCKET_PAGES = 8
 
-def _decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """Container parse -> one output row per page (S4/S5 in SURVEY.md §2.1).
-
-    Mirrors ``_raw_to_pages`` dispatch (``ocr_tasks.py:34-55``) without
-    rasterizing: emits per-page JSON descriptors so the page-level explode
-    happens *before* any pixel work.
-    """
-    for pdf in batches:
-        out: dict[str, list] = {f.name: [] for f in PAGE_TASK.fields}
-        for doc_id, offset, ref, data in zip(
-            pdf["doc_id"], pdf["offset"], pdf["media_ref"], pdf["data"]
-        ):
-            try:
-                kind, pages = formats.decode_media(bytes(data))
-            except Exception as exc:  # corrupt payload -> quarantine row
-                # At 10^12 docs a malformed blob must not fail the job
-                # (reference analog: per-job FAILED status + error column,
-                # ``ocr_tasks.py:125-128``). One row with media_kind=
-                # "error"; downstream OCR skips it and the doc still
-                # re-emits its surviving spans.
-                out["doc_id"].append(doc_id)
-                out["offset"].append(offset)
-                out["media_ref"].append(ref)
-                out["media_kind"].append(MEDIA_KIND_ERROR)
-                out["page_index"].append(-1)
-                out["page_desc"].append(str(exc)[:200])
-                continue
-            for i, page in enumerate(pages):
-                out["doc_id"].append(doc_id)
-                out["offset"].append(offset)
-                out["media_ref"].append(ref)
-                out["media_kind"].append(kind)
-                out["page_index"].append(i)
-                out["page_desc"].append(formats.dumps_page(page))
-        res = pd.DataFrame(out)
-        res["offset"] = res["offset"].astype("int32")
-        res["page_index"] = res["page_index"].astype("int32")
-        yield res
+#: the probe stage's output: one row per page bucket
+BUCKET = (
+    "doc_id string, offset int, media_ref string, media_kind string, "
+    "bucket_index int, page_lo int, page_hi int, error string, "
+    "sliced boolean, data binary"
+)
 
 
-# --- stage 2: heavy OCR (render -> detect -> recognize) ----------------------
+def _bucket_batches_fn(bucket_pages: int | None,
+                       slice_payloads: bool = True):
+    """Stage-1 kernel, the ``_raw_to_pages`` dispatch
+    (``ocr_tasks.py:34-55``) without rasterizing. The probe is
+    :func:`..multimodal.probe_real_media` with ``deep=True`` (the full
+    parse for the synthetic containers; hybrid per-page walk for PDFs;
+    chunk-CRC / marker-bounds checks for PNG/JPEG; the tier's own part
+    walk for the container kinds), so truncated/corrupt payloads
+    quarantine HERE, with a triage row, instead of silently dropping at
+    the OCR stage. Residual (undetectable-at-probe) corruption is
+    entropy-level only: JPEG entropy bits carry no checksum, and a PDF
+    image stream can hold a structurally-valid but broken body; those
+    degrade to zero blocks at decode (see :func:`_bucket_pages`)."""
+    def _bucket_batches(
+        batches: Iterator[pd.DataFrame],
+    ) -> Iterator[pd.DataFrame]:
+        cols = ["doc_id", "offset", "media_ref", "media_kind",
+                "bucket_index", "page_lo", "page_hi", "error",
+                "sliced", "data"]
+        for pdf in batches:
+            out: dict[str, list] = {c: [] for c in cols}
+            for doc_id, offset, ref, data in zip(
+                pdf["doc_id"], pdf["offset"], pdf["media_ref"], pdf["data"]
+            ):
+                try:
+                    # compressed transport wrappers (.html.gz /
+                    # .txt.bz2 / .xml.xz) inflate ONCE here, before
+                    # probe and slicing, so every downstream feature
+                    # (per-page slices, hybrid dispatch, tier
+                    # extraction) sees the inner document; corruption /
+                    # bombs / over-nesting quarantine like any other
+                    # probe failure (..transport module docstring).
+                    # bytes() sits inside the try so a NULL payload
+                    # quarantines instead of failing the stage.
+                    raw = transport.maybe_unwrap(bytes(data))
+                    kind, n_pages, _w, _h = multimodal.probe_real_media(
+                        raw, deep=True)
+                except Exception as exc:
+                    # At 10^12 docs a malformed blob must not fail the
+                    # job (reference analog: per-job FAILED status +
+                    # error column, ``ocr_tasks.py:125-128``): one
+                    # narrow error row, before the payload is
+                    # duplicated; the doc still re-emits its surviving
+                    # spans.
+                    out["doc_id"].append(doc_id)
+                    out["offset"].append(offset)
+                    out["media_ref"].append(ref)
+                    out["media_kind"].append(MEDIA_KIND_ERROR)
+                    out["bucket_index"].append(-1)
+                    out["page_lo"].append(-1)
+                    out["page_hi"].append(-1)
+                    out["error"].append(str(exc)[:200])
+                    out["sliced"].append(False)
+                    out["data"].append(None)
+                    continue
+                k = bucket_pages or max(1, n_pages)
+                lows = range(0, max(1, n_pages), k)
+                slicer, cut = TIERS[kind].slicer, None
+                if slicer is not None and slice_payloads and len(lows) > 1:
+                    # parse once per document; each bucket row then
+                    # carries a minimal sub-document (only its own
+                    # pages) instead of a full-payload copy — the whole
+                    # document crosses the bucket shuffle ~once in
+                    # total instead of ⌈pages/K⌉ times
+                    try:
+                        cut = slicer(raw)
+                    except ValueError:
+                        pass
+                for b, lo in enumerate(lows):
+                    hi = min(n_pages, lo + k)
+                    payload, sliced = raw, False
+                    if cut is not None:
+                        try:
+                            payload, sliced = cut(range(lo, hi)), True
+                        except ValueError:
+                            # probe already validated the doc, so this
+                            # is near-dead defensive code: fall back to
+                            # the full payload rather than quarantine
+                            pass
+                    out["doc_id"].append(doc_id)
+                    out["offset"].append(offset)
+                    out["media_ref"].append(ref)
+                    out["media_kind"].append(kind)
+                    out["bucket_index"].append(b)
+                    out["page_lo"].append(lo)
+                    out["page_hi"].append(hi)
+                    out["error"].append(None)
+                    out["sliced"].append(sliced)
+                    out["data"].append(payload)
+            res = pd.DataFrame(out)
+            for c in ("offset", "bucket_index", "page_lo", "page_hi"):
+                res[c] = res[c].astype("int32")
+            yield res
+
+    return _bucket_batches
+
+
+# --- stage 2: heavy OCR (decode -> detect -> recognize) ----------------------
 
 
 #: the ``BLOCK`` columns, in the row order :func:`_emit_blocks` appends
@@ -124,25 +226,63 @@ _INT_BLOCK_COLS = [
     "x1", "y1", "x2", "y2", "page_width", "page_height",
 ]
 
-#: the page-descriptor columns the per-page OCR kernels take, in order
-_PAGE_COLS = ("doc_id", "offset", "media_ref", "media_kind", "page_index",
-              "page_desc")
+#: the bucket columns every per-bucket OCR kernel takes, in order
+_BUCKET_COLS = ("doc_id", "offset", "media_ref", "media_kind", "page_lo",
+                "page_hi", "sliced", "data")
 
 #: the columns of :func:`detect_boxes_table`, in order
 _BOX_COLS = ("doc_id", "offset", "media_ref", "page_index", "width", "height",
              "block_index", "x1", "y1", "x2", "y2")
 
 
-def _render(kind: str, desc: str) -> np.ndarray:
-    """Render one page descriptor to its grayscale raster (PDF descriptors
-    are in PDF units, image descriptors in pixels)."""
-    unit_scale = raster.PDF_UNIT_SCALE if kind == "pdf" else 1.0
-    return raster.render_page(formats.loads_page(desc), unit_scale)
+def _bucket_pages(kind: str, lo: int, hi: int, sliced: bool,
+                  data: bytes) -> list[tuple]:
+    """One bucket row -> its decoded ``(page_index, parts, width,
+    height)`` pages through ``TIERS[kind].pages`` (see :mod:`..tiers`).
+
+    The tier lookup sits OUTSIDE the try: a probe kind with no tier is a
+    programming error and must fail loudly, not extract nothing. The
+    decode sits inside it: residual corruption past the probe
+    (entropy-level only — JPEG entropy bits carry no checksum; a PDF
+    image stream body can be broken behind a valid structure) drops the
+    bucket ATOMICALLY to zero pages, the empty-page-passthrough
+    contract, rather than failing the job; everything structurally
+    detectable already quarantined with a triage row at probe time. A
+    sliced payload holds ONLY this bucket's pages (local indices
+    0..hi-lo); global numbering still comes from ``page_lo``."""
+    if kind == MEDIA_KIND_ERROR:
+        return []
+    pages = TIERS[kind].pages
+    try:
+        decoded = pages(bytes(data), None if sliced
+                        else list(range(int(lo), int(hi))))
+    except Exception:
+        return []
+    return [(int(lo) + i, parts, w, h)
+            for i, (parts, w, h) in enumerate(decoded)]
 
 
-def _ocr_page(doc_id: str, offset: int, ref: str, kind: str,
-              page_index: int, desc: str, out: dict[str, list]) -> None:
-    ocr_rendered_page(doc_id, offset, ref, page_index, _render(kind, desc), out)
+def _lone_raster(parts: list) -> np.ndarray | None:
+    """The page's raster when the page is exactly one raster, else None."""
+    if len(parts) == 1 and isinstance(parts[0], np.ndarray):
+        return parts[0]
+    return None
+
+
+def _bucket_rasters(kind: str, lo: int, hi: int, sliced: bool,
+                    data: bytes) -> Iterator[tuple[int, np.ndarray]]:
+    """``(page_index, raster)`` per page of one bucket row, for the
+    per-page raster kernels (fused, detect, recognize). A page that is
+    not a lone raster raises — outside the decode try, so it is loud,
+    never a silent zero-block page."""
+    for page_index, parts, _w, _h in _bucket_pages(kind, lo, hi, sliced,
+                                                   data):
+        img = _lone_raster(parts)
+        if img is None:
+            raise ValueError(
+                f"{kind!r} page {page_index} is not a lone raster: the "
+                "per-page raster kernels OCR scanned pages only")
+        yield page_index, img
 
 
 def _ocr_rows(img: np.ndarray, boxes: list | None = None,
@@ -152,13 +292,12 @@ def _ocr_rows(img: np.ndarray, boxes: list | None = None,
     detector order, the input of :func:`_emit_blocks`.
 
     The OCR core shared by every stage that recognizes a raster: the
-    synthetic descriptor path, the two-phase recognize from (possibly
-    edited) ``boxes``, and the real-codec bucket path
-    (:mod:`..operators.extract_real`), so they cannot drift: identical
-    detect-on-raw-page, PrepView crop scaling, strip recognition,
-    length-align truncation. ``boxes`` skips detection; ``size`` is the
-    detect-time ``(width, height)`` the boxes are in, where 0 falls back
-    to the raster's own dimension.
+    one bucket OCR stage (lone-raster pages and embedded pictures) and
+    the two-phase recognize from (possibly edited) ``boxes``, so they
+    cannot drift: identical detect-on-raw-page, PrepView crop scaling,
+    strip recognition, length-align truncation. ``boxes`` skips
+    detection; ``size`` is the detect-time ``(width, height)`` the boxes
+    are in, where 0 falls back to the raster's own dimension.
     """
     h_img, w_img = img.shape[:2]
     w_orig = int(size[0]) or w_img
@@ -216,13 +355,60 @@ def _block_frame(pdf: pd.DataFrame, cols, page_fn) -> pd.DataFrame:
     return res
 
 
-def _ocr_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """Iterator-form mapInPandas: one-time per-worker init would live here
-    (the ``lru_cache`` model-singleton analog, detect.py:68 /
-    vietocr_engine.py:47 — our kernels are stateless numpy, so nothing to
-    load; the hook is kept so real weights drop in without a plan change)."""
+def _emit_page(doc_id: str, offset: int, ref: str, page_index: int,
+               parts: list, page_w: int, page_h: int,
+               out: dict[str, list]) -> None:
+    """One decoded page -> ``BLOCK`` rows under the module docstring's
+    coordinate rule, through the shared emitter (:func:`_emit_blocks`).
+    Text blocks emit at ``conf=1.0`` (the source text is authoritative —
+    there is no recognition uncertainty to score); empty ones drop. A
+    lone raster OCRs in its own pixel space; every other row carries
+    the page's ``page_w x page_h``."""
+    img = _lone_raster(parts)
+    if img is not None:
+        ocr_rendered_page(doc_id, offset, ref, page_index, img, out)
+        return
+    rows: list[tuple] = []
+    for i, part in enumerate(parts):
+        if isinstance(part, np.ndarray):
+            ocr = _ocr_rows(part)
+            order = sorted(range(len(ocr)),
+                           key=lambda k: (ocr[k][1], ocr[k][0], k))
+            rows.extend((rank, i, rank + 1, i + 1, ocr[k][4], ocr[k][5],
+                         page_w, page_h) for rank, k in enumerate(order))
+        elif part.text.strip():
+            rows.append((part.x1, part.y1, part.x2, part.y2, part.text, 1.0,
+                         page_w, page_h))
+    _emit_blocks(out, doc_id, offset, ref, page_index, rows)
+
+
+def _ocr_bucket(doc_id: str, offset: int, ref: str, kind: str, lo: int,
+                hi: int, sliced: bool, data: bytes,
+                out: dict[str, list]) -> None:
+    # decode inside _bucket_pages' try, emission outside it: an
+    # OCR/kernel failure propagates LOUDLY instead of leaving a
+    # silently part-extracted document
+    for page_index, parts, page_w, page_h in _bucket_pages(kind, lo, hi,
+                                                           sliced, data):
+        _emit_page(doc_id, int(offset), ref, page_index, parts, page_w,
+                   page_h, out)
+
+
+def _ocr_real_frame(pdf: pd.DataFrame) -> pd.DataFrame:
+    return _block_frame(pdf, _BUCKET_COLS, _ocr_bucket)
+
+
+def _ocr_real_batches(
+    batches: Iterator[pd.DataFrame],
+) -> Iterator[pd.DataFrame]:
+    """The one OCR UDF. Iterator-form mapInPandas: one-time per-worker
+    init would live here (the ``lru_cache`` model-singleton analog,
+    detect.py:68 / vietocr_engine.py:47 — our kernels are stateless
+    numpy, so nothing to load; the hook is kept so real weights drop in
+    without a plan change). A named module function: its ``__name__``
+    is what ``.explain("formatted")`` prints on the MapInPandas node."""
     for pdf in batches:
-        yield _block_frame(pdf, _PAGE_COLS, _ocr_page)
+        yield _ocr_real_frame(pdf)
 
 
 # --- relational glue ----------------------------------------------------------
@@ -290,10 +476,10 @@ def shared_exploded_spans(
 
 
 #: Catalyst-stats cap (bytes of the *documents input relation*) above which
-#: the auto mode of :func:`decode_pages` refuses the spans-side broadcast
+#: the auto mode of :func:`real_page_buckets` refuses the spans-side broadcast
 #: pin. The broadcast side is only the 3 narrow ref columns (doc_id,
-#: offset, media_ref — ~50 B/span vs the table's full span text +
-#: descriptors), so a 32 GiB input estimate keeps the build side
+#: offset, media_ref — ~50 B/span vs the table's full span text),
+#: so a 32 GiB input estimate keeps the build side
 #: comfortably under Spark's 8 GB broadcast hard limit.
 SPAN_BROADCAST_STATS_CAP = 32 << 30
 
@@ -339,19 +525,22 @@ def _span_refs_fit_broadcast(documents: DataFrame) -> bool:
     return total <= SPAN_BROADCAST_STATS_CAP
 
 
-def decode_pages(
+def real_page_buckets(
     documents: DataFrame,
     media: DataFrame,
-    spans: DataFrame | None = None,
+    bucket_pages: int | None = DEFAULT_BUCKET_PAGES,
     broadcast_spans: bool | None = None,
+    spans: DataFrame | None = None,
+    slice_payloads: bool = True,
 ) -> DataFrame:
-    """Media spans ⋈ payloads -> per-page descriptor rows (stage 1).
+    """Stage 1: media spans ⋈ payloads -> validated page-bucket rows
+    (:data:`BUCKET`).
 
-    Join first, repartition after: the spans side is 3 narrow columns and
-    is pinned as the broadcast build side (``broadcast_spans=True``), so
-    the payload bytes never move for the join itself — they cross the
-    wire exactly once, in the explicit repartition on ``(doc_id,
-    offset)`` that spreads the decode work. The hint is pinned rather
+    The spans side is 3 narrow columns and is pinned as the broadcast
+    build side (``broadcast_spans=True``), so the payload bytes never
+    move for the join itself: the probe runs in the media scan's own
+    partitioning, and the payload crosses the wire once, as bucket rows
+    in the skew spread (:func:`_spread`). The hint is pinned rather
     than left to size estimates because the spans side may arrive as a
     checkpointed RDD scan (see :func:`shared_exploded_spans`) whose
     statistics are unknown — an unhinted plan would degrade to sort-merge
@@ -363,41 +552,39 @@ def decode_pages(
     caller at the 10^12-doc posture degrades to AQE's runtime choice
     automatically instead of hard-failing on Spark's 8 GB broadcast limit
     — while unknown-stats inputs (in-memory, RDD-backed, checkpointed)
-    keep the measured-best pinned plan. That repartition matters: the
-    joined payload rows are only a few MB, so AQE's byte-based coalescing
-    would squash them into ~1 partition and serialize the container
-    parsing — like the OCR stage, decode cost is per-*row* CPU (zlib +
-    JSON), not bytes (see :func:`_spread`). An alternative
-    "pre-partition both sides on media_ref + shuffle-hash join" shape was
-    measured WORSE (median 9.5s vs 6.2s at the 8k-doc bench corpus, with
-    2-4x straggler outliers): it trades the broadcast for a payload
-    shuffle keyed on media_ref, whose heavy-tail key distribution leaves
-    unbalanced decode partitions. At true 10^12 scale, where the spans
-    side outgrows executor memory, pass ``broadcast_spans=False`` so the
-    join strategy is AQE's to pick per stage from runtime sizes.
+    keep the measured-best pinned plan. An alternative "pre-partition
+    both sides on media_ref + shuffle-hash join" shape was measured WORSE
+    (median 9.5s vs 6.2s at the 8k-doc bench corpus, with 2-4x straggler
+    outliers): it trades the broadcast for a payload shuffle keyed on
+    media_ref, whose heavy-tail key distribution leaves unbalanced
+    partitions. At true 10^12 scale, where the spans side outgrows
+    executor memory, pass ``broadcast_spans=False`` so the join strategy
+    is AQE's to pick per stage from runtime sizes. Spans whose
+    ``media_ref`` has no payload row surface through the join's
+    anti-join as quarantine rows.
+
+    No repartition sits in front of the probe: the probe is cheap per
+    payload (a header walk or one container parse; the OCR work comes
+    after the bucket spread), so a hash spread there costs a whole
+    payload shuffle and a stage for little parallelism. Measured on both
+    perfbench workloads (800 pages, ``local[4]``, one media file, so one
+    probe task): a ``2 x defaultParallelism`` spread cost +0.5 s wall and
+    +2 CPU-s per run (docs/SCALE.md). A large media table arrives as
+    many scan splits, which spread the probe already.
 
     ``spans``: optional pre-exploded (doc_id, kind, text, media_ref,
     offset) frame — pass :func:`shared_exploded_spans` output to share
     one materialization across the pipeline's consumers.
+
+    ``bucket_pages``: pages per bucket (``None``: one bucket per media).
+    ``slice_payloads`` (default on): multi-bucket payloads are re-cut by
+    their tier's slicer into per-bucket sub-documents (for PDFs
+    :class:`..pdfcodec._Slicer` keeps only the bucket's own
+    page/content/image objects, stream bytes verbatim), so the bucket
+    shuffle moves ~size·K/pages bytes per row instead of ⌈pages/K⌉
+    full-payload copies. Decode equality with the unsliced path is
+    test-pinned; False restores full-payload rows.
     """
-    n = 2 * documents.sparkSession.sparkContext.defaultParallelism
-    return _join_payloads(
-        documents, media, spans, broadcast_spans,
-        lambda media_spans: media_spans.repartition(n, "doc_id", "offset")
-        .mapInPandas(_decode_batches, schema=PAGE_TASK),
-        page_index=F.lit(-1).cast("int"),
-        page_desc=F.lit("missing media payload"),
-    )
-
-
-def _join_payloads(documents: DataFrame, media: DataFrame,
-                   spans: DataFrame | None, broadcast_spans: bool | None,
-                   stage, **missing_cols) -> DataFrame:
-    """The one span-ref ⋈ payload join (see :func:`decode_pages` for the
-    broadcast policy): ``stage`` maps the joined ``(media_ref, doc_id,
-    offset, data)`` rows to its output rows, and every span whose
-    ``media_ref`` has no payload row becomes one ``media_kind=error`` row
-    with the given ``missing_cols`` literals, unioned by name."""
     if spans is None:
         spans = exploded_spans(documents)
     if broadcast_spans is None:
@@ -414,7 +601,7 @@ def _join_payloads(documents: DataFrame, media: DataFrame,
     # it (and a left join would force the payload onto the build side,
     # breaking the measured-best broadcast plan). The anti-join is narrow
     # — only (doc_id, offset, media_ref) keys move — and feeds the same
-    # media_kind=error contract media_errors() reads.
+    # media_kind=error contract real_media_errors() reads.
     missing = span_refs.join(
         media.select("media_ref"), "media_ref", "left_anti"
     ).select(
@@ -422,9 +609,27 @@ def _join_payloads(documents: DataFrame, media: DataFrame,
         "offset",
         "media_ref",
         F.lit(MEDIA_KIND_ERROR).alias("media_kind"),
-        *(col.alias(name) for name, col in missing_cols.items()),
+        F.lit(-1).cast("int").alias("bucket_index"),
+        F.lit(-1).cast("int").alias("page_lo"),
+        F.lit(-1).cast("int").alias("page_hi"),
+        F.lit("missing media payload").alias("error"),
+        F.lit(False).alias("sliced"),
+        F.lit(None).cast("binary").alias("data"),
     )
-    return stage(media_spans).unionByName(missing)
+    return media_spans.mapInPandas(
+        _bucket_batches_fn(bucket_pages, slice_payloads), schema=BUCKET
+    ).unionByName(missing)
+
+
+def decode_pages(
+    documents: DataFrame,
+    media: DataFrame,
+    spans: DataFrame | None = None,
+    broadcast_spans: bool | None = None,
+) -> DataFrame:
+    """:func:`real_page_buckets` at one page per bucket: one row per
+    page, each carrying its one-page sub-container."""
+    return real_page_buckets(documents, media, 1, broadcast_spans, spans)
 
 
 def _spread(rows: DataFrame, index: str, num_partitions: int | None,
@@ -435,7 +640,7 @@ def _spread(rows: DataFrame, index: str, num_partitions: int | None,
 
     The count is explicit: partition cost here is per-*row* CPU, not
     bytes, and AQE's byte-based coalescing would otherwise squash a
-    shuffle of small rows (~200-byte page descriptors) into one
+    shuffle of small rows (~200-byte one-page sub-containers) into one
     partition and serialize the CPU-bound stage."""
     if num_partitions is None:
         num_partitions = 3 * rows.sparkSession.sparkContext.defaultParallelism
@@ -444,20 +649,31 @@ def _spread(rows: DataFrame, index: str, num_partitions: int | None,
     return rows.mapInPandas(udf, schema=schema)
 
 
-def ocr_blocks(pages: DataFrame, num_partitions: int | None = None) -> DataFrame:
-    """Stage 2 over page rows, behind the explicit skew-spreading
-    repartition on the page key (:func:`_spread`; SURVEY.md §4: AQE can't
-    split one huge doc, hashing (doc_id, offset, page_index) can)."""
-    return _spread(pages, "page_index", num_partitions, _ocr_batches, BLOCK)
+def ocr_real_blocks(
+    buckets: DataFrame, num_partitions: int | None = None,
+) -> DataFrame:
+    """Stage 2: bucket rows -> OCR block rows, behind the explicit skew
+    repartition on the bucket key (:func:`_spread`; SURVEY.md §4: AQE
+    can't split one huge doc, hashing (doc_id, offset, bucket_index)
+    can). Each bucket decodes through its kind's :data:`..tiers.TIERS`
+    entry."""
+    return _spread(buckets, "bucket_index", num_partitions,
+                   _ocr_real_batches, BLOCK)
 
 
-def media_errors(pages: DataFrame) -> DataFrame:
-    """Quarantine table: media whose container parse failed (the FAILED
-    status + ``error`` column analog, ``apps/worker/app/tasks/
+ocr_blocks = ocr_real_blocks
+
+
+def real_media_errors(buckets: DataFrame) -> DataFrame:
+    """Quarantine table: probe-time failures and missing payloads (the
+    FAILED status + ``error`` column analog, ``apps/worker/app/tasks/
     ocr_tasks.py:125-128``); write alongside lineage for triage/re-run."""
-    return pages.filter(F.col("media_kind") == MEDIA_KIND_ERROR).select(
-        "doc_id", "offset", "media_ref", F.col("page_desc").alias("error")
+    return buckets.filter(F.col("media_kind") == MEDIA_KIND_ERROR).select(
+        "doc_id", "offset", "media_ref", "error"
     )
+
+
+media_errors = real_media_errors
 
 
 def reading_ordered_blocks(blocks: DataFrame) -> DataFrame:
@@ -565,12 +781,14 @@ def assemble_spans(
     )
 
 
-def extract_documents(
+def extract_real_documents(
     documents: DataFrame,
     media: DataFrame,
+    bucket_pages: int | None = DEFAULT_BUCKET_PAGES,
     num_partitions: int | None = None,
     broadcast_spans: bool | None = None,
     share_spans: "bool | str" = True,
+    slice_payloads: bool = True,
 ) -> DataFrame:
     """End-to-end: documents + media -> documents_out with extracted spans.
 
@@ -581,8 +799,9 @@ def extract_documents(
     auto mode: the spans-side broadcast hint in the payload join is
     released to AQE only when the input relation's Catalyst estimate is
     KNOWN to exceed :data:`SPAN_BROADCAST_STATS_CAP` (unknown stats keep
-    the pin — see :func:`decode_pages`); pass True/False to force either
-    plan.
+    the pin — see :func:`real_page_buckets`); pass True/False to force
+    either plan. ``bucket_pages`` and ``slice_payloads``: see
+    :func:`real_page_buckets`.
 
     Executor-loss caveat (``share_spans``): the lazy ``localCheckpoint``
     truncates RDD lineage with NON-replicated executor-local blocks — on a
@@ -597,17 +816,33 @@ def extract_documents(
     on a ``MEMORY_AND_DISK_2`` persist — replicated AND recomputable
     (see :func:`shared_exploded_spans`; docs/SCALE.md "share_spans
     modes" for when each wins)."""
-    sp = (
-        shared_exploded_spans(documents, replicated=share_spans == "replicated")
-        if share_spans else exploded_spans(documents)
+    spans = (
+        shared_exploded_spans(documents,
+                              replicated=share_spans == "replicated")
+        if share_spans else None
     )
-    pages = decode_pages(documents, media, spans=sp, broadcast_spans=broadcast_spans)
-    blocks = ocr_blocks(pages, num_partitions=num_partitions)
-    return assemble_spans(documents, blocks, spans=sp)
+    buckets = real_page_buckets(
+        documents, media, bucket_pages, broadcast_spans, spans=spans,
+        slice_payloads=slice_payloads,
+    )
+    blocks = ocr_real_blocks(buckets, num_partitions)
+    return assemble_spans(documents, blocks, spans=spans)
 
 
-def _ocr_page_fused(doc_id: str, offset: int, ref: str, kind: str,
-                    page_index: int, desc: str, out: dict[str, list]) -> None:
+def extract_documents(
+    documents: DataFrame,
+    media: DataFrame,
+    num_partitions: int | None = None,
+    broadcast_spans: bool | None = None,
+    share_spans: "bool | str" = True,
+) -> DataFrame:
+    """:func:`extract_real_documents` at one page per bucket."""
+    return extract_real_documents(documents, media, 1, num_partitions,
+                                  broadcast_spans, share_spans)
+
+
+def _ocr_page_fused(doc_id: str, offset: int, ref: str, page_index: int,
+                    img: np.ndarray, out: dict[str, list]) -> None:
     """One page under the one-shot fused semantics (``orchestrator.py:34-113``,
     exact port pinned by :func:`ocr_platform_spark.oracle.run_ocr_fused`):
     preprocess BEFORE detect, boxes emitted in preprocessed coords (no
@@ -615,7 +850,7 @@ def _ocr_page_fused(doc_id: str, offset: int, ref: str, kind: str,
     crop height only). Detection scans the whole page, so the preprocessed
     raster is materialized eagerly — the lazy ``PrepView`` window trick only
     pays when downstream reads are sparse crops of an un-detected page."""
-    img = raster.preprocess_image(_render(kind, desc))
+    img = raster.preprocess_image(img)
     h_prep, w_prep = img.shape[:2]
     boxes = kernels.detect_text_boxes(img)
     rec = kernels.predict_batch([raster.crop(img, b) for b in boxes])
@@ -625,16 +860,24 @@ def _ocr_page_fused(doc_id: str, offset: int, ref: str, kind: str,
                   for b, (text, conf) in zip(boxes, rec)])
 
 
+def _ocr_bucket_fused(doc_id: str, offset: int, ref: str, kind: str,
+                      lo: int, hi: int, sliced: bool, data: bytes,
+                      out: dict[str, list]) -> None:
+    for page_index, img in _bucket_rasters(kind, lo, hi, sliced, data):
+        _ocr_page_fused(doc_id, offset, ref, page_index, img, out)
+
+
 def _ocr_batches_fused(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     for pdf in batches:
-        yield _block_frame(pdf, _PAGE_COLS, _ocr_page_fused)
+        yield _block_frame(pdf, _BUCKET_COLS, _ocr_bucket_fused)
 
 
 def ocr_blocks_fused(pages: DataFrame, num_partitions: int | None = None) -> DataFrame:
-    """Fused-semantics twin of :func:`ocr_blocks`: same skew-spreading page
-    repartition, different per-page kernel (one-shot ``run_ocr`` coordinate
+    """Fused-semantics twin of :func:`ocr_blocks` over the same bucket rows
+    (:func:`decode_pages`): same skew-spreading bucket repartition,
+    different per-page raster kernel (one-shot ``run_ocr`` coordinate
     convention — VERDICT round 1 "What's missing" #4)."""
-    return _spread(pages, "page_index", num_partitions, _ocr_batches_fused,
+    return _spread(pages, "bucket_index", num_partitions, _ocr_batches_fused,
                    BLOCK)
 
 
@@ -646,7 +889,7 @@ def extract_documents_fused(
 ) -> DataFrame:
     """End-to-end extraction under the one-shot fused ``run_ocr`` semantics:
     blocks carry preprocessed-image coordinates and crop-height-keyed strip
-    splits. The relational plan (decode explode, page repartition, sentinel
+    splits. The relational plan (probe explode, bucket repartition, sentinel
     assembly) is shared with :func:`extract_documents` — only the in-UDF
     per-page kernel differs, so every 100-TB posture argument (incl. the
     localCheckpoint executor-loss caveat documented there) carries over."""
@@ -659,31 +902,33 @@ def extract_documents_fused(
 def detect_boxes_table(pages: DataFrame, num_partitions: int | None = None) -> DataFrame:
     """The persisted detect/recognize boundary (FIXTURES.md §3) — the
     ``detect_result`` column analog (``apps/worker/app/db/models.py:26``),
-    for workflows that checkpoint detect output before recognition."""
+    for workflows that checkpoint detect output before recognition.
+    ``pages``: bucket rows (:func:`decode_pages`)."""
 
     def _detect(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows: list[tuple] = []
-            for doc_id, offset, ref, kind, page_index, desc in zip(
-                *(pdf[c] for c in _PAGE_COLS)
+            for doc_id, offset, ref, kind, lo, hi, sliced, data in zip(
+                *(pdf[c] for c in _BUCKET_COLS)
             ):
-                img = _render(kind, desc)
-                h, w = img.shape[:2]
-                rows.extend(
-                    (doc_id, offset, ref, page_index, w, h, i, *box)
-                    for i, box in enumerate(kernels.detect_text_boxes(img))
-                )
+                for page_index, img in _bucket_rasters(kind, lo, hi, sliced,
+                                                       data):
+                    h, w = img.shape[:2]
+                    rows.extend(
+                        (doc_id, offset, ref, page_index, w, h, i, *box)
+                        for i, box in enumerate(kernels.detect_text_boxes(img))
+                    )
             res = pd.DataFrame(rows, columns=_BOX_COLS)
             for c in ("offset", *_BOX_COLS[3:]):
                 res[c] = res[c].astype("int32")
             yield res
 
-    # same page-key skew spread as ocr_blocks/recognize_with_boxes: without
-    # it the stage inherits decode's (doc_id, offset) partitioning and one
-    # heavy-tail PDF's render+detect serializes on a single task. offset is
-    # part of the key: the same media_ref may be referenced by several
+    # same bucket-key skew spread as ocr_blocks: without it the stage
+    # inherits the probe's (doc_id, offset) partitioning and one
+    # heavy-tail PDF's render+detect serializes on a single task. offset
+    # is part of the key: the same media_ref may be referenced by several
     # spans of one document; detect/recognize state is per span
-    return _spread(pages, "page_index", num_partitions, _detect, schema=(
+    return _spread(pages, "bucket_index", num_partitions, _detect, schema=(
         "doc_id string, offset int, media_ref string, page_index int, "
         "width int, height int, block_index int, x1 int, y1 int, "
         "x2 int, y2 int"
@@ -693,15 +938,16 @@ def detect_boxes_table(pages: DataFrame, num_partitions: int | None = None) -> D
 # --- two-phase path: recognize from (possibly human-edited) boxes ------------
 
 
-def _recognize_page(doc_id: str, offset: int, ref: str, kind: str,
-                    page_index: int, desc: str, xs1, ys1, xs2, ys2,
-                    width: int, height: int, out: dict[str, list]) -> None:
+def _recognize_bucket(doc_id: str, offset: int, ref: str, kind: str,
+                      lo: int, hi: int, sliced: bool, data: bytes,
+                      page_index: int, xs1, ys1, xs2, ys2, width: int,
+                      height: int, out: dict[str, list]) -> None:
     boxes = list(zip(map(int, xs1), map(int, ys1),
                      map(int, xs2), map(int, ys2)))
-    if not boxes:
-        return  # empty-page passthrough, no render (orchestrator.py:133-137)
-    rows = _ocr_rows(_render(kind, desc), boxes, (width, height))
-    _emit_blocks(out, doc_id, offset, ref, page_index, rows)
+    for pi, img in _bucket_rasters(kind, lo, hi, sliced, data):
+        if pi == page_index:
+            rows = _ocr_rows(img, boxes, (width, height))
+            _emit_blocks(out, doc_id, offset, ref, page_index, rows)
 
 
 def _recognize_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -710,9 +956,10 @@ def _recognize_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame
     preprocessed raster for cropping, keep original coords + heights —
     the shared kernel :func:`_ocr_rows` run from the given boxes."""
     for pdf in batches:
-        yield _block_frame(pdf, _PAGE_COLS + ("xs1", "ys1", "xs2", "ys2",
-                                              "width", "height"),
-                           _recognize_page)
+        yield _block_frame(pdf, _BUCKET_COLS + ("page_index", "xs1", "ys1",
+                                                "xs2", "ys2", "width",
+                                                "height"),
+                           _recognize_bucket)
 
 
 def recognize_with_boxes(
@@ -722,10 +969,15 @@ def recognize_with_boxes(
     the ``run_ocr_job`` path (``ocr_tasks.py:192-254``): detect output is
     persisted/edited, recognition re-runs from it.
 
-    ``boxes``: output shape of :func:`detect_boxes_table` (block_index
-    gives the detector/editor emission order; ``width``/``height`` are the
+    ``pages``: bucket rows (:func:`decode_pages`); each joins the pages
+    of its ``[page_lo, page_hi)`` range that have boxes, and the task
+    recognizes that one page of the decoded bucket. ``boxes``: output
+    shape of :func:`detect_boxes_table` (block_index gives the
+    detector/editor emission order; ``width``/``height`` are the
     detect-time original page dims that the crop scaling must use; 0
-    falls back to the rendered page's own dimension).
+    falls back to the rendered page's own dimension). Pages without
+    boxes are the empty-page passthrough (orchestrator.py:133-137): no
+    row, no decode.
     """
     per_page = boxes.groupBy("doc_id", "offset", "media_ref", "page_index").agg(
         F.sort_array(
@@ -740,7 +992,9 @@ def recognize_with_boxes(
         F.transform("bs", lambda b: b["x2"]).alias("xs2"),
         F.transform("bs", lambda b: b["y2"]).alias("ys2"),
     )
-    joined = pages.join(
+    page_rows = pages.filter(F.col("page_hi") > F.col("page_lo")).withColumn(
+        "page_index", F.explode(F.sequence("page_lo", F.col("page_hi") - 1)))
+    joined = page_rows.join(
         per_page, ["doc_id", "offset", "media_ref", "page_index"], "inner")
     return _spread(joined, "page_index", num_partitions, _recognize_batches,
                    BLOCK)
@@ -760,7 +1014,7 @@ def extract_documents_two_phase(
 
     ``pages`` is lazily localCheckpoint-ed: the detect and recognize
     phases both consume it, and without the share each re-runs the full
-    payload join + container decode (same executor-loss caveat as
+    payload join + probe (same executor-loss caveat as
     :func:`extract_documents` — checkpoint blocks are not replicated, so
     on preemptible clusters wrap with the lineage resume path)."""
     sp = shared_exploded_spans(documents)

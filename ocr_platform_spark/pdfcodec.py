@@ -1352,7 +1352,7 @@ class _Slicer:
     Everything else (other pages' streams, annots, metadata) is dropped.
 
     This is the shuffle-amplification fix for the distributed OCR
-    bucket explode (operators/extract_real.py): instead of ⌈pages/K⌉
+    bucket explode (operators/extract.py): instead of ⌈pages/K⌉
     full-payload copies crossing the bucket shuffle, each bucket row
     carries ~size·K/pages bytes — the whole document's bytes cross the
     wire ~once in total, like the byte-range reads a cloud-storage

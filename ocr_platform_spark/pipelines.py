@@ -3,7 +3,7 @@ training corpus out.
 
 Every stage already exists as a first-class operator — ingestion
 sources (:mod:`.sources.warc`, :mod:`.sources.tarshard`), the tier
-extraction pipeline (:mod:`.operators.extract_real`), and the
+extraction pipeline (:mod:`.operators.extract`), and the
 column-expression stats/curation family (:mod:`.functions`). This
 module is the thin composition layer that chains them over EXTRACTED
 output instead of the benchmark's ``documents`` parquet table, reusing

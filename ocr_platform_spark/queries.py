@@ -582,9 +582,11 @@ def extract_fused(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def media_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corrupt-payload quarantine path: two payloads deterministically
-    corrupted; the errors table must surface exactly those, while
-    extraction of the rest proceeds (tests/test_quarantine.py pins the
-    full invariant)."""
+    corrupted, while extraction of the rest proceeds
+    (tests/test_quarantine.py pins the full invariant). The errors table
+    holds one row: the truncated container. ``b"XXXXXgarbage"`` has no
+    magic but is clean UTF-8, so the probe names it the plain-text tier
+    and it extracts as one text span instead of quarantining."""
     docs, media = corpus_mod.generate(_CORPUS_DOCS, max_pages=_CORPUS_MAX_PAGES)
     refs = sorted(media)
     media[refs[0]]["data"] = b"XXXXXgarbage"

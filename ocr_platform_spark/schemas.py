@@ -50,19 +50,6 @@ MEDIA = StructType(
     ]
 )
 
-# decode-stage output: one row per page, compact descriptor (no raster crosses
-# a shuffle) — the page-level explode that fixes skew (SURVEY.md §4)
-PAGE_TASK = StructType(
-    [
-        StructField("doc_id", StringType(), False),
-        StructField("offset", IntegerType(), False),
-        StructField("media_ref", StringType(), False),
-        StructField("media_kind", StringType(), False),  # "pdf" | "image"
-        StructField("page_index", IntegerType(), False),
-        StructField("page_desc", StringType(), False),  # JSON PageDesc for this page
-    ]
-)
-
 # heavy-stage output: one row per recognized block, boxes in original page
 # coords (detect_result corner semantics, detect.py:119 / FIXTURES.md §3)
 BLOCK = StructType(

@@ -2,7 +2,7 @@
 
 Local-mode values mirror what a 1000-executor deployment would set cluster-wide
 (SURVEY.md §4): AQE on (post-shuffle coalesce + skew-join splitting), Arrow
-batches sized so one batch of page descriptors ≈ one in-UDF inference batch,
+batches sized so one batch of page buckets ≈ one in-UDF inference batch,
 shuffle partitions sized to cores (overridden per-job at scale).
 """
 
@@ -31,13 +31,13 @@ def get_spark(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        # Arrow transfer for all pandas UDF stages; a batch of page descriptors
+        # Arrow transfer for all pandas UDF stages; a batch of page buckets
         # is the in-UDF inference batch (ref model-batching analog,
         # vietocr_engine.py:130-141) — small enough that a batch of *rendered*
         # pages fits comfortably in executor memory (SURVEY.md §7.3 item 5)
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "256")
-        # descriptor rows are tiny; parquet splits stay balanced at scale
+        # bucket rows are tiny; parquet splits stay balanced at scale
         .config("spark.sql.files.maxPartitionBytes", "128m")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))

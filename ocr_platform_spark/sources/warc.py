@@ -25,7 +25,7 @@ plan shape the rest of the repo uses:
   records to ``documents(doc_id, spans)`` + ``media(media_ref, ...)``:
   each HTTP 2xx ``response`` (and each ``resource``/``conversion``)
   becomes one document with a single media span; the downstream
-  probe/quarantine contract (:mod:`..operators.extract_real`) handles
+  probe/quarantine contract (:mod:`..operators.extract`) handles
   payload triage, so ingestion never decodes anything.
 * :func:`extract_warc` — the end-to-end composition: archives in,
   reading-ordered span arrays out.

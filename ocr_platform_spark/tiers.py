@@ -1,7 +1,7 @@
-"""The real-codec tier table: which media kinds exist and how each one
-is decoded. Spark-free; both the deep probe
-(:func:`.multimodal.probe_real_media`) and the OCR stage
-(:mod:`.operators.extract_real`) read it.
+"""The tier table: which media kinds exist and how each one is
+decoded. Spark-free; both the deep probe
+(:func:`.multimodal.probe_real_media`) and the one OCR stage
+(:mod:`.operators.extract`) read it.
 
 :data:`TIERS` has one :class:`Tier` per probe ``media_kind``:
 ``(slicer | None, pages, walk | None)``. ``pages(raw, page_indices)``
@@ -14,8 +14,12 @@ ordinals). A part is either a text block (duck-typed on
 ``page_indices -> sub-document`` cut used at probe time; single-page
 tiers have none. ``page_indices`` is ``None`` for a sliced payload
 (it holds exactly the bucket's pages) and the bucket's global page
-range otherwise. The entries fall into four groups:
+range otherwise. The entries fall into five groups:
 
+- **Synthetic containers** (SPDF1/SIMG1, :mod:`.formats`): each page
+  renders through :func:`_render` to one raster. The slicer parses the
+  container once and re-encodes the bucket's pages as a minimal SPDF1,
+  so a one-page bucket row carries a ~200-byte sub-container.
 - **PDF**: always the per-page hybrid
   :func:`.pdftext.extract_hybrid_pages`. A born-digital page parses its
   text layer; a scanned page rasterizes through the exact
@@ -48,7 +52,7 @@ import numpy as np
 from . import (bmpcodec, csvtext, docxtext, emltext, epubtext, formats,
                gifcodec, htmltext, jpegcodec, jsontext, latextext, mdtext,
                odttext, pdfcodec, pdftext, plaintext, pngcodec, pptxtext,
-               rtftext, subtext, tiffcodec, xlsxtext, xmltext)
+               raster, rtftext, subtext, tiffcodec, xlsxtext, xmltext)
 
 #: raster codecs an embedded picture decodes through (the OCR
 #: interleave subset; anything else — EMF/WMF vectors, nested
@@ -101,6 +105,28 @@ class Tier(NamedTuple):
     walk: Callable | None = None
 
 
+def _render(kind: str, page: formats.PageDesc) -> np.ndarray:
+    """Render one synthetic page to its grayscale raster (``kind`` from
+    :func:`.formats.decode_media`: PDF pages are in PDF units, image
+    pages in pixels)."""
+    unit_scale = raster.PDF_UNIT_SCALE if kind == "pdf" else 1.0
+    return raster.render_page(page, unit_scale)
+
+
+def _synthetic_pages(raw: bytes, page_indices) -> list:
+    kind, pages = formats.decode_media(raw)
+    if page_indices is not None:
+        pages = [pages[i] for i in page_indices]
+    rasters = [_render(kind, p) for p in pages]
+    return [([r], r.shape[1], r.shape[0]) for r in rasters]
+
+
+def _synthetic_slicer(raw: bytes):
+    _kind, pages = formats.decode_media(raw)
+    return lambda page_indices: formats.encode_pdf(
+        [pages[i] for i in page_indices])
+
+
 def _pdf_pages(raw: bytes, page_indices) -> list:
     return [
         (body if kind == "text" else [body], w, h)
@@ -142,6 +168,8 @@ def _sliced_by(slice_pages):
 #: kind the probe can return but this table lacks raises at the OCR
 #: stage instead of silently extracting nothing.
 TIERS = {
+    "spdf": Tier(_synthetic_slicer, _synthetic_pages),
+    "simg": Tier(None, _synthetic_pages),
     "pdf": Tier(lambda raw: pdfcodec._Slicer(raw).slice, _pdf_pages),
     "image": Tier(None, _raster_pages),
     "tiff": Tier(_sliced_by(tiffcodec.slice_pages), _raster_pages),

@@ -14,7 +14,7 @@ names a stdlib-decodable compression format inflates (bomb-capped,
 strict) and the INNER bytes re-enter the probe ladder as if they had
 arrived bare. The unwrap happens once per payload at the two seam
 call sites (:func:`..multimodal.probe_real_media` with ``deep=True``
-and the bucket-explode stage in :mod:`..operators.extract_real`), so
+and the bucket-explode stage in :mod:`..operators.extract`), so
 every downstream feature —
 per-page bucket slicing, text-layer hybrid dispatch, tier extraction,
 quarantine triage — works identically on wrapped and bare payloads.

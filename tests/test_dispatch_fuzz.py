@@ -71,6 +71,13 @@ def _fixtures() -> dict[str, bytes]:
         "gif": gifcodec.encode_gif(
             [_rng(5).integers(0, 256, (24, 32), dtype=np.uint8)]),
         "bmp": bmpcodec.encode_bmp(_img(6)),
+        # the synthetic containers are tiers too: zlib's adler32 guards
+        # the body, so a corrupt one refuses with ValueError at the probe
+        "spdf": formats.encode_pdf([
+            formats.PageDesc(60, 40, [formats.Band(4, 4, ["abc", "de"])]),
+            formats.PageDesc(50, 30)]),
+        "simg": formats.encode_image(
+            formats.PageDesc(48, 32, [formats.Band(2, 2, ["xyz"])])),
         "html": (b"<!doctype html><html><head><title>t</title></head>"
                  b"<body><p>alpha beta</p><p>gamma</p></body></html>"),
         "docx": docxtext.encode_docx(

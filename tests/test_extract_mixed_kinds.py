@@ -94,7 +94,8 @@ def test_all_tiers_in_one_job(spark):
 def test_tier_table_keys_are_the_probe_kinds():
     """Every kind the deep probe returns has exactly one tier-table
     entry and vice versa: the rotation above plus the codecs it does not
-    reach (a GIF, a PNG image, a subtitle track)."""
+    reach (a GIF, a PNG image, a subtitle track) and the synthetic
+    SPDF1/SIMG1 originals."""
     docs, media = corpus.generate(30, seed=4242, max_pages=6)
     payloads = [tier_payload(i, m["data"])[0]
                 for i, (_ref, m) in enumerate(sorted(media.items()))]
@@ -102,6 +103,7 @@ def test_tier_table_keys_are_the_probe_kinds():
     payloads += [gifcodec.encode_gif([pages[0]]),
                  pngcodec.encode_png(np.stack([pages[0]] * 3, axis=-1)),
                  subtext.encode_vtt(["one cue"])]
+    payloads += [m["data"] for m in media.values()]
     kinds = {multimodal.probe_real_media(p, deep=True)[0] for p in payloads}
     assert kinds == set(extract_real.TIERS)
 
@@ -113,4 +115,18 @@ def test_unregistered_kind_raises_instead_of_extracting_nothing():
         "sliced": [False], "data": [b"payload"],
     })
     with pytest.raises(KeyError, match="no-such-tier"):
-        extract_real._ocr_real_frame(frame)
+        extract._ocr_real_frame(frame)
+
+
+def test_raster_kernels_refuse_a_page_that_is_not_a_lone_raster():
+    """The per-page raster kernels (fused, detect, recognize) run on the
+    same bucket rows as the one OCR stage; a text-tier page raises,
+    naming the kind, instead of extracting nothing."""
+    frame = pd.DataFrame({
+        "doc_id": ["d1"], "offset": [0], "media_ref": ["m1"],
+        "media_kind": ["txt"], "page_lo": [0], "page_hi": [1],
+        "sliced": [False], "data": [b"alpha beta\n"],
+    })
+    assert len(extract._ocr_real_frame(frame)) == 1
+    with pytest.raises(ValueError, match="'txt' page 0 is not a lone raster"):
+        list(extract._ocr_batches_fused(iter([frame])))

@@ -264,22 +264,33 @@ def test_payload_slicing_equal_output_and_smaller_shuffle(real_corpus):
     assert sliced_total < corpus_bytes * 1.5  # ~once in total, not x pages
 
 
-def test_synthetic_payloads_quarantine_not_crash(real_corpus):
-    """Feeding SPDF1/SIMG1 bytes to the real pipeline quarantines every
-    media span (probe-time ValueError) and still re-emits the text spans."""
-    docs_df, synth, _real = real_corpus
-    buckets = extract_real.real_page_buckets(docs_df, synth)
-    errors = extract_real.real_media_errors(buckets).collect()
-    assert errors and all("synthetic container" in r["error"] for r in errors)
-    out = _spans_by_doc(extract_real.extract_real_documents(docs_df, synth))
-    # media spans vanish (no OCR possible) but text spans survive in order
-    docs = {r["doc_id"]: r for r in docs_df.collect()}
-    for doc_id, got in out.items():
-        expected_texts = [
-            s["text"].strip() for s in docs[doc_id]["spans"]
-            if s["kind"] == "text"
-        ]
-        assert [t for (_k, t, _m, _o) in got] == expected_texts
+def test_mixed_synthetic_and_real_media_extract_identically(real_corpus):
+    """One dispatch for every media kind: a media table holding the
+    SPDF1/SIMG1 payloads next to their PNG/scanned-PDF re-encodings
+    (each referenced by a twin document) extracts through both entry
+    names with zero error rows, identical span arrays, and every twin
+    equal to its synthetic original."""
+    docs_df, synth, real = real_corpus
+    media = synth.unionByName(real.withColumn(
+        "media_ref", F.concat("media_ref", F.lit("-real"))))
+    twins = docs_df.select(
+        F.concat("doc_id", F.lit("-real")).alias("doc_id"),
+        F.transform("spans", lambda s: s.withField(
+            "media_ref", F.concat(s["media_ref"], F.lit("-real")))
+        ).alias("spans"))
+    docs = docs_df.unionByName(twins)
+    assert extract.media_errors(extract.decode_pages(docs, media)).count() == 0
+    assert extract_real.real_media_errors(
+        extract_real.real_page_buckets(docs, media)).count() == 0
+    flagship = _spans_by_doc(extract.extract_documents(docs, media))
+    assert _spans_by_doc(
+        extract_real.extract_real_documents(docs, media)) == flagship
+    originals = [d for d in flagship if not d.endswith("-real")]
+    assert len(flagship) == 2 * len(originals)
+    for doc_id in originals:
+        assert flagship[f"{doc_id}-real"] == [
+            (k, t, m and f"{m}-real", o) for k, t, m, o in flagship[doc_id]
+        ], doc_id
 
 
 def test_probe_quarantines_structurally_corrupt_images():
@@ -574,7 +585,7 @@ def test_hybrid_bucket_drops_atomically_on_mid_doc_decode_failure():
         "media_kind": ["pdf"], "page_lo": [0], "page_hi": [2],
         "sliced": [False], "data": [raw],
     })
-    res = extract_real._ocr_real_frame(frame)
+    res = extract._ocr_real_frame(frame)
     assert len(res) == 0
 
 

@@ -293,7 +293,10 @@ def _node_below(plan: str, udf: str) -> str:
 def test_heavy_stages_sit_on_the_skew_spread(spark, corpus_dir):
     """Every heavy stage's MapInPandas runs directly on the explicit hash
     repartition on (doc_id, offset, page or bucket index), 3x
-    defaultParallelism partitions by default, num_partitions when given."""
+    defaultParallelism partitions by default, num_partitions when given.
+    The one probe stage, for the synthetic and the real-codec entry
+    alike, runs directly on the payload join: a spread in front of it
+    cost more than it parallelized (docs/SCALE.md)."""
     import re
 
     from ocr_platform_spark.operators import extract, extract_real
@@ -304,11 +307,12 @@ def test_heavy_stages_sit_on_the_skew_spread(spark, corpus_dir):
     boxes = extract.detect_boxes_table(pages)
     buckets = extract_real.real_page_buckets(docs, media)
     stages = [
-        (lambda n: extract.ocr_blocks(pages, n), "_ocr_batches", "page_index"),
+        (lambda n: extract.ocr_blocks(pages, n), "_ocr_real_batches",
+         "bucket_index"),
         (lambda n: extract.ocr_blocks_fused(pages, n), "_ocr_batches_fused",
-         "page_index"),
+         "bucket_index"),
         (lambda n: extract.detect_boxes_table(pages, n), "_detect",
-         "page_index"),
+         "bucket_index"),
         (lambda n: extract.recognize_with_boxes(pages, boxes, n),
          "_recognize_batches", "page_index"),
         (lambda n: extract_real.ocr_real_blocks(buckets, n),
@@ -324,3 +328,6 @@ def test_heavy_stages_sit_on_the_skew_spread(spark, corpus_dir):
                 rf"{index}#\d+, {want}\), REPARTITION_BY_NUM", below
             ), (udf, n, below)
     assert extract.ocr_blocks(pages, 5).rdd.getNumPartitions() == 5
+    for rows in (pages, buckets):
+        below = _node_below(_plan_of(rows), "_bucket_batches")
+        assert below.startswith(("Project", "BroadcastHashJoin")), below

@@ -19,16 +19,22 @@ def _dfs(spark, docs, media):
 
 def test_corrupt_media_quarantined_not_fatal(spark):
     docs, media = corpus.generate(12, seed=21, max_pages=4)
-    # corrupt one payload: bad magic; and one with truncated body
+    # corrupt three payloads: no magic but clean UTF-8 (the probe names
+    # the plain-text tier, so it extracts as text), no magic and not
+    # UTF-8, and a truncated container body (the last two quarantine)
     refs = sorted(media)
     media[refs[0]]["data"] = b"XXXXXgarbage"
     media[refs[1]]["data"] = media[refs[1]]["data"][:8]
+    media[refs[2]]["data"] = b"XXXXX\xffgarbage"
+    bad = {refs[1], refs[2]}
     docs_df, media_df = _dfs(spark, docs, media)
 
     pages = extract.decode_pages(docs_df, media_df)
-    errors = extract.media_errors(pages).collect()
-    assert {e["media_ref"] for e in errors} == {refs[0], refs[1]}
-    assert all(e["error"] for e in errors)
+    errors = {e["media_ref"]: e["error"]
+              for e in extract.media_errors(pages).collect()}
+    assert set(errors) == bad
+    assert all(errors.values())
+    assert "not valid utf-8 text" in errors[refs[2]]
 
     out = extract.extract_documents(docs_df, media_df)
     # every input document still present
@@ -37,19 +43,24 @@ def test_corrupt_media_quarantined_not_fatal(spark):
     bad_doc_ids = {
         d["doc_id"]
         for d in docs
-        if any(s["media_ref"] in (refs[0], refs[1]) for s in d["spans"])
+        if any(s["media_ref"] in bad for s in d["spans"])
     }
+    assert bad_doc_ids
     rows = {r["doc_id"]: r["spans"] for r in out.collect()}
     for doc_id in bad_doc_ids:
         src = next(d for d in docs if d["doc_id"] == doc_id)
         n_text = sum(1 for s in src["spans"] if s["kind"] == "text")
         kept = [s for s in rows[doc_id] if s["media_ref"] is None]
         assert len(kept) == n_text
-    # no span text from the corrupt refs
-    leaked = out.select(F.explode("spans").alias("s")).filter(
-        F.col("s.media_ref").isin(refs[0], refs[1])
-    )
-    assert leaked.count() == 0
+    # no span text from the quarantined refs
+    spans = out.select(F.explode("spans").alias("s"))
+    assert spans.filter(F.col("s.media_ref").isin(*bad)).count() == 0
+    # the text-tier payload extracts as one text span per referencing span
+    n_refs = sum(s["media_ref"] == refs[0] for d in docs for s in d["spans"])
+    assert n_refs
+    assert [r["text"] for r in spans.filter(
+        F.col("s.media_ref") == refs[0]).select("s.text").collect()] == [
+        "XXXXXgarbage"] * n_refs
 
 
 def test_clean_corpus_has_no_errors(spark):

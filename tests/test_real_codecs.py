@@ -28,16 +28,38 @@ def test_sniff_kind_magic_dispatch():
 
 
 def test_decode_media_names_the_real_codec_seam():
-    with pytest.raises(ValueError, match=r"\(pdf\).*extract_real_documents"):
+    with pytest.raises(ValueError, match=r"\(pdf\).*tiers\.TIERS"):
         formats.decode_media(b"%PDF-1.4\n...")
     with pytest.raises(ValueError, match="unknown media magic"):
         formats.decode_media(b"nonsense-bytes")
 
 
-def test_probe_rejects_synthetic_containers():
-    raw = formats.encode_image(formats.PageDesc(width=4, height=4))
-    with pytest.raises(ValueError, match="synthetic container"):
-        multimodal.probe_real_media(raw, deep=True)
+def test_probe_names_synthetic_containers():
+    """The synthetic containers are tiers like any other: deep (the full
+    parse) and shallow (the page-count probe) both name the kind with
+    the container's page count, and a corrupt body refuses with a
+    ValueError, the quarantine contract."""
+    pages = [formats.PageDesc(width=40 + i, height=30) for i in range(3)]
+    spdf = formats.encode_pdf(pages)
+    simg = formats.encode_image(formats.PageDesc(width=4, height=4))
+    for deep in (True, False):
+        assert multimodal.probe_real_media(spdf, deep=deep) == ("spdf", 3, 0, 0)
+        assert multimodal.probe_real_media(simg, deep=deep) == ("simg", 1, 0, 0)
+        with pytest.raises(ValueError, match="corrupt synthetic container"):
+            multimodal.probe_real_media(spdf[:12], deep=deep)
+
+
+def test_real_media_metadata_reports_synthetic_containers(spark):
+    pages = [formats.PageDesc(width=40, height=30)] * 2
+    media = spark.createDataFrame(
+        [("m-spdf", bytearray(formats.encode_pdf(pages))),
+         ("m-simg", bytearray(formats.encode_image(pages[0]))),
+         ("m-bad", bytearray(b"SPDF1 not zlib"))],
+        "media_ref string, data binary")
+    rows = {r["media_ref"]: tuple(r)[1:]
+            for r in multimodal.real_media_metadata(media).collect()}
+    assert rows == {"m-spdf": ("spdf", 2, 0, 0), "m-simg": ("simg", 1, 0, 0),
+                    "m-bad": ("error", 0, 0, 0)}
 
 
 def test_real_png_decode():
