@@ -1,11 +1,15 @@
 """Office sub-zip slicing exhibit: bytes crossing the bucket shuffle.
 
-The claim (docs/SCALE.md "office tiers"): with ``slice_payloads=True`` a
-multi-slide deck crosses the bucket shuffle ~once in total, instead of
-⌈pages/K⌉ full-payload copies. This measures it directly — the bucket
-stage's ``data`` column is exactly what the (doc_id, offset,
+The claim (docs/SCALE.md "office tiers"): a multi-slide deck cut by its
+slicer crosses the bucket shuffle ~once in total at any bucket size K,
+instead of ⌈pages/K⌉ full-payload copies. This measures it directly —
+the bucket stage's ``data`` column is exactly what the (doc_id, offset,
 bucket_index) repartition moves, so ``sum(length(data))`` over the
-bucket frame IS the shuffled payload volume.
+bucket frame IS the shuffled payload volume. Arms: the default one page
+per bucket and eight pages per bucket; the full-copy figure each is
+compared with is its bucket-row count times the payload size (what the
+slicer-failure fallback ships). Extraction at K=1 must equal the
+whole-payload bucket (``bucket_pages=None``).
 
 Run: python BENCH/office_slice_exhibit.py
 Prints one JSON line; appends to BENCH/OFFICE_SLICE.json.
@@ -17,16 +21,15 @@ import json
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
 from ocr_platform_spark import epubtext, pptxtext, schemas
-from ocr_platform_spark.operators import extract_real
+from ocr_platform_spark.operators import extract
 from ocr_platform_spark.session import get_spark
 
 N_SLIDES = 300
-BUCKET_PAGES = 8
 
 
 def main() -> None:
@@ -56,13 +59,12 @@ def main() -> None:
         "media_ref string, data binary",
     )
     out: dict = {
-        "n_pages": N_SLIDES, "bucket_pages": BUCKET_PAGES,
+        "n_pages": N_SLIDES,
         "payload_bytes": {"pptx": len(deck), "epub": len(book)},
     }
-    for label, sliced in (("sliced", True), ("full_copy", False)):
-        buckets = extract_real.real_page_buckets(
-            docs, media, bucket_pages=BUCKET_PAGES,
-            slice_payloads=sliced,
+    for k in (1, 8):
+        buckets = extract.decode_pages(
+            docs, media, bucket_pages=k,
         ).filter(F.col("media_kind") != "error")
         rows = (
             buckets.groupBy("media_kind")
@@ -70,23 +72,17 @@ def main() -> None:
                  F.count("*").alias("bucket_rows"))
             .collect()
         )
-        out[label] = {r["media_kind"]: {
+        out[f"bucket{k}"] = {r["media_kind"]: {
             "shuffled_bytes": int(r["bytes"]),
             "bucket_rows": int(r["bucket_rows"]),
+            "amplification_sliced": round(
+                r["bytes"] / out["payload_bytes"][r["media_kind"]], 2),
+            "amplification_full_copy": int(r["bucket_rows"]),
         } for r in rows}
-    for kind in ("pptx", "epub"):
-        out[f"{kind}_amplification_full"] = round(
-            out["full_copy"][kind]["shuffled_bytes"]
-            / out["payload_bytes"][kind], 2)
-        out[f"{kind}_amplification_sliced"] = round(
-            out["sliced"][kind]["shuffled_bytes"]
-            / out["payload_bytes"][kind], 2)
-    # equality of extraction under both modes (the exhibit must not
-    # trade correctness): spans identical
-    a = extract_real.extract_real_documents(
-        docs, media, bucket_pages=BUCKET_PAGES, slice_payloads=True)
-    b = extract_real.extract_real_documents(
-        docs, media, bucket_pages=BUCKET_PAGES, slice_payloads=False)
+    # equality of extraction, sliced one-page buckets vs the
+    # whole-payload bucket (the exhibit must not trade correctness)
+    a = extract.extract_documents(docs, media)
+    b = extract.extract_documents(docs, media, bucket_pages=None)
     sa = {r["doc_id"]: [tuple(s) for s in r["spans"]] for r in a.collect()}
     sb = {r["doc_id"]: [tuple(s) for s in r["spans"]] for r in b.collect()}
     out["extraction_equal"] = sa == sb

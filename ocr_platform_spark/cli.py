@@ -10,9 +10,12 @@ zip (``tools/package.py`` builds it) and this module is the job script —
         --buckets 4096 --chunk-buckets 256
 
 On a cluster the session comes from spark-submit's conf (master,
-executors, memory); the builder here only fills in local-mode defaults
-when the conf is absent, so the same script runs unchanged in both
-worlds. Kernel "weights" (the glyph lookup tables) are plain module
+executors, memory) plus the engine conf it shares with
+:func:`.session.get_spark` (:data:`.session.ENGINE_CONF`), so the same
+script runs unchanged in both worlds. The job is
+:func:`.lineage.run_extract_job`: every media kind, synthetic or real
+codec, runs through the one extraction entry point at one page per
+bucket. Kernel "weights" (the glyph lookup tables) are plain module
 constants inside the zip — materialized on executor-local disk by the
 ``--py-files`` distribution itself, loaded once per worker process
 (the ``lru_cache`` model-singleton analog, SURVEY.md §2.3 M4).
@@ -25,19 +28,14 @@ import argparse
 from pyspark.sql import SparkSession
 
 from .lineage import run_extract_job
+from .session import ENGINE_CONF
 
 
 def build_session(app_name: str = "ocr-extract") -> SparkSession:
-    """Session from spark-submit conf; sensible local defaults otherwise."""
-    b = (
-        SparkSession.builder.appName(app_name)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "256")
-    )
-    return b.getOrCreate()
+    """Session from spark-submit conf plus the engine's
+    :data:`..session.ENGINE_CONF`; sensible local defaults otherwise."""
+    return SparkSession.builder.appName(app_name).config(
+        map=ENGINE_CONF).getOrCreate()
 
 
 def main(argv: list[str] | None = None) -> int:

@@ -462,8 +462,10 @@ def mbox_page_parts(
     walks with attachments kept and parts re-keyed to running ordinals
     — the ``pptxtext.slide_parts`` shape, so raster attachments OCR in
     place between their message's body parts through the paged bucket
-    path. ``page_indices`` selects messages by GLOBAL archive position
-    (the bucket contract, cf. ``pptxtext.slide_parts``). A member
+    path. ``page_indices`` selects messages by their position in ``raw``
+    (the bucket contract, :mod:`.tiers`: global indices into a whole
+    archive; local indices, or ``None`` for all, into a sliced one,
+    whose messages the slicer renumbers from 0). A member
     without an e-mail header block quarantines."""
     msgs = _split_mbox(decode_text(raw))
     if page_indices is not None:
@@ -487,16 +489,29 @@ def slice_messages(raw: bytes, page_indices) -> bytes:
     slicing for page buckets, cf. ``pptxtext.slice_slides``). Slicing
     re-applies mboxrd quoting so a sliced archive re-splits
     identically."""
+    return message_slicer(raw)(page_indices)
+
+
+def message_slicer(raw: bytes):
+    """Decode and split the archive ONCE and return
+    :func:`slice_messages`' cut, ``page_indices -> bytes``."""
     msgs = _split_mbox(decode_text(raw))
-    kept = [msgs[i] for i in page_indices]
-    out: list[str] = []
-    for m in kept:
-        out.append("From sliced@local Thu Jan  1 00:00:00 2026")
-        for ln in m.split("\n"):
-            if ln.lstrip(">").startswith("From "):
-                ln = ">" + ln
-            out.append(ln)
-    return ("\n".join(out) + "\n").encode("utf-8")
+
+    def cut(page_indices) -> bytes:
+        try:
+            kept = [msgs[i] for i in page_indices]
+        except IndexError as e:
+            raise ValueError(f"message index out of range: {e}") from e
+        out: list[str] = []
+        for m in kept:
+            out.append("From sliced@local Thu Jan  1 00:00:00 2026")
+            for ln in m.split("\n"):
+                if ln.lstrip(">").startswith("From "):
+                    ln = ">" + ln
+                out.append(ln)
+        return ("\n".join(out) + "\n").encode("utf-8")
+
+    return cut
 
 
 # ---------------------------------------------------------------------------

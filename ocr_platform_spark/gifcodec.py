@@ -440,7 +440,6 @@ def decode_gif(
     return out
 
 
-@_strict_valueerror
 def slice_pages(raw: bytes, page_indices) -> bytes:
     """Minimal standalone GIF holding only ``page_indices`` (0-based,
     in the given order): header, logical screen descriptor and global
@@ -448,31 +447,43 @@ def slice_pages(raw: bytes, page_indices) -> bytes:
     + local palette + LZW sub-blocks byte-for-byte (never inflated) —
     the GIF analog of ``tiffcodec.slice_pages`` for the distributed-OCR
     bucket explode."""
-    width, height, frames = _parse(raw, want_data=False)
-    try:
-        picked = [frames[i] for i in page_indices]
-    except IndexError as e:
-        raise ValueError(
-            f"frame index out of range (GIF has {len(frames)})"
-        ) from e
-    if not picked:
-        raise ValueError("GIF slice needs at least one frame")
-    # header + LSD (+ GCT): everything before the first block introducer
-    gct_end = 13
-    if raw[10] & 0x80:
-        gct_end += 3 * (2 << (raw[10] & 0x07))
-    out = bytearray(raw[:gct_end])
-    for fr in picked:
-        if fr["transparent"] is not None:
-            # the GCE lives OUTSIDE the frame's verbatim span; dropping
-            # it would silently repaint transparent pixels with their
-            # palette color — re-emit a minimal equivalent GCE
-            out += (b"\x21\xf9\x04\x01\x00\x00"
-                    + bytes([fr["transparent"]]) + b"\x00")
-        start, end = fr["span"]
-        out += raw[start:end]
-    out.append(0x3B)
-    return bytes(out)
+    return page_slicer(raw)(page_indices)
+
+
+@_strict_valueerror
+def page_slicer(raw: bytes):
+    """Walk the block grammar ONCE and return :func:`slice_pages`' cut,
+    ``page_indices -> bytes`` (cf. ``tiffcodec.page_slicer``)."""
+    _width, _height, frames = _parse(raw, want_data=False)
+
+    @_strict_valueerror
+    def cut(page_indices) -> bytes:
+        try:
+            picked = [frames[i] for i in page_indices]
+        except IndexError as e:
+            raise ValueError(
+                f"frame index out of range (GIF has {len(frames)})"
+            ) from e
+        if not picked:
+            raise ValueError("GIF slice needs at least one frame")
+        # header + LSD (+ GCT): everything before the first block introducer
+        gct_end = 13
+        if raw[10] & 0x80:
+            gct_end += 3 * (2 << (raw[10] & 0x07))
+        out = bytearray(raw[:gct_end])
+        for fr in picked:
+            if fr["transparent"] is not None:
+                # the GCE lives OUTSIDE the frame's verbatim span; dropping
+                # it would silently repaint transparent pixels with their
+                # palette color — re-emit a minimal equivalent GCE
+                out += (b"\x21\xf9\x04\x01\x00\x00"
+                        + bytes([fr["transparent"]]) + b"\x00")
+            start, end = fr["span"]
+            out += raw[start:end]
+        out.append(0x3B)
+        return bytes(out)
+
+    return cut
 
 
 @_strict_valueerror

@@ -5,7 +5,7 @@ PDF/layout parse, DOM heuristics").
 A media payload that sniffs as HTML (:func:`..formats.sniff_kind` →
 ``"html"``) is a single reflowable "page" whose content blocks extract
 by DOM heuristics instead of raster + OCR — the third dispatch arm of
-:func:`..operators.extract_real.extract_real_documents`, next to the
+:func:`..operators.extract.extract_documents`, next to the
 scanned raster+OCR path and the born-digital PDF text layer
 (:mod:`..pdftext`). The reference has no HTML path at all (it OCRs
 uploaded PDFs/images only, ``apps/worker/app/tasks/ocr_tasks.py:36-39``);

@@ -13,7 +13,9 @@ equivalent (SURVEY.md §2.9, J3):
   ``(run_id, partition_id, doc_count, span_checksum, wall_time_s,
   completed_at)`` — is appended (FIXTURES.md §4);
 * resume = **left anti join** of the input against completed lineage buckets:
-  a killed run re-does only buckets whose lineage row never committed.
+  a killed run re-does only buckets whose lineage row never committed;
+* each chunk runs the one extraction entry point
+  (:func:`.operators.extract.extract_documents`) for every media kind.
 
 The checksum is order-insensitive across documents within a bucket (task
 order must not matter) but order-exact within each document's span sequence:
@@ -148,18 +150,14 @@ def run_extract_job(
     num_partitions: int | None = None,
     sink=None,
     broadcast_spans: bool = True,
-    pipeline=None,
 ) -> int:
     """Resumable extraction run. Returns the number of chunks executed.
 
-    ``pipeline``: the per-chunk extraction callable
-    ``(documents, media, num_partitions=…, broadcast_spans=…) ->
-    documents_out`` — defaults to :func:`extract_documents`; pass
-    :func:`..operators.extract_real.extract_real_documents` to run the
-    real-codec page-bucket pipeline under the same lineage
-    checkpointing, resume anti-join, and idempotent chunk commits (both
-    pipelines share the sentinel contract assemble_spans provides, which
-    the empty-bucket derivation below relies on).
+    Each chunk runs the one extraction entry point,
+    :func:`extract_documents`, for every media kind (synthetic and
+    real-codec alike); the empty-bucket derivation below relies on the
+    sentinel contract its assembly step provides (one output row per
+    input document).
 
     ``broadcast_spans`` is forwarded to :func:`extract_documents`; the
     chunked path defaults it to True (not the stats-guarded auto mode)
@@ -211,7 +209,7 @@ def run_extract_job(
         subset = docs_pid.filter(F.col("partition_id").isin(chunk)).drop(
             "partition_id"
         )
-        out = (pipeline or extract_documents)(
+        out = extract_documents(
             subset, media, num_partitions=num_partitions,
             broadcast_spans=broadcast_spans,
         )

@@ -23,13 +23,15 @@ Replaces the reference's HTTP/Redis/Postgres/S3 process hops
 ONE pipeline for every media kind: the deep probe
 (:func:`..multimodal.probe_real_media`) names each payload's
 ``media_kind`` and its row in the tier table (:data:`..tiers.TIERS`)
-decides the rest — the synthetic SPDF1/SIMG1 containers included. The
-flagship names (:func:`decode_pages`, :func:`ocr_blocks`,
-:func:`media_errors`, :func:`extract_documents`) are the real-codec
-stages at one page per bucket.
+decides the rest — the synthetic SPDF1/SIMG1 containers included. Each
+stage is one function: :func:`decode_pages`, :func:`ocr_blocks`,
+:func:`media_errors` and :func:`extract_documents`, at
+:data:`DEFAULT_BUCKET_PAGES` (one) page per bucket unless the caller
+passes ``bucket_pages``. :mod:`.extract_real` re-exports them under
+their real-codec names (the same function objects).
 
 1. **probe** (``mapInPandas`` over spans⋈payloads, in the media
-   scan's partitioning — see :func:`real_page_buckets`): transport
+   scan's partitioning — see :func:`decode_pages`): transport
    wrappers inflate once, the deep probe validates the payload
    (quarantining what the OCR stage could not decode as one
    ``media_kind=error`` row, before any payload is duplicated), and
@@ -58,13 +60,13 @@ stages at one page per bucket.
 Scale rationale (100 TB / 10^12 docs):
 
 * **Joins**: spans⋈media broadcasts the narrow span-ref side (see
-  :func:`real_page_buckets`); assembly needs no doc_id re-join
+  :func:`decode_pages`); assembly needs no doc_id re-join
   (sentinel rows).
 * **All relational glue is stock Catalyst** (repartition, collect_list,
   union, joins) — predicate pushdown and column pruning reach the
   parquet scans.
 
-Each decision has one home: :func:`real_page_buckets` (the span-ref ⋈
+Each decision has one home: :func:`decode_pages` (the span-ref ⋈
 payload join and its missing-payload anti-join), :func:`_spread`
 (error-row filter + the skew repartition in front of every heavy
 stage), :func:`_bucket_pages` (a bucket row's decoded pages),
@@ -105,10 +107,12 @@ from ..tiers import TIERS
 
 MEDIA_KIND_ERROR = formats.MEDIA_KIND_ERROR  # quarantined payloads (shared sentinel)
 
-#: pages per OCR task of :func:`extract_real_documents`. ⌈pages/K⌉
-#: payload copies cross the bucket shuffle; K pages of raster work bound
-#: each task's CPU time.
-DEFAULT_BUCKET_PAGES = 8
+#: pages per bucket row (K) of :func:`decode_pages`. K pages of work
+#: bound each OCR task; a sliced payload crosses the bucket shuffle about
+#: once at any K, plus a per-slice overhead that grows as K shrinks. One
+#: page per bucket measured within the runs' spread of eight on both
+#: perfbench workloads (docs/SCALE.md "One page per bucket").
+DEFAULT_BUCKET_PAGES = 1
 
 #: the probe stage's output: one row per page bucket
 BUCKET = (
@@ -118,8 +122,7 @@ BUCKET = (
 )
 
 
-def _bucket_batches_fn(bucket_pages: int | None,
-                       slice_payloads: bool = True):
+def _bucket_batches_fn(bucket_pages: int | None):
     """Stage-1 kernel, the ``_raw_to_pages`` dispatch
     (``ocr_tasks.py:34-55``) without rasterizing. The probe is
     :func:`..multimodal.probe_real_media` with ``deep=True`` (the full
@@ -175,28 +178,31 @@ def _bucket_batches_fn(bucket_pages: int | None,
                     continue
                 k = bucket_pages or max(1, n_pages)
                 lows = range(0, max(1, n_pages), k)
-                slicer, cut = TIERS[kind].slicer, None
-                if slicer is not None and slice_payloads and len(lows) > 1:
-                    # parse once per document; each bucket row then
-                    # carries a minimal sub-document (only its own
-                    # pages) instead of a full-payload copy — the whole
-                    # document crosses the bucket shuffle ~once in
-                    # total instead of ⌈pages/K⌉ times
+                payloads = None  # None: the full payload in every row
+                slicer = TIERS[kind].slicer
+                if slicer is not None and len(lows) > 1:
+                    # the slicer parses the document once; each bucket
+                    # row then carries a minimal sub-document (only its
+                    # own pages) instead of a full-payload copy, so the
+                    # document crosses the bucket shuffle ~once in total
+                    # instead of ⌈pages/K⌉ times
                     try:
                         cut = slicer(raw)
+                        payloads = [cut(range(lo, min(n_pages, lo + k)))
+                                    for lo in lows]
                     except ValueError:
-                        pass
+                        # live, not dead: the slicer reads bytes the
+                        # probe does not (a PPTX/EPUB/XLSX whose
+                        # [Content_Types].xml, mimetype or
+                        # ppt/presentation.xml fails its CRC, which
+                        # the part walk never reads; a TIFF strip past
+                        # the end of the file). The document becomes
+                        # ONE whole-payload bucket, the
+                        # ``bucket_pages=None`` shape, so it ships once
+                        # at any K rather than once per bucket
+                        lows, k = [0], max(1, n_pages)
                 for b, lo in enumerate(lows):
                     hi = min(n_pages, lo + k)
-                    payload, sliced = raw, False
-                    if cut is not None:
-                        try:
-                            payload, sliced = cut(range(lo, hi)), True
-                        except ValueError:
-                            # probe already validated the doc, so this
-                            # is near-dead defensive code: fall back to
-                            # the full payload rather than quarantine
-                            pass
                     out["doc_id"].append(doc_id)
                     out["offset"].append(offset)
                     out["media_ref"].append(ref)
@@ -205,8 +211,9 @@ def _bucket_batches_fn(bucket_pages: int | None,
                     out["page_lo"].append(lo)
                     out["page_hi"].append(hi)
                     out["error"].append(None)
-                    out["sliced"].append(sliced)
-                    out["data"].append(payload)
+                    out["sliced"].append(payloads is not None)
+                    out["data"].append(
+                        raw if payloads is None else payloads[b])
             res = pd.DataFrame(out)
             for c in ("offset", "bucket_index", "page_lo", "page_hi"):
                 res[c] = res[c].astype("int32")
@@ -236,9 +243,10 @@ _BOX_COLS = ("doc_id", "offset", "media_ref", "page_index", "width", "height",
 
 
 def _bucket_pages(kind: str, lo: int, hi: int, sliced: bool,
-                  data: bytes) -> list[tuple]:
+                  data: bytes, only: int | None = None) -> list[tuple]:
     """One bucket row -> its decoded ``(page_index, parts, width,
-    height)`` pages through ``TIERS[kind].pages`` (see :mod:`..tiers`).
+    height)`` pages through ``TIERS[kind].pages`` (see :mod:`..tiers`);
+    ``only`` (a global page index) decodes that one page alone.
 
     The tier lookup sits OUTSIDE the try: a probe kind with no tier is a
     programming error and must fail loudly, not extract nothing. The
@@ -253,12 +261,17 @@ def _bucket_pages(kind: str, lo: int, hi: int, sliced: bool,
     if kind == MEDIA_KIND_ERROR:
         return []
     pages = TIERS[kind].pages
+    lo = int(lo)
+    if only is None:
+        first, indices = lo, None if sliced else list(range(lo, int(hi)))
+    else:
+        first = int(only)
+        indices = [first - lo if sliced else first]
     try:
-        decoded = pages(bytes(data), None if sliced
-                        else list(range(int(lo), int(hi))))
+        decoded = pages(bytes(data), indices)
     except Exception:
         return []
-    return [(int(lo) + i, parts, w, h)
+    return [(first + i, parts, w, h)
             for i, (parts, w, h) in enumerate(decoded)]
 
 
@@ -270,13 +283,14 @@ def _lone_raster(parts: list) -> np.ndarray | None:
 
 
 def _bucket_rasters(kind: str, lo: int, hi: int, sliced: bool,
-                    data: bytes) -> Iterator[tuple[int, np.ndarray]]:
-    """``(page_index, raster)`` per page of one bucket row, for the
-    per-page raster kernels (fused, detect, recognize). A page that is
-    not a lone raster raises — outside the decode try, so it is loud,
-    never a silent zero-block page."""
+                    data: bytes, only: int | None = None,
+                    ) -> Iterator[tuple[int, np.ndarray]]:
+    """``(page_index, raster)`` per page of one bucket row (or its page
+    ``only``), for the per-page raster kernels (fused, detect,
+    recognize). A page that is not a lone raster raises — outside the
+    decode try, so it is loud, never a silent zero-block page."""
     for page_index, parts, _w, _h in _bucket_pages(kind, lo, hi, sliced,
-                                                   data):
+                                                   data, only):
         img = _lone_raster(parts)
         if img is None:
             raise ValueError(
@@ -476,7 +490,7 @@ def shared_exploded_spans(
 
 
 #: Catalyst-stats cap (bytes of the *documents input relation*) above which
-#: the auto mode of :func:`real_page_buckets` refuses the spans-side broadcast
+#: the auto mode of :func:`decode_pages` refuses the spans-side broadcast
 #: pin. The broadcast side is only the 3 narrow ref columns (doc_id,
 #: offset, media_ref — ~50 B/span vs the table's full span text),
 #: so a 32 GiB input estimate keeps the build side
@@ -525,13 +539,13 @@ def _span_refs_fit_broadcast(documents: DataFrame) -> bool:
     return total <= SPAN_BROADCAST_STATS_CAP
 
 
-def real_page_buckets(
+def decode_pages(
     documents: DataFrame,
     media: DataFrame,
+    *,
     bucket_pages: int | None = DEFAULT_BUCKET_PAGES,
     broadcast_spans: bool | None = None,
     spans: DataFrame | None = None,
-    slice_payloads: bool = True,
 ) -> DataFrame:
     """Stage 1: media spans ⋈ payloads -> validated page-bucket rows
     (:data:`BUCKET`).
@@ -576,14 +590,16 @@ def real_page_buckets(
     offset) frame — pass :func:`shared_exploded_spans` output to share
     one materialization across the pipeline's consumers.
 
-    ``bucket_pages``: pages per bucket (``None``: one bucket per media).
-    ``slice_payloads`` (default on): multi-bucket payloads are re-cut by
-    their tier's slicer into per-bucket sub-documents (for PDFs
-    :class:`..pdfcodec._Slicer` keeps only the bucket's own
+    ``bucket_pages``: pages per bucket (default one; ``None``: one
+    bucket per media, holding the whole payload). A multi-bucket payload
+    is re-cut by its tier's slicer into per-bucket sub-documents (for
+    PDFs :class:`..pdfcodec._Slicer` keeps only the bucket's own
     page/content/image objects, stream bytes verbatim), so the bucket
     shuffle moves ~size·K/pages bytes per row instead of ⌈pages/K⌉
-    full-payload copies. Decode equality with the unsliced path is
-    test-pinned; False restores full-payload rows.
+    full-payload copies; a payload whose slicer raises falls back to
+    ONE whole-payload bucket (``sliced=False``, the ``bucket_pages=None``
+    shape), so it crosses the shuffle once at any K. Decode equality
+    with the whole-payload bucket is test-pinned.
     """
     if spans is None:
         spans = exploded_spans(documents)
@@ -601,7 +617,7 @@ def real_page_buckets(
     # it (and a left join would force the payload onto the build side,
     # breaking the measured-best broadcast plan). The anti-join is narrow
     # — only (doc_id, offset, media_ref) keys move — and feeds the same
-    # media_kind=error contract real_media_errors() reads.
+    # media_kind=error contract media_errors() reads.
     missing = span_refs.join(
         media.select("media_ref"), "media_ref", "left_anti"
     ).select(
@@ -617,19 +633,8 @@ def real_page_buckets(
         F.lit(None).cast("binary").alias("data"),
     )
     return media_spans.mapInPandas(
-        _bucket_batches_fn(bucket_pages, slice_payloads), schema=BUCKET
+        _bucket_batches_fn(bucket_pages), schema=BUCKET
     ).unionByName(missing)
-
-
-def decode_pages(
-    documents: DataFrame,
-    media: DataFrame,
-    spans: DataFrame | None = None,
-    broadcast_spans: bool | None = None,
-) -> DataFrame:
-    """:func:`real_page_buckets` at one page per bucket: one row per
-    page, each carrying its one-page sub-container."""
-    return real_page_buckets(documents, media, 1, broadcast_spans, spans)
 
 
 def _spread(rows: DataFrame, index: str, num_partitions: int | None,
@@ -649,7 +654,7 @@ def _spread(rows: DataFrame, index: str, num_partitions: int | None,
     return rows.mapInPandas(udf, schema=schema)
 
 
-def ocr_real_blocks(
+def ocr_blocks(
     buckets: DataFrame, num_partitions: int | None = None,
 ) -> DataFrame:
     """Stage 2: bucket rows -> OCR block rows, behind the explicit skew
@@ -661,19 +666,13 @@ def ocr_real_blocks(
                    _ocr_real_batches, BLOCK)
 
 
-ocr_blocks = ocr_real_blocks
-
-
-def real_media_errors(buckets: DataFrame) -> DataFrame:
+def media_errors(buckets: DataFrame) -> DataFrame:
     """Quarantine table: probe-time failures and missing payloads (the
     FAILED status + ``error`` column analog, ``apps/worker/app/tasks/
     ocr_tasks.py:125-128``); write alongside lineage for triage/re-run."""
     return buckets.filter(F.col("media_kind") == MEDIA_KIND_ERROR).select(
         "doc_id", "offset", "media_ref", "error"
     )
-
-
-media_errors = real_media_errors
 
 
 def reading_ordered_blocks(blocks: DataFrame) -> DataFrame:
@@ -781,14 +780,14 @@ def assemble_spans(
     )
 
 
-def extract_real_documents(
+def extract_documents(
     documents: DataFrame,
     media: DataFrame,
+    *,
     bucket_pages: int | None = DEFAULT_BUCKET_PAGES,
     num_partitions: int | None = None,
     broadcast_spans: bool | None = None,
     share_spans: "bool | str" = True,
-    slice_payloads: bool = True,
 ) -> DataFrame:
     """End-to-end: documents + media -> documents_out with extracted spans.
 
@@ -799,9 +798,8 @@ def extract_real_documents(
     auto mode: the spans-side broadcast hint in the payload join is
     released to AQE only when the input relation's Catalyst estimate is
     KNOWN to exceed :data:`SPAN_BROADCAST_STATS_CAP` (unknown stats keep
-    the pin — see :func:`real_page_buckets`); pass True/False to force
-    either plan. ``bucket_pages`` and ``slice_payloads``: see
-    :func:`real_page_buckets`.
+    the pin — see :func:`decode_pages`); pass True/False to force
+    either plan. ``bucket_pages``: see :func:`decode_pages`.
 
     Executor-loss caveat (``share_spans``): the lazy ``localCheckpoint``
     truncates RDD lineage with NON-replicated executor-local blocks — on a
@@ -821,24 +819,10 @@ def extract_real_documents(
                               replicated=share_spans == "replicated")
         if share_spans else None
     )
-    buckets = real_page_buckets(
-        documents, media, bucket_pages, broadcast_spans, spans=spans,
-        slice_payloads=slice_payloads,
-    )
-    blocks = ocr_real_blocks(buckets, num_partitions)
+    buckets = decode_pages(documents, media, bucket_pages=bucket_pages,
+                           broadcast_spans=broadcast_spans, spans=spans)
+    blocks = ocr_blocks(buckets, num_partitions)
     return assemble_spans(documents, blocks, spans=spans)
-
-
-def extract_documents(
-    documents: DataFrame,
-    media: DataFrame,
-    num_partitions: int | None = None,
-    broadcast_spans: bool | None = None,
-    share_spans: "bool | str" = True,
-) -> DataFrame:
-    """:func:`extract_real_documents` at one page per bucket."""
-    return extract_real_documents(documents, media, 1, num_partitions,
-                                  broadcast_spans, share_spans)
 
 
 def _ocr_page_fused(doc_id: str, offset: int, ref: str, page_index: int,
@@ -944,10 +928,10 @@ def _recognize_bucket(doc_id: str, offset: int, ref: str, kind: str,
                       height: int, out: dict[str, list]) -> None:
     boxes = list(zip(map(int, xs1), map(int, ys1),
                      map(int, xs2), map(int, ys2)))
-    for pi, img in _bucket_rasters(kind, lo, hi, sliced, data):
-        if pi == page_index:
-            rows = _ocr_rows(img, boxes, (width, height))
-            _emit_blocks(out, doc_id, offset, ref, page_index, rows)
+    # decode the row's own page only, not the whole bucket
+    for _pi, img in _bucket_rasters(kind, lo, hi, sliced, data, page_index):
+        rows = _ocr_rows(img, boxes, (width, height))
+        _emit_blocks(out, doc_id, offset, ref, page_index, rows)
 
 
 def _recognize_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -971,7 +955,7 @@ def recognize_with_boxes(
 
     ``pages``: bucket rows (:func:`decode_pages`); each joins the pages
     of its ``[page_lo, page_hi)`` range that have boxes, and the task
-    recognizes that one page of the decoded bucket. ``boxes``: output
+    decodes and recognizes that one page of the bucket. ``boxes``: output
     shape of :func:`detect_boxes_table` (block_index gives the
     detector/editor emission order; ``width``/``height`` are the
     detect-time original page dims that the crop scaling must use; 0

@@ -8,7 +8,7 @@ PDFs are born-digital (or OCR'd upstream) and already carry their text
 in content-stream show operators. This module parses that text layer
 directly — no rasterization, no detect, no recognize — and emits the
 same ``BLOCK``-shaped rows as the OCR path, so
-:func:`..operators.extract_real.extract_real_documents` dispatches PER
+:func:`..operators.extract.extract_documents` dispatches PER
 PAGE: pages with a text layer are parsed (~10-100x cheaper than OCR),
 scanned pages fall through to the raster+OCR path, and both kinds of
 page assemble into one document span array through the shared

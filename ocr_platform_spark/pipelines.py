@@ -164,7 +164,7 @@ def crawl_to_training_corpus(spark: SparkSession, paths: str,
     (``min_quality_fxp4`` / ``langs`` /
     ``min_tokens`` / ``max_tokens``) pass through
     :func:`curate_documents`; every other kwarg passes through to the
-    extraction pipeline (``bucket_pages``, ``slice_payloads``, ...).
+    extraction pipeline (``bucket_pages``, ``num_partitions``, ...).
     ``curate=False`` stops after :func:`spans_to_documents` — the raw
     extracted-text frame for callers running their own filters.
     """
@@ -274,9 +274,9 @@ def speech_corpus(spark: SparkSession, paths: str,
 
     members = read_tar_shards(spark, paths)
     documents, media = tar_to_corpus(members)
-    from .operators.extract_real import extract_real_documents
+    from .operators.extract import extract_documents
 
-    extracted = extract_real_documents(documents, media, **extract_kw)
+    extracted = extract_documents(documents, media, **extract_kw)
     docs_text = spans_to_documents(extracted)
     ref_to_doc = documents.select(
         "doc_id", F.explode("spans").alias("s")

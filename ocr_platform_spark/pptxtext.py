@@ -39,7 +39,7 @@ from xml.etree import ElementTree
 
 import posixpath
 
-from .docxtext import _open_docx as _open_zip
+from .docxtext import _open_docx as _open_zip, sub_zip
 
 #: DrawingML main namespace (text runs live here, not in the
 #: PresentationML ``p:`` namespace)
@@ -188,9 +188,10 @@ def slide_parts(
 ) -> list[list[tuple]]:
     """PPTX bytes -> per-slide MIXED part lists (text paragraphs +
     embedded pictures, shape-tree order), in presentation order.
-    ``page_indices`` selects slides by GLOBAL position (the bucket
-    contract — a sliced payload passes ``None`` and gets its own slides
-    back in order)."""
+    ``page_indices`` selects slides by their position in ``raw`` (the
+    bucket contract, :mod:`.tiers`: global indices into a whole
+    payload; local indices, or ``None`` for all, into a sliced one,
+    whose slides the slicer renumbers from 0)."""
     with _open_zip(raw) as zf:
         names = _slide_members(zf)
         if page_indices is not None:
@@ -207,43 +208,37 @@ def slice_slides(raw: bytes, page_indices) -> bytes:
     keep their ORIGINAL member numbering, so slide order (numeric sort)
     is preserved and ``slide_parts(sliced)`` yields exactly the
     bucket's pages, locally indexed."""
-    with _open_zip(raw) as zf:
-        names = _slide_members(zf)
+    return slide_slicer(raw)(page_indices)
+
+
+def slide_slicer(raw: bytes):
+    """Open the package and list its slides ONCE and return
+    :func:`slice_slides`' cut, ``page_indices -> bytes``."""
+    zf = _open_zip(raw)
+    names = _slide_members(zf)
+    members = {n: i for i, n in enumerate(zf.namelist())}
+
+    def cut(page_indices) -> bytes:
         try:
             kept_slides = [names[i] for i in page_indices]
         except IndexError as e:
             raise ValueError(f"slide index out of range: {e}") from e
-        keep = set(kept_slides)
-        keep.add(_MARKER)
-        keep.add("[Content_Types].xml")
+        keep = {*kept_slides, _MARKER, "[Content_Types].xml"}
         # each kept slide's rels part + the media members it references,
-        # so embedded pictures survive the slice (round 5: the slide
-        # interleave decodes them inside the bucket)
+        # so embedded pictures survive the slice (the slide interleave
+        # decodes them inside the bucket)
         for slide in kept_slides:
             rels_name = (
                 posixpath.dirname(slide) + "/_rels/"
                 + posixpath.basename(slide) + ".rels"
             )
-            if rels_name in zf.namelist():
+            if rels_name in members:
                 keep.add(rels_name)
                 rels, _ext = _slide_rels(zf, slide)
                 keep.update(rels.values())
-        buf = io.BytesIO()
-        with zipfile.ZipFile(buf, "w", zipfile.ZIP_DEFLATED) as out:
-            for name in zf.namelist():
-                if name in keep:
-                    try:
-                        data = zf.read(name)
-                    except Exception as e:
-                        # CRC/deflate corruption in a member the deep
-                        # probe does not parse (e.g. content-types) —
-                        # quarantine, never a raw BadZipFile off an
-                        # executor (fuzz-pinned)
-                        raise ValueError(
-                            f"unreadable {name}: {e}"
-                        ) from e
-                    out.writestr(name, data)
-    return buf.getvalue()
+        return sub_zip(zf, members, keep)
+
+    return cut
 
 
 # --- minimal writer (tests / fixtures) ---------------------------------------

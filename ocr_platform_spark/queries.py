@@ -687,14 +687,13 @@ def eml_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     multipart/alternative whose LAST supported alternative is an HTML
     document — so the RFC 2046 preference rule and the DOM-tier leg
     are value-pinned, not just pytest-pinned."""
-    from .operators.extract_real import extract_real_documents
 
     ids = (
         _t(spark, sf_dir, "documents")
         .select("doc_id").orderBy("doc_id").limit(_EML_Q_DOCS)
     )
     media = _synth_eml_media(ids, _build_eml_payload)
-    out = extract_real_documents(_eml_docs_frame(media), media)
+    out = extract.extract_documents(_eml_docs_frame(media), media)
     return _flatten_text_spans(out)
 
 
@@ -730,15 +729,14 @@ def mbox_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
     split, message-subset payload SLICING, per-page MIME render and
     global page ordering are all value-pinned by the closed-form
     oracle."""
-    from .operators.extract_real import extract_real_documents
 
     ids = (
         _t(spark, sf_dir, "documents")
         .select("doc_id").orderBy("doc_id").limit(_MBOX_Q_DOCS)
     )
     media = _synth_eml_media(ids, _build_mbox_payload)
-    out = extract_real_documents(_eml_docs_frame(media), media,
-                                 bucket_pages=2)
+    out = extract.extract_documents(_eml_docs_frame(media), media,
+                                    bucket_pages=2)
     return _flatten_text_spans(out)
 
 
@@ -779,14 +777,13 @@ def docx_embedded(spark: SparkSession, sf_dir: str) -> DataFrame:
     word is closed-form (``_DOCX_Q_WORDS[d % 4]``), so the picture's
     position BETWEEN its surrounding paragraphs is value-pinned by the
     DuckDB oracle."""
-    from .operators.extract_real import extract_real_documents
 
     ids = (
         _t(spark, sf_dir, "documents")
         .select("doc_id").orderBy("doc_id").limit(_DOCX_Q_DOCS)
     )
     media = _synth_eml_media(ids, _build_docx_payload)
-    out = extract_real_documents(_eml_docs_frame(media), media)
+    out = extract.extract_documents(_eml_docs_frame(media), media)
     return _flatten_text_spans(out)
 
 
@@ -852,19 +849,17 @@ def _build_mbox_attach_payload(d: int) -> bytes:
 def mbox_attach(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Driver-contract query for the in-place mail-attachment OCR
     (round 5): mbox archives where message 0 carries a glyph-rendered
-    PNG attachment between no other parts, run at ``bucket_pages=1`` so
-    the attachment must survive the message slicer. The OCR'd word is
+    PNG attachment between no other parts, run at one page per bucket
+    so the attachment must survive the message slicer. The OCR'd word is
     closed-form — the attachment's position AFTER its message's body
     and BEFORE the next message is value-pinned."""
-    from .operators.extract_real import extract_real_documents
 
     ids = (
         _t(spark, sf_dir, "documents")
         .select("doc_id").orderBy("doc_id").limit(_MBOX_ATT_DOCS)
     )
     media = _synth_eml_media(ids, _build_mbox_attach_payload)
-    out = extract_real_documents(_eml_docs_frame(media), media,
-                                 bucket_pages=1)
+    out = extract.extract_documents(_eml_docs_frame(media), media)
     return _flatten_text_spans(out)
 
 
@@ -904,15 +899,13 @@ def xlsx_embedded(spark: SparkSession, sf_dir: str) -> DataFrame:
     must land between row 0's and row 1's text — the two-level rels
     resolution, anchor-row interleave and drawing-chain slicing are
     value-pinned by the closed-form oracle."""
-    from .operators.extract_real import extract_real_documents
 
     ids = (
         _t(spark, sf_dir, "documents")
         .select("doc_id").orderBy("doc_id").limit(_XLSX_Q_DOCS)
     )
     media = _synth_eml_media(ids, _build_xlsx_embedded_payload)
-    out = extract_real_documents(_eml_docs_frame(media), media,
-                                 bucket_pages=1)
+    out = extract.extract_documents(_eml_docs_frame(media), media)
     return _flatten_text_spans(out)
 
 
@@ -1158,7 +1151,7 @@ REGISTRY: dict[str, tuple[QueryFn, object]] = {
     "html_text": (html_extract.html_text, html_extract.HTML_TEXT_SQL),
     # round-5 interleave tiers past-cap (gate full): closed-form
     # oracles for the in-place mail-attachment OCR (incl. the message
-    # slicer at bucket_pages=1) and XLSX anchored drawings; verified by
+    # slicer at one page per bucket) and XLSX anchored drawings; verified by
     # tools/check_oracle.py + CORRECTNESS_LOCAL, pytest-pinned in
     # test_office_media.py
     "mbox_attach": (mbox_attach, MBOX_ATTACH_SQL),

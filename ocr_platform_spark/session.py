@@ -12,6 +12,22 @@ import os
 
 from pyspark.sql import SparkSession
 
+#: the engine conf every session gets, local or spark-submit (the
+#: :mod:`.cli` job): Catalyst/AQE do the physical planning — runtime
+#: coalesce of small post-shuffle partitions + skew-join splitting
+#: (SURVEY.md §4); Arrow transfer for all pandas UDF stages, where a
+#: batch of page buckets is the in-UDF inference batch (ref
+#: model-batching analog, vietocr_engine.py:130-141) — small enough that
+#: a batch of *rendered* pages fits comfortably in executor memory
+#: (SURVEY.md §7.3 item 5)
+ENGINE_CONF = {
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.adaptive.coalescePartitions.enabled": "true",
+    "spark.sql.adaptive.skewJoin.enabled": "true",
+    "spark.sql.execution.arrow.pyspark.enabled": "true",
+    "spark.sql.execution.arrow.maxRecordsPerBatch": "256",
+}
+
 
 def get_spark(
     app_name: str = "ocr-platform-spark",
@@ -24,19 +40,9 @@ def get_spark(
     shuffle_partitions = shuffle_partitions or max(cpus, 8)
     b = (
         SparkSession.builder.appName(app_name)
+        .config(map=ENGINE_CONF)
         .master(master)
-        # Catalyst/AQE do the physical planning: runtime coalesce of small
-        # post-shuffle partitions + skew-join splitting (SURVEY.md §4)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        # Arrow transfer for all pandas UDF stages; a batch of page buckets
-        # is the in-UDF inference batch (ref model-batching analog,
-        # vietocr_engine.py:130-141) — small enough that a batch of *rendered*
-        # pages fits comfortably in executor memory (SURVEY.md §7.3 item 5)
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "256")
         # bucket rows are tiny; parquet splits stay balanced at scale
         .config("spark.sql.files.maxPartitionBytes", "128m")
         .config("spark.ui.enabled", "false")

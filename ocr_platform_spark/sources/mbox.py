@@ -292,8 +292,8 @@ def extract_mbox(spark: SparkSession, paths: str,
     ``single_parse`` (default on) persists the parsed parts frame so
     the archive split + MIME walk runs once, not once per corpus leg
     (see :func:`mbox_to_corpus` for the cache-lifecycle caveat)."""
-    from ..operators.extract_real import extract_real_documents
+    from ..operators.extract import extract_documents
 
     records = read_mbox(spark, paths)
     documents, media = mbox_to_corpus(records, single_parse=single_parse)
-    return extract_real_documents(documents, media, **extract_kw)
+    return extract_documents(documents, media, **extract_kw)

@@ -142,8 +142,8 @@ def extract_office(spark: SparkSession, paths: str,
     """Office dumps in, reading-ordered span arrays out:
     :func:`read_office` -> :func:`office_to_corpus` -> the real-codec
     extraction pipeline (embedded pictures OCR as media spans)."""
-    from ..operators.extract_real import extract_real_documents
+    from ..operators.extract import extract_documents
 
     parts = read_office(spark, paths)
     documents, media = office_to_corpus(parts, single_parse=single_parse)
-    return extract_real_documents(documents, media, **extract_kw)
+    return extract_documents(documents, media, **extract_kw)

@@ -169,8 +169,6 @@ def member_batches(batch_rows: int, iter_members=None):
     return gen
 
 
-_member_batches = member_batches  # internal alias (existing callers)
-
 
 def read_tar_shards(spark: SparkSession, paths: str,
                     batch_rows: int = 256) -> DataFrame:
@@ -179,7 +177,7 @@ def read_tar_shards(spark: SparkSession, paths: str,
     listing, members streamed (see module docstring)."""
     listing = list_files(spark, paths, "*.t*",
                          r"\.(tar|tar\.gz|tgz|tar\.bz2|tar\.xz)$")
-    return listing.mapInPandas(_member_batches(batch_rows),
+    return listing.mapInPandas(member_batches(batch_rows),
                                schema=MEMBER_SCHEMA)
 
 
@@ -275,11 +273,11 @@ def extract_tar_shards(spark: SparkSession, paths: str,
     -> :func:`tar_to_corpus` -> the real-codec extraction pipeline.
     Callers chaining many stages over the same shards should persist
     the members frame (the parse runs once per downstream leg)."""
-    from ..operators.extract_real import extract_real_documents
+    from ..operators.extract import extract_documents
 
     members = read_tar_shards(spark, paths)
     documents, media = tar_to_corpus(members, include_json=include_json)
-    return extract_real_documents(documents, media, **extract_kw)
+    return extract_documents(documents, media, **extract_kw)
 
 
 # ---------------------------------------------------------------------------

@@ -507,11 +507,11 @@ def extract_warc(spark: SparkSession, paths: str,
     so the archive parse also runs once, not once per leg (see
     :func:`warc_to_corpus` for the cache-lifecycle caveat).
     """
-    from ..operators.extract_real import extract_real_documents
+    from ..operators.extract import extract_documents
 
     records = read_warc(spark, paths)
     documents, media = warc_to_corpus(records, single_parse=single_parse)
-    return extract_real_documents(documents, media, **extract_kw)
+    return extract_documents(documents, media, **extract_kw)
 
 
 # ---------------------------------------------------------------------------

@@ -118,11 +118,11 @@ def extract_zip_shards(spark: SparkSession, paths: str,
                        **extract_kw) -> DataFrame:
     """Shards in, reading-ordered span arrays out — the zip analog of
     ``extract_tar_shards``."""
-    from ..operators.extract_real import extract_real_documents
+    from ..operators.extract import extract_documents
 
     members = read_zip_shards(spark, paths)
     documents, media = zip_to_corpus(members, include_json=include_json)
-    return extract_real_documents(documents, media, **extract_kw)
+    return extract_documents(documents, media, **extract_kw)
 
 
 # ---------------------------------------------------------------------------

@@ -4,7 +4,8 @@ The reference has no streaming surface (SURVEY.md §2.9) — its Celery
 queue is a backpressure buffer in front of batch workers. The Spark-native
 analog of "documents keep arriving, workers drain the queue" is a file/
 table stream: ``readStream`` over the documents table's landing directory,
-micro-batches drained through the *same* batch pipeline via
+micro-batches drained through the *same* batch entry point
+(:func:`.operators.extract.extract_documents`, every media kind) via
 ``foreachBatch`` (the extraction plan needs windows + groupBy over the
 whole micro-batch, which is exactly what foreachBatch provides), with the
 sink append + per-batch lineage rows giving the same resumability story as
@@ -202,7 +203,6 @@ def process_extract_batch(
     num_partitions: int | None = None,
     on_batch: Callable[[int, int], None] | None = None,
     broadcast_spans: bool = True,
-    pipeline: Callable[..., DataFrame] | None = None,
 ) -> None:
     """One micro-batch through the extraction pipeline — the foreachBatch
     body, module-level so the retry semantics are directly testable.
@@ -214,20 +214,17 @@ def process_extract_batch(
     instead of appending duplicates (the same idempotent-commit shape as
     ``lineage.run_extract_job``'s chunks).
 
-    ``pipeline``: the extraction callable (``extract_documents`` default;
-    pass ``operators.extract_real.extract_real_documents`` to stream a
-    real-media/web corpus — same ``(documents, media, ...)`` contract,
-    the same seam ``lineage.run_extract_job`` exposes)."""
+    The body runs the one extraction entry point
+    (:func:`extract_documents`), so synthetic, real-media and web
+    corpora stream through the same call."""
     t0 = time.perf_counter()
-    if pipeline is None:
-        pipeline = extract_documents
     # count once on the raw source batch (column-pruned parquet scan),
     # recorded in lineage AND handed to the callback — on_batch must
     # not trigger a second pass over the micro-batch
     n_docs = batch_df.count()
     # micro-batches are bounded, so the pinned spans broadcast is safe by
     # construction here; the flag is still threaded for contract parity
-    out = pipeline(
+    out = extract_documents(
         batch_df, media, num_partitions=num_partitions,
         broadcast_spans=broadcast_spans,
     )
@@ -269,7 +266,6 @@ def stream_extract(
     num_partitions: int | None = None,
     on_batch: Callable[[int, int], None] | None = None,
     broadcast_spans: bool = True,
-    pipeline: Callable[..., DataFrame] | None = None,
 ):
     """Stream documents parquet from ``landing_dir`` through the extraction
     pipeline into ``out_dir`` (append), micro-batch lineage into
@@ -277,9 +273,8 @@ def stream_extract(
 
     Returns the started ``StreamingQuery``; with ``available_now`` the
     caller should ``awaitTermination()`` to drain the backlog.
-    ``pipeline`` selects the extraction callable (see
-    :func:`process_extract_batch`) — e.g. real-media/HTML corpora via
-    ``extract_real.extract_real_documents``.
+    Every media kind, real-media/HTML corpora included, goes through
+    the one extraction entry point (see :func:`process_extract_batch`).
     """
     reader = (
         spark.readStream.schema(DOCUMENTS)
@@ -295,7 +290,7 @@ def stream_extract(
         process_extract_batch(
             batch_df, batch_id, media, data_dir, lineage_dir,
             num_partitions=num_partitions, on_batch=on_batch,
-            broadcast_spans=broadcast_spans, pipeline=pipeline,
+            broadcast_spans=broadcast_spans,
         )
 
     writer = (

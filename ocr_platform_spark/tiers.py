@@ -11,10 +11,13 @@ of the text parts' coordinates (``0 x 0`` where they are synthetic
 ordinals). A part is either a text block (duck-typed on
 ``x1/y1/x2/y2/text``) or a grayscale raster (a 2-D ``uint8`` array).
 ``slicer(raw)`` parses a multi-page container once and returns the
-``page_indices -> sub-document`` cut used at probe time; single-page
-tiers have none. ``page_indices`` is ``None`` for a sliced payload
-(it holds exactly the bucket's pages) and the bucket's global page
-range otherwise. The entries fall into five groups:
+``page_indices -> sub-document`` cut used at probe time, so cutting a
+P-page document into P one-page buckets costs one parse, not P;
+single-page tiers have none. A slice holds exactly its bucket's pages,
+renumbered from 0 in order (every slicer keeps that contract). So
+``page_indices`` into a sliced payload is local (``None`` for all of
+them), and into an unsliced payload global (the bucket's page range,
+or one page of it). The entries fall into five groups:
 
 - **Synthetic containers** (SPDF1/SIMG1, :mod:`.formats`): each page
   renders through :func:`_render` to one raster. The slicer parses the
@@ -44,7 +47,6 @@ range otherwise. The entries fall into five groups:
 
 from __future__ import annotations
 
-from functools import partial
 from typing import Callable, NamedTuple
 
 import numpy as np
@@ -159,11 +161,6 @@ def _one_page(parts):
     return lambda raw, _page_indices: [parts(raw)]
 
 
-def _sliced_by(slice_pages):
-    """A stateless ``slice_pages(raw, page_indices)`` as a slicer."""
-    return lambda raw: partial(slice_pages, raw)
-
-
 #: probe ``media_kind`` -> :class:`Tier`; see the module docstring. A
 #: kind the probe can return but this table lacks raises at the OCR
 #: stage instead of silently extracting nothing.
@@ -172,8 +169,8 @@ TIERS = {
     "simg": Tier(None, _synthetic_pages),
     "pdf": Tier(lambda raw: pdfcodec._Slicer(raw).slice, _pdf_pages),
     "image": Tier(None, _raster_pages),
-    "tiff": Tier(_sliced_by(tiffcodec.slice_pages), _raster_pages),
-    "gif": Tier(_sliced_by(gifcodec.slice_pages), _raster_pages),
+    "tiff": Tier(tiffcodec.page_slicer, _raster_pages),
+    "gif": Tier(gifcodec.page_slicer, _raster_pages),
     "html": _walked(_one_page(
         lambda raw: htmltext.html_parts(htmltext.validate_html(raw)))),
     "docx": _walked(_one_page(docxtext.document_parts)),
@@ -189,10 +186,8 @@ TIERS = {
     "json": _text(jsontext.json_blocks),
     "xml": Tier(None, lambda raw, _page_indices: [
         (xmltext.xml_blocks(raw), 0, 0)]),
-    "pptx": _walked(pptxtext.slide_parts, _sliced_by(pptxtext.slice_slides)),
-    "epub": _walked(epubtext.chapter_parts,
-                    _sliced_by(epubtext.slice_chapters)),
-    "mbox": _walked(emltext.mbox_page_parts,
-                    _sliced_by(emltext.slice_messages)),
-    "xlsx": _walked(xlsxtext.sheet_parts, _sliced_by(xlsxtext.slice_sheets)),
+    "pptx": _walked(pptxtext.slide_parts, pptxtext.slide_slicer),
+    "epub": _walked(epubtext.chapter_parts, epubtext.chapter_slicer),
+    "mbox": _walked(emltext.mbox_page_parts, emltext.message_slicer),
+    "xlsx": _walked(xlsxtext.sheet_parts, xlsxtext.sheet_slicer),
 }

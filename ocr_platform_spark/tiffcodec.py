@@ -483,7 +483,6 @@ _TAG_TYPE = {256: 4, 257: 4, 258: 3, 259: 3, 262: 3, 266: 3, 273: 4,
              317: 3, 322: 4, 323: 4, 324: 4, 325: 4, 347: 7, 530: 3}
 
 
-@_strict_valueerror
 def slice_pages(raw: bytes, page_indices) -> bytes:
     """Minimal standalone TIFF holding only ``page_indices`` (0-based,
     in the given order): strip bytes copied VERBATIM (never inflated),
@@ -494,75 +493,88 @@ def slice_pages(raw: bytes, page_indices) -> bytes:
 
     ``decode_tiff(slice_pages(raw, idx))`` is pixel-identical to
     ``decode_tiff(raw, page_indices=idx)`` (test-pinned)."""
+    return page_slicer(raw)(page_indices)
+
+
+@_strict_valueerror
+def page_slicer(raw: bytes):
+    """Parse the IFD chain ONCE and return :func:`slice_pages`' cut,
+    ``page_indices -> bytes``: cutting a P-page file into P one-page
+    buckets then reads its IFDs once, not P times."""
     e, ifds = _read_ifds(raw)
-    try:
-        sel = [ifds[i] for i in page_indices]
-    except IndexError as err:
-        raise ValueError(
-            f"page index out of range (TIFF has {len(ifds)})"
-        ) from err
-    if not sel:
-        raise ValueError("cannot slice zero pages")
-    bom = b"II" if e == "<" else b"MM"
-    out = bytearray(struct.pack(e + "2sHI", bom, 42, 8))
-    fmt = {3: "H", 4: "I"}
-    pending = 4  # patch position of the previous "next IFD" word
-    for tags in sel:
-        _page_plan(tags)  # only validated pages are re-emitted
-        # tiled pages carry their chunks in 324/325; strips in 273/279
-        ko, kc = (324, 325) if 322 in tags else (273, 279)
-        strips = []
-        for o, c in zip(tags[ko], tags[kc]):
-            if o + c > len(raw):
-                raise ValueError("TIFF strip past end of file")
-            strips.append(raw[o:o + c])
-        entries = []
-        for tag in sorted(_TAG_TYPE):
-            if tag == ko:
-                vals = [0] * len(strips)  # assigned below
-            elif tag == kc:
-                vals = [len(s) for s in strips]
-            elif tag in (273, 279, 324, 325):
-                continue  # the inactive layout's tags never re-emit
-            elif tag in tags:
-                vals = tags[tag]
-            else:
-                continue
-            entries.append((tag, _TAG_TYPE[tag], vals))
-        ifd_off = len(out)
-        struct.pack_into(e + "I", out, pending, ifd_off)
-        overflow_off = ifd_off + 2 + len(entries) * 12 + 4
 
-        def esize(typ: int, vals: list) -> int:
-            return _TYPE_SIZE[typ] * len(vals)
+    @_strict_valueerror
+    def cut(page_indices) -> bytes:
+        try:
+            sel = [ifds[i] for i in page_indices]
+        except IndexError as err:
+            raise ValueError(
+                f"page index out of range (TIFF has {len(ifds)})"
+            ) from err
+        if not sel:
+            raise ValueError("cannot slice zero pages")
+        bom = b"II" if e == "<" else b"MM"
+        out = bytearray(struct.pack(e + "2sHI", bom, 42, 8))
+        fmt = {3: "H", 4: "I"}
+        pending = 4  # patch position of the previous "next IFD" word
+        for tags in sel:
+            _page_plan(tags)  # only validated pages are re-emitted
+            # tiled pages carry their chunks in 324/325; strips in 273/279
+            ko, kc = (324, 325) if 322 in tags else (273, 279)
+            strips = []
+            for o, c in zip(tags[ko], tags[kc]):
+                if o + c > len(raw):
+                    raise ValueError("TIFF strip past end of file")
+                strips.append(raw[o:o + c])
+            entries = []
+            for tag in sorted(_TAG_TYPE):
+                if tag == ko:
+                    vals = [0] * len(strips)  # assigned below
+                elif tag == kc:
+                    vals = [len(s) for s in strips]
+                elif tag in (273, 279, 324, 325):
+                    continue  # the inactive layout's tags never re-emit
+                elif tag in tags:
+                    vals = tags[tag]
+                else:
+                    continue
+                entries.append((tag, _TAG_TYPE[tag], vals))
+            ifd_off = len(out)
+            struct.pack_into(e + "I", out, pending, ifd_off)
+            overflow_off = ifd_off + 2 + len(entries) * 12 + 4
 
-        data_start = overflow_off + sum(
-            esize(t, v) for _, t, v in entries if esize(t, v) > 4
-        )
-        so, pos = [], data_start
-        for s in strips:
-            so.append(pos)
-            pos += len(s)
-        entries = [(t, ty, so if t == ko else v) for t, ty, v in entries]
-        out += struct.pack(e + "H", len(entries))
-        overflow = bytearray()
-        ov_pos = overflow_off
-        for tag, typ, vals in entries:
-            packed = bytes(vals) if typ == 7 else \
-                struct.pack(e + fmt[typ] * len(vals), *vals)
-            if len(packed) <= 4:
-                out += struct.pack(e + "HHI", tag, typ, len(vals))
-                out += packed + b"\x00" * (4 - len(packed))
-            else:
-                out += struct.pack(e + "HHII", tag, typ, len(vals), ov_pos)
-                overflow += packed
-                ov_pos += len(packed)
-        pending = len(out)
-        out += struct.pack(e + "I", 0)
-        out += overflow
-        for s in strips:
-            out += s
-    return bytes(out)
+            def esize(typ: int, vals: list) -> int:
+                return _TYPE_SIZE[typ] * len(vals)
+
+            data_start = overflow_off + sum(
+                esize(t, v) for _, t, v in entries if esize(t, v) > 4
+            )
+            so, pos = [], data_start
+            for s in strips:
+                so.append(pos)
+                pos += len(s)
+            entries = [(t, ty, so if t == ko else v) for t, ty, v in entries]
+            out += struct.pack(e + "H", len(entries))
+            overflow = bytearray()
+            ov_pos = overflow_off
+            for tag, typ, vals in entries:
+                packed = bytes(vals) if typ == 7 else \
+                    struct.pack(e + fmt[typ] * len(vals), *vals)
+                if len(packed) <= 4:
+                    out += struct.pack(e + "HHI", tag, typ, len(vals))
+                    out += packed + b"\x00" * (4 - len(packed))
+                else:
+                    out += struct.pack(e + "HHII", tag, typ, len(vals), ov_pos)
+                    overflow += packed
+                    ov_pos += len(packed)
+            pending = len(out)
+            out += struct.pack(e + "I", 0)
+            out += overflow
+            for s in strips:
+                out += s
+        return bytes(out)
+
+    return cut
 
 
 def encode_bilevel_tiff(bitmaps: "list[np.ndarray]", compression: int = 4,

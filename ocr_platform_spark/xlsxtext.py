@@ -35,7 +35,7 @@ import re
 import zipfile
 from xml.etree import ElementTree
 
-from .docxtext import _open_docx as _open_zip
+from .docxtext import _open_docx as _open_zip, sub_zip
 from .docxtext import _xml_escape
 from .pptxtext import _parse_member
 
@@ -187,8 +187,10 @@ def sheet_parts(
     anchored pictures interleaved by sheet row (a picture anchored at
     row R slots after row R's text — it renders over that row), the
     ``pptxtext.slide_parts`` shape, in workbook order. ``page_indices``
-    selects sheets by GLOBAL position (the bucket contract — a sliced
-    payload passes ``None``). Each non-empty row is one text part, its
+    selects sheets by their position in ``raw`` (the bucket contract,
+    :mod:`.tiers`: global indices into a whole payload; local indices,
+    or ``None`` for all, into a sliced one, whose sheets the slicer
+    renumbers from 0). Each non-empty row is one text part, its
     cells in document order joined with a single space."""
     from .docxtext import media_content_type
 
@@ -237,51 +239,47 @@ def slice_sheets(raw: bytes, page_indices) -> bytes:
     selected sheets' members plus the shared-strings table (every sheet
     may reference it), the marker and content-types. Original member
     numbering is kept, so sheet order survives."""
-    with _open_zip(raw) as zf:
-        names = _sheet_members(zf)
+    return sheet_slicer(raw)(page_indices)
+
+
+def sheet_slicer(raw: bytes):
+    """Open the package and list its sheets ONCE and return
+    :func:`slice_sheets`' cut, ``page_indices -> bytes``."""
+    import posixpath
+
+    from .pptxtext import _slide_rels as _member_rels
+
+    zf = _open_zip(raw)
+    names = _sheet_members(zf)
+    members = {n: i for i, n in enumerate(zf.namelist())}
+
+    def rels_of(part: str) -> str:
+        return (posixpath.dirname(part) + "/_rels/"
+                + posixpath.basename(part) + ".rels")
+
+    def cut(page_indices) -> bytes:
         try:
             kept_sheets = [names[i] for i in page_indices]
         except IndexError as e:
             raise ValueError(f"sheet index out of range: {e}") from e
-        keep = set(kept_sheets)
-        keep.update((_MARKER, _SHARED, "[Content_Types].xml"))
+        keep = {*kept_sheets, _MARKER, _SHARED, "[Content_Types].xml"}
         # each kept sheet's drawing chain (rels -> drawing part -> its
         # rels -> media) rides with its slice so anchored pictures
-        # still decode inside per-sheet buckets (round 5)
-        import posixpath
-
-        from .pptxtext import _slide_rels as _member_rels
-
+        # still decode inside per-sheet buckets
         for sheet in kept_sheets:
-            rels_name = (posixpath.dirname(sheet) + "/_rels/"
-                         + posixpath.basename(sheet) + ".rels")
-            if rels_name not in zf.namelist():
+            if rels_of(sheet) not in members:
                 continue
-            keep.add(rels_name)
+            keep.add(rels_of(sheet))
             srels, _ = _member_rels(zf, sheet)
             for drawing in srels.values():
                 keep.add(drawing)
-                drels_name = (posixpath.dirname(drawing) + "/_rels/"
-                              + posixpath.basename(drawing) + ".rels")
-                if drels_name in zf.namelist():
-                    keep.add(drels_name)
+                if rels_of(drawing) in members:
+                    keep.add(rels_of(drawing))
                     drels, _ = _member_rels(zf, drawing)
                     keep.update(drels.values())
-        buf = io.BytesIO()
-        with zipfile.ZipFile(buf, "w", zipfile.ZIP_DEFLATED) as out:
-            for name in zf.namelist():
-                if name in keep:
-                    try:
-                        data = zf.read(name)
-                    except Exception as e:
-                        # CRC/deflate corruption in a member the deep
-                        # probe does not parse — quarantine, never a
-                        # raw BadZipFile off an executor (fuzz-pinned)
-                        raise ValueError(
-                            f"unreadable {name}: {e}"
-                        ) from e
-                    out.writestr(name, data)
-    return buf.getvalue()
+        return sub_zip(zf, members, keep)
+
+    return cut
 
 
 # --- minimal writer (tests / fixtures) ---------------------------------------

@@ -130,3 +130,97 @@ def test_raster_kernels_refuse_a_page_that_is_not_a_lone_raster():
     assert len(extract._ocr_real_frame(frame)) == 1
     with pytest.raises(ValueError, match="'txt' page 0 is not a lone raster"):
         list(extract._ocr_batches_fused(iter([frame])))
+
+
+@pytest.mark.parametrize("bucket_pages", [4, None])
+def test_recognize_decodes_only_its_own_page(monkeypatch, bucket_pages):
+    """The two-phase recognize runs once per (bucket, page) row and must
+    decode that page alone — a local index into a sliced bucket, the
+    global index into a whole payload — not all K pages of the bucket
+    for each of its K rows. The blocks equal those recognized from the
+    whole-bucket decode."""
+    from ocr_platform_spark import formats, tiers
+
+    _docs, media = corpus.generate(20, seed=11, max_pages=6)
+    data = next(m["data"] for m in media.values()
+                if formats.decode_media(m["data"])[0] == "pdf"
+                and len(formats.decode_media(m["data"])[1]) >= 4)
+    n = len(formats.decode_media(data)[1])
+    [buckets] = extract._bucket_batches_fn(bucket_pages)(iter([pd.DataFrame(
+        {"doc_id": ["d1"], "offset": [0], "media_ref": ["m1"],
+         "data": [data]})]))
+    assert set(buckets["sliced"]) == {bucket_pages is not None}
+    rows = [(*b, pi) for b in zip(*(buckets[c] for c in extract._BUCKET_COLS))
+            for pi in range(b[4], b[5])]
+    assert len(rows) == n
+    box = [(2, 2, 40, 20)]
+    frame = pd.DataFrame(
+        [(*r, [x1 for x1, *_ in box], [b[1] for b in box],
+          [b[2] for b in box], [b[3] for b in box], 0, 0) for r in rows],
+        columns=[*extract._BUCKET_COLS, "page_index", "xs1", "ys1", "xs2",
+                 "ys2", "width", "height"])
+    want = {pi: extract._ocr_rows(img, box)
+            for pi, img in extract._bucket_rasters(
+                "spdf", 0, n, False, data)}
+
+    decoded = []
+    pages = tiers.TIERS["spdf"].pages
+
+    def counting(raw, page_indices):
+        out = pages(raw, page_indices)
+        decoded.extend([None] * len(out))
+        return out
+
+    monkeypatch.setitem(tiers.TIERS, "spdf",
+                        tiers.TIERS["spdf"]._replace(pages=counting))
+    [got] = extract._recognize_batches(iter([frame]))
+    assert len(decoded) == n  # one page decode per row, not K per row
+    for pi in range(n):
+        mine = got[got["page_index"] == pi]
+        assert [tuple(r) for r in mine[["x1", "y1", "x2", "y2", "text"]]
+                .itertuples(index=False)] == [
+            (*r[:4], r[4].strip()) for r in want[pi]]
+
+
+@pytest.mark.parametrize("kind, module, parse", [
+    ("tiff", "tiffcodec", "_read_ifds"),
+    ("gif", "gifcodec", "_parse"),
+    ("pptx", "pptxtext", "_slide_members"),
+    ("xlsx", "xlsxtext", "_sheet_members"),
+    ("epub", "epubtext", "_spine_members"),
+    ("mbox", "emltext", "_split_mbox"),
+])
+def test_slicer_parses_each_document_once(monkeypatch, kind, module, parse):
+    """Cutting an n-page document into n one-page buckets parses the
+    container once, not once per bucket: the default bucket size is
+    one page, so a per-cut parse would make the probe quadratic in the
+    page count. Every slice still holds exactly its own page."""
+    import importlib
+
+    from ocr_platform_spark import tiers
+
+    _docs, media = corpus.generate(20, seed=11, max_pages=6)
+    data = max((m["data"] for m in media.values()),
+               key=lambda d: len(_render_pages(d)[1]))
+    pages = _render_pages(data)[1]
+    raw = {"gif": lambda d: gifcodec.encode_gif([pages[0]] * len(pages)),
+           "tiff": reencode_tiff, "pptx": content_pptx,
+           "xlsx": content_xlsx, "epub": content_epub,
+           "mbox": content_mbox}[kind](data)
+    probed, n, _w, _h = multimodal.probe_real_media(raw, deep=True)
+    assert (probed, n >= 4) == (kind, True)
+    mod = importlib.import_module(f"ocr_platform_spark.{module}")
+    calls = []
+    real = getattr(mod, parse)
+
+    def counting(*args, **kwargs):
+        calls.append(parse)
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(mod, parse, counting)
+    cut = tiers.TIERS[kind].slicer(raw)
+    slices = [cut(range(i, i + 1)) for i in range(n)]
+    assert len(calls) == 1
+    monkeypatch.undo()
+    for s in slices:
+        assert multimodal.probe_real_media(s, deep=True)[:2] == (kind, 1)

@@ -91,13 +91,14 @@ def test_xlsx_pipeline_equals_flagship(office_corpus):
 
 
 def test_unsliced_path_equality(office_corpus):
-    """slice_payloads=False (full payload on every bucket row) is the
-    same extraction, just a worse shuffle — pinned like the PDF path."""
+    """The whole-payload bucket (``bucket_pages=None``: the unsliced
+    decode) is the same extraction, just a worse shuffle — pinned like
+    the PDF path."""
     docs_df, synth, pptx, _ = office_corpus
     flagship = _spans_by_doc(extract.extract_documents(docs_df, synth))
     got = _spans_by_doc(
         extract_real.extract_real_documents(
-            docs_df, pptx, bucket_pages=2, slice_payloads=False)
+            docs_df, pptx, bucket_pages=None)
     )
     assert got == flagship
 
@@ -238,3 +239,52 @@ def test_real_media_metadata_paged_office(spark):
             for r in multimodal.real_media_metadata(media).collect()}
     assert (rows["m-p"]["kind"], rows["m-p"]["n_pages"]) == ("pptx", 3)
     assert (rows["m-x"]["kind"], rows["m-x"]["n_pages"]) == ("xlsx", 2)
+
+
+def corrupt_member_crc(raw: bytes, name: str) -> bytes:
+    """``raw`` with the central-directory CRC-32 of member ``name``
+    flipped: reading that member raises, the others read clean."""
+    buf = bytearray(raw)
+    enc = name.encode()
+    at = buf.find(b"PK\x01\x02")
+    while at >= 0:
+        n = int.from_bytes(buf[at + 28:at + 30], "little")
+        if bytes(buf[at + 46:at + 46 + n]) == enc:
+            buf[at + 16] ^= 0xFF
+            return bytes(buf)
+        at = buf.find(b"PK\x01\x02", at + 4)
+    raise KeyError(name)
+
+
+def test_slicer_failure_falls_back_to_the_full_payload(spark):
+    """A PPTX whose [Content_Types].xml fails its CRC passes the deep
+    probe (the part walk never reads that member) but its slicer
+    raises: the deck then becomes ONE whole-payload bucket
+    (``sliced=False``, all three slides), so it crosses the bucket
+    shuffle once at any K, and extraction returns the pristine deck's
+    spans."""
+    deck = pptxtext.encode_pptx(
+        [[f"slide {i} block a", f"slide {i} block b"] for i in range(3)])
+    bad = corrupt_member_crc(deck, "[Content_Types].xml")
+    with zipfile.ZipFile(io.BytesIO(bad)) as zf:
+        with pytest.raises(zipfile.BadZipFile):
+            zf.read("[Content_Types].xml")
+    assert multimodal.probe_real_media(bad, deep=True)[:2] == ("pptx", 3)
+    docs = spark.createDataFrame(
+        [("d1", [("text", "intro", None, 0), ("media", "", "m1", 1)])],
+        schema=schemas.DOCUMENTS)
+
+    def run(payload):
+        media = spark.createDataFrame([("m1", bytearray(payload))],
+                                      "media_ref string, data binary")
+        rows = extract.decode_pages(docs, media).collect()
+        return rows, _spans_by_doc(extract.extract_documents(docs, media))
+
+    good_rows, good = run(deck)
+    bad_rows, got = run(bad)
+    assert [(r["page_lo"], r["sliced"]) for r in good_rows] == [
+        (0, True), (1, True), (2, True)]
+    assert [(r["page_lo"], r["page_hi"], r["sliced"], len(r["data"]))
+            for r in bad_rows] == [(0, 3, False, len(bad))]
+    assert got == good
+    assert len(good["d1"]) == 1 + 3 * 2

@@ -231,16 +231,17 @@ def test_bucket_rows_shape(real_corpus, spark):
 
 
 def test_payload_slicing_equal_output_and_smaller_shuffle(real_corpus):
-    """slice_payloads (default on) must change BYTES, never output: the
-    sliced and unsliced bucket frames extract identical spans, multi-
-    bucket PDFs actually carry sliced sub-PDFs, and the total payload
-    bytes crossing the bucket shuffle shrink to ~the original corpus
-    size instead of ⌈pages/K⌉ full copies."""
+    """Payload slicing must change BYTES, never output: one-page sliced
+    buckets and the whole-payload bucket (``bucket_pages=None``)
+    extract identical spans, multi-bucket PDFs actually carry sliced
+    sub-PDFs, and the total payload bytes crossing the bucket shuffle
+    shrink to ~the original corpus size instead of one full copy per
+    bucket."""
     docs_df, _synth, real = real_corpus
     sliced_out = _spans_by_doc(extract_real.extract_real_documents(
-        docs_df, real, bucket_pages=1, slice_payloads=True))
+        docs_df, real, bucket_pages=1))
     full_out = _spans_by_doc(extract_real.extract_real_documents(
-        docs_df, real, bucket_pages=1, slice_payloads=False))
+        docs_df, real, bucket_pages=None))
     assert sliced_out == full_out
     size = F.sum(F.length("data")).alias("bytes")
     rows_sliced = (
@@ -252,16 +253,44 @@ def test_payload_slicing_equal_output_and_smaller_shuffle(real_corpus):
     # multi-bucket PDFs sliced; single-bucket media (images, 1-page
     # PDFs) ride whole — slicing them would only add overhead
     assert by_flag[True]["n"] > 0
+    # the full-copy baseline: every bucket carrying its whole payload
     unsliced_bytes = (
-        extract_real.real_page_buckets(
-            docs_df, real, bucket_pages=1, slice_payloads=False)
+        extract_real.real_page_buckets(docs_df, real, bucket_pages=1)
         .filter("media_kind != 'error'")
-        .agg(size).collect()[0]["bytes"]
+        .groupBy("media_ref").count()
+        .join(real.select("media_ref", F.length("data").alias("len")),
+              "media_ref")
+        .agg(F.sum(F.col("count") * F.col("len")).alias("bytes"))
+        .collect()[0]["bytes"]
     )
     corpus_bytes = real.agg(size).collect()[0]["bytes"]
     sliced_total = sum(r["bytes"] for r in rows_sliced)
     assert sliced_total < unsliced_bytes / 2
     assert sliced_total < corpus_bytes * 1.5  # ~once in total, not x pages
+
+
+def test_one_entry_point_per_stage():
+    """Each stage is one function object under both of its names, every
+    option after ``media`` is keyword-only (so an old positional order
+    cannot bind to the wrong option), the default is one page per
+    bucket, and no caller-side switch picks a pipeline."""
+    import inspect
+
+    from ocr_platform_spark import lineage, streaming
+
+    assert extract_real.extract_real_documents is extract.extract_documents
+    assert extract_real.real_page_buckets is extract.decode_pages
+    assert extract_real.ocr_real_blocks is extract.ocr_blocks
+    assert extract_real.real_media_errors is extract.media_errors
+    assert extract.DEFAULT_BUCKET_PAGES == 1
+    for fn in (extract.extract_documents, extract.decode_pages):
+        params = list(inspect.signature(fn).parameters.values())
+        assert [p.name for p in params[:2]] == ["documents", "media"]
+        assert all(p.kind is p.KEYWORD_ONLY for p in params[2:]), fn
+        assert "slice_payloads" not in {p.name for p in params}
+    for fn in (lineage.run_extract_job, streaming.process_extract_batch,
+               streaming.stream_extract):
+        assert "pipeline" not in inspect.signature(fn).parameters, fn
 
 
 def test_mixed_synthetic_and_real_media_extract_identically(real_corpus):
@@ -406,9 +435,9 @@ def test_null_payload_quarantines_and_keeps_text(spark):
 
 def test_real_pipeline_resumable_through_lineage(real_corpus, spark,
                                                  tmp_path_factory):
-    """run_extract_job(pipeline=extract_real_documents): kill after 1 of
-    4 chunks, resume, converge to the direct pipeline's exact output —
-    the real-codec path inherits the whole lineage/resume machinery."""
+    """run_extract_job over real-codec media: kill after 1 of 4 chunks,
+    resume, converge to the direct pipeline's exact output — the one
+    entry point carries the whole lineage/resume machinery."""
     from ocr_platform_spark import lineage
 
     docs_df, _synth, real = real_corpus
@@ -419,13 +448,11 @@ def test_real_pipeline_resumable_through_lineage(real_corpus, spark,
     n1 = lineage.run_extract_job(
         spark, docs_df, real, out_dir, "run-real",
         num_buckets=8, chunk_buckets=2, max_chunks=1,
-        pipeline=extract_real.extract_real_documents,
     )
     assert n1 == 1
     n2 = lineage.run_extract_job(
         spark, docs_df, real, out_dir, "run-real",
         num_buckets=8, chunk_buckets=2,
-        pipeline=extract_real.extract_real_documents,
     )
     assert n2 == 3
     got = {

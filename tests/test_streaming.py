@@ -310,12 +310,10 @@ def test_batch_retry_is_idempotent(spark, tmp_path):
 
 
 def test_stream_drain_real_media_pipeline(spark, tmp_path):
-    """The pipeline= seam: a landing stream of web/real media (HTML +
-    PNG re-encodings) drains through extract_real_documents and matches
-    the batch real pipeline exactly."""
-    from ocr_platform_spark.operators.extract_real import (
-        extract_real_documents,
-    )
+    """The one entry point: a landing stream of web/real media (HTML +
+    PNG re-encodings) drains through extract_documents and matches the
+    batch pipeline exactly."""
+    from ocr_platform_spark.operators.extract import extract_documents
     from tests.test_extract_html import content_html
     from tests.test_extract_real import reencode_real
 
@@ -345,12 +343,11 @@ def test_stream_drain_real_media_pipeline(spark, tmp_path):
         out_dir,
         checkpoint_dir=str(tmp_path / "ckpt"),
         max_files_per_trigger=1,
-        pipeline=extract_real_documents,
     )
     q.awaitTermination()
 
     streamed = spark.read.parquet(os.path.join(out_dir, "data"))
-    expected = extract_real_documents(
+    expected = extract_documents(
         spark.read.parquet(str(landing)), media_df
     )
     assert _spans_by_doc(streamed) == _spans_by_doc(expected)

@@ -82,25 +82,25 @@ sections.append(("Extraction pipeline (end-to-end)",
   plan_of(extract.extract_documents(docs_df, media_df))))
 
 # 5b. real-codec extraction: the page-bucket shape
-from ocr_platform_spark.operators import extract_real
 sys.path.insert(0, "/root/repo/tests")
 from test_pdfcodec import build_pdf  # noqa: F401 (import path for helper)
 from test_extract_real import reencode_real
 real_df = spark.createDataFrame(
     [(k, bytearray(reencode_real(v["data"]))) for k, v in sorted(media.items())],
     "media_ref string, data binary")
-sections.append(("Real-codec extraction (extract_real_documents)",
-  "The page-BUCKET shape for media without parametric descriptors"
-  " (operators/extract_real.py, docs/SCALE.md): broadcast span-ref join"
+sections.append(("Real-codec extraction (extract_documents)",
+  "The page-BUCKET shape over real-codec media, the same entry point as"
+  " the flagship (operators/extract.py, docs/SCALE.md): broadcast span-ref join"
   " over the SHARED lazily-checkpointed explode (the flagship's"
   " single-scan shape — the Scan ExistingRDD leaves below),"
   " probe+bucket-explode MapInPandas (multi-bucket PDFs and multi-page"
   " G4 TIFFs are SLICED at probe time into per-bucket sub-documents —"
-  " pdfcodec._Slicer / tiffcodec.slice_pages — so the"
-  " document's bytes cross the one Exchange ~once in total instead of"
-  " ceil(pages/K) full copies; slice_payloads=False restores the"
-  " full-payload rows), hash repartition on (doc_id, offset, bucket_index) so a"
-  " 2,000-page scanned PDF is ~250 tasks instead of one straggler, bucket"
+  " pdfcodec._Slicer / tiffcodec.page_slicer, each parsing the"
+  " document once — so the document's bytes cross the one Exchange"
+  " ~once in total instead of"
+  " ceil(pages/K) full copies; a slicer failure falls back to"
+  " one whole-payload row), hash repartition on (doc_id, offset, bucket_index) so a"
+  " 2,000-page scanned PDF is 2,000 one-page tasks instead of one straggler, bucket"
   " OCR decoding only its own page streams, then the same sentinel"
   " assemble tail as the flagship. The round-4 OCR-bypass tiers (PDF"
   " text layers via pdftext.py, HTML DOM blocks via htmltext.py) are"
@@ -108,7 +108,7 @@ sections.append(("Real-codec extraction (extract_real_documents)",
   " the bucket MapInPandas, so the identical plan below serves scanned,"
   " born-digital and web media — bypass pages only make bucket tasks"
   " cheaper (BENCH/REAL_CODEC.json: html arm 2.53x the scanned arm).",
-  plan_of(extract_real.extract_real_documents(docs_df, real_df))))
+  plan_of(extract.extract_documents(docs_df, real_df))))
 
 from ocr_platform_spark import multimodal as _mm
 sections.append(("Audio features (audio_features over WAV payloads)",
