@@ -1,15 +1,16 @@
-"""Office sub-zip slicing exhibit: bytes crossing the bucket shuffle.
+"""Office bucket exhibit: bytes crossing the bucket shuffle.
 
-The claim (docs/SCALE.md "office tiers"): a multi-slide deck cut by its
-slicer crosses the bucket shuffle ~once in total at any bucket size K,
-instead of ⌈pages/K⌉ full-payload copies. This measures it directly —
-the bucket stage's ``data`` column is exactly what the (doc_id, offset,
-bucket_index) repartition moves, so ``sum(length(data))`` over the
-bucket frame IS the shuffled payload volume. Arms: the default one page
-per bucket and eight pages per bucket; the full-copy figure each is
-compared with is its bucket-row count times the payload size (what the
-slicer-failure fallback ships). Extraction at K=1 must equal the
-whole-payload bucket (``bucket_pages=None``).
+The claim (docs/SCALE.md "Walk once"): a multi-page deck, book,
+workbook or mail archive crosses the bucket shuffle ~once in total at
+any bucket size K, instead of ⌈pages/K⌉ full-payload copies. Each
+bucket row carries its own pages' walked parts, which the deep probe
+produced: text parts and pictures' bytes, no payload. This measures
+the payload volume the (doc_id, offset, bucket_index) repartition
+moves: per bucket row, ``length(data)`` (a slice or a whole payload)
+plus its parts' text in UTF-8 and picture bytes. Arms: the default one
+page per bucket and eight pages per bucket; the full-copy figure each
+is compared with is its bucket-row count times the payload size.
+Extraction at K=1 must equal the one bucket of ``bucket_pages=None``.
 
 Run: python BENCH/office_slice_exhibit.py
 Prints one JSON line; appends to BENCH/OFFICE_SLICE.json.
@@ -25,7 +26,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
-from ocr_platform_spark import epubtext, pptxtext, schemas
+from ocr_platform_spark import emltext, epubtext, pptxtext, schemas, xlsxtext
 from ocr_platform_spark.operators import extract
 from ocr_platform_spark.session import get_spark
 
@@ -45,42 +46,55 @@ def main() -> None:
             [f"chapter {i} paragraph one", f"chapter {i} paragraph two"])
         for i in range(N_SLIDES)
     ])
+    workbook = xlsxtext.encode_xlsx([
+        [[f"sheet {i} row one", f"{i}.5"], [f"sheet {i} row two"]]
+        for i in range(N_SLIDES)
+    ])
+    archive = emltext.encode_mbox([
+        emltext.encode_eml([("From", "a@b"), ("Subject", f"message {i}"),
+                            ("Received", "relay"), ("Date", "d")],
+                           body=f"message {i} body\n\nsecond paragraph")
+        for i in range(N_SLIDES)
+    ])
+    payloads = {"pptx": deck, "epub": book, "xlsx": workbook,
+                "mbox": archive}
     docs = spark.createDataFrame(
-        [{"doc_id": "d-deck", "spans": [
-            {"kind": "pptx", "text": None, "media_ref": "m-deck",
-             "offset": 0}]},
-         {"doc_id": "d-book", "spans": [
-            {"kind": "epub", "text": None, "media_ref": "m-book",
-             "offset": 0}]}],
+        [{"doc_id": f"d-{kind}", "spans": [
+            {"kind": kind, "text": None, "media_ref": f"m-{kind}",
+             "offset": 0}]} for kind in payloads],
         schema=schemas.DOCUMENTS,
     )
     media = spark.createDataFrame(
-        [("m-deck", bytearray(deck)), ("m-book", bytearray(book))],
+        [(f"m-{kind}", bytearray(raw)) for kind, raw in payloads.items()],
         "media_ref string, data binary",
     )
     out: dict = {
         "n_pages": N_SLIDES,
-        "payload_bytes": {"pptx": len(deck), "epub": len(book)},
+        "payload_bytes": {kind: len(raw) for kind, raw in payloads.items()},
     }
+    row_bytes = F.expr(
+        "coalesce(length(data), 0) + coalesce(aggregate(parts, 0L, "
+        "(acc, p) -> acc + coalesce(octet_length(p.text), 0) "
+        "+ coalesce(length(p.data), 0)), 0)")
     for k in (1, 8):
         buckets = extract.decode_pages(
             docs, media, bucket_pages=k,
         ).filter(F.col("media_kind") != "error")
         rows = (
             buckets.groupBy("media_kind")
-            .agg(F.sum(F.length("data")).alias("bytes"),
+            .agg(F.sum(row_bytes).alias("bytes"),
                  F.count("*").alias("bucket_rows"))
             .collect()
         )
         out[f"bucket{k}"] = {r["media_kind"]: {
             "shuffled_bytes": int(r["bytes"]),
             "bucket_rows": int(r["bucket_rows"]),
-            "amplification_sliced": round(
+            "amplification": round(
                 r["bytes"] / out["payload_bytes"][r["media_kind"]], 2),
             "amplification_full_copy": int(r["bucket_rows"]),
         } for r in rows}
-    # equality of extraction, sliced one-page buckets vs the
-    # whole-payload bucket (the exhibit must not trade correctness)
+    # equality of extraction, one-page buckets vs the one bucket of
+    # bucket_pages=None (the exhibit must not trade correctness)
     a = extract.extract_documents(docs, media)
     b = extract.extract_documents(docs, media, bucket_pages=None)
     sa = {r["doc_id"]: [tuple(s) for s in r["spans"]] for r in a.collect()}

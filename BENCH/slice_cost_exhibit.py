@@ -1,14 +1,18 @@
-"""Probe-time slicing cost per paged tier, at one and eight pages per
-bucket, with no Spark: ``TIERS[kind].slicer(raw)`` once, then every
-bucket's cut, as the probe stage runs them (operators/extract.py).
+"""Probe-stage cost per paged tier, at one and eight pages per bucket,
+with no Spark: the bucket explode (``operators/extract.py``
+``_bucket_batches_fn``) over one payload, as the probe stage runs it —
+the deep probe, then the slicer's cuts (PDF, TIFF, GIF, SPDF1) or the
+walked parts a container kind's probe already produced (PPTX, EPUB,
+mbox, XLSX).
 
 A slicer that re-parses its container on every cut costs O(pages²) at
 K=1 and eight times less at K=8; one that parses once costs about the
-same at both. Also printed: the bytes of all slices over the payload's
-size (the bucket shuffle's amplification).
+same at both. Also printed: the bytes the bucket rows carry over the
+payload's size (the bucket shuffle's amplification): a slice's bytes,
+or a walked row's text parts in UTF-8 plus its pictures' bytes.
 
 Usage: python BENCH/slice_cost_exhibit.py [--pages 500] [--root DIR]
-(``--root`` points at another checkout to measure its slicers.)
+(``--root`` points at another checkout to measure its probe stage.)
 """
 
 from __future__ import annotations
@@ -20,6 +24,15 @@ import sys
 import time
 
 import numpy as np
+import pandas as pd
+
+
+def row_bytes(data, parts) -> int:
+    """The payload bytes one bucket row carries."""
+    if parts is None:
+        return len(data)
+    return sum(len(p["data"]) if p["data"] is not None
+               else len(p["text"].encode()) for p in parts)
 
 
 def main() -> None:
@@ -29,9 +42,9 @@ def main() -> None:
         os.path.dirname(os.path.abspath(__file__))))
     args = ap.parse_args()
     sys.path.insert(0, args.root)
-    from ocr_platform_spark import (emltext, epubtext, gifcodec, multimodal,
-                                    pptxtext, tiffcodec, xlsxtext)
-    from ocr_platform_spark.tiers import TIERS
+    from ocr_platform_spark import (emltext, epubtext, gifcodec, pptxtext,
+                                    tiffcodec, xlsxtext)
+    from ocr_platform_spark.operators import extract
 
     n = args.pages
     rng = np.random.default_rng(0)
@@ -53,15 +66,17 @@ def main() -> None:
     }
     out = {"pages": n}
     for kind, raw in payloads.items():
-        probed, pages, _w, _h = multimodal.probe_real_media(raw, deep=False)
-        assert (probed, pages) == (kind, n), (kind, probed, pages)
         row = {}
         for k in (1, 8):
+            frame = pd.DataFrame({"doc_id": ["d"], "offset": [0],
+                                  "media_ref": ["m"], "data": [raw]})
             t0 = time.perf_counter()
-            cut = TIERS[kind].slicer(raw)
-            shipped = sum(len(cut(range(lo, min(n, lo + k))))
-                          for lo in range(0, n, k))
+            [rows] = extract._bucket_batches_fn(k)(iter([frame]))
             row[f"k{k}_sec"] = round(time.perf_counter() - t0, 3)
+            assert (set(rows["media_kind"]), len(rows)) == (
+                {kind}, -(-n // k)), (kind, rows["error"].tolist()[:1])
+            parts = rows["parts"] if "parts" in rows else [None] * len(rows)
+            shipped = sum(map(row_bytes, rows["data"], parts))
             row[f"k{k}_amplification"] = round(shipped / len(raw), 2)
         out[kind] = row
     print(json.dumps(out))

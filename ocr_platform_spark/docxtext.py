@@ -98,33 +98,6 @@ def _open_docx(raw: bytes) -> zipfile.ZipFile:
     return zf
 
 
-def sub_zip(zf: zipfile.ZipFile, order: dict, keep: set,
-            replaced: "dict[str, str] | None" = None) -> bytes:
-    """The members of ``zf`` named in ``keep`` (or in ``replaced``,
-    with new content), in archive order, as a new deflated zip: the
-    bytes of one probe-time bucket slice (``pptxtext.slide_slicer`` and
-    its EPUB/XLSX analogs). ``order`` maps each member name to its
-    archive position, computed once per package, so a slice costs its
-    own members rather than a scan of the whole directory. A kept
-    member that fails its CRC or inflate raises ``ValueError`` (the
-    document falls back to one whole-payload bucket), never a raw
-    ``BadZipFile`` off an executor (fuzz-pinned)."""
-    replaced = replaced or {}
-    buf = io.BytesIO()
-    with zipfile.ZipFile(buf, "w", zipfile.ZIP_DEFLATED) as out:
-        for name in sorted(keep.union(replaced).intersection(order),
-                           key=order.__getitem__):
-            if name in replaced:
-                out.writestr(name, replaced[name])
-                continue
-            try:
-                data = zf.read(name)  # CRC-32 verified here
-            except Exception as e:
-                raise ValueError(f"unreadable {name}: {e}") from e
-            out.writestr(name, data)
-    return buf.getvalue()
-
-
 def probe_docx(raw: bytes) -> tuple[int, int, int]:
     """Shallow pre-flight (the header-walk metadata probe):
     ``(n_pages=1, width=0, height=0)`` — DOCX is reflowable (page

@@ -26,8 +26,8 @@ Two kinds, two shapes:
 ``mbox``
     Many messages, and messages are PAGES — the paged-tier shape
     (PPTX slides / XLSX sheets / EPUB chapters), so a multi-gigabyte
-    archive buckets and payload-slices exactly like a long PDF
-    (``operators/extract.py`` page buckets). Sniffed on the
+    archive buckets like a long PDF (``operators/extract.py`` page
+    buckets), each bucket row carrying its messages' walked parts. Sniffed on the
     leading ``From `` envelope line (the mbox magic) followed by an
     EML-shaped header block. ``>From`` body-line quoting is reversed
     per mboxrd (one leading ``>`` stripped from ``>+From `` lines).
@@ -99,7 +99,7 @@ from .plaintext import TextParagraph, decode_text, paragraph_blocks
 
 __all__ = [
     "sniff_eml", "sniff_mbox", "eml_blocks", "eml_parts",
-    "count_messages", "mbox_page_parts", "slice_messages",
+    "count_messages", "mbox_page_parts",
     "encode_eml", "encode_mbox",
 ]
 
@@ -463,10 +463,9 @@ def mbox_page_parts(
     — the ``pptxtext.slide_parts`` shape, so raster attachments OCR in
     place between their message's body parts through the paged bucket
     path. ``page_indices`` selects messages by their position in ``raw``
-    (the bucket contract, :mod:`.tiers`: global indices into a whole
-    archive; local indices, or ``None`` for all, into a sliced one,
-    whose messages the slicer renumbers from 0). A member
-    without an e-mail header block quarantines."""
+    (``None`` for all); the deep probe walks every message once and the
+    bucket rows carry the parts (:mod:`.tiers`). A member without an
+    e-mail header block quarantines."""
     msgs = _split_mbox(decode_text(raw))
     if page_indices is not None:
         msgs = [msgs[i] for i in page_indices]
@@ -482,36 +481,6 @@ def mbox_page_parts(
                 items.append(("media", i, p[1], p[2], p[3]))
         pages.append(items)
     return pages
-
-
-def slice_messages(raw: bytes, page_indices) -> bytes:
-    """A smaller mbox holding ONLY the selected messages (payload
-    slicing for page buckets, cf. ``pptxtext.slice_slides``). Slicing
-    re-applies mboxrd quoting so a sliced archive re-splits
-    identically."""
-    return message_slicer(raw)(page_indices)
-
-
-def message_slicer(raw: bytes):
-    """Decode and split the archive ONCE and return
-    :func:`slice_messages`' cut, ``page_indices -> bytes``."""
-    msgs = _split_mbox(decode_text(raw))
-
-    def cut(page_indices) -> bytes:
-        try:
-            kept = [msgs[i] for i in page_indices]
-        except IndexError as e:
-            raise ValueError(f"message index out of range: {e}") from e
-        out: list[str] = []
-        for m in kept:
-            out.append("From sliced@local Thu Jan  1 00:00:00 2026")
-            for ln in m.split("\n"):
-                if ln.lstrip(">").startswith("From "):
-                    ln = ">" + ln
-                out.append(ln)
-        return ("\n".join(out) + "\n").encode("utf-8")
-
-    return cut
 
 
 # ---------------------------------------------------------------------------

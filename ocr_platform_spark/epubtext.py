@@ -12,10 +12,10 @@ Model: one PAGE per spine document (chapters are the natural page unit
 — the same genuinely-paged shape as PPTX slides), each extracted by the
 DOM tier's block walk (:func:`..htmltext.main_blocks` — innermost
 blocks, entity decode, link-density boilerplate drop, which also
-handles an EPUB's tables-of-contents and footer chrome). Probe-time
-sub-zip slicing ships only the bucket's own chapter members (plus
-container + OPF), so a 400-chapter book crosses the bucket shuffle
-~once.
+handles an EPUB's tables-of-contents and footer chrome). The deep
+probe walks the book once and each bucket row ships only its own
+chapters' walked parts, so a 400-chapter book crosses the bucket
+shuffle ~once.
 
 Quarantine: corrupt/truncated zip, missing/malformed container or OPF,
 spine idrefs without manifest entries, manifest hrefs missing from the
@@ -30,11 +30,9 @@ import io
 import posixpath
 import re
 import zipfile
-from xml.etree import ElementTree
 
 from . import htmltext
-from .docxtext import _open_docx as _open_zip, sub_zip
-from .docxtext import _xml_escape
+from .docxtext import _open_docx as _open_zip, _xml_escape
 from .pptxtext import _parse_member
 
 _MARKER = "META-INF/container.xml"
@@ -146,10 +144,9 @@ def chapter_parts(
     ``("media", pos, ctype, member, payload)``), so a scanned plate
     between two paragraphs OCRs between their spans. Text parts are the
     DOM tier's :func:`..htmltext.main_blocks`. ``page_indices`` selects
-    chapters by their spine position in ``raw`` (the bucket contract,
-    :mod:`.tiers`: global indices into a whole payload; local indices,
-    or ``None`` for all, into a sliced one, whose rewritten spine
-    renumbers them from 0)."""
+    chapters by their spine position in ``raw`` (``None`` for all). The
+    deep probe walks every chapter once and the bucket rows carry the
+    parts (:mod:`.tiers`)."""
     from .docxtext import media_content_type
 
     with _open_zip(raw) as zf:
@@ -171,71 +168,6 @@ def chapter_parts(
             items.sort(key=lambda p: p[1])
             chapters.append(items)
     return chapters
-
-
-def slice_chapters(raw: bytes, page_indices) -> bytes:
-    """Probe-time bucket slicing: a sub-EPUB holding ONLY the selected
-    chapters plus the container/OPF chain, with the OPF spine REWRITTEN
-    to the selected chapters (in their original relative order), so the
-    slice's spine positions 0..k-1 are exactly the bucket's pages."""
-    return chapter_slicer(raw)(page_indices)
-
-
-def chapter_slicer(raw: bytes):
-    """Resolve the container → OPF → spine chain ONCE and return
-    :func:`slice_chapters`' cut, ``page_indices -> bytes``."""
-    zf = _open_zip(raw)
-    members = _spine_members(zf)
-    order = {n: i for i, n in enumerate(zf.namelist())}
-    opf_path = _opf_path(zf)
-    ElementTree.register_namespace("", _OPF_NS)
-    opf = _parse_member(zf, opf_path)
-    base = posixpath.dirname(opf_path)
-    hrefs = {
-        item.get("id"):
-            posixpath.normpath(posixpath.join(base, item.get("href")))
-        for item in opf.iterfind(_MANIFEST_ITEM) if item.get("href")
-    }
-    # the spine and the manifest drop every entry whose href is not a
-    # kept chapter (measured: with the full 300-item manifest riding
-    # every slice, a 300-chapter book's bucket shuffle amplifies 2.3x;
-    # pruned it is ~1.2x — BENCH/office_slice_exhibit.py). Each list's
-    # positions are indexed by href once, so a cut costs its own
-    # chapters, not the whole book.
-    pruned: dict[ElementTree.Element, dict[str, list[int]]] = {}
-    for tag, key in ((f"{{{_OPF_NS}}}spine", "idref"),
-                     (f"{{{_OPF_NS}}}manifest", "id")):
-        listing = opf.find(tag)
-        at = pruned[listing] = {}
-        for i, el in enumerate(listing):
-            at.setdefault(hrefs.get(el.get(key)), []).append(i)
-
-    def cut(page_indices) -> bytes:
-        try:
-            selected = [members[i] for i in page_indices]
-        except IndexError as e:
-            raise ValueError(f"chapter index out of range: {e}") from e
-        keep = set(selected) | {_MARKER, opf_path, "mimetype"}
-        # each kept chapter's embedded images ride with their slice so
-        # the bucket's picture interleave still decodes
-        for name in selected:
-            html = _chapter_html(zf, name)
-            keep.update(t for _pos, t in _chapter_images(zf, name, html))
-        sub = ElementTree.Element(opf.tag, opf.attrib)
-        sub.text = opf.text
-        for child in opf:
-            if child in pruned:
-                kept = sorted(i for name in set(selected)
-                              for i in pruned[child].get(name, ()))
-                node = ElementTree.SubElement(sub, child.tag, child.attrib)
-                node.text, node.tail = child.text, child.tail
-                node.extend(child[i] for i in kept)
-            else:
-                sub.append(child)
-        return sub_zip(zf, order, keep, {
-            opf_path: ElementTree.tostring(sub, encoding="unicode")})
-
-    return cut
 
 
 # --- minimal writer (tests / fixtures) ---------------------------------------

@@ -172,6 +172,15 @@ def probe_real_media(
     (:func:`real_media_metadata` here, the bucket probe in
     ``operators/extract.py``) so their quarantine semantics cannot
     drift."""
+    return _probe(raw, deep)[:4]
+
+
+def _probe(raw: bytes, deep: bool) -> tuple:
+    """:func:`probe_real_media`'s ladder, plus a fifth element: the
+    pages a container kind's deep probe walked (:func:`_probe_walk`),
+    ``None`` for every other kind. The bucket probe in
+    ``operators/extract.py`` ships those pages' parts instead of
+    walking the payload again."""
     from . import jpegcodec, pdfcodec, pngcodec, transport
 
     twrap = transport.sniff_transport(raw)
@@ -184,8 +193,8 @@ def probe_real_media(
         # a metadata pass is exactly what the probe_dims-vs-validate
         # split exists to avoid (..transport module docstring).
         if not deep:
-            return twrap, 1, 0, 0
-        return probe_real_media(transport.maybe_unwrap(raw), deep=True)
+            return twrap, 1, 0, 0, None
+        return _probe(transport.maybe_unwrap(raw), deep=True)
 
     kind = formats.sniff_kind(raw)
     if kind in ("spdf", "simg"):
@@ -194,7 +203,7 @@ def probe_real_media(
         # page-count probe
         n = (len(formats.decode_media(raw)[1]) if deep
              else formats.page_count(raw))
-        return kind, n, 0, 0
+        return kind, n, 0, 0, None
     if kind == "pdf":
         if deep:
             from . import pdftext
@@ -202,27 +211,27 @@ def probe_real_media(
             n, w, h = pdftext.validate_hybrid(raw)
         else:
             n, w, h = pdfcodec.probe_dims(raw)
-        return "pdf", n, w, h
+        return "pdf", n, w, h, None
     if kind == "png":
         w, h = pngcodec.validate_png(raw)
-        return "image", 1, w, h
+        return "image", 1, w, h, None
     if kind == "jpeg":
         w, h = jpegcodec.validate_jpeg(raw)
-        return "image", 1, w, h
+        return "image", 1, w, h, None
     if kind == "bmp":
         from . import bmpcodec
 
         # header/palette/mask bounds + full size check (or an RLE
         # opcode walk) — BMP has no checksum, so this is decode-complete
         w, h = bmpcodec.validate_bmp(raw)
-        return "image", 1, w, h
+        return "image", 1, w, h, None
     if kind == "tiff":
         from . import tiffcodec
 
         # probe_tiff already validates every page's plan without
         # inflating samples, so deep and shallow coincide
         n, w, h = tiffcodec.probe_tiff(raw)
-        return "tiff", n, w, h
+        return "tiff", n, w, h, None
     if kind == "gif":
         from . import gifcodec
 
@@ -231,7 +240,7 @@ def probe_real_media(
         # coincide; entropy corruption degrades at the OCR stage like
         # JPEG entropy bits
         n, w, h = gifcodec.probe_gif(raw)
-        return "gif", n, w, h
+        return "gif", n, w, h, None
     if kind == "html":
         from . import htmltext
 
@@ -244,7 +253,7 @@ def probe_real_media(
         name = htmltext._declared_charset(raw)
         if name is not None and name not in htmltext._CHARSET_CODECS:
             raise ValueError(f"unsupported declared charset {name!r}")
-        return "html", 1, 0, 0
+        return "html", 1, 0, 0, None
     if kind == "zip":
         from . import docxtext, epubtext, odttext, pptxtext, xlsxtext
 
@@ -273,14 +282,14 @@ def probe_real_media(
         probe = {"docx": docxtext.probe_docx, "pptx": pptxtext.probe_pptx,
                  "xlsx": xlsxtext.probe_xlsx, "epub": epubtext.probe_epub,
                  "odt": odttext.probe_odt}[kind]
-        return (kind, *probe(raw))
+        return (kind, *probe(raw), None)
     if kind == "rtf":
         # RTF has no checksums/length fields, so structural validation
         # IS the strict parse; the shallow/metadata probe stays
         # O(magic) like every other header walk
         if deep:
             return _probe_walk("rtf", raw)
-        return "rtf", 1, 0, 0
+        return "rtf", 1, 0, 0, None
     if kind == "wav":
         from . import audiocodec
 
@@ -294,7 +303,7 @@ def probe_real_media(
                 "wav: audio payload has no text tier — route to "
                 "multimodal.audio_features")
         audiocodec.probe_wav(raw)  # full header-walk validation
-        return "wav", 1, 0, 0
+        return "wav", 1, 0, 0, None
     if kind == "avi":
         from . import avicodec
 
@@ -305,7 +314,7 @@ def probe_real_media(
                 "avi: video payload has no text tier — route to "
                 "multimodal.video_frame_features")
         n, w, h = avicodec.probe_avi(raw, deep=False)
-        return "avi", n, w, h
+        return "avi", n, w, h, None
     # XML tier — leading markup that is not HTML (feeds, sitemaps,
     # SVG, data exports): the strict whole-document parse is the gate,
     # so truncated markup still quarantines exactly as it did when the
@@ -316,8 +325,8 @@ def probe_real_media(
     if xmltext.sniff_xml(raw):
         if deep:
             n, w, h = xmltext.validate_xml(raw)
-            return "xml", n, w, h
-        return "xml", 1, 0, 0
+            return "xml", n, w, h, None
+        return "xml", 1, 0, 0, None
     # FINAL tier — no magic matched: strict plain-text contract
     # (UTF-8, no binary controls, no leading markup). deep validates
     # the whole payload; shallow is the O(window) sniff, mirroring the
@@ -341,7 +350,7 @@ def probe_real_media(
             # so a multi-GB archive holds one decoded copy at a time
             text = None
             return _probe_walk(kind, raw)
-        return kind, 1, 0, 0
+        return kind, 1, 0, 0, None
     if plaintext.sniff_text(raw):
         # shallow refinement over the sniff window only (a structural
         # signal past the window keeps the metadata kind "txt"; the
@@ -360,8 +369,8 @@ def probe_real_media(
             # page count from the envelope-line scan only (bytes-level
             # regex, no decode/parse) — the O(n)-but-cheap economy the
             # office tiers' central-directory walk also pays
-            return "mbox", emltext.count_messages(raw), 0, 0
-        return kind, 1, 0, 0
+            return "mbox", emltext.count_messages(raw), 0, 0, None
+        return kind, 1, 0, 0, None
     raise ValueError(f"unknown media magic {raw[:5]!r}")
 
 
@@ -393,23 +402,26 @@ def _text_kind(text: str) -> str:
     return "txt"
 
 
-def _probe_walk(kind: str, raw: bytes) -> tuple[str, int, int, int]:
+def _probe_walk(kind: str, raw: bytes) -> tuple:
     """Deep probe of a container kind: run its tier's part walk over
-    every page (the walk the OCR stage decodes, so whatever it would
-    fail on quarantines here) and deep-probe each part the shared
-    picture rule (:func:`.tiers.is_picture`) sends to OCR."""
+    every page (whatever the OCR stage would fail on quarantines here)
+    and deep-probe each part the shared picture rule
+    (:func:`.tiers.is_picture`) sends to OCR. The walked pages come
+    back with every other media part dropped, as :func:`.tiers._flow`
+    would drop it: exactly what the OCR stage decodes."""
     from . import tiers
 
-    pages = tiers.TIERS[kind].walk(raw, None)
+    pages = [[p for p in parts if p[0] == "text" or tiers.is_picture(p)]
+             for parts in tiers.TIERS[kind].walk(raw, None)]
     for parts in pages:
-        for part in filter(tiers.is_picture, parts):
+        for part in (p for p in parts if p[0] == "media"):
             try:
                 probe_real_media(part[-1], deep=True)
             except Exception as e:
                 raise ValueError(
                     f"corrupt embedded media {part[-2]!r}: {e}"
                 ) from e
-    return kind, len(pages), 0, 0
+    return kind, len(pages), 0, 0, pages
 
 
 def real_media_metadata(media: DataFrame) -> DataFrame:

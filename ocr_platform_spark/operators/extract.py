@@ -7,10 +7,12 @@ Replaces the reference's HTTP/Redis/Postgres/S3 process hops
                                 └─ media spans ⋈ media payloads             │
                                     │ mapInPandas PROBE (cheap):            │
                                     │   media_kind → K-page buckets, each   │
-                                    │   sliced to a minimal sub-container   │
+                                    │   its pages' walked parts or a        │
+                                    │   sliced PDF/TIFF/GIF/SPDF1           │
                                     │ repartition(bucket key) ← skew spread │
                                     │ mapInPandas OCR (heavy):              │
-                                    │   TIERS[kind].pages → one emitter:    │
+                                    │   _flow(parts) | TIERS[kind].pages →  │
+                                    │   one emitter:                        │
                                     │   text parts as blocks; rasters →     │
                                     │   detect → lazy preprocess crops →    │
                                     │   strips → recognize → trim → blocks  │
@@ -36,16 +38,22 @@ their real-codec names (the same function objects).
    (quarantining what the OCR stage could not decode as one
    ``media_kind=error`` row, before any payload is duplicated), and
    the media explodes into page *buckets* of ``bucket_pages`` pages.
-   A multi-bucket payload is cut by its tier's slicer, parsed once:
-   each bucket row carries a minimal sub-document holding only its own
-   pages, so the document crosses the bucket shuffle ~once in total
-   (a one-page SPDF1 slice is ~200 bytes).
+   A container kind (DOCX, ODT, RTF, HTML, EML, PPTX, EPUB, mbox,
+   XLSX) was walked once by the deep probe: each bucket row carries
+   its own pages' walked parts (``parts``: text parts and pictures'
+   bytes, no payload), so the OCR stage never parses the container
+   again. A multi-bucket PDF, TIFF, GIF or SPDF1 payload is cut by its
+   tier's slicer, parsed once: each bucket row carries a minimal
+   sub-document holding only its own pages. Either way the document
+   crosses the bucket shuffle ~once in total (a one-page SPDF1 slice
+   is ~200 bytes).
 2. **repartition** on ``(doc_id, offset, bucket_index)``
    (:func:`_spread`), the skew fix: a 2,000-page PDF becomes ⌈2000/K⌉
    independent tasks instead of one straggler (SURVEY.md §4; AQE alone
    cannot split one huge row).
 3. **OCR** (``mapInPandas``): each bucket decodes only its own pages
-   through ``TIERS[kind].pages`` — pixels exist only inside this UDF —
+   — walked parts through :func:`..tiers._flow`, a payload through
+   ``TIERS[kind].pages``; pixels exist only inside this UDF —
    and one emitter (:func:`_emit_page`) turns each page into ``BLOCK``
    rows: a lone raster (every synthetic and scanned page) OCRs in its
    own pixel space through the one detect + recognize kernel
@@ -98,7 +106,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.pandas.functions import pandas_udf
 from pyspark.sql.types import StringType
 
-from .. import formats, kernels, multimodal, raster, transport
+from .. import formats, kernels, multimodal, raster, tiers, transport
 from ..schemas import BLOCK, SPAN
 from ..tiers import TIERS
 
@@ -114,12 +122,32 @@ MEDIA_KIND_ERROR = formats.MEDIA_KIND_ERROR  # quarantined payloads (shared sent
 #: perfbench workloads (docs/SCALE.md "One page per bucket").
 DEFAULT_BUCKET_PAGES = 1
 
-#: the probe stage's output: one row per page bucket
+#: the type of :data:`BUCKET`'s ``parts`` column: a container page's
+#: walked parts, each a text part (``data`` null) or a picture's bytes,
+#: ``page`` the page's ordinal within its bucket
+PARTS = "array<struct<page:int,text:string,data:binary>>"
+
+#: the probe stage's output: one row per page bucket, carrying either a
+#: payload (``data``) or, for a container kind, its pages' ``parts``;
+#: ``sliced`` means the row holds only its own pages (a slice or parts)
 BUCKET = (
     "doc_id string, offset int, media_ref string, media_kind string, "
     "bucket_index int, page_lo int, page_hi int, error string, "
-    "sliced boolean, data binary"
+    f"sliced boolean, data binary, parts {PARTS}"
 )
+
+#: the :data:`BUCKET` columns, in order
+_BUCKET_ROW = ("doc_id", "offset", "media_ref", "media_kind",
+               "bucket_index", "page_lo", "page_hi", "error", "sliced",
+               "data", "parts")
+
+
+def _part_rows(pages: list[list[tuple]]) -> list[dict]:
+    """Walked pages (:func:`..multimodal._probe_walk`) -> their bucket
+    row's ``parts`` (:data:`PARTS`)."""
+    return [{"page": i, "text": None if p[0] == "media" else p[-1],
+             "data": p[-1] if p[0] == "media" else None}
+            for i, parts in enumerate(pages) for p in parts]
 
 
 def _bucket_batches_fn(bucket_pages: int | None):
@@ -137,11 +165,8 @@ def _bucket_batches_fn(bucket_pages: int | None):
     def _bucket_batches(
         batches: Iterator[pd.DataFrame],
     ) -> Iterator[pd.DataFrame]:
-        cols = ["doc_id", "offset", "media_ref", "media_kind",
-                "bucket_index", "page_lo", "page_hi", "error",
-                "sliced", "data"]
         for pdf in batches:
-            out: dict[str, list] = {c: [] for c in cols}
+            rows: list[tuple] = []
             for doc_id, offset, ref, data in zip(
                 pdf["doc_id"], pdf["offset"], pdf["media_ref"], pdf["data"]
             ):
@@ -156,8 +181,8 @@ def _bucket_batches_fn(bucket_pages: int | None):
                     # bytes() sits inside the try so a NULL payload
                     # quarantines instead of failing the stage.
                     raw = transport.maybe_unwrap(bytes(data))
-                    kind, n_pages, _w, _h = multimodal.probe_real_media(
-                        raw, deep=True)
+                    kind, n_pages, _w, _h, walked = multimodal._probe(
+                        raw, True)
                 except Exception as exc:
                     # At 10^12 docs a malformed blob must not fail the
                     # job (reference analog: per-job FAILED status +
@@ -165,16 +190,9 @@ def _bucket_batches_fn(bucket_pages: int | None):
                     # narrow error row, before the payload is
                     # duplicated; the doc still re-emits its surviving
                     # spans.
-                    out["doc_id"].append(doc_id)
-                    out["offset"].append(offset)
-                    out["media_ref"].append(ref)
-                    out["media_kind"].append(MEDIA_KIND_ERROR)
-                    out["bucket_index"].append(-1)
-                    out["page_lo"].append(-1)
-                    out["page_hi"].append(-1)
-                    out["error"].append(str(exc)[:200])
-                    out["sliced"].append(False)
-                    out["data"].append(None)
+                    rows.append((doc_id, offset, ref, MEDIA_KIND_ERROR,
+                                 -1, -1, -1, str(exc)[:200], False, None,
+                                 None))
                     continue
                 k = bucket_pages or max(1, n_pages)
                 lows = range(0, max(1, n_pages), k)
@@ -191,30 +209,27 @@ def _bucket_batches_fn(bucket_pages: int | None):
                         payloads = [cut(range(lo, min(n_pages, lo + k)))
                                     for lo in lows]
                     except ValueError:
-                        # live, not dead: the slicer reads bytes the
-                        # probe does not (a PPTX/EPUB/XLSX whose
-                        # [Content_Types].xml, mimetype or
-                        # ppt/presentation.xml fails its CRC, which
-                        # the part walk never reads; a TIFF strip past
-                        # the end of the file). The document becomes
-                        # ONE whole-payload bucket, the
+                        # error handling for outside input: none of the
+                        # dispatch fuzz's 238 admitted multi-page mutants
+                        # reaches it, as the probe reads every byte the
+                        # TIFF and SPDF1 slicers do; a PDF or GIF slicer
+                        # refusing what its probe admitted would. The
+                        # document becomes ONE whole-payload bucket, the
                         # ``bucket_pages=None`` shape, so it ships once
-                        # at any K rather than once per bucket
+                        # at any K
                         lows, k = [0], max(1, n_pages)
                 for b, lo in enumerate(lows):
                     hi = min(n_pages, lo + k)
-                    out["doc_id"].append(doc_id)
-                    out["offset"].append(offset)
-                    out["media_ref"].append(ref)
-                    out["media_kind"].append(kind)
-                    out["bucket_index"].append(b)
-                    out["page_lo"].append(lo)
-                    out["page_hi"].append(hi)
-                    out["error"].append(None)
-                    out["sliced"].append(payloads is not None)
-                    out["data"].append(
-                        raw if payloads is None else payloads[b])
-            res = pd.DataFrame(out)
+                    if walked is not None:
+                        # a container kind ships its pages' walked
+                        # parts: the OCR stage never parses it again
+                        body, parts = None, _part_rows(walked[lo:hi])
+                    else:
+                        body = raw if payloads is None else payloads[b]
+                        parts = None
+                    rows.append((doc_id, offset, ref, kind, b, lo, hi,
+                                 None, body is not raw, body, parts))
+            res = pd.DataFrame(rows, columns=_BUCKET_ROW)
             for c in ("offset", "bucket_index", "page_lo", "page_hi"):
                 res[c] = res[c].astype("int32")
             yield res
@@ -235,18 +250,32 @@ _INT_BLOCK_COLS = [
 
 #: the bucket columns every per-bucket OCR kernel takes, in order
 _BUCKET_COLS = ("doc_id", "offset", "media_ref", "media_kind", "page_lo",
-                "page_hi", "sliced", "data")
+                "page_hi", "sliced", "data", "parts")
 
 #: the columns of :func:`detect_boxes_table`, in order
 _BOX_COLS = ("doc_id", "offset", "media_ref", "page_index", "width", "height",
              "block_index", "x1", "y1", "x2", "y2")
 
 
+def _walked_pages(parts, n: int) -> list[list[tuple]]:
+    """A bucket row's ``parts`` (:data:`PARTS`) -> its ``n`` pages of
+    walk parts, ``("text", text)`` or ``("media", payload)``: the input
+    of :func:`..tiers._flow`."""
+    pages: list[list[tuple]] = [[] for _ in range(n)]
+    for p in parts:
+        pages[p["page"]].append(("text", p["text"]) if p["data"] is None
+                                else ("media", p["data"]))
+    return pages
+
+
 def _bucket_pages(kind: str, lo: int, hi: int, sliced: bool,
-                  data: bytes, only: int | None = None) -> list[tuple]:
+                  data: bytes | None, parts, only: int | None = None,
+                  ) -> list[tuple]:
     """One bucket row -> its decoded ``(page_index, parts, width,
-    height)`` pages through ``TIERS[kind].pages`` (see :mod:`..tiers`);
-    ``only`` (a global page index) decodes that one page alone.
+    height)`` pages: a container kind's walked ``parts`` through
+    :func:`..tiers._flow`, a payload through ``TIERS[kind].pages`` (see
+    :mod:`..tiers`); ``only`` (a global page index) decodes that one
+    page alone.
 
     The tier lookup sits OUTSIDE the try: a probe kind with no tier is a
     programming error and must fail loudly, not extract nothing. The
@@ -256,7 +285,7 @@ def _bucket_pages(kind: str, lo: int, hi: int, sliced: bool,
     bucket ATOMICALLY to zero pages, the empty-page-passthrough
     contract, rather than failing the job; everything structurally
     detectable already quarantined with a triage row at probe time. A
-    sliced payload holds ONLY this bucket's pages (local indices
+    sliced row holds ONLY this bucket's pages (local indices
     0..hi-lo); global numbering still comes from ``page_lo``."""
     if kind == MEDIA_KIND_ERROR:
         return []
@@ -268,11 +297,16 @@ def _bucket_pages(kind: str, lo: int, hi: int, sliced: bool,
         first = int(only)
         indices = [first - lo if sliced else first]
     try:
-        decoded = pages(bytes(data), indices)
+        if parts is None:
+            decoded = pages(bytes(data), indices)
+        else:
+            walked = _walked_pages(parts, int(hi) - lo)
+            decoded = [(tiers._flow(walked[i]), 0, 0)
+                       for i in indices or range(len(walked))]
     except Exception:
         return []
-    return [(first + i, parts, w, h)
-            for i, (parts, w, h) in enumerate(decoded)]
+    return [(first + i, page, w, h)
+            for i, (page, w, h) in enumerate(decoded)]
 
 
 def _lone_raster(parts: list) -> np.ndarray | None:
@@ -283,15 +317,15 @@ def _lone_raster(parts: list) -> np.ndarray | None:
 
 
 def _bucket_rasters(kind: str, lo: int, hi: int, sliced: bool,
-                    data: bytes, only: int | None = None,
+                    data: bytes | None, parts, only: int | None = None,
                     ) -> Iterator[tuple[int, np.ndarray]]:
     """``(page_index, raster)`` per page of one bucket row (or its page
     ``only``), for the per-page raster kernels (fused, detect,
     recognize). A page that is not a lone raster raises — outside the
     decode try, so it is loud, never a silent zero-block page."""
-    for page_index, parts, _w, _h in _bucket_pages(kind, lo, hi, sliced,
-                                                   data, only):
-        img = _lone_raster(parts)
+    for page_index, page, _w, _h in _bucket_pages(kind, lo, hi, sliced,
+                                                  data, parts, only):
+        img = _lone_raster(page)
         if img is None:
             raise ValueError(
                 f"{kind!r} page {page_index} is not a lone raster: the "
@@ -397,14 +431,14 @@ def _emit_page(doc_id: str, offset: int, ref: str, page_index: int,
 
 
 def _ocr_bucket(doc_id: str, offset: int, ref: str, kind: str, lo: int,
-                hi: int, sliced: bool, data: bytes,
+                hi: int, sliced: bool, data: bytes | None, parts,
                 out: dict[str, list]) -> None:
     # decode inside _bucket_pages' try, emission outside it: an
     # OCR/kernel failure propagates LOUDLY instead of leaving a
     # silently part-extracted document
-    for page_index, parts, page_w, page_h in _bucket_pages(kind, lo, hi,
-                                                           sliced, data):
-        _emit_page(doc_id, int(offset), ref, page_index, parts, page_w,
+    for page_index, page, page_w, page_h in _bucket_pages(
+            kind, lo, hi, sliced, data, parts):
+        _emit_page(doc_id, int(offset), ref, page_index, page, page_w,
                    page_h, out)
 
 
@@ -591,15 +625,17 @@ def decode_pages(
     one materialization across the pipeline's consumers.
 
     ``bucket_pages``: pages per bucket (default one; ``None``: one
-    bucket per media, holding the whole payload). A multi-bucket payload
-    is re-cut by its tier's slicer into per-bucket sub-documents (for
-    PDFs :class:`..pdfcodec._Slicer` keeps only the bucket's own
-    page/content/image objects, stream bytes verbatim), so the bucket
-    shuffle moves ~size·K/pages bytes per row instead of ⌈pages/K⌉
-    full-payload copies; a payload whose slicer raises falls back to
-    ONE whole-payload bucket (``sliced=False``, the ``bucket_pages=None``
-    shape), so it crosses the shuffle once at any K. Decode equality
-    with the whole-payload bucket is test-pinned.
+    bucket per media, holding all its pages). A container kind's rows
+    carry their pages' walked parts at every K. A multi-bucket PDF,
+    TIFF, GIF or SPDF1 payload is re-cut by its tier's slicer into
+    per-bucket sub-documents (for PDFs :class:`..pdfcodec._Slicer`
+    keeps only the bucket's own page/content/image objects, stream
+    bytes verbatim), so the bucket shuffle moves ~size·K/pages bytes
+    per row instead of ⌈pages/K⌉ full-payload copies; a payload whose
+    slicer raises falls back to ONE whole-payload bucket
+    (``sliced=False``, the ``bucket_pages=None`` shape), so it crosses
+    the shuffle once at any K. Decode equality with the whole-payload
+    bucket is test-pinned.
     """
     if spans is None:
         spans = exploded_spans(documents)
@@ -631,6 +667,7 @@ def decode_pages(
         F.lit("missing media payload").alias("error"),
         F.lit(False).alias("sliced"),
         F.lit(None).cast("binary").alias("data"),
+        F.lit(None).cast(PARTS).alias("parts"),
     )
     return media_spans.mapInPandas(
         _bucket_batches_fn(bucket_pages), schema=BUCKET
@@ -845,9 +882,10 @@ def _ocr_page_fused(doc_id: str, offset: int, ref: str, page_index: int,
 
 
 def _ocr_bucket_fused(doc_id: str, offset: int, ref: str, kind: str,
-                      lo: int, hi: int, sliced: bool, data: bytes,
-                      out: dict[str, list]) -> None:
-    for page_index, img in _bucket_rasters(kind, lo, hi, sliced, data):
+                      lo: int, hi: int, sliced: bool, data: bytes | None,
+                      parts, out: dict[str, list]) -> None:
+    for page_index, img in _bucket_rasters(kind, lo, hi, sliced, data,
+                                           parts):
         _ocr_page_fused(doc_id, offset, ref, page_index, img, out)
 
 
@@ -892,11 +930,10 @@ def detect_boxes_table(pages: DataFrame, num_partitions: int | None = None) -> D
     def _detect(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows: list[tuple] = []
-            for doc_id, offset, ref, kind, lo, hi, sliced, data in zip(
-                *(pdf[c] for c in _BUCKET_COLS)
-            ):
+            for (doc_id, offset, ref, kind, lo, hi, sliced, data,
+                 parts) in zip(*(pdf[c] for c in _BUCKET_COLS)):
                 for page_index, img in _bucket_rasters(kind, lo, hi, sliced,
-                                                       data):
+                                                       data, parts):
                     h, w = img.shape[:2]
                     rows.extend(
                         (doc_id, offset, ref, page_index, w, h, i, *box)
@@ -923,13 +960,15 @@ def detect_boxes_table(pages: DataFrame, num_partitions: int | None = None) -> D
 
 
 def _recognize_bucket(doc_id: str, offset: int, ref: str, kind: str,
-                      lo: int, hi: int, sliced: bool, data: bytes,
-                      page_index: int, xs1, ys1, xs2, ys2, width: int,
-                      height: int, out: dict[str, list]) -> None:
+                      lo: int, hi: int, sliced: bool, data: bytes | None,
+                      parts, page_index: int, xs1, ys1, xs2, ys2,
+                      width: int, height: int,
+                      out: dict[str, list]) -> None:
     boxes = list(zip(map(int, xs1), map(int, ys1),
                      map(int, xs2), map(int, ys2)))
     # decode the row's own page only, not the whole bucket
-    for _pi, img in _bucket_rasters(kind, lo, hi, sliced, data, page_index):
+    for _pi, img in _bucket_rasters(kind, lo, hi, sliced, data, parts,
+                                    page_index):
         rows = _ocr_rows(img, boxes, (width, height))
         _emit_blocks(out, doc_id, offset, ref, page_index, rows)
 

@@ -7,10 +7,9 @@ refines a ``PK``-magic payload into ``pptx`` when
 ``ppt/presentation.xml`` is present (after ``word/document.xml`` has
 declined — see the zip refinement ladder there). Unlike DOCX/HTML/plain
 text, a deck is genuinely PAGED: each slide is one page, so the
-pipeline's page-bucket shuffle (skew fix for 300-slide decks) and the
-probe-time payload slicing both apply — a sliced bucket carries a
-sub-zip holding only its own slides' members, the office analog of
-:class:`..pdfcodec._Slicer`'s byte-range story.
+pipeline's page-bucket shuffle (skew fix for 300-slide decks) applies
+— a bucket row carries its own slides' walked parts (text and picture
+bytes), which the deep probe's one walk of the deck produced.
 
 Slide order: numeric ``N`` in the member name. (Strictly, order is
 defined by ``ppt/_rels/presentation.xml.rels`` indirection; PowerPoint
@@ -39,7 +38,7 @@ from xml.etree import ElementTree
 
 import posixpath
 
-from .docxtext import _open_docx as _open_zip, sub_zip
+from .docxtext import _open_docx as _open_zip
 
 #: DrawingML main namespace (text runs live here, not in the
 #: PresentationML ``p:`` namespace)
@@ -188,57 +187,14 @@ def slide_parts(
 ) -> list[list[tuple]]:
     """PPTX bytes -> per-slide MIXED part lists (text paragraphs +
     embedded pictures, shape-tree order), in presentation order.
-    ``page_indices`` selects slides by their position in ``raw`` (the
-    bucket contract, :mod:`.tiers`: global indices into a whole
-    payload; local indices, or ``None`` for all, into a sliced one,
-    whose slides the slicer renumbers from 0)."""
+    ``page_indices`` selects slides by their position in ``raw``
+    (``None`` for all). The deep probe walks every slide once and the
+    bucket rows carry the parts (:mod:`.tiers`)."""
     with _open_zip(raw) as zf:
         names = _slide_members(zf)
         if page_indices is not None:
             names = [names[i] for i in page_indices]
         return [_slide_parts(zf, n) for n in names]
-
-
-def slice_slides(raw: bytes, page_indices) -> bytes:
-    """Probe-time bucket slicing: a minimal sub-PPTX holding ONLY the
-    selected slides' members (plus the marker + content-types so the
-    slice still probes as a PPTX) — the office analog of
-    ``pdfcodec._Slicer``: the deck's bytes cross the bucket shuffle
-    ~once in total instead of ⌈slides/K⌉ full copies. Selected slides
-    keep their ORIGINAL member numbering, so slide order (numeric sort)
-    is preserved and ``slide_parts(sliced)`` yields exactly the
-    bucket's pages, locally indexed."""
-    return slide_slicer(raw)(page_indices)
-
-
-def slide_slicer(raw: bytes):
-    """Open the package and list its slides ONCE and return
-    :func:`slice_slides`' cut, ``page_indices -> bytes``."""
-    zf = _open_zip(raw)
-    names = _slide_members(zf)
-    members = {n: i for i, n in enumerate(zf.namelist())}
-
-    def cut(page_indices) -> bytes:
-        try:
-            kept_slides = [names[i] for i in page_indices]
-        except IndexError as e:
-            raise ValueError(f"slide index out of range: {e}") from e
-        keep = {*kept_slides, _MARKER, "[Content_Types].xml"}
-        # each kept slide's rels part + the media members it references,
-        # so embedded pictures survive the slice (the slide interleave
-        # decodes them inside the bucket)
-        for slide in kept_slides:
-            rels_name = (
-                posixpath.dirname(slide) + "/_rels/"
-                + posixpath.basename(slide) + ".rels"
-            )
-            if rels_name in members:
-                keep.add(rels_name)
-                rels, _ext = _slide_rels(zf, slide)
-                keep.update(rels.values())
-        return sub_zip(zf, members, keep)
-
-    return cut
 
 
 # --- minimal writer (tests / fixtures) ---------------------------------------

@@ -726,7 +726,7 @@ def _build_mbox_payload(d: int) -> bytes:
 def mbox_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Driver-contract query: mbox archives (one message per PAGE)
     through the paged-tier path at ``bucket_pages=2`` — envelope
-    split, message-subset payload SLICING, per-page MIME render and
+    split, two-message buckets of walked parts, per-page MIME render and
     global page ordering are all value-pinned by the closed-form
     oracle."""
 
@@ -850,7 +850,7 @@ def mbox_attach(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Driver-contract query for the in-place mail-attachment OCR
     (round 5): mbox archives where message 0 carries a glyph-rendered
     PNG attachment between no other parts, run at one page per bucket
-    so the attachment must survive the message slicer. The OCR'd word is
+    so the attachment must ride its message's bucket row. The OCR'd word is
     closed-form — the attachment's position AFTER its message's body
     and BEFORE the next message is value-pinned."""
 
@@ -897,7 +897,7 @@ def xlsx_embedded(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Driver-contract query for XLSX anchored drawings (round 5): each
     workbook anchors a glyph-rendered PNG at row 0, so the OCR'd word
     must land between row 0's and row 1's text — the two-level rels
-    resolution, anchor-row interleave and drawing-chain slicing are
+    resolution, anchor-row interleave and the per-sheet bucket parts are
     value-pinned by the closed-form oracle."""
 
     ids = (
@@ -1115,7 +1115,7 @@ REGISTRY: dict[str, tuple[QueryFn, object]] = {
     ),
     # e-mail tier: closed-form pins of the probe->ladder->MIME-walk->
     # assembly path (incl. the alternative/DOM leg and the mbox paged
-    # slicer at bucket_pages=2)
+    # buckets at bucket_pages=2)
     "eml_extract": (eml_extract, EML_EXTRACT_SQL),
     "mbox_pages": (mbox_pages, MBOX_PAGES_SQL),
     # office embedded-media interleave (round 5): a PNG inline in a DOCX
@@ -1150,8 +1150,8 @@ REGISTRY: dict[str, tuple[QueryFn, object]] = {
     "unigram_scores": (pretrain.unigram_scores, pretrain.UNIGRAM_SCORES_SQL),
     "html_text": (html_extract.html_text, html_extract.HTML_TEXT_SQL),
     # round-5 interleave tiers past-cap (gate full): closed-form
-    # oracles for the in-place mail-attachment OCR (incl. the message
-    # slicer at one page per bucket) and XLSX anchored drawings; verified by
+    # oracles for the in-place mail-attachment OCR (incl. one message
+    # per bucket) and XLSX anchored drawings; verified by
     # tools/check_oracle.py + CORRECTNESS_LOCAL, pytest-pinned in
     # test_office_media.py
     "mbox_attach": (mbox_attach, MBOX_ATTACH_SQL),

@@ -10,14 +10,17 @@ returns the decoded pages, each a ``(parts, width, height)`` triple:
 of the text parts' coordinates (``0 x 0`` where they are synthetic
 ordinals). A part is either a text block (duck-typed on
 ``x1/y1/x2/y2/text``) or a grayscale raster (a 2-D ``uint8`` array).
-``slicer(raw)`` parses a multi-page container once and returns the
-``page_indices -> sub-document`` cut used at probe time, so cutting a
-P-page document into P one-page buckets costs one parse, not P;
-single-page tiers have none. A slice holds exactly its bucket's pages,
-renumbered from 0 in order (every slicer keeps that contract). So
-``page_indices`` into a sliced payload is local (``None`` for all of
-them), and into an unsliced payload global (the bucket's page range,
-or one page of it). The entries fall into five groups:
+Only the PDF, TIFF, GIF and SPDF1 tiers have a ``slicer(raw)``: it
+parses a multi-page container once and returns the ``page_indices ->
+sub-document`` cut used at probe time, so cutting a P-page document
+into P one-page buckets costs one parse, not P. A slice holds exactly
+its bucket's pages, renumbered from 0 in order. So ``page_indices``
+into a sliced payload is local (``None`` for all of them), and into an
+unsliced payload global (the bucket's page range, or one page of it).
+The walked kinds have no slicer and never ship a payload to the OCR
+stage: their bucket rows carry the deep probe's walked parts (see
+:mod:`.operators.extract`), and their ``pages`` is the raw-bytes
+reference decode of the same walk. The entries fall into five groups:
 
 - **Synthetic containers** (SPDF1/SIMG1, :mod:`.formats`): each page
   renders through :func:`_render` to one raster. The slicer parses the
@@ -37,12 +40,14 @@ or one page of it). The entries fall into five groups:
   EPUB chapters, mbox messages and XLSX sheets as pages): the entry is
   defined by ONE part walk, ``walk(raw, page_indices) -> [[part]]``
   (``("text", ..., text)`` / ``("media", ..., name, payload)``; a
-  one-page kind returns one page). ``pages`` runs each walked page
-  through :func:`_flow`; the deep probe runs the same ``walk(raw,
-  None)`` and deep-probes every part :func:`is_picture` admits — the
-  one picture rule both sides share, so the probe accepts exactly what
-  extraction decodes. Unsupported formats (EMF/WMF vectors, nested
-  containers) contribute nothing.
+  one-page kind returns one page; ``page_indices`` are global). The
+  deep probe runs ``walk(raw, None)`` once, deep-probes every part
+  :func:`is_picture` admits and keeps the text parts and pictures; the
+  OCR stage runs each page of those parts through :func:`_flow`, which
+  decodes by the same picture rule, so the probe accepts exactly what
+  extraction decodes. ``pages`` flows ``walk(raw, page_indices)`` the
+  same way. Unsupported formats (EMF/WMF vectors, nested containers)
+  contribute nothing.
 """
 
 from __future__ import annotations
@@ -149,9 +154,9 @@ def _text(blocks) -> Tier:
         (blocks(plaintext.decode_text(raw)), 0, 0)])
 
 
-def _walked(walk, slicer=None) -> Tier:
+def _walked(walk) -> Tier:
     """Container tier defined by its part walk."""
-    return Tier(slicer, lambda raw, page_indices: [
+    return Tier(None, lambda raw, page_indices: [
         (_flow(parts), 0, 0) for parts in walk(raw, page_indices)
     ], walk)
 
@@ -186,8 +191,8 @@ TIERS = {
     "json": _text(jsontext.json_blocks),
     "xml": Tier(None, lambda raw, _page_indices: [
         (xmltext.xml_blocks(raw), 0, 0)]),
-    "pptx": _walked(pptxtext.slide_parts, pptxtext.slide_slicer),
-    "epub": _walked(epubtext.chapter_parts, epubtext.chapter_slicer),
-    "mbox": _walked(emltext.mbox_page_parts, emltext.message_slicer),
-    "xlsx": _walked(xlsxtext.sheet_parts, xlsxtext.sheet_slicer),
+    "pptx": _walked(pptxtext.slide_parts),
+    "epub": _walked(epubtext.chapter_parts),
+    "mbox": _walked(emltext.mbox_page_parts),
+    "xlsx": _walked(xlsxtext.sheet_parts),
 }

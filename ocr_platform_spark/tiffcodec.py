@@ -143,8 +143,10 @@ def _tag1(tags: dict, tag: int, default=None) -> int:
     return v[0]
 
 
-def _page_plan(tags: dict) -> tuple[int, int, int, int, int, int]:
-    """Validate one IFD against the subset WITHOUT touching samples.
+def _page_plan(tags: dict,
+               size: int) -> tuple[int, int, int, int, int, int]:
+    """Validate one IFD of a ``size``-byte file against the subset
+    WITHOUT touching samples, every strip or tile inside the file.
     Returns ``(w, h, compression, photometric, bps, spp)``."""
     w = _tag1(tags, 256)
     h = _tag1(tags, 257)
@@ -261,6 +263,10 @@ def _page_plan(tags: dict) -> tuple[int, int, int, int, int, int]:
         raise ValueError("TIFF missing strip offsets/byte counts")
     elif len(tags[273]) != len(tags[279]):
         raise ValueError("TIFF strip offset/count arrays disagree")
+    chunk, ko, kc = (("tile", 324, 325) if 322 in tags
+                     else ("strip", 273, 279))
+    if any(o + c > size for o, c in zip(tags[ko], tags[kc])):
+        raise ValueError(f"TIFF {chunk} past end of file")
     return w, h, comp, pi, bps, spp
 
 
@@ -271,7 +277,7 @@ def probe_tiff(raw: bytes) -> tuple[int, int, int]:
     _e, ifds = _read_ifds(raw)
     w0 = h0 = 0
     for i, tags in enumerate(ifds):
-        w, h, *_ = _page_plan(tags)
+        w, h, *_ = _page_plan(tags, len(raw))
         if i == 0:
             w0, h0 = w, h
     return len(ifds), w0, h0
@@ -374,7 +380,7 @@ def _decode_chunk(data: bytes, tags: dict, comp: int, pi: int, bps: int,
 
 def _decode_page(raw: bytes, tags: dict, gray: bool,
                  endian: str = "<") -> np.ndarray:
-    w, h, comp, pi, bps, spp = _page_plan(tags)
+    w, h, comp, pi, bps, spp = _page_plan(tags, len(raw))
     fo2 = _tag1(tags, 266, 1) == 2
     if 322 in tags:
         # tiled layout (GIS / large-scan producers): tiles are FULL
@@ -388,8 +394,6 @@ def _decode_page(raw: bytes, tags: dict, gray: bool,
             raise ValueError("TIFF tile count does not cover the image")
         page = np.zeros((h, w, 3) if spp == 3 else (h, w), np.uint8)
         for ti, (o, c) in enumerate(zip(offs, cnts)):
-            if o + c > len(raw):
-                raise ValueError("TIFF tile past end of file")
             tile = _decode_chunk(raw[o:o + c], tags, comp, pi, bps, spp,
                                  tl, tw, endian, fo2)
             ty, tx = divmod(ti, ta)
@@ -413,8 +417,6 @@ def _decode_page(raw: bytes, tags: dict, gray: bool,
             chunks = []
             for si in range(per):
                 o, c = offs[p * per + si], cnts[p * per + si]
-                if o + c > len(raw):
-                    raise ValueError("TIFF strip past end of file")
                 rows = min(rps, h - si * rps)
                 chunks.append(_decode_chunk(raw[o:o + c], tags, comp,
                                             pi, bps, 1, rows, w,
@@ -431,8 +433,6 @@ def _decode_page(raw: bytes, tags: dict, gray: bool,
             raise ValueError("TIFF strip count does not cover the image")
         strips = []
         for si, (o, c) in enumerate(zip(offs, cnts)):
-            if o + c > len(raw):
-                raise ValueError("TIFF strip past end of file")
             rows = min(rps, h - si * rps)
             strips.append(_decode_chunk(raw[o:o + c], tags, comp, pi,
                                         bps, spp, rows, w, endian, fo2))
@@ -518,14 +518,10 @@ def page_slicer(raw: bytes):
         fmt = {3: "H", 4: "I"}
         pending = 4  # patch position of the previous "next IFD" word
         for tags in sel:
-            _page_plan(tags)  # only validated pages are re-emitted
+            _page_plan(tags, len(raw))  # only validated pages re-emit
             # tiled pages carry their chunks in 324/325; strips in 273/279
             ko, kc = (324, 325) if 322 in tags else (273, 279)
-            strips = []
-            for o, c in zip(tags[ko], tags[kc]):
-                if o + c > len(raw):
-                    raise ValueError("TIFF strip past end of file")
-                strips.append(raw[o:o + c])
+            strips = [raw[o:o + c] for o, c in zip(tags[ko], tags[kc])]
             entries = []
             for tag in sorted(_TAG_TYPE):
                 if tag == ko:

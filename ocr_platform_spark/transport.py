@@ -16,20 +16,21 @@ arrived bare. The unwrap happens once per payload at the two seam
 call sites (:func:`..multimodal.probe_real_media` with ``deep=True``
 and the bucket-explode stage in :mod:`..operators.extract`), so
 every downstream feature —
-per-page bucket slicing, text-layer hybrid dispatch, tier extraction,
+per-page buckets, text-layer hybrid dispatch, tier extraction,
 quarantine triage — works identically on wrapped and bare payloads.
 
 Scale posture: inflation is executor-local CPU inside the iterator UDF
-(no extra shuffle); the bucket stage unwraps BEFORE slicing, so a
-multi-page document inside a gzip still ships per-bucket slices, not
-whole-payload copies. The costs that cannot be dodged are stated, not
+(no extra shuffle); the bucket stage unwraps BEFORE it buckets, so a
+multi-page document inside a gzip still ships per-bucket slices or
+walked parts, not whole-payload copies. The costs that cannot be dodged are stated, not
 hidden: (a) a compressed payload's inner geometry is unknowable from a
 header walk, so the SHALLOW metadata probe reports the transport kind
 itself (``gzip``/``bzip2``/``xz``, one opaque page) rather than paying
 full-inflate CPU — the probe_dims-vs-validate split, transport
 edition; (b) inflated bytes, not compressed ones, cross the bucket
-shuffle when a payload is sliced (the slicer needs parsed bytes — the
-same trade the PDF slicer already makes).
+shuffle: a PDF/TIFF/GIF/SPDF1 slice is cut from parsed bytes, and a
+container kind ships its walked parts (decoded text and picture
+bytes), never a compressed payload.
 
 Safety: decompression is streamed with an ABSOLUTE output cap
 (:data:`MAX_INFLATED` default 1 GiB, the same guard class as the PDF

@@ -5,9 +5,9 @@ A ``.xlsx`` is a ZIP whose marker part is ``xl/workbook.xml``;
 worksheets live one-per-member at ``xl/worksheets/sheetN.xml`` and
 string-typed cells indirect through the ``xl/sharedStrings.xml`` table.
 Like PPTX, a workbook is genuinely PAGED — each sheet is one page — so
-the page-bucket shuffle and probe-time payload slicing apply (a sliced
-bucket carries only its own sheets' members plus the shared-strings
-table every sheet may reference).
+the page-bucket shuffle applies: a bucket row carries only its own
+sheets' walked parts (row text with shared strings resolved, and
+anchored pictures), from the deep probe's one walk of the workbook.
 
 Sheet order: numeric ``N`` in the member name (the same pragmatic rule
 as :mod:`..pptxtext`'s slides; strict order is workbook.xml rels
@@ -35,8 +35,7 @@ import re
 import zipfile
 from xml.etree import ElementTree
 
-from .docxtext import _open_docx as _open_zip, sub_zip
-from .docxtext import _xml_escape
+from .docxtext import _open_docx as _open_zip, _xml_escape
 from .pptxtext import _parse_member
 
 #: SpreadsheetML main namespace
@@ -187,10 +186,9 @@ def sheet_parts(
     anchored pictures interleaved by sheet row (a picture anchored at
     row R slots after row R's text — it renders over that row), the
     ``pptxtext.slide_parts`` shape, in workbook order. ``page_indices``
-    selects sheets by their position in ``raw`` (the bucket contract,
-    :mod:`.tiers`: global indices into a whole payload; local indices,
-    or ``None`` for all, into a sliced one, whose sheets the slicer
-    renumbers from 0). Each non-empty row is one text part, its
+    selects sheets by their position in ``raw`` (``None`` for all); the
+    deep probe walks every sheet once and the bucket rows carry the
+    parts (:mod:`.tiers`). Each non-empty row is one text part, its
     cells in document order joined with a single space."""
     from .docxtext import media_content_type
 
@@ -232,54 +230,6 @@ def sheet_parts(
                         ("media", ordinal, ctype, media, payload))
             sheets.append(items)
     return sheets
-
-
-def slice_sheets(raw: bytes, page_indices) -> bytes:
-    """Probe-time bucket slicing: a minimal sub-XLSX holding ONLY the
-    selected sheets' members plus the shared-strings table (every sheet
-    may reference it), the marker and content-types. Original member
-    numbering is kept, so sheet order survives."""
-    return sheet_slicer(raw)(page_indices)
-
-
-def sheet_slicer(raw: bytes):
-    """Open the package and list its sheets ONCE and return
-    :func:`slice_sheets`' cut, ``page_indices -> bytes``."""
-    import posixpath
-
-    from .pptxtext import _slide_rels as _member_rels
-
-    zf = _open_zip(raw)
-    names = _sheet_members(zf)
-    members = {n: i for i, n in enumerate(zf.namelist())}
-
-    def rels_of(part: str) -> str:
-        return (posixpath.dirname(part) + "/_rels/"
-                + posixpath.basename(part) + ".rels")
-
-    def cut(page_indices) -> bytes:
-        try:
-            kept_sheets = [names[i] for i in page_indices]
-        except IndexError as e:
-            raise ValueError(f"sheet index out of range: {e}") from e
-        keep = {*kept_sheets, _MARKER, _SHARED, "[Content_Types].xml"}
-        # each kept sheet's drawing chain (rels -> drawing part -> its
-        # rels -> media) rides with its slice so anchored pictures
-        # still decode inside per-sheet buckets
-        for sheet in kept_sheets:
-            if rels_of(sheet) not in members:
-                continue
-            keep.add(rels_of(sheet))
-            srels, _ = _member_rels(zf, sheet)
-            for drawing in srels.values():
-                keep.add(drawing)
-                if rels_of(drawing) in members:
-                    keep.add(rels_of(drawing))
-                    drels, _ = _member_rels(zf, drawing)
-                    keep.update(drels.values())
-        return sub_zip(zf, members, keep)
-
-    return cut
 
 
 # --- minimal writer (tests / fixtures) ---------------------------------------

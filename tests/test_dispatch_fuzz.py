@@ -18,6 +18,8 @@ exact call sites the pipeline uses:
   succeed or raise ``ValueError`` — never any other exception type;
 * probe/extract symmetry: a mutant the deep probe admits decodes
   through its tier's ``pages`` (full payload and sliced bucket)
+  without raising, and a container kind's walked parts, as its
+  one-page bucket rows ship them, decode through ``tiers._flow``
   without raising. A raster kind (PDF, image, TIFF, GIF) may instead
   raise ``ValueError``, never another type: entropy-level corruption
   (JPEG/LZW/Flate sample bits) carries no checksum a structural probe
@@ -40,6 +42,7 @@ from ocr_platform_spark import audiocodec, avicodec, bmpcodec, \
     docxtext, emltext, epubtext, formats, gifcodec, jpegcodec, \
     multimodal, odttext, pngcodec, pptxtext, rtftext, tiers, tiffcodec, \
     transport, xlsxtext
+from tests.test_extract_office_paged import bucket_frame, flow_bucket_parts
 from tests.test_pdfcodec import build_pdf, scanned_objs
 from tests.test_pdfcrypt import encrypt_pdf
 
@@ -250,6 +253,12 @@ def test_dispatch_seam_mutation_fuzz(kind):
         # (when the kind has one) cuts a bucket, and the OCR stage
         # decodes the full payload or the cut
         tier = tiers.TIERS[probed_kind]
+        if tier.walk is not None:
+            try:
+                flow_bucket_parts(mut)
+            except Exception as e:  # noqa: BLE001 - contract under test
+                pytest.fail(f"{kind} {label}: walked parts raised "
+                            f"{type(e).__name__}: {e}")
         mut = transport.maybe_unwrap(mut)
         decodes = [(mut, list(range(pr[1])))]
         if tier.slicer is not None:
@@ -271,3 +280,27 @@ def test_dispatch_seam_mutation_fuzz(kind):
                     pytest.fail(f"{kind} {label}: admitted by the deep "
                                 f"probe, decode raised "
                                 f"{type(e).__name__}: {e}")
+
+
+def test_tiff_strips_past_the_end_quarantine_at_the_probe():
+    """Every TIFF mutant of the stream whose strips run past the end of
+    the file quarantines with a probe error row: the probe checks the
+    strip bounds, so it admits no TIFF whose decode would fail on them
+    and leave no row."""
+    raw = _fixtures()["tiff"]
+    past = []
+    for _label, mut in _mutants(raw, seed=zlib.crc32(b"tiff")):
+        try:
+            _e, ifds = tiffcodec._read_ifds(mut)
+        except ValueError:
+            continue
+        chunks = [(tags.get(273, []), tags.get(279, [])) for tags in ifds]
+        if all(len(o) == len(c) for o, c in chunks) and any(
+                o + c > len(mut) for offs, cnts in chunks
+                for o, c in zip(offs, cnts)):
+            past.append(mut)
+    assert len(past) == 9
+    for mut in past:
+        rows = bucket_frame(mut, 1)
+        assert list(rows["media_kind"]) == ["error"]
+        assert rows["error"][0] == "TIFF strip past end of file"

@@ -10,7 +10,8 @@ import pytest
 from ocr_platform_spark import corpus, emltext, multimodal, schemas
 from ocr_platform_spark.operators import extract, extract_real
 from tests.test_extract_html import content_html
-from tests.test_extract_office_paged import text_pages
+from tests.test_extract_office_paged import (assert_walked_buckets,
+                                             text_pages)
 from tests.test_extract_real import _render_pages, _spans_by_doc
 from tests.test_extract_text_layer import page_ocr_blocks
 
@@ -148,14 +149,17 @@ def test_mbox_pipeline_equals_flagship(mbox_corpus):
 
 
 def test_mbox_pipeline_sliced_buckets(mbox_corpus):
-    """bucket_pages=2 forces multi-bucket slicing through
-    ``slice_messages``; the sliced archives must reproduce the same
-    spans (global page numbering intact)."""
+    """bucket_pages=2 ships multi-message archives as two-message
+    bucket rows of walked parts; they must reproduce the same spans
+    (global page numbering intact), and every archive's one-page rows
+    carry exactly their message's parts."""
     docs_df, synth, mbox = mbox_corpus
     flagship = _spans_by_doc(extract.extract_documents(docs_df, synth))
     got = _spans_by_doc(
         extract_real.extract_real_documents(docs_df, mbox, bucket_pages=2))
     assert got == flagship
+    for r in mbox.collect():
+        assert_walked_buckets(bytes(r["data"]))
 
 
 def test_mbox_probe_counts_pages(mbox_corpus):
@@ -336,13 +340,14 @@ def test_mail_boilerplate_drop_rules():
 
 
 def test_mbox_slice_preserves_messages():
-    msgs = [_simple(f"body {i}", subject=f"s{i}") for i in range(5)]
-    mb = emltext.encode_mbox(msgs)
-    sl = emltext.slice_messages(mb, [1, 3])
-    assert multimodal.probe_real_media(sl, deep=True)[1:] == (2, 0, 0)
-    assert [[b.text for b in p]
-            for p in text_pages(emltext.mbox_page_parts(sl))] == \
-        [["s1", "body 1"], ["s3", "body 3"]]
+    """Each message's bucket row carries its own parts, mboxrd-quoted
+    body lines unquoted."""
+    msgs = [_simple(f"body {i}\n\nFrom line {i}", subject=f"s{i}")
+            for i in range(5)]
+    rows = assert_walked_buckets(emltext.encode_mbox(msgs))
+    assert [[p[-1] for p in extract._walked_pages(rows["parts"][i], 1)[0]]
+            for i in (1, 3)] == [["s1", "body 1", "From line 1"],
+                                 ["s3", "body 3", "From line 3"]]
 
 
 def test_mbox_member_corruption():

@@ -6,8 +6,8 @@ this pin re-encodes every synthetic media as an EPUB with one chapter
 per source page, wraps every chapter in the SAME nav/sidebar/footer
 boilerplate shell the HTML-tier pin uses (the link-density drop must
 hold inside books too), runs with ``bucket_pages=2`` so multi-chapter
-books exercise the spine-rewriting sub-zip slicer, and asserts EXACT
-span-sequence equality with the flagship.
+books cross the bucket shuffle as their chapters' walked parts, and
+asserts EXACT span-sequence equality with the flagship.
 """
 
 from __future__ import annotations
@@ -20,7 +20,8 @@ import pytest
 from ocr_platform_spark import corpus, epubtext, htmltext, multimodal, schemas
 from ocr_platform_spark.operators import extract, extract_real
 from tests.test_extract_html import FOOTER, HEAD, NAV, SIDEBAR
-from tests.test_extract_office_paged import text_pages
+from tests.test_extract_office_paged import (assert_walked_buckets,
+                                             bucket_frame, text_pages)
 from tests.test_extract_real import _render_pages, _spans_by_doc
 from tests.test_extract_text_layer import page_ocr_blocks
 
@@ -64,8 +65,8 @@ def epub_corpus(spark):
 
 
 def test_epub_pipeline_equals_flagship(epub_corpus):
-    """bucket_pages=2 forces multi-chapter books through the
-    spine-rewriting slicer; spans must equal the flagship's exactly,
+    """bucket_pages=2 ships multi-chapter books as two-chapter bucket
+    rows of walked parts; spans must equal the flagship's exactly,
     with every chapter's boilerplate shell dropped."""
     docs_df, synth, epub = epub_corpus
     flagship = _spans_by_doc(extract.extract_documents(docs_df, synth))
@@ -75,23 +76,27 @@ def test_epub_pipeline_equals_flagship(epub_corpus):
     assert got == flagship
 
 
-def test_slice_decode_parity_and_spine_rewrite():
-    """Decoding a slice equals the sliced range of the full decode for
-    every contiguous bucket, and the slice still probes as an EPUB with
-    exactly the bucket's chapter count (the rewritten spine)."""
+def test_bucket_rows_carry_chapters_in_spine_order():
+    """Every bucket row of a book carries exactly its chapters' walked
+    parts, in spine order: one-page rows per
+    :func:`assert_walked_buckets`, and each two-chapter row the walk of
+    its spine range."""
     book = epubtext.encode_epub([
         epubtext.chapter_xhtml([f"chapter {i} text", f"more {i}"])
         for i in range(5)
     ])
-    full = [[b.text for b in p]
-            for p in text_pages(epubtext.chapter_parts(book))]
-    for lo in range(0, 5, 2):
-        hi = min(5, lo + 2)
-        sl = epubtext.slice_chapters(book, range(lo, hi))
-        assert multimodal.probe_real_media(sl, deep=True) == (
-            "epub", hi - lo, 0, 0)
-        assert [[b.text for b in p]
-                for p in text_pages(epubtext.chapter_parts(sl))] == full[lo:hi]
+    assert_walked_buckets(book)
+    rows = bucket_frame(book, 2)
+    assert list(zip(rows["page_lo"], rows["page_hi"])) == [
+        (0, 2), (2, 4), (4, 5)]
+    for lo, hi, parts in zip(rows["page_lo"], rows["page_hi"],
+                             rows["parts"]):
+        assert extract._walked_pages(parts, hi - lo) == [
+            [(p[0], p[-1]) for p in page]
+            for page in epubtext.chapter_parts(book, range(lo, hi))]
+        assert [[b.text for b in p] for p in text_pages(
+            epubtext.chapter_parts(book, range(lo, hi)))] == [
+            [f"chapter {i} text", f"more {i}"] for i in range(lo, hi)]
 
 
 def _tamper(build) -> bytes:

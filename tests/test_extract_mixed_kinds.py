@@ -8,7 +8,7 @@ the same table. This pin
 rotates the seeded corpus's media across ALL nineteen re-encoders and asserts
 span equality with the synthetic flagship through one
 `extract_real_documents` call — per-media dispatch (probe kinds,
-bucket slicing, raster OCR vs text-layer parse vs DOM walk vs
+bucket slicing and walked parts, raster OCR vs text-layer parse vs DOM walk vs
 WordprocessingML walk vs paragraph split) all coexisting in the same
 bucket shuffle and span assembly. Expectation is exact everywhere
 except text-layer PDFs (their deterministic one-span-per-line delta,
@@ -28,7 +28,9 @@ from tests.test_extract_docx import content_docx
 from tests.test_extract_epub import content_epub
 from tests.test_extract_html import content_html
 from tests.test_extract_odt_rtf import content_odt, content_rtf
-from tests.test_extract_office_paged import content_pptx, content_xlsx
+from tests.test_extract_office_paged import (assert_walked_buckets,
+                                             bucket_frame, content_pptx,
+                                             content_xlsx)
 from tests.test_extract_real import (_render_pages, _spans_by_doc,
                                      reencode_real, reencode_tiff,
                                      reencode_wild)
@@ -112,7 +114,7 @@ def test_unregistered_kind_raises_instead_of_extracting_nothing():
     frame = pd.DataFrame({
         "doc_id": ["d1"], "offset": [0], "media_ref": ["m1"],
         "media_kind": ["no-such-tier"], "page_lo": [0], "page_hi": [1],
-        "sliced": [False], "data": [b"payload"],
+        "sliced": [False], "data": [b"payload"], "parts": [None],
     })
     with pytest.raises(KeyError, match="no-such-tier"):
         extract._ocr_real_frame(frame)
@@ -125,7 +127,7 @@ def test_raster_kernels_refuse_a_page_that_is_not_a_lone_raster():
     frame = pd.DataFrame({
         "doc_id": ["d1"], "offset": [0], "media_ref": ["m1"],
         "media_kind": ["txt"], "page_lo": [0], "page_hi": [1],
-        "sliced": [False], "data": [b"alpha beta\n"],
+        "sliced": [False], "data": [b"alpha beta\n"], "parts": [None],
     })
     assert len(extract._ocr_real_frame(frame)) == 1
     with pytest.raises(ValueError, match="'txt' page 0 is not a lone raster"):
@@ -161,7 +163,7 @@ def test_recognize_decodes_only_its_own_page(monkeypatch, bucket_pages):
                  "ys2", "width", "height"])
     want = {pi: extract._ocr_rows(img, box)
             for pi, img in extract._bucket_rasters(
-                "spdf", 0, n, False, data)}
+                "spdf", 0, n, False, data, None)}
 
     decoded = []
     pages = tiers.TIERS["spdf"].pages
@@ -194,7 +196,9 @@ def test_slicer_parses_each_document_once(monkeypatch, kind, module, parse):
     """Cutting an n-page document into n one-page buckets parses the
     container once, not once per bucket: the default bucket size is
     one page, so a per-cut parse would make the probe quadratic in the
-    page count. Every slice still holds exactly its own page."""
+    page count. A raster kind's slicer parses once and every slice
+    holds exactly its own page; a container kind has no slicer, and its
+    one deep-probe walk yields every one-page row's parts."""
     import importlib
 
     from ocr_platform_spark import tiers
@@ -218,7 +222,14 @@ def test_slicer_parses_each_document_once(monkeypatch, kind, module, parse):
         return real(*args, **kwargs)
 
     monkeypatch.setattr(mod, parse, counting)
-    cut = tiers.TIERS[kind].slicer(raw)
+    slicer = tiers.TIERS[kind].slicer
+    if slicer is None:
+        assert len(bucket_frame(raw, 1)) == n
+        assert len(calls) == 1
+        monkeypatch.undo()
+        assert_walked_buckets(raw)
+        return
+    cut = slicer(raw)
     slices = [cut(range(i, i + 1)) for i in range(n)]
     assert len(calls) == 1
     monkeypatch.undo()

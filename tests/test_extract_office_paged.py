@@ -4,8 +4,8 @@ Unlike DOCX/HTML/plain text (one reflowable page), slides and sheets
 are genuinely PAGED — so these pins re-encode every synthetic media as
 a deck (one slide per source page) and as a workbook (one sheet per
 source page), run the pipeline with ``bucket_pages=2`` so multi-page
-payloads exercise the page-bucket shuffle AND probe-time sub-zip
-slicing, and assert EXACT span-sequence equality with the flagship.
+payloads exercise the page-bucket shuffle of walked parts, and assert
+EXACT span-sequence equality with the flagship.
 """
 
 from __future__ import annotations
@@ -13,10 +13,11 @@ from __future__ import annotations
 import io
 import zipfile
 
+import pandas as pd
 import pytest
 
 from ocr_platform_spark import (corpus, multimodal, plaintext, pptxtext,
-                                schemas, xlsxtext)
+                                schemas, tiers, xlsxtext)
 from ocr_platform_spark.operators import extract, extract_real
 from tests.test_extract_real import _render_pages, _spans_by_doc
 from tests.test_extract_text_layer import page_ocr_blocks
@@ -26,6 +27,53 @@ def text_pages(pages: list[list[tuple]]) -> list[list]:
     """A paged part walk's text parts as blocks (``.text``), per page."""
     return [[plaintext.TextParagraph(p[1], p[-1])
              for p in parts if p[0] == "text"] for parts in pages]
+
+
+def bucket_frame(raw: bytes, bucket_pages: int | None) -> pd.DataFrame:
+    """The probe stage's bucket rows for one payload, Spark-free."""
+    [rows] = extract._bucket_batches_fn(bucket_pages)(iter([pd.DataFrame(
+        {"doc_id": ["d1"], "offset": [0], "media_ref": ["m1"],
+         "data": [raw]})]))
+    return rows
+
+
+def flow_bucket_parts(raw: bytes) -> None:
+    """Decode every one-page bucket row's walked parts through
+    ``tiers._flow``, as the OCR stage does, letting any exception out
+    (``_bucket_pages`` would turn it into zero pages)."""
+    rows = bucket_frame(raw, 1)
+    for lo, hi, parts in zip(rows["page_lo"], rows["page_hi"],
+                             rows["parts"]):
+        if parts is not None:
+            for page in extract._walked_pages(parts, hi - lo):
+                tiers._flow(page)
+
+
+def assert_walked_buckets(raw: bytes) -> pd.DataFrame:
+    """A container payload's one-page bucket rows carry no payload and
+    exactly their page's walked parts, pictures included
+    (``walk(raw, [i])``), and extract the same blocks as the one
+    ``bucket_pages=None`` row and as the whole payload decoded through
+    the tier's raw-bytes ``pages``. Returns the one-page rows."""
+    rows = bucket_frame(raw, 1)
+    walk = tiers.TIERS[rows["media_kind"][0]].walk
+    assert list(rows["page_lo"]) == list(range(len(walk(raw, None))))
+    for lo, hi, sliced, data, parts in zip(
+            *(rows[c] for c in ("page_lo", "page_hi", "sliced", "data",
+                                "parts"))):
+        assert (hi, sliced, data) == (lo + 1, True, None)
+        [page] = walk(raw, [lo])
+        assert extract._walked_pages(parts, 1) == [[
+            (p[0], p[-1]) for p in page
+            if p[0] == "text" or tiers.is_picture(p)]]
+    whole = rows.iloc[:1].assign(page_hi=len(rows), sliced=False,
+                                 data=[raw], parts=[None])
+
+    def blocks(frame):
+        return extract._ocr_real_frame(frame).values.tolist()
+
+    assert blocks(rows) == blocks(bucket_frame(raw, None)) == blocks(whole)
+    return rows
 
 
 def content_pptx(payload: bytes) -> bytes:
@@ -71,8 +119,9 @@ def office_corpus(spark):
 
 
 def test_pptx_pipeline_equals_flagship(office_corpus):
-    """bucket_pages=2 forces multi-slide decks through sub-zip slicing
-    and the bucket shuffle; spans must still equal the flagship's."""
+    """bucket_pages=2 sends multi-slide decks through the bucket
+    shuffle as two-slide rows of walked parts; spans must still equal
+    the flagship's."""
     docs_df, synth, pptx, _ = office_corpus
     flagship = _spans_by_doc(extract.extract_documents(docs_df, synth))
     got = _spans_by_doc(
@@ -91,9 +140,9 @@ def test_xlsx_pipeline_equals_flagship(office_corpus):
 
 
 def test_unsliced_path_equality(office_corpus):
-    """The whole-payload bucket (``bucket_pages=None``: the unsliced
-    decode) is the same extraction, just a worse shuffle — pinned like
-    the PDF path."""
+    """One bucket per deck (``bucket_pages=None``: all its slides'
+    parts in one row) is the same extraction, just a worse spread —
+    pinned like the PDF path."""
     docs_df, synth, pptx, _ = office_corpus
     flagship = _spans_by_doc(extract.extract_documents(docs_df, synth))
     got = _spans_by_doc(
@@ -104,24 +153,16 @@ def test_unsliced_path_equality(office_corpus):
 
 
 def test_slice_decode_parity():
-    """slice_slides/slice_sheets: decoding a slice equals the sliced
-    range of the full decode, for every contiguous bucket."""
+    """One-page bucket rows of a deck and a workbook carry exactly their
+    page's walked parts, and decode to the same blocks as the whole
+    payload (:func:`assert_walked_buckets`)."""
     deck = pptxtext.encode_pptx(
         [[f"slide {i} block a", f"slide {i}\nblock b"] for i in range(5)])
-    full = [[b.text for b in p]
-            for p in text_pages(pptxtext.slide_parts(deck))]
     wb = xlsxtext.encode_xlsx(
         [[[f"sheet {i} r1"], [f"sheet {i} r2"]] for i in range(5)])
-    full_x = [[b.text for b in p]
-              for p in text_pages(xlsxtext.sheet_parts(wb))]
-    for lo in range(0, 5, 2):
-        hi = min(5, lo + 2)
-        sl = pptxtext.slice_slides(deck, range(lo, hi))
-        assert [[b.text for b in p]
-                for p in text_pages(pptxtext.slide_parts(sl))] == full[lo:hi]
-        sx = xlsxtext.slice_sheets(wb, range(lo, hi))
-        assert [[b.text for b in p]
-                for p in text_pages(xlsxtext.sheet_parts(sx))] == full_x[lo:hi]
+    for raw in (deck, wb):
+        rows = assert_walked_buckets(raw)
+        assert len(rows) == 5
 
 
 def test_slide_numbering_is_numeric_not_lexicographic():
@@ -256,13 +297,11 @@ def corrupt_member_crc(raw: bytes, name: str) -> bytes:
     raise KeyError(name)
 
 
-def test_slicer_failure_falls_back_to_the_full_payload(spark):
+def test_crc_damaged_member_outside_the_walk_ships_walked_parts(spark):
     """A PPTX whose [Content_Types].xml fails its CRC passes the deep
-    probe (the part walk never reads that member) but its slicer
-    raises: the deck then becomes ONE whole-payload bucket
-    (``sliced=False``, all three slides), so it crosses the bucket
-    shuffle once at any K, and extraction returns the pristine deck's
-    spans."""
+    probe (the part walk never reads that member), and its walked parts
+    ship like the pristine deck's: three one-page rows with the same
+    parts and the same spans."""
     deck = pptxtext.encode_pptx(
         [[f"slide {i} block a", f"slide {i} block b"] for i in range(3)])
     bad = corrupt_member_crc(deck, "[Content_Types].xml")
@@ -278,13 +317,14 @@ def test_slicer_failure_falls_back_to_the_full_payload(spark):
         media = spark.createDataFrame([("m1", bytearray(payload))],
                                       "media_ref string, data binary")
         rows = extract.decode_pages(docs, media).collect()
-        return rows, _spans_by_doc(extract.extract_documents(docs, media))
+        return ([(r["page_lo"], r["page_hi"], r["sliced"], r["data"],
+                  r["parts"]) for r in rows],
+                _spans_by_doc(extract.extract_documents(docs, media)))
 
     good_rows, good = run(deck)
     bad_rows, got = run(bad)
-    assert [(r["page_lo"], r["sliced"]) for r in good_rows] == [
-        (0, True), (1, True), (2, True)]
-    assert [(r["page_lo"], r["page_hi"], r["sliced"], len(r["data"]))
-            for r in bad_rows] == [(0, 3, False, len(bad))]
+    assert [r[:4] for r in good_rows] == [
+        (0, 1, True, None), (1, 2, True, None), (2, 3, True, None)]
+    assert bad_rows == good_rows
     assert got == good
     assert len(good["d1"]) == 1 + 3 * 2

@@ -610,7 +610,7 @@ def test_hybrid_bucket_drops_atomically_on_mid_doc_decode_failure():
     frame = pd.DataFrame({
         "doc_id": ["d1"], "offset": [0], "media_ref": ["m1"],
         "media_kind": ["pdf"], "page_lo": [0], "page_hi": [2],
-        "sliced": [False], "data": [raw],
+        "sliced": [False], "data": [raw], "parts": [None],
     })
     res = extract._ocr_real_frame(frame)
     assert len(res) == 0

@@ -10,8 +10,8 @@ depth cap, malformed base64 transfer encoding, charset soup (declared
 charset the bytes don't decode under, unknown charsets), boundary
 defects, bare-CR endings, header-shaped edge cases. Then the
 test_dispatch_fuzz mutation stream over a rich multi-part fixture at
-all three distributed call sites (message walk, deep probe, mbox
-slicer)."""
+all three distributed call sites (message walk, deep probe, and the
+OCR stage's decode of an mbox's walked bucket parts)."""
 
 from __future__ import annotations
 
@@ -21,6 +21,7 @@ import numpy as np
 import pytest
 
 from ocr_platform_spark import emltext, multimodal
+from tests.test_extract_office_paged import flow_bucket_parts
 
 H = [("From", "a@x.test"), ("Message-ID", "<f@x.test>"),
      ("Date", "Thu, 01 Jan 2026"), ("MIME-Version", "1.0")]
@@ -199,9 +200,7 @@ def test_mail_mutation_fuzz_contract(tag):
                         f"{type(e).__name__}: {e}")
         if tag == "mbox":
             try:
-                emltext.slice_messages(mut, [0])
-            except ValueError:
-                pass
+                flow_bucket_parts(mut)
             except Exception as e:  # noqa: BLE001 - contract under test
-                pytest.fail(f"{tag} {label}: slicer raised "
+                pytest.fail(f"{tag} {label}: walked parts raised "
                             f"{type(e).__name__}: {e}")

@@ -17,9 +17,11 @@ import pytest
 from ocr_platform_spark import (docxtext, gifcodec, multimodal, odttext,
                                 pngcodec, raster, schemas)
 from ocr_platform_spark.formats import Band, PageDesc
+from ocr_platform_spark.operators import extract
 from ocr_platform_spark.operators.extract_real import extract_real_documents
 
-from tests.test_extract_office_paged import text_pages
+from tests.test_extract_office_paged import assert_walked_buckets, \
+    text_pages
 from tests.test_extract_real import _spans_by_doc
 
 
@@ -300,13 +302,10 @@ def test_pptx_slice_keeps_slide_media():
     pptx = pptxtext.encode_pptx([
         ["s1"], ["s2 before", png, "s2 after"], ["s3"],
     ])
-    sliced = pptxtext.slice_slides(pptx, [1])
-    parts = pptxtext.slide_parts(sliced)
-    assert len(parts) == 1
-    assert [(p[0],) for p in parts[0]] == [
-        ("text",), ("media",), ("text",)
-    ]
-    assert bytes(parts[0][1][4]) == png  # payload survives the slice
+    rows = assert_walked_buckets(pptx)
+    # the picture's bytes ride the slide's own bucket row
+    assert extract._walked_pages(rows["parts"][1], 1) == [[
+        ("text", "s2 before"), ("media", png), ("text", "s2 after")]]
 
 
 def test_pptx_dangling_slide_rel_quarantines():
@@ -329,9 +328,9 @@ def test_pptx_dangling_slide_rel_quarantines():
 
 def test_pptx_embedded_pictures_ocr_in_slide_order(spark):
     """End-to-end through the PAGED bucket path at bucket_pages=1 (so
-    the deck slices into per-slide buckets and the picture members must
-    survive the slice): each picture's OCR text lands between its
-    slide's surrounding paragraphs, and slide order is global."""
+    each slide's walked parts, pictures included, ride their own
+    bucket): each picture's OCR text lands between its slide's
+    surrounding paragraphs, and slide order is global."""
     from ocr_platform_spark import pptxtext
 
     pptx = pptxtext.encode_pptx([
@@ -496,13 +495,10 @@ def test_epub_skips_scheme_and_protocol_relative_sources():
 
 
 def test_epub_slice_keeps_chapter_images():
-    from ocr_platform_spark import epubtext
-
-    epub = _epub_with_images()
-    sliced = epubtext.slice_chapters(epub, [1])
-    parts = epubtext.chapter_parts(sliced)
-    assert len(parts) == 1
-    assert [(p[0],) for p in parts[0]] == [("text",), ("media",), ("text",)]
+    rows = assert_walked_buckets(_epub_with_images())
+    assert extract._walked_pages(rows["parts"][1], 1) == [[
+        ("text", "c1 before"), ("media", _word_png("word")),
+        ("text", "c1 after")]]
 
 
 def test_epub_embedded_image_ocrs_between_paragraphs(spark):
@@ -514,7 +510,7 @@ def test_epub_embedded_image_ocrs_between_paragraphs(spark):
         ]}], schema=schemas.DOCUMENTS)
     media_df = spark.createDataFrame(
         [("m-epub", bytearray(epub))], "media_ref string, data binary")
-    # bucket_pages=1 forces the slice path: images must survive slicing
+    # bucket_pages=1: each chapter's images ride its own bucket row
     out = extract_real_documents(docs_df, media_df, bucket_pages=1)
     assert _spans_by_doc(out)["d-epub"] == [
         ("text", "c0 alpha", "m-epub", 0),
@@ -678,8 +674,8 @@ def test_mbox_attachments_ocr_per_message_page(spark):
         ]}], schema=schemas.DOCUMENTS)
     media_df = spark.createDataFrame(
         [("m-mb", bytearray(mb))], "media_ref string, data binary")
-    # bucket_pages=1: per-message buckets exercise the mbox slicer with
-    # the attachment riding the sliced message
+    # bucket_pages=1: per-message buckets, the attachment riding its
+    # message's bucket row
     out = extract_real_documents(docs_df, media_df, bucket_pages=1)
     assert _spans_by_doc(out)["d-mb"] == [
         ("text", "mail subj", "m-mb", 0),
@@ -708,10 +704,10 @@ def test_xlsx_sheet_parts_anchor_order_and_slice():
             ("text", "beta")]
     assert [(p[0], p[2]) for p in parts[1]] == [("text", "sheet two")]
     assert multimodal.probe_real_media(x, deep=True)[1:] == (2, 0, 0)
-    # the drawing chain survives per-sheet slicing
-    sliced = xlsxtext.slice_sheets(x, [0])
-    assert [(p[0],) for p in xlsxtext.sheet_parts(sliced)[0]] == \
-        [("text",), ("media",), ("text",)]
+    # the anchored picture rides its sheet's own bucket row
+    rows = assert_walked_buckets(x)
+    assert extract._walked_pages(rows["parts"][0], 1) == [[
+        ("text", "alpha 1"), ("media", png), ("text", "beta")]]
 
 
 def test_xlsx_dangling_drawing_rel_quarantines():

@@ -1,11 +1,13 @@
 """Alternating-pairs A/B runner for the perfbench workloads (stdlib only).
 
     python3 tools/ab_pairs.py --parent REV --workload crawl_mix --pairs 10
+    python3 tools/ab_pairs.py --parent REV --workload crawl_mix --pairs 10 \
+        --trace 1
 
 Exports revision ``REV`` (``git archive``) and the current working tree
 (tracked and untracked, non-ignored files) into two temporary
-checkouts, then runs ``perfbench/run.py --trace 0`` once per side per
-pair, for ``BENCHMARK.json``'s ``run_seconds``. Pair ``i`` uses seed
+checkouts, then runs ``perfbench/run.py --trace T`` (default 0) once
+per side per pair, for ``BENCHMARK.json``'s ``run_seconds``. Pair ``i`` uses seed
 ``i`` (1-based) on both sides, and the side that runs first alternates
 from pair to pair, so slow drift of the host lands on both sides evenly.
 Each run's metrics are printed as it finishes.
@@ -13,8 +15,10 @@ Each run's metrics are printed as it finishes.
 Printed per end-to-end metric of ``BENCHMARK.json``: the parent's and
 the change's median and quartiles, the change's wins (pairs where it is
 better, in the metric's direction), the median's relative change and
-whether it stays inside the metric's bound. Also printed: the summed
-``failed`` count of each side.
+whether it stays inside the metric's bound. With ``--trace 1`` the
+same is printed for every per-layer ledger metric of ``BENCHMARK.json``
+(those have no bound). Also printed: the summed ``failed`` count of
+each side.
 """
 
 from __future__ import annotations
@@ -58,11 +62,12 @@ def export_worktree(dest: str) -> None:
 
 
 def run_once(checkout: str, workload: str, seed: int,
-             seconds: float) -> dict:
+             seconds: float, trace: int) -> dict:
     """One ``perfbench/run.py`` run; its last stdout line as a dict."""
     proc = subprocess.run(
         [sys.executable, "perfbench/run.py", "--workload", workload,
-         "--seed", str(seed), "--seconds", str(seconds), "--trace", "0"],
+         "--seed", str(seed), "--seconds", str(seconds), "--trace",
+         str(trace)],
         cwd=checkout, capture_output=True, text=True)
     lines = proc.stdout.strip().splitlines()
     if proc.returncode != 0 or not lines:
@@ -81,21 +86,26 @@ def quartiles(xs: list[float]) -> tuple[float, float, float]:
 
 
 def summarize(runs: dict[str, list[dict]], spec: list[dict]) -> list[dict]:
-    """Per end-to-end metric: medians, quartiles, wins, bound check."""
+    """Per metric: medians, quartiles, wins, bound check (``None``
+    for a metric without a bound)."""
     rows = []
     for m in spec:
         name, higher = m["name"], m["better"] == "higher"
-        a = [r[name] for r in runs["parent"]]
-        b = [r[name] for r in runs["change"]]
+        a = [r[name] for r in runs["parent"] if name in r]
+        b = [r[name] for r in runs["change"] if name in r]
+        if not a or not b:
+            continue
         wins = sum((y > x) if higher else (y < x) for x, y in zip(a, b))
         qa, qb = quartiles(a), quartiles(b)
         rel = (qb[1] - qa[1]) / qa[1] if qa[1] else 0.0
         worse = -rel if higher else rel
+        bound = m.get("bound")
         rows.append({"metric": name, "unit": m["unit"],
                      "parent_q1_med_q3": qa, "change_q1_med_q3": qb,
                      "change_wins": wins, "pairs": len(a),
-                     "median_rel_change": rel,
-                     "bound": m["bound"], "inside_bound": worse <= m["bound"]})
+                     "median_rel_change": rel, "bound": bound,
+                     "inside_bound": None if bound is None
+                     else worse <= bound})
     return rows
 
 
@@ -104,6 +114,8 @@ def main() -> None:
     ap.add_argument("--parent", required=True, help="git revision (side A)")
     ap.add_argument("--workload", required=True)
     ap.add_argument("--pairs", type=int, required=True)
+    ap.add_argument("--trace", type=int, choices=(0, 1), default=0,
+                    help="1: traced runs, per-layer ledger metrics")
     args = ap.parse_args()
     with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
         bench = json.load(f)
@@ -121,26 +133,28 @@ def main() -> None:
             order = ("parent", "change") if i % 2 == 0 else ("change", "parent")
             for side in order:
                 res = run_once(sides[side], args.workload, seed,
-                               bench["run_seconds"])
+                               bench["run_seconds"], args.trace)
                 runs[side].append(res)
                 print(f"pair {seed} {side}: " + json.dumps(res),
                       flush=True)
     finally:
         shutil.rmtree(work, ignore_errors=True)
 
-    rows = summarize(runs, bench["end_to_end"])
+    rows = summarize(runs, bench["per_layer" if args.trace
+                                 else "end_to_end"])
     print(f"\n{args.workload}: {args.pairs} pairs, parent {args.parent} "
-          f"vs working tree")
+          f"vs working tree, --trace {args.trace}")
     for r in rows:
         pa, pb = r["parent_q1_med_q3"], r["change_q1_med_q3"]
-        print(f"{r['metric']:>16} parent {pa[1]:9.2f} [{pa[0]:.2f}-{pa[2]:.2f}]"
-              f"  change {pb[1]:9.2f} [{pb[0]:.2f}-{pb[2]:.2f}]"
-              f"  wins {r['change_wins']}/{r['pairs']}"
-              f"  {100 * r['median_rel_change']:+.1f}%"
-              f"  {'inside' if r['inside_bound'] else 'OUTSIDE'} "
-              f"bound {r['bound']:.0%}")
+        bound = ("" if r["bound"] is None else
+                 f"  {'inside' if r['inside_bound'] else 'OUTSIDE'} "
+                 f"bound {r['bound']:.0%}")
+        print(f"{r['metric']:>38} parent {pa[1]:9.4g} "
+              f"[{pa[0]:.4g}-{pa[2]:.4g}]  change {pb[1]:9.4g} "
+              f"[{pb[0]:.4g}-{pb[2]:.4g}]  wins {r['change_wins']}/{r['pairs']}"
+              f"  {100 * r['median_rel_change']:+.1f}%{bound}")
     failed = {side: sum(r["failed"] for r in rs) for side, rs in runs.items()}
-    print(f"{'failed':>16} parent {failed['parent']}  "
+    print(f"{'failed':>38} parent {failed['parent']}  "
           f"change {failed['change']}")
 
 
