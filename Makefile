@@ -1,9 +1,9 @@
-# Round rituals. ROUND selects the artifact suffix (e.g. make ROUND=05
+# Round rituals. ROUND selects the artifact suffix (e.g. make ROUND=06
 # correctness-local).
-ROUND ?= 05
+ROUND ?= 06
 SF_DIR ?= /root/testdata/sf0.01
 
-.PHONY: test correctness-local bench
+.PHONY: test correctness-local bench round-final
 
 # The tier-1 gate, verbatim from ROADMAP.md.
 test:
@@ -17,3 +17,13 @@ correctness-local:
 
 bench:
 	python bench.py
+
+# The final-HEAD ritual in one target, for the round's true last commit:
+# the local oracle artifact, the local[1] -> local[4] north-rule draw
+# (writes BENCH/LAST_RUN.md), the round bench and one traced perfbench
+# run per workload.
+round-final: correctness-local
+	python BENCH/run_scaling.py --n 1
+	python bench.py
+	python3 perfbench/run.py --workload synth_flagship --seed 1 --seconds 8 --trace 1
+	python3 perfbench/run.py --workload crawl_mix --seed 1 --seconds 8 --trace 1

@@ -192,14 +192,26 @@ def sniff_mbox(text: str) -> bool:
 _MAX_TREE_DEPTH = 50
 
 
+def _types(part: EmailMessage) -> tuple[str, str, str]:
+    """``part``'s content type, main type and subtype from ONE
+    ``get_content_type`` call: under ``policy.default`` every call
+    re-parses the header, and the stdlib's ``get_content_maintype`` /
+    ``get_content_subtype`` split this same string."""
+    ctype = part.get_content_type()
+    maintype, _, subtype = ctype.partition("/")
+    return ctype, maintype, subtype
+
+
 def _walk_leaves(msg: EmailMessage, depth: int = 0):
+    """Preorder ``(part, content type)`` over the whole MIME tree."""
     if depth > _MAX_TREE_DEPTH:
         raise ValueError("MIME tree exceeds validation depth cap")
-    yield msg
-    if msg.get_content_maintype() == "multipart":
+    ctype, maintype, _sub = _types(msg)
+    yield msg, ctype
+    if maintype == "multipart":
         for p in msg.iter_parts():
             yield from _walk_leaves(p, depth + 1)
-    elif msg.get_content_type() == "message/rfc822":
+    elif ctype == "message/rfc822":
         # iter_parts() only descends multipart/*; an embedded message's
         # subtree must still be defect-checked
         inner = msg.get_payload()
@@ -216,9 +228,8 @@ def _validate_parts(msg: EmailMessage) -> None:
     sufficient: decoding a leaf only ever adds defects to that leaf,
     and ancestors' parse-time defects exist before their children are
     visited."""
-    for part in _walk_leaves(msg):
-        if not part.is_multipart() \
-                and part.get_content_type() != "message/rfc822":
+    for part, ctype in _walk_leaves(msg):
+        if not part.is_multipart() and ctype != "message/rfc822":
             part.get_payload(decode=True)
         if part.defects:
             names = sorted({type(d).__name__ for d in part.defects})
@@ -227,12 +238,12 @@ def _validate_parts(msg: EmailMessage) -> None:
 
 def _renderable(part: EmailMessage, depth: int) -> bool:
     """Can this part (or any descendant) contribute text?"""
-    ctype = part.get_content_type()
+    ctype, maintype, _sub = _types(part)
     if ctype == "message/rfc822":
         return depth < _MAX_DEPTH
-    if part.get_content_maintype() == "multipart":
+    if maintype == "multipart":
         return any(_renderable(p, depth) for p in part.iter_parts())
-    return (part.get_content_maintype() == "text"
+    return (maintype == "text"
             and part.get_content_disposition() != "attachment")
 
 
@@ -253,11 +264,11 @@ def _part_text(part: EmailMessage) -> str:
             f"{charset!r}: {e}") from e
 
 
-def _attachment(part: EmailMessage, index: int) -> tuple:
+def _attachment(part: EmailMessage, ctype: str, index: int) -> tuple:
     payload = part.get_payload(decode=True)
     if payload is None:
         raise ValueError("attachment part without a decodable payload")
-    return ("media", part.get_content_type(),
+    return ("media", ctype,
             part.get_filename() or f"part{index}", bytes(payload))
 
 
@@ -269,8 +280,7 @@ def _walk(part: EmailMessage, depth: int, base: int, out: list,
     Depth-first, part order."""
     if depth > _MAX_DEPTH:
         raise ValueError("message/rfc822 nesting exceeds depth cap")
-    ctype = part.get_content_type()
-    maintype = part.get_content_maintype()
+    ctype, maintype, subtype = _types(part)
     if ctype == "message/rfc822":
         inner = part.get_payload()
         inner = inner[0] if isinstance(inner, list) and inner else inner
@@ -279,7 +289,7 @@ def _walk(part: EmailMessage, depth: int, base: int, out: list,
         return _message_walk(inner, depth + 1, base, out, keep_attachments)
     if maintype == "multipart":
         children = list(part.iter_parts())
-        if part.get_content_subtype() == "alternative":
+        if subtype == "alternative":
             # RFC 2046 §5.1.4: last supported alternative wins
             for child in reversed(children):
                 if _renderable(child, depth):
@@ -295,10 +305,10 @@ def _walk(part: EmailMessage, depth: int, base: int, out: list,
         # source mode: surfaced as a media part entering the probe
         # ladder downstream
         if keep_attachments:
-            out.append(_attachment(part, len(out)))
+            out.append(_attachment(part, ctype, len(out)))
         return base
     text = _part_text(part)
-    if part.get_content_subtype() == "html":
+    if subtype == "html":
         from . import htmltext
 
         for b in htmltext.main_blocks(text):

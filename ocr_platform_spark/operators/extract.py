@@ -65,6 +65,24 @@ their real-codec names (the same function objects).
 4. **assemble** (:func:`assemble_spans`): the sentinel-based re-emit of
    each document's interleaved span array.
 
+Every OCR semantics runs over every kind of page through the one
+per-bucket loop (:func:`_ocr_bucket`) and the one page emitter
+(:func:`_emit_page`); the variants differ only in the kernel run on a
+lone-raster page:
+
+* :func:`extract_documents`: a text page emits its text blocks, a mixed
+  page its text blocks and its pictures' OCR blocks, a lone-raster page
+  detect + recognize (:func:`_ocr_rows`).
+* :func:`extract_documents_fused`: text and mixed pages as
+  :func:`extract_documents`; a lone raster runs the one-shot fused
+  kernel (:func:`_ocr_rows_fused`).
+* :func:`detect_boxes_table`: boxes for lone-raster pages only; a text
+  or mixed page yields no row and no error.
+* :func:`extract_documents_two_phase`: text and mixed pages as
+  :func:`extract_documents` (boxes given for them are ignored); a lone
+  raster is recognized from its boxes and emits nothing without any.
+  With ``edited_boxes=None`` the output equals :func:`extract_documents`.
+
 Scale rationale (100 TB / 10^12 docs):
 
 * **Joins**: spans⋈media broadcasts the narrow span-ref side (see
@@ -79,8 +97,9 @@ payload join and its missing-payload anti-join), :func:`_spread`
 (error-row filter + the skew repartition in front of every heavy
 stage), :func:`_bucket_pages` (a bucket row's decoded pages),
 :func:`_ocr_rows` (the detect + recognize kernel, also run from given
-boxes), :func:`_emit_blocks` (the one ``BLOCK`` emitter) and
-:func:`_block_frame` (the one ``BLOCK`` frame builder).
+boxes), :func:`_ocr_bucket` (the per-bucket loop), :func:`_emit_page`
+(a decoded page -> blocks), :func:`_emit_blocks` (the one ``BLOCK``
+emitter) and :func:`_block_frame` (the one ``BLOCK`` frame builder).
 
 Per-row reference semantics are inherited from :mod:`ocr_platform_spark.oracle`
 kernels — the heavy UDF is the fused detect+recognize of
@@ -98,6 +117,7 @@ extracts exactly the same spans as the synthetic corpus.
 from __future__ import annotations
 
 from collections.abc import Iterator
+from functools import partial
 
 import numpy as np
 import pandas as pd
@@ -316,23 +336,6 @@ def _lone_raster(parts: list) -> np.ndarray | None:
     return None
 
 
-def _bucket_rasters(kind: str, lo: int, hi: int, sliced: bool,
-                    data: bytes | None, parts, only: int | None = None,
-                    ) -> Iterator[tuple[int, np.ndarray]]:
-    """``(page_index, raster)`` per page of one bucket row (or its page
-    ``only``), for the per-page raster kernels (fused, detect,
-    recognize). A page that is not a lone raster raises — outside the
-    decode try, so it is loud, never a silent zero-block page."""
-    for page_index, page, _w, _h in _bucket_pages(kind, lo, hi, sliced,
-                                                  data, parts, only):
-        img = _lone_raster(page)
-        if img is None:
-            raise ValueError(
-                f"{kind!r} page {page_index} is not a lone raster: the "
-                "per-page raster kernels OCR scanned pages only")
-        yield page_index, img
-
-
 def _ocr_rows(img: np.ndarray, boxes: list | None = None,
              size: tuple[int, int] = (0, 0)) -> list[tuple]:
     """Detect + recognize one already-rendered grayscale page raster ->
@@ -370,14 +373,6 @@ def _ocr_rows(img: np.ndarray, boxes: list | None = None,
             for b, (text, conf) in zip(boxes, rec)]
 
 
-def ocr_rendered_page(doc_id: str, offset: int, ref: str,
-                      page_index: int, img: np.ndarray,
-                      out: dict[str, list]) -> None:
-    """Detect + recognize one already-rendered grayscale page raster
-    (:func:`_ocr_rows`) and emit its blocks into ``out``."""
-    _emit_blocks(out, doc_id, offset, ref, page_index, _ocr_rows(img))
-
-
 def _emit_blocks(out: dict[str, list], doc_id: str, offset: int, ref: str,
                 page_index: int, rows) -> None:
     """The one ``BLOCK`` emitter: appends ``(x1, y1, x2, y2, text, conf,
@@ -405,16 +400,21 @@ def _block_frame(pdf: pd.DataFrame, cols, page_fn) -> pd.DataFrame:
 
 def _emit_page(doc_id: str, offset: int, ref: str, page_index: int,
                parts: list, page_w: int, page_h: int,
-               out: dict[str, list]) -> None:
-    """One decoded page -> ``BLOCK`` rows under the module docstring's
-    coordinate rule, through the shared emitter (:func:`_emit_blocks`).
-    Text blocks emit at ``conf=1.0`` (the source text is authoritative —
-    there is no recognition uncertainty to score); empty ones drop. A
-    lone raster OCRs in its own pixel space; every other row carries
-    the page's ``page_w x page_h``."""
+               out: dict[str, list], kernel=_ocr_rows) -> None:
+    """The one place a decoded page becomes ``BLOCK`` rows, under the
+    module docstring's coordinate rule, through the shared emitter
+    (:func:`_emit_blocks`). A lone raster emits ``kernel(raster)``'s rows
+    in its own pixel space: the detect + recognize default
+    (:func:`_ocr_rows`), the fused one-shot kernel
+    (:func:`_ocr_rows_fused`) or a recognize from given boxes. Every
+    other page emits the same way under every kernel: text blocks at
+    ``conf=1.0`` (the source text is authoritative — there is no
+    recognition uncertainty to score; empty ones drop) and interleaved
+    pictures through :func:`_ocr_rows`, each row carrying the page's
+    ``page_w x page_h``."""
     img = _lone_raster(parts)
     if img is not None:
-        ocr_rendered_page(doc_id, offset, ref, page_index, img, out)
+        _emit_blocks(out, doc_id, offset, ref, page_index, kernel(img))
         return
     rows: list[tuple] = []
     for i, part in enumerate(parts):
@@ -432,14 +432,18 @@ def _emit_page(doc_id: str, offset: int, ref: str, page_index: int,
 
 def _ocr_bucket(doc_id: str, offset: int, ref: str, kind: str, lo: int,
                 hi: int, sliced: bool, data: bytes | None, parts,
-                out: dict[str, list]) -> None:
+                out: dict[str, list], kernel=_ocr_rows,
+                only: int | None = None) -> None:
+    """The one per-bucket loop of every OCR semantics: each decoded page
+    of the bucket (or its page ``only``) through :func:`_emit_page`
+    with the lone-raster ``kernel``."""
     # decode inside _bucket_pages' try, emission outside it: an
     # OCR/kernel failure propagates LOUDLY instead of leaving a
     # silently part-extracted document
     for page_index, page, page_w, page_h in _bucket_pages(
-            kind, lo, hi, sliced, data, parts):
+            kind, lo, hi, sliced, data, parts, only):
         _emit_page(doc_id, int(offset), ref, page_index, page, page_w,
-                   page_h, out)
+                   page_h, out, kernel)
 
 
 def _ocr_real_frame(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -862,43 +866,37 @@ def extract_documents(
     return assemble_spans(documents, blocks, spans=spans)
 
 
-def _ocr_page_fused(doc_id: str, offset: int, ref: str, page_index: int,
-                    img: np.ndarray, out: dict[str, list]) -> None:
-    """One page under the one-shot fused semantics (``orchestrator.py:34-113``,
-    exact port pinned by :func:`ocr_platform_spark.oracle.run_ocr_fused`):
-    preprocess BEFORE detect, boxes emitted in preprocessed coords (no
-    scale-back), recognize without original heights (strip split keys off
-    crop height only). Detection scans the whole page, so the preprocessed
-    raster is materialized eagerly — the lazy ``PrepView`` window trick only
-    pays when downstream reads are sparse crops of an un-detected page."""
+def _ocr_rows_fused(img: np.ndarray) -> list[tuple]:
+    """One lone raster under the one-shot fused semantics
+    (``orchestrator.py:34-113``, exact port pinned by
+    :func:`ocr_platform_spark.oracle.run_ocr_fused`) -> the rows of
+    :func:`_emit_blocks`: preprocess BEFORE detect, boxes emitted in
+    preprocessed coords (no scale-back), recognize without original
+    heights (strip split keys off crop height only). Detection scans the
+    whole page, so the preprocessed raster is materialized eagerly — the
+    lazy ``PrepView`` window trick only pays when downstream reads are
+    sparse crops of an un-detected page."""
     img = raster.preprocess_image(img)
     h_prep, w_prep = img.shape[:2]
     boxes = kernels.detect_text_boxes(img)
     rec = kernels.predict_batch([raster.crop(img, b) for b in boxes])
     # PREPROCESSED coords, verbatim; zip length-aligns (orchestrator.py:75)
-    _emit_blocks(out, doc_id, offset, ref, page_index,
-                 [(*b, text, conf, w_prep, h_prep)
-                  for b, (text, conf) in zip(boxes, rec)])
-
-
-def _ocr_bucket_fused(doc_id: str, offset: int, ref: str, kind: str,
-                      lo: int, hi: int, sliced: bool, data: bytes | None,
-                      parts, out: dict[str, list]) -> None:
-    for page_index, img in _bucket_rasters(kind, lo, hi, sliced, data,
-                                           parts):
-        _ocr_page_fused(doc_id, offset, ref, page_index, img, out)
+    return [(*b, text, conf, w_prep, h_prep)
+            for b, (text, conf) in zip(boxes, rec)]
 
 
 def _ocr_batches_fused(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     for pdf in batches:
-        yield _block_frame(pdf, _BUCKET_COLS, _ocr_bucket_fused)
+        yield _block_frame(pdf, _BUCKET_COLS,
+                           partial(_ocr_bucket, kernel=_ocr_rows_fused))
 
 
 def ocr_blocks_fused(pages: DataFrame, num_partitions: int | None = None) -> DataFrame:
     """Fused-semantics twin of :func:`ocr_blocks` over the same bucket rows
-    (:func:`decode_pages`): same skew-spreading bucket repartition,
-    different per-page raster kernel (one-shot ``run_ocr`` coordinate
-    convention — VERDICT round 1 "What's missing" #4)."""
+    (:func:`decode_pages`): same skew-spreading bucket repartition and
+    per-bucket loop, a different lone-raster kernel (one-shot ``run_ocr``
+    coordinate convention — VERDICT round 1 "What's missing" #4); text
+    and mixed pages emit exactly as in :func:`ocr_blocks`."""
     return _spread(pages, "bucket_index", num_partitions, _ocr_batches_fused,
                    BLOCK)
 
@@ -925,15 +923,20 @@ def detect_boxes_table(pages: DataFrame, num_partitions: int | None = None) -> D
     """The persisted detect/recognize boundary (FIXTURES.md §3) — the
     ``detect_result`` column analog (``apps/worker/app/db/models.py:26``),
     for workflows that checkpoint detect output before recognition.
-    ``pages``: bucket rows (:func:`decode_pages`)."""
+    ``pages``: bucket rows (:func:`decode_pages`). Only lone-raster pages
+    have boxes: a text or mixed page yields no row (its recognize emits
+    it as :func:`ocr_blocks` does, see :func:`recognize_with_boxes`)."""
 
     def _detect(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows: list[tuple] = []
             for (doc_id, offset, ref, kind, lo, hi, sliced, data,
                  parts) in zip(*(pdf[c] for c in _BUCKET_COLS)):
-                for page_index, img in _bucket_rasters(kind, lo, hi, sliced,
-                                                       data, parts):
+                for page_index, page, _w, _h in _bucket_pages(
+                        kind, lo, hi, sliced, data, parts):
+                    img = _lone_raster(page)
+                    if img is None:
+                        continue
                     h, w = img.shape[:2]
                     rows.extend(
                         (doc_id, offset, ref, page_index, w, h, i, *box)
@@ -964,13 +967,17 @@ def _recognize_bucket(doc_id: str, offset: int, ref: str, kind: str,
                       parts, page_index: int, xs1, ys1, xs2, ys2,
                       width: int, height: int,
                       out: dict[str, list]) -> None:
-    boxes = list(zip(map(int, xs1), map(int, ys1),
-                     map(int, xs2), map(int, ys2)))
+    # a page the left join found no boxes for has null lists: as a lone
+    # raster it emits nothing (the empty-page passthrough)
+    boxes, size = [], (0, 0)
+    if xs1 is not None:
+        boxes = list(zip(map(int, xs1), map(int, ys1),
+                         map(int, xs2), map(int, ys2)))
+        size = (width, height)
     # decode the row's own page only, not the whole bucket
-    for _pi, img in _bucket_rasters(kind, lo, hi, sliced, data, parts,
-                                    page_index):
-        rows = _ocr_rows(img, boxes, (width, height))
-        _emit_blocks(out, doc_id, offset, ref, page_index, rows)
+    _ocr_bucket(doc_id, offset, ref, kind, lo, hi, sliced, data, parts, out,
+                kernel=lambda img: _ocr_rows(img, boxes, size),
+                only=page_index)
 
 
 def _recognize_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -992,15 +999,17 @@ def recognize_with_boxes(
     the ``run_ocr_job`` path (``ocr_tasks.py:192-254``): detect output is
     persisted/edited, recognition re-runs from it.
 
-    ``pages``: bucket rows (:func:`decode_pages`); each joins the pages
-    of its ``[page_lo, page_hi)`` range that have boxes, and the task
-    decodes and recognizes that one page of the bucket. ``boxes``: output
-    shape of :func:`detect_boxes_table` (block_index gives the
-    detector/editor emission order; ``width``/``height`` are the
-    detect-time original page dims that the crop scaling must use; 0
-    falls back to the rendered page's own dimension). Pages without
-    boxes are the empty-page passthrough (orchestrator.py:133-137): no
-    row, no decode.
+    ``pages``: bucket rows (:func:`decode_pages`); each page of a
+    bucket's ``[page_lo, page_hi)`` range left-joins its boxes, and the
+    task decodes that one page of the bucket and emits it through
+    :func:`_emit_page`. ``boxes``: output shape of
+    :func:`detect_boxes_table` (block_index gives the detector/editor
+    emission order; ``width``/``height`` are the detect-time original
+    page dims that the crop scaling must use; 0 falls back to the
+    rendered page's own dimension). A lone-raster page is recognized
+    from its boxes; without boxes it is the empty-page passthrough
+    (orchestrator.py:133-137): no blocks. Any other page (text, mixed)
+    emits as in :func:`ocr_blocks` and its boxes, if any, are ignored.
     """
     per_page = boxes.groupBy("doc_id", "offset", "media_ref", "page_index").agg(
         F.sort_array(
@@ -1018,7 +1027,7 @@ def recognize_with_boxes(
     page_rows = pages.filter(F.col("page_hi") > F.col("page_lo")).withColumn(
         "page_index", F.explode(F.sequence("page_lo", F.col("page_hi") - 1)))
     joined = page_rows.join(
-        per_page, ["doc_id", "offset", "media_ref", "page_index"], "inner")
+        per_page, ["doc_id", "offset", "media_ref", "page_index"], "left")
     return _spread(joined, "page_index", num_partitions, _recognize_batches,
                    BLOCK)
 
@@ -1032,8 +1041,9 @@ def extract_documents_two_phase(
 ) -> DataFrame:
     """The reference's two-phase workflow (detect → [human edit] →
     recognize), end-to-end: with ``edited_boxes=None`` the detect phase
-    runs inline and the result equals :func:`extract_documents` exactly;
-    passing an edited boxes table replays recognition from the edits.
+    runs inline and the result equals :func:`extract_documents` exactly,
+    on every kind of page; passing an edited boxes table replays
+    recognition of the lone-raster pages from the edits.
 
     ``pages`` is lazily localCheckpoint-ed: the detect and recognize
     phases both consume it, and without the share each re-runs the full

@@ -66,21 +66,31 @@ def tier_payload(i: int, payload: bytes) -> tuple[bytes, bool]:
     return _CONTENT[tier](payload), False
 
 
-def test_all_tiers_in_one_job(spark):
+def all_tiers_corpus(spark):
+    """The seeded corpus with its media rotated through all nineteen
+    tiers: ``(docs_df, synth, mixed, payloads, text_pdf_refs)``, the
+    synthetic and the re-encoded media tables, the re-encoded payloads
+    by ``media_ref`` and the refs that became text-layer PDFs."""
     docs, media = corpus.generate(30, seed=4242, max_pages=6)
     docs_df = spark.createDataFrame(docs, schema=schemas.DOCUMENTS)
     synth = spark.createDataFrame(
         [(ref, bytearray(m["data"])) for ref, m in media.items()],
         "media_ref string, data binary",
     )
-    rows, text_pdf_refs = [], set()
+    payloads, text_pdf_refs = {}, set()
     for i, (ref, m) in enumerate(sorted(media.items())):
-        data, is_pdf = tier_payload(i, m["data"])
+        payloads[ref], is_pdf = tier_payload(i, m["data"])
         if is_pdf:
             text_pdf_refs.add(ref)
-        rows.append((ref, bytearray(data)))
     assert text_pdf_refs, "rotation must hit at least one text-layer PDF"
-    mixed = spark.createDataFrame(rows, "media_ref string, data binary")
+    mixed = spark.createDataFrame(
+        [(ref, bytearray(d)) for ref, d in payloads.items()],
+        "media_ref string, data binary")
+    return docs_df, synth, mixed, payloads, text_pdf_refs
+
+
+def test_all_tiers_in_one_job(spark):
+    docs_df, synth, mixed, _payloads, text_pdf_refs = all_tiers_corpus(spark)
 
     flagship = _spans_by_doc(extract.extract_documents(docs_df, synth))
     got = _spans_by_doc(
@@ -91,6 +101,61 @@ def test_all_tiers_in_one_job(spark):
         assert got[doc_id] == split_pdf_spans(
             flagship[doc_id], text_pdf_refs
         ), doc_id
+
+
+def lone_raster_pages(payloads: dict[str, bytes]) -> dict[str, set]:
+    """``media_ref`` -> the page indices whose decoded page is a lone
+    raster, decoded locally through the probe stage and the one OCR
+    stage's bucket decode."""
+    frame = pd.DataFrame({"doc_id": list(payloads), "offset": 0,
+                          "media_ref": list(payloads),
+                          "data": list(payloads.values())})
+    [buckets] = extract._bucket_batches_fn(1)(iter([frame]))
+    out: dict[str, set] = {ref: set() for ref in payloads}
+    for ref, kind, lo, hi, sliced, data, parts in zip(*(
+            buckets[c] for c in ("media_ref", "media_kind", "page_lo",
+                                 "page_hi", "sliced", "data", "parts"))):
+        for pi, page, _w, _h in extract._bucket_pages(kind, lo, hi, sliced,
+                                                      data, parts):
+            if extract._lone_raster(page) is not None:
+                out[ref].add(pi)
+    return out
+
+
+def test_every_ocr_semantics_runs_over_all_tiers(spark):
+    """Fused, detect and two-phase run over the nineteen-tier corpus
+    without a failure, through the one page emitter: two-phase with
+    ``edited_boxes=None`` equals :func:`extract.extract_documents` on
+    every span; fused equals it on every span of a media without a
+    lone-raster page (text and mixed pages emit identically; only the
+    lone-raster kernel differs); detect emits box rows for lone-raster
+    pages only."""
+    docs_df, _synth, mixed, payloads, _pdfs = all_tiers_corpus(spark)
+    rasters = lone_raster_pages(payloads)
+    with_raster = {ref for ref, pages in rasters.items() if pages}
+    assert with_raster and set(payloads) - with_raster
+
+    want = _spans_by_doc(extract.extract_documents(docs_df, mixed))
+    assert _spans_by_doc(
+        extract.extract_documents_two_phase(docs_df, mixed)) == want
+
+    def without_rasters(spans):
+        return [s[:3] for s in spans if s[2] not in with_raster]
+
+    fused = _spans_by_doc(extract.extract_documents_fused(docs_df, mixed))
+    assert set(fused) == set(want)
+    for doc_id, spans in want.items():
+        assert without_rasters(fused[doc_id]) == without_rasters(spans), \
+            doc_id
+    assert any(s[2] is not None and s[2] not in with_raster
+               for spans in want.values() for s in spans)
+
+    boxes = extract.detect_boxes_table(
+        extract.decode_pages(docs_df, mixed)).select(
+            "media_ref", "page_index").distinct().collect()
+    assert boxes
+    for ref, page_index in boxes:
+        assert page_index in rasters[ref], (ref, page_index)
 
 
 def test_tier_table_keys_are_the_probe_kinds():
@@ -120,18 +185,19 @@ def test_unregistered_kind_raises_instead_of_extracting_nothing():
         extract._ocr_real_frame(frame)
 
 
-def test_raster_kernels_refuse_a_page_that_is_not_a_lone_raster():
-    """The per-page raster kernels (fused, detect, recognize) run on the
-    same bucket rows as the one OCR stage; a text-tier page raises,
-    naming the kind, instead of extracting nothing."""
+def test_raster_kernels_run_a_page_that_is_not_a_lone_raster():
+    """The fused kernel runs on the same bucket rows as the one OCR
+    stage through the one page emitter: a text-tier page emits the same
+    blocks as in :func:`extract._ocr_real_frame`, instead of failing."""
     frame = pd.DataFrame({
         "doc_id": ["d1"], "offset": [0], "media_ref": ["m1"],
         "media_kind": ["txt"], "page_lo": [0], "page_hi": [1],
         "sliced": [False], "data": [b"alpha beta\n"], "parts": [None],
     })
-    assert len(extract._ocr_real_frame(frame)) == 1
-    with pytest.raises(ValueError, match="'txt' page 0 is not a lone raster"):
-        list(extract._ocr_batches_fused(iter([frame])))
+    want = extract._ocr_real_frame(frame)
+    assert want["text"].tolist() == ["alpha beta"]
+    [got] = extract._ocr_batches_fused(iter([frame]))
+    pd.testing.assert_frame_equal(got, want)
 
 
 @pytest.mark.parametrize("bucket_pages", [4, None])
@@ -161,8 +227,8 @@ def test_recognize_decodes_only_its_own_page(monkeypatch, bucket_pages):
           [b[2] for b in box], [b[3] for b in box], 0, 0) for r in rows],
         columns=[*extract._BUCKET_COLS, "page_index", "xs1", "ys1", "xs2",
                  "ys2", "width", "height"])
-    want = {pi: extract._ocr_rows(img, box)
-            for pi, img in extract._bucket_rasters(
+    want = {pi: extract._ocr_rows(extract._lone_raster(page), box)
+            for pi, page, _w, _h in extract._bucket_pages(
                 "spdf", 0, n, False, data, None)}
 
     decoded = []

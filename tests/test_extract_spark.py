@@ -331,3 +331,32 @@ def test_heavy_stages_sit_on_the_skew_spread(spark, corpus_dir):
     for rows in (pages, buckets):
         below = _node_below(_plan_of(rows), "_bucket_batches")
         assert below.startswith(("Project", "BroadcastHashJoin")), below
+
+
+def test_entry_plans_keep_their_exchange_counts(spark, corpus_dir):
+    """The Exchange nodes (shuffle and broadcast) of each entry plan's
+    formatted physical plan, pinned: a change to the glue (such as the
+    two-phase recognize join) must not add one."""
+    import collections
+    import re
+
+    from ocr_platform_spark.operators import extract
+
+    docs = spark.read.parquet(f"{corpus_dir}/documents.parquet")
+    media = spark.read.parquet(f"{corpus_dir}/media.parquet")
+    plans = {
+        "extract_documents": extract.extract_documents(docs, media),
+        "decode_pages": extract.decode_pages(docs, media),
+        "extract_documents_two_phase":
+            extract.extract_documents_two_phase(docs, media),
+        "extract_documents_fused": extract.extract_documents_fused(docs, media),
+    }
+    got = {name: collections.Counter(re.findall(
+               r"^\(\d+\) (\w*Exchange)$", _plan_of(df), re.M))
+           for name, df in plans.items()}
+    assert got == {
+        "extract_documents": {"BroadcastExchange": 1, "Exchange": 2},
+        "decode_pages": {"BroadcastExchange": 2},
+        "extract_documents_two_phase": {"Exchange": 5},
+        "extract_documents_fused": {"BroadcastExchange": 1, "Exchange": 2},
+    }

@@ -38,7 +38,7 @@ def page_ocr_blocks(img: np.ndarray) -> list[tuple[int, int, str]]:
     """The flagship's own blocks for one rendered page: (y1, x1, text),
     reading-ordered exactly as the span assembly sorts them."""
     out: dict[str, list] = {f.name: [] for f in schemas.BLOCK.fields}
-    extract.ocr_rendered_page("d", 0, "r", 0, img, out)
+    extract._emit_page("d", 0, "r", 0, [img], 0, 0, out)
     rows = sorted(zip(out["y1"], out["x1"], out["block_index"], out["text"]))
     return [(y1, x1, text) for y1, x1, _bi, text in rows]
 
