@@ -27,6 +27,8 @@ Design (see SURVEY.md for the full blueprint):
   ``(kind, text, media_ref, order)`` between the Spark job and the oracle.
 """
 
+from . import _zipimport  # noqa: F401  (lazy zip-import invalidation)
+
 __version__ = "0.1.0"
 
 PIPELINE_VERSION = "v2-commercial"  # ref: libs/ocr_core/ocr_core/domain/models.py:26

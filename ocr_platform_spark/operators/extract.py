@@ -123,8 +123,6 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.pandas.functions import pandas_udf
-from pyspark.sql.types import StringType
 
 from .. import formats, kernels, multimodal, raster, tiers, transport
 from ..schemas import BLOCK, SPAN
@@ -466,12 +464,12 @@ def _ocr_real_batches(
 # --- relational glue ----------------------------------------------------------
 
 
-@pandas_udf(StringType())  # DataType instance: module must import on executors
-def unicode_strip(s: pd.Series) -> pd.Series:
-    """Exact ``str.strip()`` parity (``postprocess.py:6``): strips *all*
-    unicode whitespace, unlike ``F.trim`` which only strips ASCII spaces
-    (SURVEY.md §2.3 M11)."""
-    return s.fillna("").str.strip()
+#: every character for which ``str.isspace()`` holds (Python 3.11): what
+#: ``str.strip()`` strips (``postprocess.py:6``, SURVEY.md §2.3 M11), so
+#: ``F.trim`` with this set keeps text spans on the JVM
+STRIP_CHARS = ("\t\n\x0b\x0c\r\x1c\x1d\x1e\x1f \x85\xa0\u1680"
+               + "".join(map(chr, range(0x2000, 0x200b)))
+               + "\u2028\u2029\u202f\u205f\u3000")
 
 
 def exploded_spans(documents: DataFrame) -> DataFrame:
@@ -759,7 +757,8 @@ def assemble_spans(
             F.lit(0).cast("int").alias("y1"),
             F.lit(0).cast("int").alias("x1"),
             F.lit(0).cast("int").alias("block_index"),
-            unicode_strip("text").alias("text"),
+            F.coalesce(F.trim("text", F.lit(STRIP_CHARS)), F.lit(""))
+            .alias("text"),
             F.lit(None).cast("string").alias("media_ref"),
         )
     )
@@ -1008,8 +1007,10 @@ def recognize_with_boxes(
     page dims that the crop scaling must use; 0 falls back to the
     rendered page's own dimension). A lone-raster page is recognized
     from its boxes; without boxes it is the empty-page passthrough
-    (orchestrator.py:133-137): no blocks. Any other page (text, mixed)
-    emits as in :func:`ocr_blocks` and its boxes, if any, are ignored.
+    (orchestrator.py:133-137): no blocks, and a page of a
+    :data:`..tiers.RASTER_PAGE_KINDS` kind is then not decoded at all.
+    Any other page (text, mixed) emits as in :func:`ocr_blocks` and its
+    boxes, if any, are ignored.
     """
     per_page = boxes.groupBy("doc_id", "offset", "media_ref", "page_index").agg(
         F.sort_array(
@@ -1026,8 +1027,12 @@ def recognize_with_boxes(
     )
     page_rows = pages.filter(F.col("page_hi") > F.col("page_lo")).withColumn(
         "page_index", F.explode(F.sequence("page_lo", F.col("page_hi") - 1)))
+    # inner join for the kinds whose pages are all lone rasters: such a
+    # page without boxes would be decoded only to emit nothing
     joined = page_rows.join(
-        per_page, ["doc_id", "offset", "media_ref", "page_index"], "left")
+        per_page, ["doc_id", "offset", "media_ref", "page_index"], "left"
+    ).filter(F.col("xs1").isNotNull()
+             | ~F.col("media_kind").isin(*sorted(tiers.RASTER_PAGE_KINDS)))
     return _spread(joined, "page_index", num_partitions, _recognize_batches,
                    BLOCK)
 

@@ -166,6 +166,9 @@ def _one_page(parts):
     return lambda raw, _page_indices: [parts(raw)]
 
 
+#: the kinds whose every decoded page is one lone raster
+RASTER_PAGE_KINDS = frozenset(("spdf", "simg", "image", "tiff", "gif"))
+
 #: probe ``media_kind`` -> :class:`Tier`; see the module docstring. A
 #: kind the probe can return but this table lacks raises at the OCR
 #: stage instead of silently extracting nothing.

@@ -250,6 +250,70 @@ def test_recognize_decodes_only_its_own_page(monkeypatch, bucket_pages):
             (*r[:4], r[4].strip()) for r in want[pi]]
 
 
+def test_raster_page_kinds_decode_only_lone_rasters(spark):
+    """Every page of a :data:`tiers.RASTER_PAGE_KINDS` payload in the
+    nineteen-tier corpus (plus the synthetic originals and a GIF) is a lone
+    raster: two-phase recognize may skip such a page without boxes."""
+    from ocr_platform_spark import tiers
+
+    _docs_df, _synth, _mixed, payloads, _pdfs = all_tiers_corpus(spark)
+    _docs, media = corpus.generate(4, seed=11, max_pages=3)
+    payloads.update({f"synth-{ref}": m["data"] for ref, m in media.items()})
+    _kind, pages = _render_pages(next(iter(media.values()))["data"])
+    payloads["gif"] = gifcodec.encode_gif(pages[:2])
+    rasters = lone_raster_pages(payloads)
+    seen = set()
+    for ref, raw in payloads.items():
+        kind, n = multimodal.probe_real_media(raw, deep=True)[:2]
+        if kind in tiers.RASTER_PAGE_KINDS:
+            seen.add(kind)
+            assert rasters[ref] == set(range(n)), (ref, kind)
+    assert seen == tiers.RASTER_PAGE_KINDS
+
+
+def test_recognize_decodes_no_boxless_lone_raster_page(spark, monkeypatch):
+    """Two-phase recognize with no boxes: a 6-page SPDF1 (every page a
+    lone raster, which emits nothing without boxes) reaches the decode
+    0 times, while a text page still decodes and emits its block."""
+    from ocr_platform_spark import formats, tiers
+
+    _docs, media = corpus.generate(20, seed=11, max_pages=8)
+    spdf = next(m["data"] for m in media.values()
+                if formats.decode_media(m["data"])[0] == "pdf"
+                and len(formats.decode_media(m["data"])[1]) >= 6)
+    spdf = formats.encode_pdf(formats.decode_media(spdf)[1][:6])
+    docs_df = spark.createDataFrame([("d1", [("pdf", None, "m1", 0),
+                                             ("pdf", None, "m2", 1)])],
+                                    schema=schemas.DOCUMENTS)
+    media_df = spark.createDataFrame(
+        [("m1", bytearray(spdf)), ("m2", bytearray(b"alpha beta\n"))],
+        "media_ref string, data binary")
+    pages = extract.decode_pages(docs_df, media_df)
+    no_boxes = spark.createDataFrame([], ", ".join(
+        f"{c} {'string' if c in ('doc_id', 'media_ref') else 'int'}"
+        for c in extract._BOX_COLS))
+
+    spread_rows = []
+    monkeypatch.setattr(extract, "_spread",
+                        lambda rows, *_args: spread_rows.append(rows))
+    extract.recognize_with_boxes(pages, no_boxes)
+    [rows] = spread_rows
+    frame = rows.toPandas()
+
+    decoded = []
+    for kind in ("spdf", "txt"):
+        def counting(raw, page_indices, _pages=tiers.TIERS[kind].pages,
+                     _kind=kind):
+            out = _pages(raw, page_indices)
+            decoded.extend([_kind] * len(out))
+            return out
+        monkeypatch.setitem(tiers.TIERS, kind,
+                            tiers.TIERS[kind]._replace(pages=counting))
+    [got] = extract._recognize_batches(iter([frame]))
+    assert decoded == ["txt"]
+    assert got["text"].tolist() == ["alpha beta"]
+
+
 @pytest.mark.parametrize("kind, module, parse", [
     ("tiff", "tiffcodec", "_read_ifds"),
     ("gif", "gifcodec", "_parse"),

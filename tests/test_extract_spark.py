@@ -360,3 +360,39 @@ def test_entry_plans_keep_their_exchange_counts(spark, corpus_dir):
         "extract_documents_two_phase": {"Exchange": 5},
         "extract_documents_fused": {"BroadcastExchange": 1, "Exchange": 2},
     }
+
+
+def _text_only_assembled(spark, texts):
+    """``assemble_spans`` over one document per text (one text span
+    each) and no OCR blocks."""
+    from ocr_platform_spark import schemas
+    from ocr_platform_spark.operators.extract import assemble_spans
+
+    docs = spark.createDataFrame(
+        [(f"d{i:03d}", [("text", t, None, 0)]) for i, t in enumerate(texts)],
+        schema=schemas.DOCUMENTS)
+    return assemble_spans(docs, spark.createDataFrame([], schemas.BLOCK))
+
+
+def test_text_spans_strip_exactly_like_str_strip(spark):
+    """The JVM trim strips what ``str.strip()`` strips (M11): every
+    ``isspace`` code point, leading and trailing but not inner; the
+    look-alikes ``str.strip()`` keeps stay; a null text becomes ""."""
+    import sys
+
+    from ocr_platform_spark.operators.extract import STRIP_CHARS
+
+    spaces = [c for c in map(chr, range(sys.maxunicode + 1)) if c.isspace()]
+    assert STRIP_CHARS == "".join(spaces) and len(spaces) == 29
+    texts = [None]
+    for c in spaces + ["\u200b", "\u180e", "\ufeff"]:
+        texts += [c + "a", "a" + c, "a" + c + "b", c + c + "é b" + c + c]
+    got = {r.doc_id: r.spans[0].text
+           for r in _text_only_assembled(spark, texts).collect()}
+    assert got == {f"d{i:03d}": (t or "").strip() for i, t in enumerate(texts)}
+
+
+def test_text_branch_has_no_python_stage(spark):
+    plan = _plan_of(_text_only_assembled(spark, ["  a  "]))
+    for node in ("ArrowEvalPython", "BatchEvalPython", "MapInPandas"):
+        assert node not in plan
